@@ -2,6 +2,9 @@
 """Local stand-in for the driver's correctness gate: read Verify's
 parquet dumps, run each oracle SQL in DuckDB over the same sf dir,
 sort columns by name, and diff values exactly and with 1e-9 rtol.
+Rows are compared in emitted order when the oracle SQL's outermost
+SELECT ends in ORDER BY, as an order-sensitive hash of the output
+bytes would; otherwise both sides are sorted first.
 Float columns are additionally compared BITWISE (int64 view), because
 the driver hashes bytes: value-equal but bit-different outputs
 (e.g. -0.0 vs +0.0) fail there.
@@ -9,11 +12,16 @@ the driver hashes bytes: value-equal but bit-different outputs
 Usage: python3 scripts/compare.py <sfdir> <outdir>
 """
 import json
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
+
+# the benchmark's gate decides row order the same way
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "perfbench"))
+from oracle import ends_in_order_by  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -21,10 +29,11 @@ TABLES = [
 ]
 
 
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
+def normalize(df: pd.DataFrame, ordered: bool) -> pd.DataFrame:
     df = df[sorted(df.columns)]
-    df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-    return df
+    if not ordered:
+        df = df.sort_values(by=list(df.columns), kind="mergesort")
+    return df.reset_index(drop=True)
 
 
 def main() -> int:
@@ -57,7 +66,8 @@ def main() -> int:
             print(f"FAIL {name}: {e}")
             n_bad += 1
             continue
-        got_n, want_n = normalize(got), normalize(want)
+        ordered = ends_in_order_by(sql)
+        got_n, want_n = normalize(got, ordered), normalize(want, ordered)
         if list(got_n.columns) != list(want_n.columns):
             print(f"FAIL {name}: columns {list(got_n.columns)} vs {list(want_n.columns)}")
             n_bad += 1
@@ -88,7 +98,8 @@ def main() -> int:
                 print(f"FAIL {name}: value-exact but BIT-differ {','.join(bit_bad)}")
                 n_bad += 1
             else:
-                print(f"OK   {name} ({len(got_n)} rows, bit-exact)")
+                print(f"OK   {name} ({len(got_n)} rows, "
+                      f"{'ordered' if ordered else 'unordered'}, bit-exact)")
         except AssertionError:
             try:
                 pd.testing.assert_frame_equal(
