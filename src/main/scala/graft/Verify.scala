@@ -41,8 +41,7 @@ object Verify {
     // nondeterministic order; coalesce preserves the global sort.
     val queries = SparkEntry.queries
     val names   = queries.keys.toSeq.sorted.filter(keep)
-    val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "6").toInt
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)

@@ -31,16 +31,14 @@ object TextFunctions {
   }
 
   /** Space-joined word n-grams as a per-row array — the codegen'd
-    * [[graft.plans.WordNgrams]] kernel (one pass per row), bit-
+    * `graft_word_ngrams` kernel (one pass per row), bit-
     * identical to the zip_with/filter HOF chain kept below as
     * [[ngramsHof]] (TextAnalysisSpec pins the equivalence). The HOF
     * chain is interpreted per element and fed every shingle scan of
     * the dedup family.
     */
   def ngrams(toks: Column, n: Int): Column =
-    org.apache.spark.sql.graftshim.GraftShim.column(
-      graft.plans.WordNgrams(
-        org.apache.spark.sql.graftshim.GraftShim.expression(toks), n))
+    graft.plans.KernelTable.column("graft_word_ngrams", toks, n)
 
   /** The composed HOF form [[ngrams]] replaced: n-1 zip_with passes
     * against k-shifted slices (lambda bodies reference only lambda

@@ -472,7 +472,7 @@ object Dedup {
   }
 
   /** 120-bit SimHash as two 60-bit lane columns via the codegen'd
-    * SimHash120 expression: lane 0 is bit-identical to the 60-bit
+    * graft_simhash_wide kernel: lane 0 is bit-identical to the 60-bit
     * simhash (same md5 hex chars 1-15), lane 1 folds chars 16-30 of
     * the SAME digest — one md5 per token, so the wide signature
     * costs what the narrow one does. Exists for banding headroom at
@@ -1054,7 +1054,7 @@ object Dedup {
     */
   def cdcChunks(documents: DataFrame, mask: Long = 64L, minLen: Int = 16): DataFrame = {
     require(mask >= 2 && minLen >= 1, s"mask/minLen out of range: $mask, $minLen")
-    // the fold runs in the codegen'd CdcBounds kernel (one static
+    // the fold runs in the codegen'd graft_cdc_bounds kernel (one static
     // call per row inside the scan stage); cdcBoundsHof below is the
     // composed-plan form it replaced, kept so the equivalence stays
     // spec-pinned (the interpreted HOF measured a 4.4 s single-task

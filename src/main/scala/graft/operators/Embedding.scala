@@ -59,7 +59,7 @@ object Embedding {
   }
 
   /** (doc_id, chunk_id, v): embedding per chunk, via the codegen'd
-    * FeatureHashEmbed expression — one md5 per token, the embed
+    * graft_fh_embed kernel — one md5 per token, the embed
     * stays inside whole-stage codegen (the 100 TB path).
     */
   def embedChunks(chunks: DataFrame, dim: Int = 16): DataFrame = {

@@ -33,6 +33,34 @@ object Multimodal {
     }
   }
 
+  /** `fn(payload)` of every media row, as the struct column `decoded`
+    * beside the id.
+    */
+  private def decode(media: DataFrame, fn: String, idCol: String, payloadCol: String): DataFrame = {
+    graft.plans.GraftFunctions.register(media.sparkSession)
+    media.select(col(idCol), expr(s"$fn($payloadCol)").as("decoded"))
+  }
+
+  /** An image decoder's exact pixel moments as header fields plus
+    * per-pixel means: channel means and luma are ONE IEEE division
+    * over exact integer sums, null when the image has no pixels.
+    */
+  private def pixelMoments(media: DataFrame, fn: String, idCol: String, payloadCol: String): DataFrame = {
+    val n = col("decoded.n_px")
+    decode(media, fn, idCol, payloadCol)
+      .select(col(idCol),
+        col("decoded.valid").as("valid"),
+        col("decoded.width").as("width"),
+        col("decoded.height").as("height"),
+        n.as("n_px"),
+        when(n > 0, col("decoded.peak")).as("peak"),
+        when(n > 0, col("decoded.sum_r").cast("double") / n.cast("double")).as("mean_r"),
+        when(n > 0, col("decoded.sum_g").cast("double") / n.cast("double")).as("mean_g"),
+        when(n > 0, col("decoded.sum_b").cast("double") / n.cast("double")).as("mean_b"),
+        when(n > 0, col("decoded.sum_luma_milli").cast("double") / (n * 1000L).cast("double"))
+          .as("mean_luma"))
+  }
+
   /** Wrap text documents as fake media payloads (binary + metadata). */
   def mediaFromDocuments(documents: DataFrame): Dataset[MediaRecord] = {
     val spark = documents.sparkSession
@@ -167,7 +195,7 @@ object Multimodal {
   /** REAL (non-stub) COMPRESSED-audio decode: strict RIFF/WAVE
     * non-PCM layout parse (fmt-18 + fact + data) + ITU-T G.711
     * µ-law/A-law expansion + exact integer sample moments via the
-    * codegen'd [[graft.plans.WavG711Stats]] expression — one linear
+    * codegen'd `graft_g711_stats` kernel — one linear
     * pass per payload in the scan stage. The first compressed AUDIO
     * format past the declared stub line: the companding tables are
     * implemented in-repo from the published integer recipe, and the
@@ -176,18 +204,16 @@ object Multimodal {
     * Malformed payloads report valid=false.
     */
   def g711Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    val n = col("gs.n_samples")
-    media
-      .select(col(idCol), expr(s"graft_g711_stats($payloadCol)").as("gs"))
+    val n = col("decoded.n_samples")
+    decode(media, "graft_g711_stats", idCol, payloadCol)
       .select(col(idCol),
-        col("gs.valid").as("valid"),
-        col("gs.fmt_tag").as("fmt_tag"),
-        col("gs.sample_rate").as("sample_rate"),
+        col("decoded.valid").as("valid"),
+        col("decoded.fmt_tag").as("fmt_tag"),
+        col("decoded.sample_rate").as("sample_rate"),
         n.as("n_samples"),
-        when(n > 0, col("gs.peak_abs")).as("peak_abs"),
-        when(n > 0, col("gs.sum_s").cast("double") / n.cast("double")).as("mean_sample"),
-        when(n > 0, sqrt(col("gs.sum_sq").cast("double") / n.cast("double"))).as("rms"))
+        when(n > 0, col("decoded.peak_abs")).as("peak_abs"),
+        when(n > 0, col("decoded.sum_s").cast("double") / n.cast("double")).as("mean_sample"),
+        when(n > 0, sqrt(col("decoded.sum_sq").cast("double") / n.cast("double"))).as("rms"))
   }
 
   /** Wrap text documents as VALID uncompressed 24 bpp BMP images
@@ -321,30 +347,15 @@ object Multimodal {
     * non-interlaced) container parse + CRC verification + JDK zlib
     * inflate + all-five-filter scanline reconstruction + exact
     * integer pixel moments via the codegen'd
-    * [[graft.plans.PngPixelStats]] expression — one pass per payload
+    * `graft_png_stats` kernel — one pass per payload
     * in the scan stage. The first COMPRESSED format past the
     * declared stub line (the zlib layer is java.util.zip.Inflater;
     * everything PNG-specific is implemented, not imported). Channel
     * means and luma are ONE IEEE division over exact integer sums.
     * Malformed payloads report valid=false.
     */
-  def pngStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    val n = col("ps.n_px")
-    media
-      .select(col(idCol), expr(s"graft_png_stats($payloadCol)").as("ps"))
-      .select(col(idCol),
-        col("ps.valid").as("valid"),
-        col("ps.width").as("width"),
-        col("ps.height").as("height"),
-        n.as("n_px"),
-        when(n > 0, col("ps.peak")).as("peak"),
-        when(n > 0, col("ps.sum_r").cast("double") / n.cast("double")).as("mean_r"),
-        when(n > 0, col("ps.sum_g").cast("double") / n.cast("double")).as("mean_g"),
-        when(n > 0, col("ps.sum_b").cast("double") / n.cast("double")).as("mean_b"),
-        when(n > 0, col("ps.sum_luma_milli").cast("double") / (n * 1000L).cast("double"))
-          .as("mean_luma"))
-  }
+  def pngStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    pixelMoments(media, "graft_png_stats", idCol, payloadCol)
 
   /** Wrap text documents as VALID baseline JPEGs (grayscale, 64 px
     * wide): one 8x8 block per leading character, each block UNIFORM
@@ -434,7 +445,7 @@ object Multimodal {
   /** REAL (non-stub) lossy-format decode: full baseline-JPEG
     * entropy decode + dequantization + IDCT + color convert and
     * exact integer pixel moments via the codegen'd
-    * [[graft.plans.JpegPixelStats]] expression — one pass per
+    * `graft_jpeg_stats` kernel — one pass per
     * payload in the scan stage. The generated corpus is flat-block
     * grayscale at an all-ones quantizer, which makes the usually-
     * lossy format LOSSLESS here (DC-only blocks reconstruct
@@ -443,23 +454,8 @@ object Multimodal {
     * prediction, byte stuffing, IDCT). Malformed payloads report
     * valid=false.
     */
-  def jpegStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    val n = col("js.n_px")
-    media
-      .select(col(idCol), expr(s"graft_jpeg_stats($payloadCol)").as("js"))
-      .select(col(idCol),
-        col("js.valid").as("valid"),
-        col("js.width").as("width"),
-        col("js.height").as("height"),
-        n.as("n_px"),
-        when(n > 0, col("js.peak")).as("peak"),
-        when(n > 0, col("js.sum_r").cast("double") / n.cast("double")).as("mean_r"),
-        when(n > 0, col("js.sum_g").cast("double") / n.cast("double")).as("mean_g"),
-        when(n > 0, col("js.sum_b").cast("double") / n.cast("double")).as("mean_b"),
-        when(n > 0, col("js.sum_luma_milli").cast("double") / (n * 1000L).cast("double"))
-          .as("mean_luma"))
-  }
+  def jpegStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    pixelMoments(media, "graft_jpeg_stats", idCol, payloadCol)
 
   /** Wrap text documents as VALID ZIP archives, two deflated entries
     * per document ("a.txt" = the first half of the leading
@@ -504,7 +500,7 @@ object Multimodal {
     * (EOCD backward scan, central-directory walk with exact framing,
     * local-header indirection, streaming-mode bit-3 correctness) +
     * stored/deflate entry decompression + per-entry CRC-32
-    * verification via the codegen'd [[graft.plans.ZipArchiveStats]]
+    * verification via the codegen'd `graft_zip_stats` kernel
     * expression — one pass per payload in the scan stage. Archive
     * ingest is the first step of every corpus pipeline whose
     * upstream delivers zipped shards; the decode is oracle-checked
@@ -512,17 +508,8 @@ object Multimodal {
     * Malformed payloads (bad framing, lying sizes, CRC mismatches,
     * zip-bomb dimensions) report valid=false.
     */
-  def zipStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_zip_stats($payloadCol)").as("zs"))
-      .select(col(idCol),
-        col("zs.valid").as("valid"),
-        col("zs.n_entries").as("n_entries"),
-        col("zs.total_bytes").as("total_bytes"),
-        col("zs.sum_bytes").as("sum_bytes"),
-        col("zs.max_entry_bytes").as("max_entry_bytes"))
-  }
+  def zipStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_zip_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as UTF-8 payloads with REAL multi-byte
     * content: each of the leading `maxChars` characters maps to a
@@ -574,24 +561,12 @@ object Multimodal {
     * every text-ingest pipeline: mojibake, truncated multi-byte
     * tails, overlongs, and surrogates must be caught before any
     * tokenizer sees the bytes. RFC 3629 rules implemented in the
-    * codegen'd [[graft.plans.Utf8Stats]] expression, one linear
+    * codegen'd `graft_utf8_stats` kernel, one linear
     * pass per payload in the scan stage. Malformed payloads report
     * valid=false.
     */
-  def utf8Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_utf8_stats($payloadCol)").as("us"))
-      .select(col(idCol),
-        col("us.valid").as("valid"),
-        col("us.n_bytes").as("n_bytes"),
-        col("us.n_codepoints").as("n_codepoints"),
-        col("us.n_ascii").as("n_ascii"),
-        col("us.n_2byte").as("n_2byte"),
-        col("us.n_3byte").as("n_3byte"),
-        col("us.n_4byte").as("n_4byte"),
-        col("us.max_cp").as("max_cp"))
-  }
+  def utf8Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_utf8_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as Base64 payloads of their leading
     * `maxChars` characters, written by the JDK's own encoder — an
@@ -610,23 +585,15 @@ object Multimodal {
 
   /** STRICT RFC 4648 Base64 decode (standard alphabet, canonical
     * padding, no trailing data) + exact byte moments via the
-    * codegen'd [[graft.plans.Base64Stats]] expression — one linear
+    * codegen'd `graft_b64_stats` kernel — one linear
     * pass per payload in the scan stage. Base64-wrapped fields are
     * everywhere in crawled/exported data (JSON blobs, data URIs,
     * message envelopes); strictness matters because sloppy decoders
     * accept non-canonical padding and alias distinct payloads.
     * Malformed payloads report valid=false.
     */
-  def base64Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_b64_stats($payloadCol)").as("bs"))
-      .select(col(idCol),
-        col("bs.valid").as("valid"),
-        col("bs.n_bytes").as("n_bytes"),
-        col("bs.sum_bytes").as("sum_bytes"),
-        col("bs.max_byte").as("max_byte"))
-  }
+  def base64Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_b64_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as BOM-prefixed UTF-16 of the SAME mapped
     * codepoints as the UTF-8 twin (vowels → U+0100+c, digits →
@@ -674,25 +641,14 @@ object Multimodal {
   /** STRICT UTF-16 validation + codepoint census — the wide-char
     * sibling of [[utf8Stats]]: required BOM (mojibake guard),
     * surrogate-pair enforcement, stray-low rejection, via the
-    * codegen'd [[graft.plans.Utf16Stats]] expression, one linear
+    * codegen'd `graft_utf16_stats` kernel, one linear
     * pass per payload in the scan stage. UTF-16 shows up in crawled
     * data wherever Windows/Java systems exported text; a validator
     * that misses unpaired surrogates poisons every downstream
     * transcode. Malformed payloads report valid=false.
     */
-  def utf16Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_utf16_stats($payloadCol)").as("us"))
-      .select(col(idCol),
-        col("us.valid").as("valid"),
-        col("us.n_bytes").as("n_bytes"),
-        col("us.n_codepoints").as("n_codepoints"),
-        col("us.n_bmp").as("n_bmp"),
-        col("us.n_supplementary").as("n_supplementary"),
-        col("us.max_cp").as("max_cp"),
-        col("us.sum_cp").as("sum_cp"))
-  }
+  def utf16Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_utf16_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as RFC 3492 Punycode `xn--` labels over the
     * SAME mapped codepoints as the UTF-8/UTF-16 twins — the encoder
@@ -731,7 +687,7 @@ object Multimodal {
   }
 
   /** STRICT RFC 3492 Punycode decode + codepoint census via the
-    * codegen'd [[graft.plans.PunycodeStats]] expression — the §6.2
+    * codegen'd `graft_punycode_stats` kernel — the §6.2
     * state machine with overflow checks AND canonical-form
     * enforcement (the decoded sequence must re-encode to the exact
     * input bytes: RFC 3492 encodings are unique, so a non-canonical
@@ -740,18 +696,8 @@ object Multimodal {
     * re-encode per payload in the scan stage. Malformed payloads
     * report valid=false.
     */
-  def punycodeStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_punycode_stats($payloadCol)").as("ps"))
-      .select(col(idCol),
-        col("ps.valid").as("valid"),
-        col("ps.n_codepoints").as("n_codepoints"),
-        col("ps.n_basic").as("n_basic"),
-        col("ps.n_extended").as("n_extended"),
-        col("ps.max_cp").as("max_cp"),
-        col("ps.sum_cp").as("sum_cp"))
-  }
+  def punycodeStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_punycode_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as raw RFC 1951 deflate streams of their
     * leading `maxChars` characters. The compression LEVEL cycles
@@ -793,7 +739,7 @@ object Multimodal {
   /** REAL (non-stub) decompression: the RFC 1951 inflate ALGORITHM
     * implemented in-repo (bit reader, stored/fixed/dynamic Huffman
     * blocks, canonical code construction, LZ77 back-reference
-    * copies) via the codegen'd [[graft.plans.DeflateStats]]
+    * copies) via the codegen'd `graft_deflate_stats` kernel
     * expression — one pass per payload in the scan stage. This is
     * the layer every other compressed decode here borrows from the
     * JDK; implementing it closes the loop: the library now contains
@@ -802,16 +748,8 @@ object Multimodal {
     * .Inflater on the corpus and on adversarial hand-built streams.
     * Malformed payloads report valid=false.
     */
-  def deflateStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_deflate_stats($payloadCol)").as("ds"))
-      .select(col(idCol),
-        col("ds.valid").as("valid"),
-        col("ds.n_bytes").as("n_bytes"),
-        col("ds.sum_bytes").as("sum_bytes"),
-        col("ds.max_byte").as("max_byte"))
-  }
+  def deflateStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_deflate_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as VALID LZ4 FRAMES of their leading
     * `maxChars` characters, chunked into 256-byte blocks by the
@@ -925,21 +863,12 @@ object Multimodal {
 
   /** REAL (non-stub) LZ4 decode: frame walk, block decompression,
     * and XXH32 header/block/content verification implemented in-repo
-    * via the codegen'd [[graft.plans.Lz4Stats]] expression — one
+    * via the codegen'd `graft_lz4_stats` kernel — one
     * pass per payload in the scan stage. Malformed payloads report
     * valid=false.
     */
-  def lz4Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_lz4_stats($payloadCol)").as("ls"))
-      .select(col(idCol),
-        col("ls.valid").as("valid"),
-        col("ls.n_blocks").as("n_blocks"),
-        col("ls.n_bytes").as("n_bytes"),
-        col("ls.sum_bytes").as("sum_bytes"),
-        col("ls.max_byte").as("max_byte"))
-  }
+  def lz4Stats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_lz4_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as VALID protobuf wire-format messages
     * (Google's public encoding — the serialization binary telemetry
@@ -1014,21 +943,12 @@ object Multimodal {
 
   /** REAL (non-stub) protobuf wire-format walk: strict tag/varint/
     * bounds rules, unknown-field skipping, and internal-checksum
-    * verification via the codegen'd [[graft.plans.ProtoStats]]
+    * verification via the codegen'd `graft_proto_stats` kernel
     * expression — one pass per payload in the scan stage. Malformed
     * payloads report valid=false.
     */
-  def protoStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_proto_stats($payloadCol)").as("ps"))
-      .select(col(idCol),
-        col("ps.valid").as("valid"),
-        col("ps.n_fields").as("n_fields"),
-        col("ps.n_bytes").as("n_bytes"),
-        col("ps.sum_bytes").as("sum_bytes"),
-        col("ps.max_byte").as("max_byte"))
-  }
+  def protoStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_proto_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as VALID Snappy FRAMING streams (the
     * storage-tier codec next to LZ4): the leading `maxChars`
@@ -1157,21 +1077,12 @@ object Multimodal {
 
   /** REAL (non-stub) Snappy decode: framing walk, raw-block
     * decompression, and clean-room CRC-32C verification implemented
-    * in-repo via the codegen'd [[graft.plans.SnappyStats]]
+    * in-repo via the codegen'd `graft_snappy_stats` kernel
     * expression — one pass per payload in the scan stage. Malformed
     * payloads report valid=false.
     */
-  def snappyStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_snappy_stats($payloadCol)").as("ss"))
-      .select(col(idCol),
-        col("ss.valid").as("valid"),
-        col("ss.n_chunks").as("n_chunks"),
-        col("ss.n_bytes").as("n_bytes"),
-        col("ss.sum_bytes").as("sum_bytes"),
-        col("ss.max_byte").as("max_byte"))
-  }
+  def snappyStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_snappy_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as VALID gzipped USTAR archives
     * (.tar.gz): the leading `maxChars` characters split into
@@ -1239,23 +1150,14 @@ object Multimodal {
     * trailer verification against the decompressed bytes) + strict
     * USTAR tar walk (octal fields, header-checksum verification,
     * block padding, two-zero-block terminator) via the codegen'd
-    * [[graft.plans.TarGzStats]] expression — one pass per payload in
+    * `graft_targz_stats` kernel — one pass per payload in
     * the scan stage. The .tar.gz shard is THE delivery format of
     * web-scale text corpora; the decode is oracle-checked through
     * text-derived chunk sizes and content byte-sums. Malformed
     * payloads report valid=false.
     */
-  def targzStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_targz_stats($payloadCol)").as("ts"))
-      .select(col(idCol),
-        col("ts.valid").as("valid"),
-        col("ts.n_entries").as("n_entries"),
-        col("ts.total_bytes").as("total_bytes"),
-        col("ts.sum_bytes").as("sum_bytes"),
-        col("ts.max_entry_bytes").as("max_entry_bytes"))
-  }
+  def targzStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    decode(media, "graft_targz_stats", idCol, payloadCol).select(col(idCol), col("decoded.*"))
 
   /** Wrap text documents as VALID QOI images (8x5 px, RGB, alpha
     * 255): pixel (x, y) top-down takes channel values r,g,b =
@@ -1337,29 +1239,14 @@ object Multimodal {
   /** REAL (non-stub) QOI decode: the ENTIRE codec implemented
     * in-repo per the published spec — no JDK utility exists for QOI
     * at all, so unlike the PNG twin not even the compression layer
-    * is borrowed — via the codegen'd [[graft.plans.QoiPixelStats]]
+    * is borrowed — via the codegen'd `graft_qoi_stats` kernel
     * expression, one pass per payload in the scan stage. Exercises
     * run-length, hash-cache index, DIFF/LUMA delta, and literal
     * paths on the generated corpus (spec-asserted op coverage).
     * Malformed payloads report valid=false.
     */
-  def qoiStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    val n = col("qs.n_px")
-    media
-      .select(col(idCol), expr(s"graft_qoi_stats($payloadCol)").as("qs"))
-      .select(col(idCol),
-        col("qs.valid").as("valid"),
-        col("qs.width").as("width"),
-        col("qs.height").as("height"),
-        n.as("n_px"),
-        when(n > 0, col("qs.peak")).as("peak"),
-        when(n > 0, col("qs.sum_r").cast("double") / n.cast("double")).as("mean_r"),
-        when(n > 0, col("qs.sum_g").cast("double") / n.cast("double")).as("mean_g"),
-        when(n > 0, col("qs.sum_b").cast("double") / n.cast("double")).as("mean_b"),
-        when(n > 0, col("qs.sum_luma_milli").cast("double") / (n * 1000L).cast("double"))
-          .as("mean_luma"))
-  }
+  def qoiStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    pixelMoments(media, "graft_qoi_stats", idCol, payloadCol)
 
   /** Wrap text documents as VALID GIF89a images (7x5 px, 256-entry
     * global color table): pixel p = y·7+x takes PALETTE INDEX
@@ -1421,60 +1308,30 @@ object Multimodal {
     * container parse + a FULLY in-repo LZW decoder (variable-width
     * codes, dictionary growth to 12 bits, the KwKwK self-reference
     * case) + exact integer pixel moments over palette-resolved RGB
-    * via the codegen'd [[graft.plans.GifPixelStats]] expression —
+    * via the codegen'd `graft_gif_stats` kernel —
     * one pass per payload in the scan stage. Where the PNG twin
     * borrows the JDK's Inflater for its compression layer, GIF-LZW
     * has no JDK utility: the decompressor itself is part of the
     * library. Malformed payloads report valid=false.
     */
-  def gifStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    val n = col("gs.n_px")
-    media
-      .select(col(idCol), expr(s"graft_gif_stats($payloadCol)").as("gs"))
-      .select(col(idCol),
-        col("gs.valid").as("valid"),
-        col("gs.width").as("width"),
-        col("gs.height").as("height"),
-        n.as("n_px"),
-        when(n > 0, col("gs.peak")).as("peak"),
-        when(n > 0, col("gs.sum_r").cast("double") / n.cast("double")).as("mean_r"),
-        when(n > 0, col("gs.sum_g").cast("double") / n.cast("double")).as("mean_g"),
-        when(n > 0, col("gs.sum_b").cast("double") / n.cast("double")).as("mean_b"),
-        when(n > 0, col("gs.sum_luma_milli").cast("double") / (n * 1000L).cast("double"))
-          .as("mean_luma"))
-  }
+  def gifStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    pixelMoments(media, "graft_gif_stats", idCol, payloadCol)
 
   /** REAL (non-stub) image decode: strict uncompressed-BMP (24 bpp)
     * header parse + exact integer pixel moments via the codegen'd
-    * [[graft.plans.BmpPixelStats]] expression — one linear pass per
+    * `graft_bmp_stats` kernel — one linear pass per
     * payload in the scan stage honoring BGR order and row padding,
     * no codec library (uncompressed BMP is byte math; compressed
     * formats remain the DECLARED stub). Channel means and luma are
     * ONE IEEE division over exact integer sums. Malformed payloads
     * report valid=false.
     */
-  def bmpStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    val n = col("bs.n_px")
-    media
-      .select(col(idCol), expr(s"graft_bmp_stats($payloadCol)").as("bs"))
-      .select(col(idCol),
-        col("bs.valid").as("valid"),
-        col("bs.width").as("width"),
-        col("bs.height").as("height"),
-        n.as("n_px"),
-        when(n > 0, col("bs.peak")).as("peak"),
-        when(n > 0, col("bs.sum_r").cast("double") / n.cast("double")).as("mean_r"),
-        when(n > 0, col("bs.sum_g").cast("double") / n.cast("double")).as("mean_g"),
-        when(n > 0, col("bs.sum_b").cast("double") / n.cast("double")).as("mean_b"),
-        when(n > 0, col("bs.sum_luma_milli").cast("double") / (n * 1000L).cast("double"))
-          .as("mean_luma"))
-  }
+  def bmpStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
+    pixelMoments(media, "graft_bmp_stats", idCol, payloadCol)
 
   /** REAL (non-stub) audio decode: strict RIFF/WAVE PCM16 header
     * parse + exact integer sample moments via the codegen'd
-    * [[graft.plans.WavPcmStats]] expression — one linear pass per
+    * `graft_wav_stats` kernel — one linear pass per
     * payload inside the scan stage, no codec library (PCM-WAV is
     * byte math; compressed formats remain the DECLARED stub).
     * Output: header fields as parsed (the oracle asserts them
@@ -1483,25 +1340,23 @@ object Multimodal {
     * determinism recipe. Malformed payloads report valid=false.
     */
   def wavStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    val n = col("ws.n_samples")
-    media
-      .select(col(idCol), expr(s"graft_wav_stats($payloadCol)").as("ws"))
+    val n = col("decoded.n_samples")
+    decode(media, "graft_wav_stats", idCol, payloadCol)
       .select(col(idCol),
-        col("ws.valid").as("valid"),
-        col("ws.sample_rate").as("sample_rate"),
-        col("ws.n_channels").as("n_channels"),
-        col("ws.bits").as("bits"),
+        col("decoded.valid").as("valid"),
+        col("decoded.sample_rate").as("sample_rate"),
+        col("decoded.n_channels").as("n_channels"),
+        col("decoded.bits").as("bits"),
         n.as("n_samples"),
-        when(n > 0, col("ws.peak_abs")).as("peak_abs"),
-        when(n > 0, col("ws.sum_s").cast("double") / n.cast("double")).as("mean_sample"),
-        when(n > 0, sqrt(col("ws.sum_sq").cast("double") / n.cast("double"))).as("rms"))
+        when(n > 0, col("decoded.peak_abs")).as("peak_abs"),
+        when(n > 0, col("decoded.sum_s").cast("double") / n.cast("double")).as("mean_sample"),
+        when(n > 0, sqrt(col("decoded.sum_sq").cast("double") / n.cast("double"))).as("rms"))
   }
 
   /** REAL (non-stub) binary compute: per-payload byte-histogram
     * profile — size, distinct byte values, modal byte + count, and
     * Shannon entropy in bits/byte — via the codegen'd
-    * [[graft.plans.ByteHistStats]] expression, one linear pass per
+    * `graft_byte_stats` kernel, one linear pass per
     * payload inside the scan stage. No codec needed: entropy triage
     * (compressed/encrypted vs structured vs text payloads) is the
     * first filter every binary-ingest pipeline runs, before any
@@ -1509,13 +1364,11 @@ object Multimodal {
     * 100 TB the cost is the parquet read itself.
     */
   def byteStats(media: DataFrame, idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
-    graft.plans.GraftFunctions.register(media.sparkSession)
-    media
-      .select(col(idCol), expr(s"graft_byte_stats($payloadCol)").as("bs"))
-      .select(col(idCol), col("bs.n_bytes").as("n_bytes"),
-        col("bs.distinct_bytes").as("distinct_bytes"),
-        col("bs.top_byte").as("top_byte"), col("bs.top_count").as("top_count"),
-        round(col("bs.entropy"), 6).as("entropy"))
+    decode(media, "graft_byte_stats", idCol, payloadCol)
+      .select(col(idCol), col("decoded.n_bytes").as("n_bytes"),
+        col("decoded.distinct_bytes").as("distinct_bytes"),
+        col("decoded.top_byte").as("top_byte"), col("decoded.top_count").as("top_count"),
+        round(col("decoded.entropy"), 6).as("entropy"))
   }
 
   /** REAL (non-stub) binary chunk-dedup accounting: payloads split

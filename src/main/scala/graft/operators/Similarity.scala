@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -471,11 +471,10 @@ object Similarity {
     * seed, so the fine join drops no rows.
     */
   private[graft] def knnAssignCells(embeddings: DataFrame, cols: Seq[String] = Nil,
-                                    cellTarget: Int = 256): DataFrame = {
+                                    cellTarget: Int = 256, seedCap: Int = KnnSeedCap): DataFrame = {
     val e = embeddings.select(
       (col("vec_id") +: cols.map(col)) :+ toDouble(col("embedding")).as("v"): _*)
-    val cap = knnSeedCap(e.sparkSession)
-    val (nVec, seeds) = countAndCoarseSeeds(e, cap)
+    val (nVec, seeds) = countAndCoarseSeeds(e, seedCap)
     val nlist = if (nVec == 0) 1 else knnNlist(nVec, cellTarget)
     if (nlist == 1) return e.withColumn("cell", lit(0L))
     val ncoarse = knnNcoarse(nlist)
@@ -558,32 +557,10 @@ object Similarity {
     * sizing scan: ncoarse ≤ √(n/cellTarget) stays under 4096 up to
     * ~4.3e9 vectors at the default cellTarget — past that,
     * [[knnAssignCells]] auto-routes to the hash-sampled seed
-    * quantizer (routing rung 3) instead of failing.
+    * quantizer (routing rung 3) instead of failing. Specs pass a tiny
+    * cap to force that rung on fixture-sized corpora.
     */
   private val KnnSeedCap = 4096
-
-  /** Session conf overriding [[KnnSeedCap]] — the per-task/driver
-    * bound of the prefix-seed rung. Tests set it tiny to force the
-    * sampled-quantizer rung on fixture-sized corpora.
-    */
-  private[graft] val KnnSeedCapConf = "graft.knn.seedCap"
-
-  private def knnSeedCap(spark: SparkSession): Int =
-    spark.conf.getOption(KnnSeedCapConf) match {
-      case None => KnnSeedCap
-      case Some(s) =>
-        // validate loudly and clamp to >= 1: a 0/negative cap would
-        // empty the seed prefix and (before the `coarse`-derived dim
-        // fix) starve the broadcast sizing gate; a non-numeric value
-        // should name the conf instead of surfacing as a bare
-        // NumberFormatException deep in a job
-        val v = try s.toInt catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"$KnnSeedCapConf must be a positive integer, got '$s'")
-        }
-        math.max(1, v)
-    }
 
   /** Routing rung 3 of [[knnAssignCells]]: coarse seeds for corpora
     * whose ncoarse exceeds the prefix cap — the ncoarse vectors

@@ -530,7 +530,7 @@ object Stats {
 
   /** Text cleaning pipeline: lower, strip non-alphanumerics,
     * collapse runs of spaces, trim — ONE codegen'd byte pass
-    * (graft.plans.CleanText), not a chain of java.util.regex
+    * (the graft_clean_text kernel), not a chain of java.util.regex
     * passes: the regex chain measured ~16x slower per char, and on
     * the bench host's JVM concurrent regex tasks additionally
     * collapse ~20x (thread-scaling pathology, reproduced Spark-free
@@ -1333,7 +1333,19 @@ object Stats {
     * rank rides a bounded single-partition window.
     */
   def fdrBh(events: DataFrame, alpha: Double = 0.05,
-            key: String = "user_id", v: String = "value"): DataFrame = {
+            key: String = "user_id", v: String = "value"): DataFrame =
+    fdrBhRouted(events, alpha, key, v, FdrSinglePartitionKeys)
+
+  /** Key count up to which [[fdrBh]] ranks in one single-partition
+    * window; above it the rank is the distributed two-phase one.
+    */
+  private val FdrSinglePartitionKeys = 1L << 20
+
+  /** [[fdrBh]] with the route threshold as an argument, so specs can
+    * force the two-phase route on a small input.
+    */
+  private[graft] def fdrBhRouted(events: DataFrame, alpha: Double, key: String, v: String,
+                                 singlePartitionKeys: Long): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1): $alpha")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val g = events
@@ -1371,10 +1383,8 @@ object Stats {
     // order), never one task holding a 1e9-key universe. k_max is a
     // one-row broadcast aggregate on both routes.
     val mKeys = g.count()
-    val spCap = events.sparkSession.conf
-      .getOption("graft.fdr.maxSinglePartitionKeys").map(_.toLong).getOrElse(1L << 20)
     val rankedUp =
-      if (mKeys <= spCap) {
+      if (mKeys <= singlePartitionKeys) {
         val wAll = org.apache.spark.sql.expressions.Window
           .orderBy(col("p_cheb"), col(key))
         withP.withColumn("bh_rank", row_number().over(wAll).cast("long"))

@@ -3004,9 +3004,7 @@ object TimeSeries {
     * engine-portable form of nested smoothings ([[trix]] notes why
     * the closed form is not). */
   private[graft] def emaRecurrenceSeries(src: Column, a: Double): Column =
-    org.apache.spark.sql.graftshim.GraftShim.column(
-      graft.plans.EmaArrSeries(
-        org.apache.spark.sql.graftshim.GraftShim.expression(src), a))
+    graft.plans.KernelTable.column("graft_ema_arr", src, a)
 
   /** The interpreted HOF fold [[emaRecurrenceSeries]] replaced — kept
     * ONLY as the equivalence reference (TimeSeriesSpec pins the
@@ -3156,9 +3154,7 @@ object TimeSeries {
     * portable: DuckDB tree-aggregates larger frames, the r11
     * q_heikin_ashi finding). */
   private[graft] def cumSumSeries(src: Column): Column =
-    org.apache.spark.sql.graftshim.GraftShim.column(
-      graft.plans.CumSumArrSeries(
-        org.apache.spark.sql.graftshim.GraftShim.expression(src)))
+    graft.plans.KernelTable.column("graft_cumsum_arr", src)
 
   /** HOF form of [[cumSumSeries]], kept as the spec equivalence
     * reference only (see [[emaRecurrenceSeriesHof]]).

@@ -4,23 +4,31 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, ExpectsInputTypes, Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the operators whose composed-
-  * plan form needs a token/shingle explode + shuffle: here the whole
-  * fold runs per row inside the scan stage, so the 100 TB corpus
-  * never shuffles raw tokens at all — output is one signature row
-  * per document.
+/** graft's per-row kernels as codegen'd Catalyst expressions: the
+  * whole fold of a dedup hash, text clean, BPE census or payload
+  * decode runs per row inside the scan stage, so the 100 TB corpus
+  * never shuffles raw tokens or bytes — output is one row per input.
   *
-  * All three expressions implement `doGenCode` (NOT CodegenFallback):
-  * the generated code is a single static call into [[GraftHashOps]],
-  * so the enclosing stage stays inside whole-stage codegen and rows
-  * never box through the interpreted eval path.
+  * The kernels themselves are static methods of [[GraftHashOps]].
+  * [[KernelTable]] declares, once each, every kernel that is a single
+  * static call on one input column plus literal parameters: its SQL
+  * name, method, input and result types and nullability. One
+  * expression, [[KernelExpr]], serves every row; its generated code is
+  * the row's static call (never CodegenFallback, so the stage stays
+  * inside whole-stage codegen) and its interpreted path invokes the
+  * same method, resolved by name. A kernel keeps its own expression
+  * class only when the expression must do more than forward the call:
+  * [[DotProduct]] (ANSI-aware multiply mode), [[MinHashSig]] (its SQL
+  * form fixes the parameters), [[LshBucket]], [[IvfAssign]] and
+  * [[IvfAssignNested]] (input checks, type-derived arguments,
+  * referenced centroids); the aggregates live in their own files.
   *
   * Semantics are bit-identical to the composed plans in
   * graft.operators.Dedup / Similarity (asserted in
@@ -124,10 +132,20 @@ object GraftHashOps {
     UnsafeArrayData.fromPrimitiveArray(bounds.result())
   }
 
-  /** Word n-gram join (see WordNgrams): one pass building each
-    * window with a shared byte builder; null-token windows dropped.
+  /** Space-joined word n-grams of a token array (`graft_word_ngrams`),
+    * bit-identical to the zip_with/filter HOF chain in
+    * TextFunctions.ngramsHof: window i (0-based) joins toks[i..i+n-1]
+    * with single spaces in one pass over a shared byte builder,
+    * windows containing a null token are dropped (the HOF's
+    * when(isNotNull, ...) + filter), n = 1 returns the input array
+    * unchanged (the HOF's empty fold). TextAnalysisSpec pins the
+    * equivalence. The HOF chain is interpreted (n-1 zip_with passes +
+    * filters per row) and fed the shingle scans of the whole dedup
+    * family — q_containment's plan ran three concurrent copies of it
+    * at ~2.8 s each on the sf0.1 corpus.
     */
   def wordNgrams(toks: ArrayData, n: Int): ArrayData = {
+    if (n < 1) throw new IllegalArgumentException(s"graft_word_ngrams: n must be positive: $n")
     if (n == 1) return toks
     val len = toks.numElements()
     val out = new java.util.ArrayList[UTF8String](math.max(len - n + 1, 0))
@@ -152,9 +170,17 @@ object GraftHashOps {
 
   private val SpaceUtf8 = UTF8String.fromString(" ")
 
-  /** EMA(adjust=False) series fold (see EmaArrSeries): one linear
-    * pass, prev carried as a nullable box so a null element poisons
-    * the tail exactly like the HOF's null arithmetic.
+  /** EMA(adjust=False) series over an array<double> (`graft_ema_arr`),
+    * bit-identical to the seeded strict-left-fold HOF it replaces,
+    * aggregate(slice(src,2,n-1), array(src[0]),
+    *           (acc,x) => concat(acc, array(oma*acc[-1] + a*x))):
+    * e(0) = src(0), e(i) = (1-a)*e(i-1) + a*src(i) with the SAME IEEE
+    * operand order ((oma*prev) + (a*x)), prev carried as a nullable
+    * box so a null element poisons the tail exactly like the HOF's
+    * null arithmetic. TimeSeriesSpec pins the equivalence. The HOF
+    * shape is interpreted AND quadratic (concat copies the prefix
+    * array per element): a 500-day per-key series paid ~125k array
+    * copies per smoothing — trix/tsi chain three to four of them.
     */
   def emaArrSeries(src: ArrayData, a: Double): ArrayData = {
     val n = src.numElements()
@@ -178,7 +204,7 @@ object GraftHashOps {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Cumulative-sum series fold (see CumSumArrSeries): y += x in
+  /** Cumulative-sum series fold (`graft_cumsum_arr`): y += x in
     * element order, null-poisoning like the HOF.
     */
   def cumSumSeries(src: ArrayData): ArrayData = {
@@ -531,15 +557,7 @@ object GraftHashOps {
 
   private val LN2 = math.log(2.0)
 
-  /** Byte-histogram statistics for [[ByteHistStats]]: one linear
-    * pass builds the 256-bin histogram, one fixed ascending-order
-    * pass over the bins derives distinct count, modal byte
-    * (smallest on ties: strict `>` while scanning ascending), and
-    * Shannon entropy = log2(n) - sum(c*log2(c))/n — the
-    * cancellation-free form whose per-bin terms are exact functions
-    * of integer counts, folded in a deterministic order.
-    */
-  /** REAL (non-stub) RIFF/WAVE PCM decode for [[WavPcmStats]]: strict
+  /** REAL (non-stub) RIFF/WAVE PCM decode for `graft_wav_stats`: strict
     * header parse (RIFF/WAVE/fmt /data magics, PCM format code 1,
     * 16-bit mono layout checks) followed by one linear pass over the
     * little-endian int16 samples accumulating EXACT integers — count,
@@ -620,7 +638,7 @@ object GraftHashOps {
     if ((x & 0x80) != 0) t else -t
   }
 
-  /** REAL (non-stub) COMPRESSED-audio decode for [[WavG711Stats]]:
+  /** REAL (non-stub) COMPRESSED-audio decode for `graft_g711_stats`:
     * strict RIFF/WAVE parse of the canonical non-PCM layout (18-byte
     * fmt chunk with cbSize=0, a fact chunk whose sample count must
     * agree with the data size, 8-bit mono at block align 1), format
@@ -630,8 +648,11 @@ object GraftHashOps {
     * (|s| ≤ 32256 so Σs² stays far inside int64). G.711 is a real
     * ITU codec (2:1 telephony compression) decodable with zero codec
     * libraries — the first compressed AUDIO format past the declared
-    * stub line. Malformed payloads return valid=false with zeroed
-    * fields; the expression is total and codegen-friendly.
+    * stub line. The expansion is pure integer math, so the SQL
+    * oracle re-derives every decoded sample bitwise — the decode
+    * itself is oracle-checked, not just the container parse.
+    * Malformed payloads return valid=false with zeroed fields; the
+    * expression is total and codegen-friendly.
     */
   def g711Stats(payload: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
     def le16(o: Int): Int = (payload(o) & 0xff) | ((payload(o + 1) & 0xff) << 8)
@@ -685,7 +706,7 @@ object GraftHashOps {
   }
 
   /** REAL (non-stub) uncompressed-BMP (24 bpp) decode for
-    * [[BmpPixelStats]]: strict BITMAPFILEHEADER/BITMAPINFOHEADER
+    * `graft_bmp_stats`: strict BITMAPFILEHEADER/BITMAPINFOHEADER
     * parse (magic, 54-byte data offset, header size 40, 1 plane,
     * 24 bpp, BI_RGB, bounds), then one pass over the pixel array
     * honoring the format's two classic traps — BGR channel order and
@@ -746,7 +767,7 @@ object GraftHashOps {
       Array[Any](true, width, height, width.toLong * height, sr, sg, sb, peak, luma))
   }
 
-  /** REAL (non-stub) PNG decode for [[PngPixelStats]] — the first
+  /** REAL (non-stub) PNG decode for `graft_png_stats` — the first
     * COMPRESSED format to cross the declared stub line, with zero
     * codec libraries: the zlib layer is `java.util.zip.Inflater`
     * (JDK), the PNG container (signature, chunk framing, CRC-32
@@ -890,7 +911,7 @@ object GraftHashOps {
       Array[Any](true, width, height, width.toLong * height, sr, sg, sb, peak, luma))
   }
 
-  /** REAL QOI decode for [[QoiPixelStats]] — the whole codec is
+  /** REAL QOI decode for `graft_qoi_stats` — the whole codec is
     * implemented HERE (the JDK has no QOI support): the 14-byte
     * header (magic, big-endian dims, channels, colorspace), then the
     * chunk stream per the published QOI spec — OP_RGB/OP_RGBA full
@@ -982,7 +1003,7 @@ object GraftHashOps {
       Array[Any](true, w.toInt, h.toInt, w * h, sr, sg, sb, peak, luma))
   }
 
-  /** REAL ZIP archive decode for [[ZipArchiveStats]] — the container
+  /** REAL ZIP archive decode for `graft_zip_stats` — the container
     * is implemented HERE per the published PKWARE APPNOTE layout
     * (the raw-deflate layer is `java.util.zip.Inflater(nowrap)`):
     * end-of-central-directory discovery by backward scan with the
@@ -1105,7 +1126,7 @@ object GraftHashOps {
       Array[Any](true, nTotal, totalBytes, sumBytes, maxEntry))
   }
 
-  /** STRICT UTF-8 validation + codepoint census for [[Utf8Stats]],
+  /** STRICT UTF-8 validation + codepoint census for `graft_utf8_stats`,
     * implemented from RFC 3629: continuation-byte checks, the
     * OVERLONG-encoding rejections per class (2-byte < U+0080,
     * 3-byte < U+0800, 4-byte < U+10000), the surrogate-range
@@ -1163,7 +1184,7 @@ object GraftHashOps {
       Array[Any](true, payload.length.toLong, n1 + n2 + n3 + n4, n1, n2, n3, n4, maxCp))
   }
 
-  /** STRICT UTF-16 validation + codepoint census for [[Utf16Stats]]:
+  /** STRICT UTF-16 validation + codepoint census for `graft_utf16_stats`:
     * a BOM is REQUIRED (FE FF big-endian or FF FE little-endian —
     * BOM-less UTF-16 is the classic mojibake source), the byte count
     * after it must be even, every high surrogate must be followed by
@@ -1289,7 +1310,7 @@ object GraftHashOps {
   private def punyDigit(d: Int): Char =
     if (d < 26) ('a' + d).toChar else ('0' + d - 26).toChar
 
-  /** STRICT RFC 3492 Punycode decode for [[PunycodeStats]]: the
+  /** STRICT RFC 3492 Punycode decode for `graft_punycode_stats`: the
     * payload is an ASCII `xn--`-prefixed label; after the prefix the
     * basic codepoints run to the LAST hyphen delimiter, then the
     * generalized-variable-length-integer deltas reconstruct the
@@ -1385,7 +1406,7 @@ object GraftHashOps {
       Array[Any](true, nBasic + nExt, nBasic, nExt, maxCp, sumCp))
   }
 
-  /** STRICT RFC 4648 Base64 decode for [[Base64Stats]]: the standard
+  /** STRICT RFC 4648 Base64 decode for `graft_b64_stats`: the standard
     * alphabet only, length a multiple of 4, padding only in the
     * final quantum ('=' or '==', with the mandated zero low bits in
     * the preceding symbol so every decode has exactly one canonical
@@ -1635,7 +1656,7 @@ object GraftHashOps {
     java.util.Arrays.copyOf(out, outLen)
   }
 
-  /** [[DeflateStats]] eval: in-repo RFC 1951 inflate of a raw
+  /** `graft_deflate_stats`: in-repo RFC 1951 inflate of a raw
     * deflate payload + exact byte moments. The payload must be ONE
     * complete deflate stream with no trailing bytes (the consumed
     * bit position, rounded up, must land at payload end).
@@ -1658,7 +1679,7 @@ object GraftHashOps {
       Array[Any](true, data.length.toLong, sum, peak))
   }
 
-  /** REAL tar.gz decode for [[TarGzStats]] — both container layers
+  /** REAL tar.gz decode for `graft_targz_stats` — both container layers
     * implemented HERE (the raw-deflate core is
     * `java.util.zip.Inflater(nowrap)`): the GZIP member format per
     * RFC 1952 — magic, CM=8, FLG bit handling with proper skipping
@@ -1812,7 +1833,7 @@ object GraftHashOps {
       Array[Any](true, n, totalBytes, sumBytes, maxEntry))
   }
 
-  /** REAL GIF decode for [[GifPixelStats]] — the LZW layer is
+  /** REAL GIF decode for `graft_gif_stats` — the LZW layer is
     * implemented HERE (no JDK codec does GIF-LZW): variable-width
     * codes (LSB-first bit order), CLEAR/EOI handling, dictionary
     * growth to the 12-bit ceiling with the standard
@@ -1982,6 +2003,18 @@ object GraftHashOps {
       Array[Any](true, width, height, nPix.toLong, sr, sg, sb, peak, luma))
   }
 
+  /** Byte-histogram statistics of a payload (`graft_byte_stats`):
+    * one linear pass builds the 256-bin histogram, one fixed
+    * ascending-order pass over the bins derives distinct count, modal
+    * byte (smallest on ties: strict `>` while scanning ascending), and
+    * Shannon entropy in bits/byte = log2(n) - sum(c*log2(c))/n — the
+    * cancellation-free form whose per-bin terms are exact functions
+    * of integer counts, folded in ascending byte-value order, so the
+    * double accumulation order is fixed and engine-independent up to
+    * the final 6-dp rounding the callers apply. High-entropy payloads
+    * read as already-compressed or encrypted media, low-entropy as
+    * text: the triage signal binary pipelines run before any decode.
+    */
   def byteStats(payload: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
     val counts = new Array[Long](256)
     var i = 0
@@ -2363,7 +2396,7 @@ object GraftHashOps {
     new JpegImage(width, height, padW, planes)
   }
 
-  /** REAL baseline-JPEG decode for [[JpegPixelStats]]: full
+  /** REAL baseline-JPEG decode for `graft_jpeg_stats`: full
     * [[jpegDecode]] (entropy decode + dequant + IDCT + color
     * convert), then exact integer pixel moments over the CROPPED
     * image — same output shape as the BMP/PNG/GIF/QOI twins.
@@ -3114,210 +3147,175 @@ object GraftHashOps {
   }
 }
 
-/** STRICT LZ4 frame + block decode with XXH32 verification (see
-  * [[GraftHashOps.lz4Stats]]) — the storage-tier codec a 100 TB
-  * parquet estate meets daily, implemented in-repo with zero codec
-  * libraries. Total function: malformed payloads yield valid=false,
-  * never null.
+/** One row of [[KernelTable]]: a per-row kernel whose whole body is
+  * the static call `GraftHashOps.<method>(input, params...)`.
+  *
+  * @param name     SQL function name, also the name plans print
+  * @param method   the [[GraftHashOps]] method
+  * @param input    type of the input column
+  * @param result   result type; struct field names are the output
+  *                 column names callers select
+  * @param nullable the kernel may return null for a non-null input
+  *                 (such kernels return an object type)
+  * @param params   types of the literal arguments after the input
   */
-case class Lz4Stats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Lz4Stats.schema
-  override def prettyName: String = "graft_lz4_stats"
+final case class Kernel(name: String, method: String, input: DataType, result: DataType,
+                        nullable: Boolean = false, params: Seq[DataType] = Nil) {
+
+  /** The method, resolved by name once, as Spark's StaticInvoke does:
+    * the interpreted path calls exactly what the generated code calls.
+    */
+  @transient lazy val resolved: java.lang.reflect.Method =
+    Class.forName(KernelTable.Ops).getMethod(method,
+      (input +: params).map(CodeGenerator.javaClass): _*)
+
+  /** Expression for the SQL call `name(input, params...)`; parameters
+    * must be literals and are cast to their declared types.
+    */
+  def build(es: Seq[Expression]): KernelExpr = {
+    require(es.length == 1 + params.length && es.tail.forall(_.foldable),
+      s"$name takes an input column and ${params.length} literal parameter(s)")
+    KernelExpr(this, es.head, es.tail.zip(params).map { case (e, t) => Cast(e, t).eval() })
+  }
+}
+
+/** The codegen'd expression of every [[KernelTable]] row: nulls in,
+  * nulls out, and the generated code is the row's one static call, so
+  * the enclosing stage stays inside whole-stage codegen.
+  */
+case class KernelExpr(kernel: Kernel, child: Expression, params: Seq[Any])
+    extends UnaryExpression with ExpectsInputTypes {
+  override def dataType: DataType = kernel.result
+  override def nullable: Boolean = kernel.nullable || child.nullable
+  override def prettyName: String = kernel.name
+  override def inputTypes = Seq(kernel.input)
+  // plans print graft_x(input, params...), never the table row
+  override protected def stringArgs: Iterator[Any] = Iterator(child) ++ params
 
   override def nullSafeEval(input: Any): Any =
-    GraftHashOps.lz4Stats(input.asInstanceOf[Array[Byte]])
+    try kernel.resolved.invoke(null, (input +: params).map(_.asInstanceOf[AnyRef]): _*)
+    catch {
+      case e: java.lang.reflect.InvocationTargetException if e.getCause != null => throw e.getCause
+    }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.lz4Stats($c)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    def call(c: String): String = (c +: params.map {
+      case l: Long => s"${l}L"
+      case v       => v.toString
+    }).mkString(s"${KernelTable.Ops}.${kernel.method}(", ", ", ")")
+    if (kernel.nullable)
+      nullSafeCodeGen(ctx, ev, c => s"""
+        |${ev.value} = ${call(c)};
+        |${ev.isNull} = ${ev.value} == null;
+        |""".stripMargin)
+    else defineCodeGen(ctx, ev, call)
+  }
 
-  override protected def withNewChildInternal(newChild: Expression): Lz4Stats = copy(child = newChild)
+  override protected def withNewChildInternal(newChild: Expression): KernelExpr = copy(child = newChild)
 }
 
-/** STRICT Snappy framing + raw block decode with CRC-32C
-  * verification (see [[GraftHashOps.snappyStats]]) — the other
-  * storage-tier codec next to LZ4, implemented in-repo with zero
-  * codec libraries (the JDK has CRC32C but no Snappy). Total
-  * function: malformed payloads yield valid=false, never null.
+/** Every kernel that is one static [[GraftHashOps]] call on one input
+  * column plus optional literal parameters, declared once: its SQL
+  * name, method, input and result types and nullability. A kernel
+  * belongs here unless its expression has to do more than forward the
+  * call — derive arguments from the input's type, check inputs beyond
+  * their type, or hold state that is not a literal; those keep their
+  * own class below.
   */
-case class SnappyStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = SnappyStats.schema
-  override def prettyName: String = "graft_snappy_stats"
+object KernelTable {
+  private[plans] val Ops = "graft.plans.GraftHashOps"
 
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.snappyStats(input.asInstanceOf[Array[Byte]])
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.snappyStats($c)")
+  /** Exact integer pixel moments, shared by the five image decoders. */
+  private val PixelMoments = struct(
+    "valid" -> BooleanType, "width" -> IntegerType, "height" -> IntegerType,
+    "n_px" -> LongType, "sum_r" -> LongType, "sum_g" -> LongType, "sum_b" -> LongType,
+    "peak" -> IntegerType, "sum_luma_milli" -> LongType)
 
-  override protected def withNewChildInternal(newChild: Expression): SnappyStats = copy(child = newChild)
-}
+  private val ArchiveMoments = struct(
+    "valid" -> BooleanType, "n_entries" -> IntegerType, "total_bytes" -> LongType,
+    "sum_bytes" -> LongType, "max_entry_bytes" -> LongType)
 
-object SnappyStats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_chunks", IntegerType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("sum_bytes", LongType, nullable = false),
-    StructField("max_byte", IntegerType, nullable = false)))
-}
+  private val ByteMoments = struct(
+    "valid" -> BooleanType, "n_bytes" -> LongType, "sum_bytes" -> LongType,
+    "max_byte" -> IntegerType)
 
-/** STRICT protobuf wire-format walk (see
-  * [[GraftHashOps.protoStats]]) — the serialization every binary
-  * telemetry column at 100 TB speaks, walked in-repo with zero
-  * protobuf libraries. Total function: malformed payloads yield
-  * valid=false, never null.
-  */
-case class ProtoStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ProtoStats.schema
-  override def prettyName: String = "graft_proto_stats"
+  /** Codec decoders; `units` names the LZ4 block, Snappy chunk or
+    * protobuf field count.
+    */
+  private def codecMoments(units: String) = struct(
+    "valid" -> BooleanType, units -> IntegerType, "n_bytes" -> LongType,
+    "sum_bytes" -> LongType, "max_byte" -> IntegerType)
 
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.protoStats(input.asInstanceOf[Array[Byte]])
+  val rows: Seq[Kernel] = Seq(
+    // text
+    Kernel("graft_clean_text", "cleanText", StringType, StringType),
+    Kernel("graft_simhash", "simhash60", StringType, LongType),
+    Kernel("graft_simhash_wide", "simhash120", StringType, ArrayType(LongType, containsNull = false)),
+    Kernel("graft_cdc_bounds", "cdcBounds", StringType, ArrayType(IntegerType, containsNull = false),
+      params = Seq(LongType, IntegerType)),
+    Kernel("graft_fh_embed", "featureHash", StringType, ArrayType(DoubleType, containsNull = false),
+      params = Seq(IntegerType)),
+    Kernel("graft_word_ngrams", "wordNgrams",
+      ArrayType(StringType, containsNull = true), ArrayType(StringType, containsNull = true),
+      nullable = true, params = Seq(IntegerType)),
+    Kernel("graft_bpe_stats", "bpeStats", StringType,
+      struct("n_words" -> LongType, "n_tokens" -> LongType, "n_oov" -> LongType)),
+    Kernel("graft_bpe_tokens", "bpeTokens", StringType, ArrayType(StringType, containsNull = false)),
+    // series
+    Kernel("graft_ema_arr", "emaArrSeries",
+      ArrayType(DoubleType, containsNull = true), ArrayType(DoubleType, containsNull = true),
+      nullable = true, params = Seq(DoubleType)),
+    Kernel("graft_cumsum_arr", "cumSumSeries",
+      ArrayType(DoubleType, containsNull = true), ArrayType(DoubleType, containsNull = true),
+      nullable = true),
+    // binary payloads
+    Kernel("graft_byte_stats", "byteStats", BinaryType, struct(
+      "n_bytes" -> LongType, "distinct_bytes" -> IntegerType, "top_byte" -> IntegerType,
+      "top_count" -> LongType, "entropy" -> DoubleType)),
+    Kernel("graft_wav_stats", "wavPcmStats", BinaryType, struct(
+      "valid" -> BooleanType, "sample_rate" -> IntegerType, "n_channels" -> IntegerType,
+      "bits" -> IntegerType, "n_samples" -> LongType, "peak_abs" -> IntegerType,
+      "sum_s" -> LongType, "sum_sq" -> LongType)),
+    Kernel("graft_g711_stats", "g711Stats", BinaryType, struct(
+      "valid" -> BooleanType, "fmt_tag" -> IntegerType, "sample_rate" -> IntegerType,
+      "n_samples" -> LongType, "peak_abs" -> IntegerType, "sum_s" -> LongType,
+      "sum_sq" -> LongType)),
+    Kernel("graft_bmp_stats", "bmpPixelStats", BinaryType, PixelMoments),
+    Kernel("graft_png_stats", "pngPixelStats", BinaryType, PixelMoments),
+    Kernel("graft_jpeg_stats", "jpegStats", BinaryType, PixelMoments),
+    Kernel("graft_qoi_stats", "qoiPixelStats", BinaryType, PixelMoments),
+    Kernel("graft_gif_stats", "gifPixelStats", BinaryType, PixelMoments),
+    Kernel("graft_zip_stats", "zipStats", BinaryType, ArchiveMoments),
+    Kernel("graft_targz_stats", "targzStats", BinaryType, ArchiveMoments),
+    Kernel("graft_deflate_stats", "deflateStats", BinaryType, ByteMoments),
+    Kernel("graft_b64_stats", "base64Stats", BinaryType, ByteMoments),
+    Kernel("graft_utf8_stats", "utf8Stats", BinaryType, struct(
+      "valid" -> BooleanType, "n_bytes" -> LongType, "n_codepoints" -> LongType,
+      "n_ascii" -> LongType, "n_2byte" -> LongType, "n_3byte" -> LongType,
+      "n_4byte" -> LongType, "max_cp" -> IntegerType)),
+    Kernel("graft_utf16_stats", "utf16Stats", BinaryType, struct(
+      "valid" -> BooleanType, "n_bytes" -> LongType, "n_codepoints" -> LongType,
+      "n_bmp" -> LongType, "n_supplementary" -> LongType, "max_cp" -> IntegerType,
+      "sum_cp" -> LongType)),
+    Kernel("graft_punycode_stats", "punycodeStats", BinaryType, struct(
+      "valid" -> BooleanType, "n_codepoints" -> LongType, "n_basic" -> LongType,
+      "n_extended" -> LongType, "max_cp" -> IntegerType, "sum_cp" -> LongType)),
+    Kernel("graft_lz4_stats", "lz4Stats", BinaryType, codecMoments("n_blocks")),
+    Kernel("graft_snappy_stats", "snappyStats", BinaryType, codecMoments("n_chunks")),
+    Kernel("graft_proto_stats", "protoStats", BinaryType, codecMoments("n_fields")))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.protoStats($c)")
+  private val byName: Map[String, Kernel] = rows.map(k => k.name -> k).toMap
 
-  override protected def withNewChildInternal(newChild: Expression): ProtoStats = copy(child = newChild)
-}
-
-object ProtoStats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_fields", IntegerType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("sum_bytes", LongType, nullable = false),
-    StructField("max_byte", IntegerType, nullable = false)))
-}
-
-object Lz4Stats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_blocks", IntegerType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("sum_bytes", LongType, nullable = false),
-    StructField("max_byte", IntegerType, nullable = false)))
-}
-
-/** Greedy BPE-apply census against the deterministic in-repo merge
-  * table (see [[GraftHashOps.bpeTokenizeWord]]): per document, the
-  * word / token / OOV-token counts of tokenizing every [a-z]+ word.
-  * One codegen'd pass in the scan stage — the 100 TB corpus never
-  * explodes to token rows; rates divide once at the aggregate.
-  */
-case class BpeStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BpeStats.schema
-  override def prettyName: String = "graft_bpe_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.bpeStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.bpeStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeStats = copy(child = newChild)
-}
-
-object BpeStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_oov", LongType, nullable = false)))
-}
-
-/** BPE-apply token sequence of ONE word (see
-  * [[GraftHashOps.bpeTokens]]): the training-side companion of
-  * [[BpeStats]] — a train iteration counts adjacent pairs of the
-  * current tokenization, so it needs the sequence, not the census.
-  * Meant to run on the DISTINCT word set after a frequency
-  * aggregation, never on raw corpus rows.
-  */
-case class BpeTokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_tokens"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.bpeTokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.bpeTokens($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeTokens = copy(child = newChild)
-}
-
-/** One-pass clean/normalize (see GraftHashOps.cleanText): the
-  * codegen'd replacement for the
-  * trim(regexp_replace(regexp_replace(lower(s), "[^a-z0-9 ]", ""), " +", " "))
-  * chain — bit-identical output (spec-asserted), one linear byte
-  * pass, no java.util.regex.
-  */
-/** Space-joined word n-grams over a token array — bit-identical to
-  * the zip_with/filter HOF chain in TextFunctions.ngramsHof: window i
-  * (0-based) joins toks[i..i+n-1] with single spaces, windows
-  * containing a null token are dropped (the HOF's
-  * when(isNotNull, ...) + filter), n = 1 returns the input array
-  * unchanged (the HOF's empty fold). TextAnalysisSpec pins the
-  * equivalence. The HOF chain is interpreted (n-1 zip_with passes +
-  * filters per row) and fed the shingle scans of the whole dedup
-  * family — q_containment's plan ran three concurrent copies of it
-  * at ~2.8 s each on the sf0.1 corpus.
-  */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"ngrams n must be positive: $n")
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean  = true
-  override def prettyName: String = "graft_word_ngrams"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.wordNgrams(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.wordNgrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgrams = copy(child = newChild)
-}
-
-/** EMA(adjust=False) series over an array<double> — bit-identical to
-  * the seeded strict-left-fold HOF it replaces,
-  * aggregate(slice(src,2,n-1), array(src[0]),
-  *           (acc,x) => concat(acc, array(oma*acc[-1] + a*x))):
-  * e(0) = src(0), e(i) = (1-a)*e(i-1) + a*src(i) with the SAME IEEE
-  * operand order ((oma*prev) + (a*x)), null elements poisoning the
-  * tail exactly like the HOF (null*k = null, and every later term
-  * folds the null forward). TimeSeriesSpec pins the equivalence. The
-  * HOF shape is interpreted AND quadratic (concat copies the prefix
-  * array per element): a 500-day per-key series paid ~125k array
-  * copies per smoothing — trix/tsi chain three to four of them.
-  */
-case class EmaArrSeries(child: Expression, a: Double) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean  = true
-  override def prettyName: String = "graft_ema_arr"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.emaArrSeries(input.asInstanceOf[ArrayData], a)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.emaArrSeries($c, $a)")
-
-  override protected def withNewChildInternal(newChild: Expression): EmaArrSeries = copy(child = newChild)
-}
-
-/** Cumulative-sum series over an array<double> — the running-sum
-  * sibling of [[EmaArrSeries]], bit-identical to the seeded strict
-  * left fold y += x (see GraftHashOps.cumSumSeries).
-  */
-case class CumSumArrSeries(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean  = true
-  override def prettyName: String = "graft_cumsum_arr"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.cumSumSeries(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.cumSumSeries($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CumSumArrSeries = copy(child = newChild)
+  /** Column form of `name(input, params...)` for Scala callers, which
+    * need no function registration in their session.
+    */
+  def column(name: String, input: org.apache.spark.sql.Column, params: Any*): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graftshim.GraftShim
+    GraftShim.column(byName(name).build(GraftShim.expression(input) +: params.map(Literal(_))))
+  }
 }
 
 /** Sequential dot product of two array<double> columns — bit-identical
@@ -3375,35 +3373,6 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     copy(left = newLeft, right = newRight)
 }
 
-/** Gear-hash CDC cut positions of a text (see GraftHashOps.cdcBounds
-  * for the exact fold semantics and the HOF it replaces).
-  */
-case class CdcBounds(child: Expression, mask: Long, minLen: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_cdc_bounds"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.cdcBounds(input.asInstanceOf[UTF8String], mask, minLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.cdcBounds($c, ${mask}L, $minLen)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcBounds = copy(child = newChild)
-}
-
-case class CleanText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_clean_text"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.cleanText(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.cleanText($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CleanText = copy(child = newChild)
-}
-
 /** k-lane MinHash signature of a document's distinct word `n`-gram
   * shingles (see GraftHashOps.minhashSig for the hash family).
   * Returns array<long> of length k, or null when the text has no
@@ -3424,38 +3393,6 @@ case class MinHashSig(child: Expression, k: Int, n: Int) extends UnaryExpression
       |""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig = copy(child = newChild)
-}
-
-/** 60-bit SimHash over the token multiset; token hash = first 15 hex
-  * chars of md5 parsed base-16 (= conv(substr(md5(t),1,15),16,10)).
-  */
-case class SimHash60(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.simhash60(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.simhash60($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash60 = copy(child = newChild)
-}
-
-/** 120-bit SimHash as array(lane0, lane1) of 60-bit longs — one md5
-  * per token serves both lanes (see GraftHashOps.simhash120).
-  */
-case class SimHash120(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_simhash_wide"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.simhash120(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.simhash120($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash120 = copy(child = newChild)
 }
 
 /** Random-hyperplane LSH bucket of an embedding column (array<float>
@@ -3572,501 +3509,39 @@ case class IvfAssignNested(left: Expression, right: Expression) extends BinaryEx
     copy(left = newLeft, right = newRight)
 }
 
-/** Feature-hash embedding of a text column: array<double> of length
-  * `dim` (see GraftHashOps.featureHash).
-  */
-case class FeatureHashEmbed(child: Expression, dim: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_fh_embed"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.featureHash(input.asInstanceOf[UTF8String], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.featureHash($c, $dim)")
-
-  override protected def withNewChildInternal(newChild: Expression): FeatureHashEmbed = copy(child = newChild)
-}
-
-/** One-pass byte-histogram statistics of a `binary` payload — the
-  * REAL compute behind the multimodal column family (content
-  * profiling that needs no codec): byte count, distinct byte values,
-  * modal byte (smallest value on ties — deterministic), its count,
-  * and the Shannon entropy in bits/byte. Entropy folds the histogram
-  * in ascending byte-value order as log2(n) - sum(c_i*log2(c_i))/n,
-  * so the double accumulation order is fixed and engine-independent
-  * up to the final 6-dp rounding the callers apply. Used by
-  * [[graft.operators.Multimodal.byteStats]]; high-entropy payloads
-  * read as already-compressed/encrypted media, low-entropy as text —
-  * the standard triage signal in binary data pipelines.
-  */
-case class ByteHistStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ByteHistStats.schema
-  override def prettyName: String = "graft_byte_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.byteStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.byteStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ByteHistStats = copy(child = newChild)
-}
-
-object ByteHistStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("distinct_bytes", IntegerType, nullable = false),
-    StructField("top_byte", IntegerType, nullable = false),
-    StructField("top_count", LongType, nullable = false),
-    StructField("entropy", DoubleType, nullable = false)))
-}
-
-/** REAL uncompressed-BMP (24 bpp) header parse + exact pixel moments
-  * in one scan-stage pass (see [[GraftHashOps.bmpPixelStats]]).
-  * Total function: malformed payloads yield valid=false, never null.
-  */
-case class BmpPixelStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixelStats.schema
-  override def prettyName: String = "graft_bmp_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.bmpPixelStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.bmpPixelStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): BmpPixelStats = copy(child = newChild)
-}
-
-object BmpPixelStats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("n_px", LongType, nullable = false),
-    StructField("sum_r", LongType, nullable = false),
-    StructField("sum_g", LongType, nullable = false),
-    StructField("sum_b", LongType, nullable = false),
-    StructField("peak", IntegerType, nullable = false),
-    StructField("sum_luma_milli", LongType, nullable = false)))
-}
-
-/** REAL PNG (RGB8, non-interlaced) decode + exact pixel moments in
-  * one scan-stage pass — zlib inflate via the JDK, container parse
-  * and all five defilters in [[GraftHashOps.pngPixelStats]]. Total
-  * function: malformed payloads yield valid=false, never null.
-  * Same output schema as the uncompressed-BMP twin.
-  */
-case class PngPixelStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixelStats.schema
-  override def prettyName: String = "graft_png_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.pngPixelStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.pngPixelStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PngPixelStats = copy(child = newChild)
-}
-
-/** REAL baseline-JPEG (ITU T.81) decode + exact pixel moments in one
-  * scan-stage pass — segment walk, canonical Huffman entropy decode,
-  * dequantization, double-precision IDCT, and JFIF YCbCr->RGB, all
-  * in [[GraftHashOps.jpegDecode]] (no codec library; scope is
-  * baseline sequential at 1x1 sampling — grayscale or 4:4:4). Total
-  * function: malformed or out-of-scope payloads yield valid=false,
-  * never null. Same output schema as the BMP/PNG/GIF/QOI twins.
-  */
-case class JpegPixelStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixelStats.schema
-  override def prettyName: String = "graft_jpeg_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.jpegStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.jpegStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): JpegPixelStats = copy(child = newChild)
-}
-
-/** REAL ZIP archive decode + exact content moments in one scan-stage
-  * pass — EOCD discovery, central-directory walk, local-header
-  * parse, stored + raw-deflate entries, per-entry CRC-32
-  * verification, streaming-mode (bit 3) correctness (see
-  * [[GraftHashOps.zipStats]]). Total function: malformed payloads
-  * yield valid=false, never null.
-  */
-case class ZipArchiveStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ZipArchiveStats.schema
-  override def prettyName: String = "graft_zip_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.zipStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.zipStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ZipArchiveStats = copy(child = newChild)
-}
-
-object ZipArchiveStats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_entries", IntegerType, nullable = false),
-    StructField("total_bytes", LongType, nullable = false),
-    StructField("sum_bytes", LongType, nullable = false),
-    StructField("max_entry_bytes", LongType, nullable = false)))
-}
-
-/** STRICT UTF-8 validation + codepoint census in one scan-stage
-  * pass — RFC 3629 with overlong/surrogate/range rejection (see
-  * [[GraftHashOps.utf8Stats]]). Total function: malformed payloads
-  * yield valid=false, never null.
-  */
-case class Utf8Stats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Utf8Stats.schema
-  override def prettyName: String = "graft_utf8_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.utf8Stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.utf8Stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Utf8Stats = copy(child = newChild)
-}
-
-object Utf8Stats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("n_codepoints", LongType, nullable = false),
-    StructField("n_ascii", LongType, nullable = false),
-    StructField("n_2byte", LongType, nullable = false),
-    StructField("n_3byte", LongType, nullable = false),
-    StructField("n_4byte", LongType, nullable = false),
-    StructField("max_cp", IntegerType, nullable = false)))
-}
-
-/** STRICT UTF-16 validation + codepoint census in one scan-stage
-  * pass — required BOM (BE or LE), surrogate pairing, stray-low
-  * rejection (see [[GraftHashOps.utf16Stats]]). Total function:
-  * malformed payloads yield valid=false, never null.
-  */
-case class Utf16Stats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Utf16Stats.schema
-  override def prettyName: String = "graft_utf16_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.utf16Stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.utf16Stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Utf16Stats = copy(child = newChild)
-}
-
-object Utf16Stats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("n_codepoints", LongType, nullable = false),
-    StructField("n_bmp", LongType, nullable = false),
-    StructField("n_supplementary", LongType, nullable = false),
-    StructField("max_cp", IntegerType, nullable = false),
-    StructField("sum_cp", LongType, nullable = false)))
-}
-
-/** STRICT RFC 3492 Punycode decode + codepoint census in one
-  * scan-stage pass — xn-- label form, the §6.2 state machine with
-  * overflow checks, and CANONICAL-form enforcement via re-encode
-  * (see [[GraftHashOps.punycodeStats]]). Total function: malformed
-  * payloads yield valid=false, never null.
-  */
-case class PunycodeStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = PunycodeStats.schema
-  override def prettyName: String = "graft_punycode_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.punycodeStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.punycodeStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PunycodeStats = copy(child = newChild)
-}
-
-object PunycodeStats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_codepoints", LongType, nullable = false),
-    StructField("n_basic", LongType, nullable = false),
-    StructField("n_extended", LongType, nullable = false),
-    StructField("max_cp", IntegerType, nullable = false),
-    StructField("sum_cp", LongType, nullable = false)))
-}
-
-/** STRICT RFC 4648 Base64 decode + exact byte moments in one
-  * scan-stage pass — standard alphabet, canonical padding, no
-  * trailing data (see [[GraftHashOps.base64Stats]]). Total function:
-  * malformed payloads yield valid=false, never null.
-  */
-case class Base64Stats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DeflateStats.schema
-  override def prettyName: String = "graft_b64_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.base64Stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.base64Stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Base64Stats = copy(child = newChild)
-}
-
-/** REAL RFC 1951 DEFLATE decompression + exact byte moments in one
-  * scan-stage pass — the inflate algorithm itself is in-repo (bit
-  * reader, stored/fixed/dynamic blocks, canonical Huffman
-  * construction, LZ77 back-references; see
-  * [[GraftHashOps.inflateRaw]]), spec-checked for byte-equality
-  * against `java.util.zip.Inflater` on corpus and adversarial
-  * streams. Total function: malformed payloads yield valid=false,
-  * never null.
-  */
-case class DeflateStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DeflateStats.schema
-  override def prettyName: String = "graft_deflate_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.deflateStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.deflateStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DeflateStats = copy(child = newChild)
-}
-
-object DeflateStats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("sum_bytes", LongType, nullable = false),
-    StructField("max_byte", IntegerType, nullable = false)))
-}
-
-/** REAL tar.gz decode + exact content moments in one scan-stage
-  * pass — RFC 1952 gzip member parse (optional-field skipping,
-  * CRC-32 + ISIZE trailer verification) over `Inflater(nowrap)`,
-  * then a strict USTAR walk with header-checksum verification (see
-  * [[GraftHashOps.targzStats]]). Total function: malformed payloads
-  * yield valid=false, never null. Same output schema as the ZIP
-  * twin.
-  */
-case class TarGzStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ZipArchiveStats.schema
-  override def prettyName: String = "graft_targz_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.targzStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.targzStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TarGzStats = copy(child = newChild)
-}
-
-/** REAL QOI decode + exact pixel moments in one scan-stage pass —
-  * the ENTIRE codec (header, OP_RGB/RGBA/INDEX/DIFF/LUMA/RUN chunk
-  * stream, 64-entry running hash cache, end-marker framing) is
-  * implemented in-repo per the published QOI spec; the JDK has no
-  * QOI support (see [[GraftHashOps.qoiPixelStats]]). Total function:
-  * malformed payloads yield valid=false, never null. Same output
-  * schema as the BMP/PNG/GIF twins.
-  */
-case class QoiPixelStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixelStats.schema
-  override def prettyName: String = "graft_qoi_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.qoiPixelStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.qoiPixelStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): QoiPixelStats = copy(child = newChild)
-}
-
-/** REAL GIF decode + exact pixel moments in one scan-stage pass —
-  * the LZW layer is implemented in-repo (variable-width codes,
-  * dictionary growth, KwKwK case; see [[GraftHashOps.gifPixelStats]])
-  * since no JDK utility exposes GIF-LZW. Total function: malformed
-  * payloads yield valid=false, never null. Same output schema as
-  * the BMP/PNG twins.
-  */
-case class GifPixelStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixelStats.schema
-  override def prettyName: String = "graft_gif_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.gifPixelStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.gifPixelStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): GifPixelStats = copy(child = newChild)
-}
-
-/** REAL RIFF/WAVE PCM16 header parse + exact sample moments in one
-  * scan-stage pass (see [[GraftHashOps.wavPcmStats]]). Total
-  * function: malformed payloads yield valid=false, never null.
-  */
-case class WavPcmStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WavPcmStats.schema
-  override def prettyName: String = "graft_wav_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.wavPcmStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.wavPcmStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WavPcmStats = copy(child = newChild)
-}
-
-object WavPcmStats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("n_channels", IntegerType, nullable = false),
-    StructField("bits", IntegerType, nullable = false),
-    StructField("n_samples", LongType, nullable = false),
-    StructField("peak_abs", IntegerType, nullable = false),
-    StructField("sum_s", LongType, nullable = false),
-    StructField("sum_sq", LongType, nullable = false)))
-}
-
-/** REAL ITU-T G.711 (µ-law fmt 7 / A-law fmt 6) compressed-audio
-  * decode + exact sample moments in one scan-stage pass (see
-  * [[GraftHashOps.g711Stats]]). The companding expansion is pure
-  * integer math, so the SQL oracle re-derives every decoded sample
-  * bitwise — the decode itself is oracle-checked, not just the
-  * container parse. Total function: malformed payloads yield
-  * valid=false, never null.
-  */
-case class WavG711Stats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WavG711Stats.schema
-  override def prettyName: String = "graft_g711_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GraftHashOps.g711Stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftHashOps.g711Stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WavG711Stats = copy(child = newChild)
-}
-
-object WavG711Stats {
-  val schema: StructType = StructType(Seq(
-    StructField("valid", BooleanType, nullable = false),
-    StructField("fmt_tag", IntegerType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("n_samples", LongType, nullable = false),
-    StructField("peak_abs", IntegerType, nullable = false),
-    StructField("sum_s", LongType, nullable = false),
-    StructField("sum_sq", LongType, nullable = false)))
-}
-
 /** Runtime registration (Verify/Bench path) and a
   * SparkSessionExtensions hook for cluster deployments
   * (--conf spark.sql.extensions=graft.plans.GraftExtensions).
   */
 object GraftFunctions {
-  val all: Seq[(String, Seq[Expression] => Expression, String)] = Seq(
-    ("graft_clean_text", (es: Seq[Expression]) => CleanText(es.head), "returns lower-cased text stripped to [a-z0-9 ] with collapsed, trimmed spaces"),
-    ("graft_minhash_sig", (es: Seq[Expression]) => MinHashSig(es.head, 8, 3), "returns the 8x3 minhash signature of a text"),
-    ("graft_cdc_bounds", (es: Seq[Expression]) =>
-      CdcBounds(es(0), es(1).eval().asInstanceOf[Number].longValue(),
-        es(2).eval().asInstanceOf[Number].intValue()),
-      "returns the 1-based gear-hash CDC cut positions of a text"),
-    ("graft_simhash", (es: Seq[Expression]) => SimHash60(es.head), "returns the 60-bit simhash of a text"),
-    ("graft_simhash_wide", (es: Seq[Expression]) => SimHash120(es.head), "returns the 120-bit simhash of a text as two 60-bit lanes"),
-    ("graft_lsh_bucket", (es: Seq[Expression]) =>
-      LshBucket(es(0), es(1).eval().asInstanceOf[Number].intValue()),
-      "returns the n-plane random-hyperplane LSH bucket of an embedding"),
-    ("graft_fh_embed", (es: Seq[Expression]) =>
-      FeatureHashEmbed(es(0), es(1).eval().asInstanceOf[Number].intValue()),
-      "returns the dim-bucket feature-hash embedding of a text"),
-    ("graft_ivf_assign", (es: Seq[Expression]) => {
-      val ad = es(1).eval().asInstanceOf[ArrayData]
-      val cents = (0 until ad.numElements()).map(i => ad.getArray(i).toDoubleArray().toSeq)
-      IvfAssign(es(0), cents)
-    }, "returns the nearest IVF cell id of an embedding against a literal centroid table"),
-    ("graft_byte_stats", (es: Seq[Expression]) => ByteHistStats(es.head),
-      "returns struct(n_bytes, distinct_bytes, top_byte, top_count, entropy) of a binary payload"),
-    ("graft_wav_stats", (es: Seq[Expression]) => WavPcmStats(es.head),
-      "returns struct(valid, sample_rate, n_channels, bits, n_samples, peak_abs, sum_s, sum_sq) of a RIFF/WAVE PCM16 payload"),
-    ("graft_g711_stats", (es: Seq[Expression]) => WavG711Stats(es.head),
-      "returns struct(valid, fmt_tag, sample_rate, n_samples, peak_abs, sum_s, sum_sq) of a RIFF/WAVE G.711 mu-law/A-law payload"),
-    ("graft_bmp_stats", (es: Seq[Expression]) => BmpPixelStats(es.head),
-      "returns struct(valid, width, height, n_px, sum_r, sum_g, sum_b, peak, sum_luma_milli) of an uncompressed 24bpp BMP payload"),
-    ("graft_png_stats", (es: Seq[Expression]) => PngPixelStats(es.head),
-      "returns struct(valid, width, height, n_px, sum_r, sum_g, sum_b, peak, sum_luma_milli) of an RGB8 non-interlaced PNG payload"),
-    ("graft_gif_stats", (es: Seq[Expression]) => GifPixelStats(es.head),
-      "returns struct(valid, width, height, n_px, sum_r, sum_g, sum_b, peak, sum_luma_milli) of a single-image non-interlaced GIF payload"),
-    ("graft_jpeg_stats", (es: Seq[Expression]) => JpegPixelStats(es.head),
-      "returns struct(valid, width, height, n_px, sum_r, sum_g, sum_b, peak, sum_luma_milli) of a baseline-sequential 1x1-sampled JPEG payload"),
-    ("graft_qoi_stats", (es: Seq[Expression]) => QoiPixelStats(es.head),
-      "returns struct(valid, width, height, n_px, sum_r, sum_g, sum_b, peak, sum_luma_milli) of a QOI payload"),
-    ("graft_zip_stats", (es: Seq[Expression]) => ZipArchiveStats(es.head),
-      "returns struct(valid, n_entries, total_bytes, sum_bytes, max_entry_bytes) of a ZIP archive payload"),
-    ("graft_targz_stats", (es: Seq[Expression]) => TarGzStats(es.head),
-      "returns struct(valid, n_entries, total_bytes, sum_bytes, max_entry_bytes) of a gzipped USTAR archive payload"),
-    ("graft_deflate_stats", (es: Seq[Expression]) => DeflateStats(es.head),
-      "returns struct(valid, n_bytes, sum_bytes, max_byte) of a raw RFC 1951 deflate payload via the in-repo inflate"),
-    ("graft_utf8_stats", (es: Seq[Expression]) => Utf8Stats(es.head),
-      "returns struct(valid, n_bytes, n_codepoints, n_ascii, n_2byte, n_3byte, n_4byte, max_cp) of a UTF-8 payload under strict RFC 3629 validation"),
-    ("graft_utf16_stats", (es: Seq[Expression]) => Utf16Stats(es.head),
-      "returns struct(valid, n_bytes, n_codepoints, n_bmp, n_supplementary, max_cp, sum_cp) of a BOM-required UTF-16 payload under strict surrogate-pairing validation"),
-    ("graft_punycode_stats", (es: Seq[Expression]) => PunycodeStats(es.head),
-      "returns struct(valid, n_codepoints, n_basic, n_extended, max_cp, sum_cp) of a strict canonical RFC 3492 Punycode xn-- label"),
-    ("graft_b64_stats", (es: Seq[Expression]) => Base64Stats(es.head),
-      "returns struct(valid, n_bytes, sum_bytes, max_byte) of a strict RFC 4648 Base64 payload"),
-    ("graft_bpe_stats", (es: Seq[Expression]) => BpeStats(es.head),
-      "returns struct(n_words, n_tokens, n_oov) of greedy-BPE-tokenizing a text against the in-repo merge table"),
-    ("graft_bpe_tokens", (es: Seq[Expression]) => BpeTokens(es.head),
-      "returns the greedy-BPE token sequence of one word under the in-repo merge table (train-side: run on distinct words)"),
-    ("graft_lz4_stats", (es: Seq[Expression]) => Lz4Stats(es.head),
-      "returns struct(valid, n_blocks, n_bytes, sum_bytes, max_byte) of a strict LZ4 frame via the in-repo block decode + XXH32"),
-    ("graft_snappy_stats", (es: Seq[Expression]) => SnappyStats(es.head),
-      "returns struct(valid, n_chunks, n_bytes, sum_bytes, max_byte) of a strict Snappy framing stream via the in-repo raw decode + CRC-32C"),
-    ("graft_proto_stats", (es: Seq[Expression]) => ProtoStats(es.head),
-      "returns struct(valid, n_fields, n_bytes, sum_bytes, max_byte) of a strict protobuf wire-format message walk with internal-checksum verification"),
-    ("graft_replicate_sums", (es: Seq[Expression]) =>
-      ReplicateSums(es(0), es(1), es(2).eval().asInstanceOf[Number].intValue()),
-      "aggregate: struct(st, ct, ss, cs) — total and per-hash-bit-replicate exact sums/counts"),
-    ("graft_ema", (es: Seq[Expression]) =>
-      EmaAggregate(es(0), es(1), es(2).eval().asInstanceOf[Number].intValue(),
-        maxBufferRows = EmaAggregate.confMaxBufferRows),
-      "aggregate: final EMA(span, adjust=False) of values in ts order"),
-    ("graft_ema_series", (es: Seq[Expression]) =>
-      EmaSeriesAggregate(es(0), es(1), es(2).eval().asInstanceOf[Number].intValue(),
-        maxBufferRows = EmaAggregate.confMaxBufferRows),
-      "aggregate: full per-row EMA(span, adjust=False) series as array<struct<ts_us,value,ema>>")
-  )
+  val all: Seq[(String, Seq[Expression] => Expression)] =
+    KernelTable.rows.map(k => (k.name, k.build _)) ++ Seq(
+      ("graft_minhash_sig", (es: Seq[Expression]) => MinHashSig(es.head, 8, 3)),
+      ("graft_lsh_bucket", (es: Seq[Expression]) =>
+        LshBucket(es(0), es(1).eval().asInstanceOf[Number].intValue())),
+      ("graft_ivf_assign", (es: Seq[Expression]) => {
+        val ad = es(1).eval().asInstanceOf[ArrayData]
+        val cents = (0 until ad.numElements()).map(i => ad.getArray(i).toDoubleArray().toSeq)
+        IvfAssign(es(0), cents)
+      }),
+      ("graft_replicate_sums", (es: Seq[Expression]) =>
+        ReplicateSums(es(0), es(1), es(2).eval().asInstanceOf[Number].intValue())),
+      ("graft_ema", (es: Seq[Expression]) =>
+        EmaAggregate(es(0), es(1), es(2).eval().asInstanceOf[Number].intValue(),
+          maxBufferRows = EmaAggregate.confMaxBufferRows)),
+      ("graft_ema_series", (es: Seq[Expression]) =>
+        EmaSeriesAggregate(es(0), es(1), es(2).eval().asInstanceOf[Number].intValue(),
+          maxBufferRows = EmaAggregate.confMaxBufferRows)))
 
   def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder, _) =>
+    all.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
     }
 }
 
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, builder, _) =>
+    GraftFunctions.all.foreach { case (name, builder) =>
       e.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("graft.plans.Expressions", name),

@@ -160,34 +160,28 @@ class GraphCandidateSpec extends AnyFunSuite {
     // force routing rung 3: a cap of 2 makes the single-pass prefix
     // too short for ncoarse=4, the shape a >4.3e9-vector corpus hits
     // at the default cap — this must ROUTE, not throw
-    spark.conf.set(Similarity.KnnSeedCapConf, "2")
-    try {
-      val assigned = Similarity.knnAssignCells(df.repartition(7)).select("vec_id", "cell")
-      assert(assigned.count() === 600L, "sampled-rung assignment dropped rows")
-      // partition invariance: the hash-sampled seeds are a total
-      // order on ids, so the assignment cannot depend on layout
-      val b = Similarity.knnAssignCells(df.repartition(3)).select("vec_id", "cell")
-      assert(assigned.exceptAll(b).count() === 0 && b.exceptAll(assigned).count() === 0,
-        "sampled-rung assignment is partition-dependent")
-      // the sampled seeds differ from the prefix seeds, so the rung
-      // genuinely engaged (cells differ from the prefix-rung cells)
-      val prefixCells = {
-        spark.conf.unset(Similarity.KnnSeedCapConf)
-        val p = Similarity.knnAssignCells(df).select("vec_id", "cell").collect().toSet
-        spark.conf.set(Similarity.KnnSeedCapConf, "2")
-        p
-      }
-      assert(assigned.collect().toSet !== prefixCells,
-        "cap=2 did not change the quantizer — the sampled rung never engaged")
-      // subset-of-exact with bit-equal scores on the sampled rung
-      val celled = Similarity.knnCandidatePairs(df).select(col("va"), col("vb"), col("cos").as("cc"))
-      val exact  = Similarity.cosineNearDupPairs(df, -2.0).select(col("va"), col("vb"), col("cos").as("ce"))
-      val nC = celled.count()
-      assert(nC > 0 && nC < exact.count(), "sampled-rung candidate volume not strictly between 0 and exact")
-      val joined = celled.join(exact, Seq("va", "vb"))
-      assert(joined.count() === nC, "a sampled-rung pair is missing from the exact sweep")
-      assert(joined.filter(col("cc") =!= col("ce")).count() === 0,
-        "sampled-rung scores drift from the exact kernel")
-    } finally spark.conf.unset(Similarity.KnnSeedCapConf)
+    val assigned = Similarity.knnAssignCells(df.repartition(7), seedCap = 2).select("vec_id", "cell")
+    assert(assigned.count() === 600L, "sampled-rung assignment dropped rows")
+    // partition invariance: the hash-sampled seeds are a total
+    // order on ids, so the assignment cannot depend on layout
+    val b = Similarity.knnAssignCells(df.repartition(3), seedCap = 2).select("vec_id", "cell")
+    assert(assigned.exceptAll(b).count() === 0 && b.exceptAll(assigned).count() === 0,
+      "sampled-rung assignment is partition-dependent")
+    // the sampled seeds differ from the prefix seeds, so the rung
+    // genuinely engaged (cells differ from the prefix-rung cells)
+    val prefixCells = Similarity.knnAssignCells(df).select("vec_id", "cell").collect().toSet
+    assert(assigned.collect().toSet !== prefixCells,
+      "cap=2 did not change the quantizer — the sampled rung never engaged")
+    // subset-of-exact with bit-equal scores on the sampled rung
+    // knnCandidatePairs' body with the cap forced
+    val celled = Similarity.inCellPairs(Similarity.knnAssignCells(df, seedCap = 2), -2.0, 512,
+      "knnCandidatePairs").select(col("va"), col("vb"), col("cos").as("cc"))
+    val exact  = Similarity.cosineNearDupPairs(df, -2.0).select(col("va"), col("vb"), col("cos").as("ce"))
+    val nC = celled.count()
+    assert(nC > 0 && nC < exact.count(), "sampled-rung candidate volume not strictly between 0 and exact")
+    val joined = celled.join(exact, Seq("va", "vb"))
+    assert(joined.count() === nC, "a sampled-rung pair is missing from the exact sweep")
+    assert(joined.filter(col("cc") =!= col("ce")).count() === 0,
+      "sampled-rung scores drift from the exact kernel")
   }
 }

@@ -54,7 +54,7 @@ class PlanAuditSpec extends AnyFunSuite {
       // in q_quality_gate) are CodegenFallback by Spark design and
       // can never carry a span — only scalar/custom-doGenCode
       // pipelines are asserted here
-      for (q <- Seq("q_transform_project", "q_simhash", "q_simhash_wide", "q_redact_pii")) {
+      for (q <- Seq("q_transform_project", "q_simhash", "q_simhash_wide", "q_redact_pii", "q_lz4_stats")) {
         val p = planOf(q)
         // codegen'd operators print with a `*(stageId)` prefix; the
         // Project doing the per-row work must carry one

@@ -731,12 +731,10 @@ class StatsApproxSpec extends AnyFunSuite {
       (i.toLong, s"u${i % 40}", 10.0 + (i % 11) + (if (i % 40 == 7) 30.0 else 0.0))
     }
     val df = rows.toDF("event_id", "user_id", "value").repartition(7)
-    def run(): Array[org.apache.spark.sql.Row] =
-      graft.operators.Stats.fdrBh(df, key = "user_id")
-        .orderBy("user_id").collect()
-    val small = run() // 40 keys << default cap: single-partition window route
-    spark.conf.set("graft.fdr.maxSinglePartitionKeys", "8")
-    val dist = try run() finally spark.conf.unset("graft.fdr.maxSinglePartitionKeys")
+    val small = graft.operators.Stats.fdrBh(df, key = "user_id")
+      .orderBy("user_id").collect() // 40 keys << default cap: single-partition window route
+    val dist = graft.operators.Stats.fdrBhRouted(df, 0.05, "user_id", "value", singlePartitionKeys = 8)
+      .orderBy("user_id").collect()
     assert(small.length === 40 && small.toSeq === dist.toSeq)
   }
 
