@@ -7,6 +7,10 @@ package graft
   * the state-operator commit times — the evidence for WHERE a slow
   * rows/s number actually goes. Dev tool, not the driver contract.
   *
+  * Each batch line also carries `procs`, the child processes the JVM
+  * started during the batch ([[ProcessStarts]]; 0 expected: a non-zero
+  * count means a file operation shelled out).
+  *
   * Usage: ProfileStream <sfDir> <twin: ema|sessionize|vwap|dedup|bloom_dedup|cms>
   */
 object ProfileStream {
@@ -47,17 +51,22 @@ object ProfileStream {
       val t0 = System.nanoTime()
       chunks.foreach { ch =>
         val c0 = System.nanoTime()
-        mem.addData(mkChunk(ch))
-        q.processAllAvailable()
+        val (_, starts) = ProcessStarts.during {
+          mem.addData(mkChunk(ch))
+          q.processAllAvailable()
+        }
         val cw = (System.nanoTime() - c0) / 1e9
         val fresh = q.recentProgress.filter(p => !seen.contains(p.batchId)).sortBy(_.batchId)
         seen ++= fresh.map(_.batchId)
-        println(f"--- chunk wall $cw%.2f s, ${fresh.length} batches ---")
+        println(f"--- chunk wall $cw%.2f s, ${fresh.length} batches, ${starts.length} child processes ---")
         fresh.foreach { p =>
           val d = p.durationMs
           val st = p.stateOperators.map(s =>
             s"commit=${s.commitTimeMs} rows=${s.numRowsTotal} upd=${s.numRowsUpdated} mem=${s.memoryUsedBytes}").mkString(" | ")
-          println(s"  batch ${p.batchId}: in=${p.numInputRows} trigger=${d.get("triggerExecution")} addBatch=${d.get("addBatch")} getBatch=${d.get("getBatch")} plan=${d.get("queryPlanning")} wal=${d.get("walCommit")} offs=${d.get("commitOffsets")} state[$st]")
+          val from = java.time.Instant.parse(p.timestamp)
+          val until = from.plusMillis(d.get("triggerExecution").longValue)
+          val procs = starts.count(s => !s.at.isBefore(from) && !s.at.isAfter(until))
+          println(s"  batch ${p.batchId}: in=${p.numInputRows} trigger=${d.get("triggerExecution")} addBatch=${d.get("addBatch")} getBatch=${d.get("getBatch")} plan=${d.get("queryPlanning")} wal=${d.get("walCommit")} offs=${d.get("commitOffsets")} procs=$procs state[$st]")
         }
       }
       println(f"total ${(System.nanoTime() - t0) / 1e9}%.2f s for ${rows.length} rows")

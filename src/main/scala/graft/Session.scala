@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{ForkFreeFileSystem, ForkFreeFs}
+
 /** One place to build a scale-tuned session. On a real cluster the
   * same settings apply with shuffle.partitions sized to ~2-3x total
   * cores; locally we match the thread count so no partition is
@@ -18,6 +20,18 @@ import org.apache.spark.sql.SparkSession
   * cache is a static conf sized at the JVM's first compile, so it has to
   * be set here, before `getOrCreate()`. A hit needs identical generated
   * source, so results do not change.
+  *
+  * Without Hadoop's native library (the Spark distribution ships none)
+  * its stock local filesystem forks `chmod` for every file it creates
+  * and `readlink` twice for every FileContext rename: 2332 child
+  * processes in one 15 s `ohlcv_metrics` benchmark run, most of them
+  * from streaming checkpoint and state-store commits, which then took
+  * 1.6 s of each traced pass (0.14 s without the forks). `file:` paths
+  * therefore resolve to [[graft.sources.ForkFreeFileSystem]] and
+  * [[graft.sources.ForkFreeFs]], which do those two calls in-process and
+  * keep checksums, modes, rename semantics and symlinks. A session built
+  * without these settings (or a `file:` FileSystem that Hadoop cached
+  * before this session existed) forks again.
   */
 object Session {
   /** The measured working set, 4403 classes at sf0.01 and 4456 at
@@ -37,6 +51,8 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -844,17 +844,17 @@ object Similarity {
     * depth semantics by construction — a node joins at its first
     * reachable round), localCheckpoint truncating lineage per round
     * (the [[graft.operators.Dedup.clusters]] loop discipline). Depth
-    * count is exact integers; output is engine-exact. The edge build
-    * is [[knnGraph]]'s head (declared-quadratic exact sweep at gate
-    * scale; IVF/LSH candidate edges at 100 TB — the BFS itself is
-    * linear in edges either way).
+    * count is exact integers and a repeated seed counts once; output
+    * is engine-exact. The edge build is [[knnGraph]]'s head (declared-
+    * quadratic exact sweep at gate scale; IVF/LSH candidate edges at
+    * 100 TB — the BFS itself is linear in edges either way).
     */
   def bfsLayers(embeddings: DataFrame, seeds: Seq[Long], k: Int = 5, maxDepth: Int = 3, exact: Boolean = false): DataFrame = {
     require(seeds.nonEmpty && maxDepth >= 0, s"need seeds and maxDepth >= 0: $seeds, $maxDepth")
     val spark = embeddings.sparkSession
     import spark.implicits._
     val edges = rankedEdges(embeddings, k, exact).select(col("src"), col("dst")).localCheckpoint()
-    var reached = seeds.toDF("vec_id").withColumn("depth", lit(0L)).localCheckpoint()
+    var reached = seeds.distinct.toDF("vec_id").withColumn("depth", lit(0L)).localCheckpoint()
     var frontier = reached
     for (d <- 1 to maxDepth) {
       val next = frontier

@@ -443,6 +443,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
     seeds.foreach(s => assert(got(s) === 0L))
   }
 
+  test("bfs layers: a repeated seed counts once, one row per vec_id") {
+    val emb = Tables.embeddings(spark, sf)
+    def rows(seeds: Seq[Long]) = Similarity.bfsLayers(emb, seeds, 5, 3).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    val repeated = rows(Seq(0L, 0L, 1L))
+    assert(repeated === rows(Seq(0L, 1L)))
+    assert(repeated.map(_._1).distinct.length === repeated.length, "one row per vec_id")
+  }
+
   test("cluster silhouette: separated clusters score near 1, population conserved, s bounded") {
     import spark.implicits._
     val vecs = Seq(
