@@ -14,15 +14,6 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = Session.local(8)
-    // plan-audit only: lets a dump show conf-dependent plan shapes
-    // (e.g. graft.materialize.corpusFrames=disk|none) without
-    // touching the bench/verify session setup
-    sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").foreach {
-      _.split(",").filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    }
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted

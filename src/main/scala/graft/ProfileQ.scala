@@ -6,7 +6,9 @@ import scala.collection.mutable
   * declared queries to the noop sink on a fresh session and prints,
   * for each query, every Spark job's wall time, stage/task counts and
   * the DRIVER GAP preceding it (time between the previous job's end
-  * and this job's start — scheduling, planning, collect processing).
+  * and this job's start — scheduling, planning, collect processing)
+  * and its description: the materialize site, table scan or named
+  * driver action that started it (see operators.Materialize).
   * The gap column is what separates "the cluster is computing" from
   * "the driver is pacing the query" on multi-action operators.
   *

@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Materialize
+
 /** Loaders for the driver-generated parquet tables. Column pruning
   * and predicate pushdown happen at the scan as long as callers keep
-  * the plan declarative (select/filter on these frames).
+  * the plan declarative (select/filter on these frames). The schema
+  * inference's footer-read job is named `scan <table>`.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Materialize.named(s"scan $name")(spark.read.parquet(s"$dir/$name.parquet"))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "orders")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Materialize._
 
 /** Deduplication family for large-scale corpus curation: exact
   * (hash groupBy), n-gram Jaccard, MinHash+LSH banding, SimHash.
@@ -64,9 +65,8 @@ object Dedup {
     // without the checkpoint each gets its own differently-pruned
     // copy of the explode+df-cap subtree — the sf0.1 plan ran three
     // concurrent single-task shingle scans and codegen'd each copy.
-    // Corpus-sized (one row per surviving shingle occurrence), so the
-    // primitive is conf-selected: see Guards.CorpusMaterialize.
-    val keyed = Guards.materializeCorpus(containmentKeyed(documents, n, maxDf))
+    // Corpus-sized: one row per surviving shingle occurrence.
+    val keyed = containmentKeyed(documents, n, maxDf).materialize("Dedup.containmentPairs.keyed")
     val sizes = keyed.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val pairs = keyed.as("a")
       .join(keyed.as("b"),
@@ -171,9 +171,11 @@ object Dedup {
         .as("idx"))
       .distinct()
     val words = mBits / 64
-    probes.select(col("idx")).rdd.map(_.getLong(0)).treeAggregate(new Array[Long](words))(
-      (acc, p) => { acc((p >> 6).toInt) |= 1L << (p & 63); acc },
-      (a, b) => { var i = 0; while (i < words) { a(i) |= b(i); i += 1 }; a })
+    Materialize.named("aggregate Dedup.bloomBitset.bits") {
+      probes.select(col("idx")).rdd.map(_.getLong(0)).treeAggregate(new Array[Long](words))(
+        (acc, p) => { acc((p >> 6).toInt) |= 1L << (p & 63); acc },
+        (a, b) => { var i = 0; while (i < words) { a(i) |= b(i); i += 1 }; a })
+    }
   }
 
   /** True iff every one of `v`'s `k` probe bits is set in the
@@ -217,13 +219,12 @@ object Dedup {
     // checkpointed: sh feeds the known side (which is itself read
     // twice — the bitset-build ACTION and the exact-confirm
     // broadcast) and the probe side; unmaterialized, the shingle
-    // explode ran three times per query. Corpus-sized: conf-selected
-    // primitive, see Guards.CorpusMaterialize.
-    val sh = Guards.materializeCorpus(
-      shingles(documents, n)
-        .join(documents.select(col("doc_id"), col("source")), "doc_id"))
+    // explode ran three times per query. Corpus-sized.
+    val sh = shingles(documents, n)
+      .join(documents.select(col("doc_id"), col("source")), "doc_id")
+      .materialize("Dedup.bloomDecontaminate.sh")
     val known = sh.filter(col("source").isin(knownSources: _*)).select(col("s")).distinct()
-      .localCheckpoint()
+      .materialize("Dedup.bloomDecontaminate.known")
     val bits  = bloomBitset(known, "s", mBits, k)
     val probes = sh.filter(!col("source").isin(knownSources: _*))
       .join(broadcast(known.withColumn("hit", lit(1))), Seq("s"), "left")
@@ -308,9 +309,8 @@ object Dedup {
     // scan (s-only vs doc_id+s), so their exchanges stop being
     // canonically identical and ReusedExchange does NOT in fact share
     // them (the sf0.1 plan ran three concurrent copies of the shingle
-    // explode and codegen'd each). Corpus-sized: conf-selected
-    // primitive, see Guards.CorpusMaterialize.
-    val sh = Guards.materializeCorpus(shingles(documents, n))
+    // explode and codegen'd each). Corpus-sized.
+    val sh = shingles(documents, n).materialize("Dedup.ngramJaccardPairs.sh")
     // one row per doc: sorted shingle set + its size (verification side)
     val docsets = sh.groupBy("doc_id")
       .agg(sort_array(collect_list(col("s"))).as("arr"), count(lit(1)).as("n_sh"))
@@ -625,7 +625,7 @@ object Dedup {
     * doc (the min id) per cluster. Min-label propagation: each
     * iteration is one shuffle join + a min-aggregate, converging in
     * O(cluster diameter) rounds; near-dup clusters are clique-ish so
-    * 1-2 rounds dominate. `localCheckpoint` truncates lineage each
+    * 1-2 rounds dominate. `materialize` truncates lineage each
     * round so the plan doesn't grow with iterations. For adversarial
     * long-chain graphs use [[clustersBigStar]] (Kiveris+ '14), which
     * converges in O(log^2 n) rounds regardless of diameter; the
@@ -642,7 +642,7 @@ object Dedup {
         struct(col("db").as("a"), col("da").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .repartition(col("a"))
-      .localCheckpoint()
+      .materialize("Dedup.clusters.edges")
     // convergence via the label-sum: every step takes a min against
     // the previous label, so per-node labels are monotone
     // non-increasing over a fixed node set — the sum is unchanged
@@ -661,7 +661,7 @@ object Dedup {
     var labels = edges.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
       .observe(obs0, sumAgg)
-      .localCheckpoint()
+      .materialize("Dedup.clusters.labels")
     var prevSum = obsSum(obs0)
     var changed = true
     var iter    = 0
@@ -671,7 +671,7 @@ object Dedup {
       val obsI = new org.apache.spark.sql.Observation
       val next = labels.union(prop).groupBy("node").agg(min("label").as("label"))
         .observe(obsI, sumAgg)
-        .localCheckpoint()
+        .materialize("Dedup.clusters.next")
       val nextSum = obsSum(obsI)
       changed = nextSum.compareTo(prevSum) != 0
       labels = next
@@ -732,9 +732,9 @@ object Dedup {
     // and the edge set both derive from the materialized copy (the
     // previous two-selects-union + separate edge select ran the
     // build three times)
-    val pe = pairs.select(col("da"), col("db")).localCheckpoint()
+    val pe = pairs.select(col("da"), col("db")).materialize("Dedup.clustersBigStar.pe")
     val allNodes = pe.select(explode(array(col("da"), col("db"))).as("node"))
-      .distinct().localCheckpoint()
+      .distinct().materialize("Dedup.clustersBigStar.allNodes")
     // edge counts ride the checkpoint jobs via observe() — the
     // former separate count() action cost one driver round-trip per
     // round for a count of rows the checkpoint had just written
@@ -745,17 +745,18 @@ object Dedup {
     var edges = pe.select(col("da").as("a"), col("db").as("b"))
       .filter(col("a") =!= col("b")).distinct()
       .observe(obs0, cntAgg)
-      .localCheckpoint()
+      .materialize("Dedup.clustersBigStar.edges")
     var edgeCount = obsCnt(obs0)
     var iter = 0
     var done = false
     while (!done && iter < maxIters) {
       val obsI = new org.apache.spark.sql.Observation
-      val next      = smallStar(largeStar(edges)).observe(obsI, cntAgg).localCheckpoint()
+      val next      = smallStar(largeStar(edges)).observe(obsI, cntAgg).materialize("Dedup.clustersBigStar.next")
       val nextCount = obsCnt(obsI)
       // both sides are distinct sets: fixpoint iff same size, no diff
       // (prior round's count is carried — no redundant recount job)
-      done = nextCount == edgeCount && next.except(edges).isEmpty
+      done = nextCount == edgeCount &&
+        Materialize.named("isEmpty Dedup.clustersBigStar.diff")(next.except(edges).isEmpty)
       edges = next
       edgeCount = nextCount
       iter += 1
@@ -1013,12 +1014,12 @@ object Dedup {
   def sourceOverlap(documents: DataFrame, n: Int = 3): DataFrame = {
     // checkpointed: sh feeds sizes + both self-join sides, and the
     // three copies prune differently (see ngramJaccardPairs).
-    // Corpus-sized (distinct (source, shingle) pairs grow with the
-    // corpus): conf-selected primitive, see Guards.CorpusMaterialize.
-    val sh = Guards.materializeCorpus(
-      shingles(documents, n)
-        .join(documents.select(col("doc_id"), col("source")), "doc_id")
-        .select(col("source"), col("s")).distinct())
+    // Corpus-sized: distinct (source, shingle) pairs grow with the
+    // corpus.
+    val sh = shingles(documents, n)
+      .join(documents.select(col("doc_id"), col("source")), "doc_id")
+      .select(col("source"), col("s")).distinct()
+      .materialize("Dedup.sourceOverlap.sh")
     val sizes = sh.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
     val inter = sh.select(col("s"), col("source").as("sa"))
       .join(sh.select(col("s"), col("source").as("sb")), "s")

@@ -140,6 +140,7 @@ object Embedding {
     // TakeOrderedAndProject: partial top-k per partition, k-row merge
     val topk = scored.orderBy(col("cos").desc, col("doc_id").asc, col("chunk_id").asc).limit(k)
     topk.withColumn("rnk",
+      // global order over the k-row top-k only
       row_number().over(Window.orderBy(col("cos").desc, col("doc_id").asc, col("chunk_id").asc)).cast("long"))
   }
 
@@ -172,6 +173,16 @@ object Embedding {
       .select(col("qid"), col("doc_id"), col("chunk_id"), col("cos"), col("rnk"))
   }
 
+  /** The corpus vector width, read from one row on the driver. */
+  private def dimOf(embeddings: DataFrame, op: String): Int =
+    Materialize.named(s"head Embedding.$op.dim")(embeddings.select(size(col("embedding"))).head()).getInt(0)
+
+  /** The (vec_id, vector) rows matching `pred`, collected in vec_id order. */
+  private def vectorsWhere(embeddings: DataFrame, pred: Column, site: String): Array[(Long, Array[Double])] =
+    Materialize.named(s"collect Embedding.$site") {
+      embeddings.filter(pred).select(col("vec_id"), toDouble(col("embedding")).as("v")).collect()
+    }.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+
   /** Product-quantization codes: split each d-dim vector into m
     * contiguous subvectors and assign each to its nearest codebook
     * entry — the memory layout ANN reranking and vector compression
@@ -192,16 +203,12 @@ object Embedding {
     */
   def pqCodes(embeddings: DataFrame, m: Int = 8, nc: Int = 16): DataFrame = {
     val spark = embeddings.sparkSession
-    val dim = embeddings.select(size(col("embedding"))).head().getInt(0)
+    val dim = dimOf(embeddings, "pqCodes")
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
     // codebook rides the plan as literals (ivfTrain's tiny-result
     // pattern): m x nc rows of sub doubles
-    val seeds = embeddings.filter(col("vec_id") < nc)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val seeds = vectorsWhere(embeddings, col("vec_id") < nc, "pqCodes.seeds")
     import spark.implicits._
     val codebook = broadcast(
       seeds.flatMap { case (code, v) =>
@@ -247,15 +254,10 @@ object Embedding {
   def pqSearch(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 5,
                m: Int = 8, nc: Int = 16): DataFrame = {
     val spark = embeddings.sparkSession
-    val dim = embeddings.select(size(col("embedding"))).head().getInt(0)
+    val dim = dimOf(embeddings, "pqSearch")
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
-    def fullVecs(pred: Column): Array[(Long, Array[Double])] = embeddings
-      .filter(pred)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    def fullVecs(pred: Column) = vectorsWhere(embeddings, pred, "pqSearch.vectors")
     val seeds   = fullVecs(col("vec_id") < nc)
     val queries = fullVecs(col("vec_id").isin(queryIds: _*))
     require(queries.length == queryIds.distinct.length,
@@ -309,7 +311,7 @@ object Embedding {
   def ivfPqSearch(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 5,
                   nlist: Int = 16, nprobe: Int = 4, m: Int = 8, nc: Int = 16): DataFrame = {
     val spark = embeddings.sparkSession
-    val dim = embeddings.select(size(col("embedding"))).head().getInt(0)
+    val dim = dimOf(embeddings, "ivfPqSearch")
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     require(nprobe >= 1 && nprobe <= nlist, s"nprobe $nprobe outside [1, $nlist]")
     val sub   = dim / m
@@ -317,12 +319,7 @@ object Embedding {
     val cells = Similarity
       .assignCells(embeddings.select(col("vec_id"), toDouble(col("embedding")).as("v")), cents)
       .select(col("vec_id"), col("cell"))
-    def fullVecs(pred: Column): Array[(Long, Array[Double])] = embeddings
-      .filter(pred)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    def fullVecs(pred: Column) = vectorsWhere(embeddings, pred, "ivfPqSearch.vectors")
     val seeds   = fullVecs(col("vec_id") < nc)
     val queries = fullVecs(col("vec_id").isin(queryIds: _*))
     // index-order accumulation — the oracle's sequential MAC

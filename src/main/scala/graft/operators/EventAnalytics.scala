@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Materialize._
 
 /** Product/event analytics over the events stream — the batch side
   * of the real-time dashboard family (reference analog: the
@@ -87,7 +88,7 @@ object EventAnalytics {
     // collect it and emit the k-row funnel as literals (the
     // ivfTrain tiny-result pattern). Rounding mirrors Spark's
     // round(): BigDecimal HALF_UP at 6 dp.
-    val row = counts.head()
+    val row = Materialize.named("head EventAnalytics.funnel.counts")(counts.head())
     val ns  = stages.indices.map(i => row.getLong(i))
     def rate(num: Long, den: Long): java.lang.Double =
       if (den == 0) null
@@ -273,13 +274,13 @@ object EventAnalytics {
       .partitionBy("pid").orderBy(col("n_events").desc, col("user_id").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val wOff = org.apache.spark.sql.expressions.Window
-      .orderBy("pid")
+      .orderBy("pid") // nBuckets rows; pid frozen by EventAnalytics.powerUsers.counts
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val counts = events.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .repartitionByRange(nBuckets, col("n_events").desc, col("user_id").asc)
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // totals + local cumsums both read it; pid frozen
+      .materialize("EventAnalytics.powerUsers.counts") // totals + local cumsums both read it; pid frozen
     val offsets = counts.groupBy(col("pid"))
       .agg(sum(col("n_events")).as("t"), count(lit(1)).as("c"))
       // nBuckets rows: the single-partition window is over per-bucket
@@ -323,7 +324,7 @@ object EventAnalytics {
     val hist  = life.groupBy(col("lifespan")).agg(count(lit(1)).as("n"))
     val total = life.agg(count(lit(1)).as("n_total"))
     val wRev = org.apache.spark.sql.expressions.Window
-      .orderBy(col("lifespan").desc)
+      .orderBy(col("lifespan").desc) // one row per distinct lifespan in days
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     hist
       .withColumn("n_alive", sum(col("n")).over(wRev))
@@ -390,13 +391,13 @@ object EventAnalytics {
       .partitionBy("pid").orderBy(col("n_events").asc, col("user_id").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val wOff = org.apache.spark.sql.expressions.Window
-      .orderBy("pid")
+      .orderBy("pid") // nBuckets rows; pid frozen by EventAnalytics.gini.counts
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val counts = events.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .repartitionByRange(nBuckets, col("n_events").asc, col("user_id").asc)
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .materialize("EventAnalytics.gini.counts")
     val offsets = counts.groupBy(col("pid"))
       .agg(count(lit(1)).as("c"))
       .select(col("pid").as("opid"),
@@ -507,7 +508,7 @@ object EventAnalytics {
     val grouped = seq
       .groupBy(col("prev"), col("event_type").as("next"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .materialize("EventAnalytics.markovStationary.grouped")
     val edges = grouped.filter(col("prev").isNotNull)
     val rt = edges.groupBy(col("prev")).agg(sum(col("c")).as("t"))
     // BOUNDED state space (≤types rows / ≤types² edges) ⇒ the π·P
@@ -633,7 +634,7 @@ object EventAnalytics {
       .withColumn("prev", lag(col("event_type"), 1).over(w))
     val edges = seq.filter(col("prev").isNotNull)
       .groupBy(col("prev"), col("event_type").as("next")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .materialize("EventAnalytics.entropyRate.edges")
     val rt  = edges.groupBy(col("prev")).agg(sum(col("c")).as("t"))
     val tot = edges.agg(sum(col("c")).as("nn"), count_distinct(col("next")).as("n_states"))
     val cd = col("c").cast("double"); val td = col("t").cast("double")
@@ -811,12 +812,13 @@ object EventAnalytics {
     val wLocal = Window.partitionBy("pid")
       .orderBy(col("n_events").asc, col("user_id").asc)
       .rowsBetween(Window.unboundedPreceding, 0)
+    // global order over nBuckets offset rows; pid frozen by EventAnalytics.lorenzCurve.counts
     val wOff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     val counts = events.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .repartitionByRange(nBuckets, col("n_events").asc, col("user_id").asc)
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .materialize("EventAnalytics.lorenzCurve.counts")
     val offsets = counts.groupBy(col("pid"))
       .agg(sum(col("n_events")).as("t"), count(lit(1)).as("c"))
       .select(col("pid").as("opid"),
@@ -893,7 +895,7 @@ object EventAnalytics {
   def peakConcurrency(events: DataFrame, gapMin: Int = 30, nBuckets: Int = 32): DataFrame = {
     // checkpointed: sess feeds bounds + both delta-point branches —
     // three copies of the sessionize window otherwise
-    val sess = graft.streaming.Streams.sessionizeBatch(events, gapMin).localCheckpoint()
+    val sess = graft.streaming.Streams.sessionizeBatch(events, gapMin).materialize("EventAnalytics.peakConcurrency.sess")
     val bounds = broadcast(sess.agg(
       min(col("start_us")).as("t0"), max(col("end_us") + 1L).as("t1")))
     val midnights = bounds.select(
@@ -908,9 +910,10 @@ object EventAnalytics {
       .groupBy(col("t")).agg(sum(col("d")).as("d"))
       .repartitionByRange(nBuckets, col("t"))
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .materialize("EventAnalytics.peakConcurrency.pts")
     val wLocal = Window.partitionBy("pid").orderBy("t")
       .rowsBetween(Window.unboundedPreceding, 0)
+    // global order over nBuckets offset rows; pid frozen by EventAnalytics.peakConcurrency.pts
     val wOff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     val offsets = pts.groupBy(col("pid")).agg(sum(col("d")).as("td"))
       .select(col("pid").as("opid"),

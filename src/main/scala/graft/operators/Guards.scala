@@ -29,7 +29,13 @@ object Guards {
   val PairSweepMaxKeys = "graft.pairSweep.maxKeys"
 
   private def capOf(df: DataFrame): Option[Long] =
-    df.sparkSession.conf.getOption(PairSweepMaxKeys).map(_.toLong)
+    df.sparkSession.conf.getOption(PairSweepMaxKeys).map(numericConf(PairSweepMaxKeys, _)(_.toLong))
+
+  /** Parse the value `raw` of the numeric guard conf `key`, naming both when it is not a number. */
+  def numericConf[T](key: String, raw: String)(parse: String => T): T =
+    try parse(raw) catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(s"$key must be a whole number, got '$raw'")
+    }
 
   /** Guard a pair sweep on TOTAL key count: `downstream` (the frame
     * feeding the quadratic self-join) passes through unchanged when
@@ -66,43 +72,6 @@ object Guards {
                   s"candidate paths for unbounded universes, or raise/unset the cap")))
                 .cast("boolean")))
           .drop("_graft_nk")
-    }
-
-  /** Session conf selecting the materialization primitive for
-    * CORPUS-SIZED multi-consumer frames (the exploded shingle /
-    * bigram posting frames whose every row count scales with the
-    * corpus). Values:
-    *   - "local" (default): eager `localCheckpoint()` — fastest at
-    *     bench scale (the frame is computed once and every consumer
-    *     reads executor-local blocks), but the blocks are
-    *     lineage-free and non-replicated: at 100 TB this pins a
-    *     multi-PB frame in block-manager storage and a lost executor
-    *     kills the query.
-    *   - "disk": `persist(StorageLevel.DISK_ONLY)` — still computed
-    *     once per action, but spillable, lineage-backed (executor
-    *     loss recomputes the lost partitions instead of failing the
-    *     query), and never competing with execution memory. The
-    *     production setting for cluster runs.
-    *   - "none": no materialization — each consumer re-derives the
-    *     frame from the columnar scan. The right trade when the
-    *     exploded frame is far LARGER than its parquet source
-    *     (shingles are ~n× the text bytes): re-scanning the source
-    *     k times beats writing + reading a corpus-sized intermediate.
-    * Bounded frames (edge lists, day grids, per-key aggregates) keep
-    * plain localCheckpoint and ignore this conf.
-    */
-  val CorpusMaterialize = "graft.materialize.corpusFrames"
-
-  /** Materialize a corpus-sized multi-consumer frame per
-    * [[CorpusMaterialize]].
-    */
-  def materializeCorpus(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption(CorpusMaterialize).getOrElse("local") match {
-      case "none"  => df
-      case "disk"  => df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      case "local" => df.localCheckpoint()
-      case other => throw new IllegalArgumentException(
-        s"$CorpusMaterialize must be local|disk|none, got '$other'")
     }
 
   /** The bucketed-sweep variant of [[withPairKeyCap]]: for operators

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Materialize._
 
 /** Relational / ETL core: the reference's extract-transform-load
   * shape re-expressed declaratively so Catalyst pushes filters and
@@ -612,11 +613,13 @@ object Relational {
       skewFactor: Double = 4.0
   ): DataFrame = {
     val parts = fact.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val probe = fact.select(col(factKey).as("__k"))
-      .sample(withReplacement = false, sampleFraction, seed = 42)
-      .groupBy(col("__k")).agg(count(lit(1)).as("__c"))
-      .agg(max(col("__c")).as("cmax"), sum(col("__c")).as("ctot"))
-      .head()
+    val probe = Materialize.named("head Relational.saltedJoinAuto.probe") {
+      fact.select(col(factKey).as("__k"))
+        .sample(withReplacement = false, sampleFraction, seed = 42)
+        .groupBy(col("__k")).agg(count(lit(1)).as("__c"))
+        .agg(max(col("__c")).as("cmax"), sum(col("__c")).as("ctot"))
+        .head()
+    }
     // threshold = min(0.5, skewFactor/parts): proportional to the
     // fair per-reducer share, but a key holding half the rows is
     // ALWAYS a straggler worth salting — without the cap, small
@@ -892,7 +895,7 @@ object Relational {
       .join(suppIn, col("l_suppkey") === col("s_suppkey"), "left_semi")
       .groupBy(col("l_partkey"))
       .agg(sum(col("l_extendedprice").cast(Money)).as("value_d"))
-      .localCheckpoint()
+      .materialize("Relational.importantParts.perPart")
     val total = perPart.agg(sum(col("value_d")).as("total_d"), count(lit(1)).as("n_parts"))
     perPart
       .crossJoin(broadcast(total))
@@ -936,7 +939,7 @@ object Relational {
         col("l_shipdate") < lit(to).cast("timestamp"))
       .groupBy(col("l_suppkey"))
       .agg(sum(rev).as("rev_d"))
-      .localCheckpoint()
+      .materialize("Relational.topSupplier.perSupp")
     val mx = perSupp.agg(max(col("rev_d")).as("max_d"))
     perSupp
       .crossJoin(broadcast(mx))
@@ -1033,7 +1036,7 @@ object Relational {
     // scan — unmaterialized, the lineitem scan + distinct exchange
     // ran once per consumer
     val op = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      .localCheckpoint()
+      .materialize("Relational.basketPairs.op")
     val total = op.select(col("ok")).distinct().agg(count(lit(1)).as("n_orders"))
     val freq  = op.groupBy(col("pk")).agg(count(lit(1)).as("n_p"))
     val pairs = op.select(col("ok"), col("pk").as("pa"))
@@ -1183,12 +1186,12 @@ object Relational {
     val wLocal = Window.partitionBy("pid")
       .orderBy(col("rev").desc, col("l_partkey").asc)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val wOff = Window.orderBy("pid")
+    val wOff = Window.orderBy("pid") // nBuckets rows; pid frozen by Relational.abcClasses.per
       .rowsBetween(Window.unboundedPreceding, -1)
     val per = lineitem.groupBy(col("l_partkey")).agg(sum(rev).as("rev"))
       .repartitionByRange(nBuckets, col("rev").desc, col("l_partkey").asc)
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .materialize("Relational.abcClasses.per")
     val offsets = per.groupBy(col("pid"))
       .agg(sum(col("rev")).as("t"))
       .select(col("pid").as("opid"),

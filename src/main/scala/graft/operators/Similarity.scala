@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Materialize._
 
 import graft.functions.VectorFunctions._
 
@@ -290,22 +291,22 @@ object Similarity {
     */
   def ivfTrain(embeddings: DataFrame, nlist: Int = 16, iters: Int = 5): Array[(Int, Array[Double])] = {
     val e = embeddings.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    var cents: Array[(Int, Array[Double])] = e
-      .orderBy("vec_id").limit(nlist).collect()
-      .zipWithIndex
+    var cents: Array[(Int, Array[Double])] = Materialize.named("collect Similarity.ivfTrain.seeds") {
+      e.orderBy("vec_id").limit(nlist).collect()
+    }.zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
     require(cents.length == nlist, s"need at least $nlist vectors to seed $nlist cells")
     for (_ <- 0 until iters) {
-      val means = assignCells(e, cents)
-        .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy(col("cell"), col("i"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("cell"))
-        .agg(sort_array(collect_list(struct(col("i"), col("m")))).as("sm"))
-        .select(col("cell"), transform(col("sm"), s => s("m")).as("c"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-        .toMap
+      val means = Materialize.named("collect Similarity.ivfTrain.means") {
+        assignCells(e, cents)
+          .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
+          .groupBy(col("cell"), col("i"))
+          .agg(avg(col("x")).as("m"))
+          .groupBy(col("cell"))
+          .agg(sort_array(collect_list(struct(col("i"), col("m")))).as("sm"))
+          .select(col("cell"), transform(col("sm"), s => s("m")).as("c"))
+          .collect()
+      }.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
       cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
     }
     cents
@@ -572,11 +573,12 @@ object Similarity {
     * order, which is what makes the assignment reproducible.
     */
   private def sampledCoarseSeeds(e: DataFrame, ncoarse: Int): Array[(Int, Array[Double])] =
-    e.select(col("vec_id"), col("v"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(ncoarse)
-      .collect()
-      .zipWithIndex
+    Materialize.named("collect Similarity.knnAssignCells.sampledSeeds") {
+      e.select(col("vec_id"), col("v"))
+        .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+        .limit(ncoarse)
+        .collect()
+    }.zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
 
   /** Corpus sizing for the celled assignment: (row count, the ≤ cap
@@ -591,12 +593,13 @@ object Similarity {
     * prefix is unchanged (first `cap` rows by vec_id).
     */
   private def countAndCoarseSeeds(e: DataFrame, cap: Int): (Long, Array[Array[Double]]) = {
-    val n = e.count()
-    val seeds = e.select(col("vec_id"), col("v"))
-      .orderBy(col("vec_id"))
-      .limit(cap)
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
+    val n = Materialize.named("count Similarity.knnAssignCells.corpus")(e.count())
+    val seeds = Materialize.named("collect Similarity.knnAssignCells.prefixSeeds") {
+      e.select(col("vec_id"), col("v"))
+        .orderBy(col("vec_id"))
+        .limit(cap)
+        .collect()
+    }.map(_.getSeq[Double](1).toArray)
     (n, seeds)
   }
 
@@ -644,7 +647,7 @@ object Similarity {
     val top = rankedEdges(embeddings, k, exact)
       // both the output and the reversed probe read this frame; the
       // checkpoint keeps the n^2 sweep from running twice
-      .localCheckpoint()
+      .materialize("Similarity.knnGraph.top")
     val rev = top.select(col("dst").as("m_src"), col("src").as("m_dst"))
     top
       .join(rev, col("src") === col("m_src") && col("dst") === col("m_dst"), "left")
@@ -842,7 +845,7 @@ object Similarity {
     * ONE co-partitioned equi-join of the current frontier against the
     * k·n edge frame plus an anti join against the reached set (min-
     * depth semantics by construction — a node joins at its first
-    * reachable round), localCheckpoint truncating lineage per round
+    * reachable round), materialize truncating lineage per round
     * (the [[graft.operators.Dedup.clusters]] loop discipline). Depth
     * count is exact integers and a repeated seed counts once; output
     * is engine-exact. The edge build is [[knnGraph]]'s head (declared-
@@ -853,8 +856,8 @@ object Similarity {
     require(seeds.nonEmpty && maxDepth >= 0, s"need seeds and maxDepth >= 0: $seeds, $maxDepth")
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val edges = rankedEdges(embeddings, k, exact).select(col("src"), col("dst")).localCheckpoint()
-    var reached = seeds.distinct.toDF("vec_id").withColumn("depth", lit(0L)).localCheckpoint()
+    val edges = rankedEdges(embeddings, k, exact).select(col("src"), col("dst")).materialize("Similarity.bfsLayers.edges")
+    var reached = seeds.distinct.toDF("vec_id").withColumn("depth", lit(0L)).materialize("Similarity.bfsLayers.reached")
     var frontier = reached
     for (d <- 1 to maxDepth) {
       val next = frontier
@@ -862,8 +865,8 @@ object Similarity {
         .select(col("dst").as("vec_id")).distinct()
         .join(reached.select(col("vec_id")), Seq("vec_id"), "left_anti")
         .withColumn("depth", lit(d.toLong))
-        .localCheckpoint()
-      reached = reached.unionByName(next).localCheckpoint()
+        .materialize("Similarity.bfsLayers.next")
+      reached = reached.unionByName(next).materialize("Similarity.bfsLayers.reached")
       frontier = next
     }
     reached
@@ -916,7 +919,7 @@ object Similarity {
     * exact sweep under the pairSweep guard at gate scale; at 100 TB
     * the same iteration runs over IVF/LSH candidate edges).
     * Iterations are one co-partitioned join + one sum aggregate per
-    * round on the k·n edge frame, localCheckpoint truncating lineage
+    * round on the k·n edge frame, materialize truncating lineage
     * (the [[Dedup.clusters]] loop discipline).
     */
   def pageRankKnn(embeddings: DataFrame, k: Int = 5, iters: Int = 5,
@@ -924,17 +927,17 @@ object Similarity {
     require(iters >= 1 && k >= 1, s"iters/k must be positive: iters=$iters, k=$k")
     val edges = rankedEdges(embeddings, k, exact)
       .select(col("src"), col("dst"))
-      .localCheckpoint() // the sweep runs once; every iteration re-reads this
+      .materialize("Similarity.pageRankKnn.edges") // the sweep runs once; every iteration re-reads this
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val ed     = edges.join(outdeg, "src").localCheckpoint()
-    val nodes  = embeddings.select(col("vec_id").as("node")).localCheckpoint()
-    val n      = nodes.count()
+    val ed     = edges.join(outdeg, "src").materialize("Similarity.pageRankKnn.ed")
+    val nodes  = embeddings.select(col("vec_id").as("node")).materialize("Similarity.pageRankKnn.nodes")
+    val n      = Materialize.named("count Similarity.pageRankKnn.nodes")(nodes.count())
     val r0     = scale / n
     val tele   = r0 * 15L / 100L
     // the rank chain is LINEAR (ranks_i feeds only ranks_{i+1}), so
     // no per-iteration checkpoint: one action runs the whole unrolled
     // DAG — at 5 iters the plan stays small and the bench measured a
-    // per-iteration eager localCheckpoint as ~4 driver round-trips
+    // per-iteration eager checkpoint as ~4 driver round-trips
     // per round (AQE stage jobs + checkpoint job + planning gap) for
     // zero recompute saved. ed/nodes (re-read every round) keep
     // theirs.
@@ -980,7 +983,7 @@ object Similarity {
     */
   def triangleStats(embeddings: DataFrame, k: Int = 5, exact: Boolean = false): DataFrame = {
     val und = mutualEdges(embeddings, k, exact)
-      .localCheckpoint() // three self-join reads; the n² sweep must run once
+      .materialize("Similarity.triangleStats.und") // three self-join reads; the n² sweep must run once
     val e1 = und.select(col("src").as("a"), col("dst").as("b"))
     val e2 = und.select(col("src").as("b"), col("dst").as("c"))
     val e3 = und.select(col("src").as("a"), col("dst").as("c"))
@@ -1021,8 +1024,8 @@ object Similarity {
   def topPrincipalComponent(embeddings: DataFrame, iters: Int = 3): DataFrame = {
     val dec   = org.apache.spark.sql.types.DecimalType(18, 6)
     val spark = embeddings.sparkSession
-    val x = embeddings.select(toDouble(col("embedding")).as("v")).localCheckpoint()
-    val d = x.select(size(col("v"))).head().getInt(0)
+    val x = embeddings.select(toDouble(col("embedding")).as("v")).materialize("Similarity.topPrincipalComponent.x")
+    val d = Materialize.named("head Similarity.topPrincipalComponent.dim")(x.select(size(col("v"))).head()).getInt(0)
     var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
     for (_ <- 1 to iters) {
       val vLit = array(v.toSeq.map(lit): _*)
@@ -1038,23 +1041,26 @@ object Similarity {
       // this replaced simply contributed nothing for the missing
       // position — try_element_at's null product restores that
       // degrade-not-fail behavior (the null is skipped by sum)
-      val row = x
-        .select(dot(col("v"), vLit).as("dt"), col("v"))
-        .agg(
-          sum((col("dt") * try_element_at(col("v"), lit(1))).cast(dec)).as("w0"),
-          (1 until d).map(i =>
-            sum((col("dt") * try_element_at(col("v"), lit(i + 1))).cast(dec)).as(s"w$i")): _*)
-        .head()
+      val row = Materialize.named("head Similarity.topPrincipalComponent.power") {
+        x.select(dot(col("v"), vLit).as("dt"), col("v"))
+          .agg(
+            sum((col("dt") * try_element_at(col("v"), lit(1))).cast(dec)).as("w0"),
+            (1 until d).map(i =>
+              sum((col("dt") * try_element_at(col("v"), lit(i + 1))).cast(dec)).as(s"w$i")): _*)
+          .head()
+      }
       val w    = Array.tabulate(d)(i => row.getDecimal(i).doubleValue())
       val norm = math.sqrt(w.map(t => t * t).sum)
       v = w.map(_ / norm)
     }
     val vLit = array(v.toSeq.map(lit): _*)
-    val expl = x.agg(
-        sum((dot(col("v"), vLit) * dot(col("v"), vLit)).cast(dec)).as("sp"),
-        sum(dot(col("v"), col("v")).cast(dec)).as("sn"))
-      .select((col("sp").cast("double") / col("sn").cast("double")).as("ex"))
-      .head().getDouble(0)
+    val expl = Materialize.named("head Similarity.topPrincipalComponent.explained") {
+      x.agg(
+          sum((dot(col("v"), vLit) * dot(col("v"), vLit)).cast(dec)).as("sp"),
+          sum(dot(col("v"), col("v")).cast(dec)).as("sn"))
+        .select((col("sp").cast("double") / col("sn").cast("double")).as("ex"))
+        .head().getDouble(0)
+    }
     import scala.jdk.CollectionConverters._
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.IntegerType, nullable = false),
@@ -1078,8 +1084,9 @@ object Similarity {
     * chain — bit-identical, scan-shaped, no shuffle beyond training.
     */
   def pcProject(embeddings: DataFrame, iters: Int = 3): DataFrame = {
-    val pc = topPrincipalComponent(embeddings, iters)
-      .orderBy(col("dim")).collect().map(_.getAs[Double]("loading"))
+    val pc = Materialize.named("collect Similarity.pcProject.loadings") {
+      topPrincipalComponent(embeddings, iters).orderBy(col("dim")).collect()
+    }.map(_.getAs[Double]("loading"))
     val vLit = array(pc.toSeq.map(lit): _*)
     embeddings
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
@@ -1237,7 +1244,7 @@ object Similarity {
     */
   def commonNeighbors(embeddings: DataFrame, k: Int = 5, maxIn: Int = 256, exact: Boolean = false,
                       minCommon: Int = 2): DataFrame = {
-    val top = rankedEdges(embeddings, k, exact).select(col("src"), col("dst")).localCheckpoint()
+    val top = rankedEdges(embeddings, k, exact).select(col("src"), col("dst")).materialize("Similarity.commonNeighbors.top")
     val deg = top.groupBy(col("src")).agg(count(lit(1)).cast("long").as("deg"))
     val ok  = top.groupBy(col("dst")).agg(count(lit(1)).as("indeg"))
       .filter(col("indeg") <= maxIn).select(col("dst"))
@@ -1267,7 +1274,7 @@ object Similarity {
     * edge frame against the tiny degree table.
     */
   def degreeAssortativity(embeddings: DataFrame, k: Int = 5, exact: Boolean = false): DataFrame = {
-    val top = rankedEdges(embeddings, k, exact).select(col("src"), col("dst")).localCheckpoint()
+    val top = rankedEdges(embeddings, k, exact).select(col("src"), col("dst")).materialize("Similarity.degreeAssortativity.top")
     val deg = top.groupBy(col("src")).agg(count(lit(1)).cast("long").as("deg"))
     val m = top
       .join(deg.select(col("src"), col("deg").as("dx")), Seq("src"))
@@ -1350,19 +1357,19 @@ object Similarity {
     require(k >= 1 && poolK >= k, s"need poolK >= k >= 1: poolK=$poolK, k=$k")
     val pool = bruteForceTopK(embeddings, Seq(queryId), poolK)
       .select(col("vec_id"), col("cos").as("qsim"))
-      .localCheckpoint()
+      .materialize("Similarity.mmrRerank.pool")
     val pv = withVecNorm(embeddings).join(pool, "vec_id")
       .select(col("vec_id"), col("v"), col("nrm"), col("qsim"))
-      .localCheckpoint()
+      .materialize("Similarity.mmrRerank.pv")
     val sims = pv.as("a").join(pv.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("pa"), col("b.vec_id").as("pb"),
         when(col("a.nrm") * col("b.nrm") =!= 0,
           dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("sim"))
-      .localCheckpoint()
+      .materialize("Similarity.mmrRerank.sims")
     var selected = pool
       .orderBy(col("qsim").desc, col("vec_id").asc).limit(1)
       .select(col("vec_id"), col("qsim"), col("qsim").as("mmr_score"), lit(1L).as("sel_rank"))
-      .localCheckpoint()
+      .materialize("Similarity.mmrRerank.selected")
     for (r <- 2 to k) {
       val selIds = selected.select(col("vec_id").as("sid"))
       val maxSim = sims
@@ -1374,7 +1381,7 @@ object Similarity {
         .withColumn("mmr_score", lit(lambda) * col("qsim") - lit(1 - lambda) * col("msim"))
         .orderBy(col("mmr_score").desc, col("vec_id").asc).limit(1)
         .select(col("vec_id"), col("qsim"), col("mmr_score"), lit(r.toLong).as("sel_rank"))
-      selected = selected.unionByName(pick).localCheckpoint()
+      selected = selected.unionByName(pick).materialize("Similarity.mmrRerank.selected")
     }
     selected.select(col("sel_rank"), col("vec_id"), col("qsim"), col("mmr_score"))
   }
@@ -1392,16 +1399,16 @@ object Similarity {
     * float HITS drifts. Edge build is [[knnGraph]]'s head (declared
     * quadratic at gate scale; IVF/LSH candidate edges at 100 TB);
     * each round is two co-partitioned join+aggregate passes over
-    * the k·n edge frame with localCheckpoint lineage truncation.
+    * the k·n edge frame with materialize lineage truncation.
     */
   def hitsKnn(embeddings: DataFrame, k: Int = 5, iters: Int = 3,
               scale: Long = 1000000000000L, exact: Boolean = false): DataFrame = {
     require(iters >= 1 && k >= 1, s"iters/k must be positive: iters=$iters, k=$k")
     val edges = rankedEdges(embeddings, k, exact)
       .select(col("src"), col("dst"))
-      .localCheckpoint() // the n² sweep runs once; every round re-reads this
-    val nodes = embeddings.select(col("vec_id").as("node")).localCheckpoint()
-    val n  = nodes.count()
+      .materialize("Similarity.hitsKnn.edges") // the n² sweep runs once; every round re-reads this
+    val nodes = embeddings.select(col("vec_id").as("node")).materialize("Similarity.hitsKnn.nodes")
+    val n  = Materialize.named("count Similarity.hitsKnn.nodes")(nodes.count())
     val s0 = scale / n
     // SPARSE iterations, dense only at the output: the old renorm
     // left-joined the full node scan and broadcast the total every
@@ -1416,16 +1423,13 @@ object Similarity {
     // edges-join+aggregate once per consumer, guide §1.2); the renorm
     // itself is a NARROW crossJoin+projection — no shuffle, no
     // per-round checkpoint. Scores are bit-identical: 0·scale div t
-    // = 0, the same zero the dense rounds carried. Checkpoints stay
-    // EAGER: the lazy form (localCheckpoint(false)) measured SLOWER
-    // here — under AQE the deferred result stage recomputes in
-    // parallel consumer stages before persistence lands.
+    // = 0, the same zero the dense rounds carried.
     def renorm(raw: DataFrame, c: String): DataFrame = {
       val tot = raw.agg(sum(col(c)).as("t"))
       raw.crossJoin(broadcast(tot))
         .select(col("node"),
           expr(s"CAST($c AS DECIMAL(38,0)) * $scale div t").as(c))
-        .localCheckpoint()
+        .materialize("Similarity.hitsKnn.renorm")
     }
     var hub  = nodes.withColumn("h", lit(s0))
     var auth = nodes.withColumn("a", lit(s0))
@@ -1463,7 +1467,7 @@ object Similarity {
     */
   def degreeHist(embeddings: DataFrame, k: Int = 5, exact: Boolean = false): DataFrame = {
     val und = mutualEdges(embeddings, k, exact)
-      .localCheckpoint()
+      .materialize("Similarity.degreeHist.und")
     val ends = und.select(col("src").as("node"))
       .unionByName(und.select(col("dst").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).cast("long").as("degree"))
@@ -1486,7 +1490,7 @@ object Similarity {
     * ALL-INTEGER (counts + min tie-break ⇒ bit-identical at any
     * partition count, no float voting weights); each round is one
     * co-partitioned neighbor join + two aggregates over the ≤(k+1)·n
-    * frame, localCheckpoint truncating lineage. Edge build shares
+    * frame, materialize truncating lineage. Edge build shares
     * [[knnGraph]]'s head.
     */
   def labelPropagation(embeddings: DataFrame, k: Int = 5, iters: Int = 3, exact: Boolean = false): DataFrame = {
@@ -1505,7 +1509,7 @@ object Similarity {
       .select(col("e.node").as("node"), col("e.nbr").as("nbr"))
     val nodes = embeddings.select(col("vec_id").as("node"))
     val withSelf = nbrs.unionByName(nodes.select(col("node"), col("node").as("nbr")))
-      .localCheckpoint()
+      .materialize("Similarity.labelPropagation.withSelf")
     var labels = nodes.withColumn("community", col("node"))
     for (_ <- 1 to iters) {
       val votes = withSelf
@@ -1568,7 +1572,7 @@ object Similarity {
     */
   def resourceAllocation(embeddings: DataFrame, k: Int = 5, minCommon: Int = 2, exact: Boolean = false): DataFrame = {
     val und = mutualEdges(embeddings, k, exact)
-      .localCheckpoint()
+      .materialize("Similarity.resourceAllocation.und")
     val nb = und.select(col("src").as("node"), col("dst").as("nbr"))
       .unionByName(und.select(col("dst").as("node"), col("src").as("nbr")))
     val deg = nb.groupBy(col("node")).agg(count(lit(1)).cast("long").as("deg"))
@@ -1601,7 +1605,7 @@ object Similarity {
   def kCore(embeddings: DataFrame, k: Int = 2, knn: Int = 5, rounds: Int = 8, exact: Boolean = false): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k and rounds must be positive: $k, $rounds")
     val und = mutualEdges(embeddings, knn, exact)
-      .localCheckpoint()
+      .materialize("Similarity.kCore.und")
     // degs keeps its checkpoint (each round references it TWICE — the
     // src and dst activity joins — so an unmaterialized degs subtree
     // would double per round); edges is LINEAR (only the next round's
@@ -1626,8 +1630,8 @@ object Similarity {
       degs = edges.select(explode(array(col("src"), col("dst"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).cast("long").as("deg"))
         .filter(col("deg") >= k)
-        .localCheckpoint()
-      val n = degs.count()
+        .materialize("Similarity.kCore.degs")
+      val n = Materialize.named("count Similarity.kCore.degs")(degs.count())
       if (n == prevN || n == 0) stable = true
       prevN = n
       val act = degs.select(col("node"))
@@ -1732,7 +1736,7 @@ object Similarity {
       // the threshold aggregate and the flag projection both read
       // this n-row frame; materialize the SLIM score frame instead
       // of knnGraph's full edge frame (and skip its mutual self-join)
-      .localCheckpoint()
+      .materialize("Similarity.knnOutliers.scores")
     val thr = broadcast(scores.agg(percentile(col("kth_cos"), lit(p)).as("thr")))
     scores.crossJoin(thr)
       .select(col("vec_id"), col("kth_cos"),

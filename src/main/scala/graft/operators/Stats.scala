@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Materialize._
 
 /** Distribution statistics, multi-level rollups, data cleaning and
   * gap handling — the summary/quality layer of the analytics engine.
@@ -617,9 +618,10 @@ object Stats {
       .agg(sum(col("ia")).as("ca"), sum(col("ib")).as("cb"))
       .repartitionByRange(nBuckets, col("x"))
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // totals + local cumsums both read it; pid is frozen
+      .materialize("Stats.ksTest.d") // totals + local cumsums both read it; pid is frozen
     val wLocal = Window.partitionBy("pid").orderBy("x")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // global order over nBuckets offset rows; pid frozen by Stats.ksTest.d
     val wOff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     val offsets = d.groupBy(col("pid")).agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
       // nBuckets rows: the single-partition window is over the
@@ -654,7 +656,7 @@ object Stats {
     val cells = events
       .groupBy(col(key).as("et"), (weekday(col(ts)) + 1).as("dow"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint()
+      .materialize("Stats.chi2Independence.cells")
     val rowT = cells.groupBy(col("et")).agg(sum(col("o")).as("rt"))
     val colT = cells.groupBy(col("dow")).agg(sum(col("o")).as("ct"))
     val tot = cells.agg(sum(col("o")).as("n"),
@@ -694,7 +696,7 @@ object Stats {
       .agg(
         sum(when(col(key) === typeA, 1L).otherwise(0L)).as("ca"),
         sum(when(col(key) === typeB, 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint()
+      .materialize("Stats.klDivergence.cells")
     val tot = cells.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
       count(lit(1)).as("k"))
     val pa = (col("ca") + 1).cast("double") / (col("na") + col("k")).cast("double")
@@ -728,7 +730,7 @@ object Stats {
     val cells = events
       .groupBy(col(key).as("et"), (weekday(col(ts)) + 1).as("dow"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint()
+      .materialize("Stats.mutualInfo.cells")
     val rowT = cells.groupBy(col("et")).agg(sum(col("o")).as("rt"))
     val colT = cells.groupBy(col("dow")).agg(sum(col("o")).as("ct"))
     val tot = cells.agg(sum(col("o")).as("n"),
@@ -896,9 +898,10 @@ object Stats {
       .agg(sum(col("ia")).as("ca"), sum(col("ib")).as("cb"))
       .repartitionByRange(nBuckets, col("x"))
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // offsets + local cumsums both read it; pid frozen
+      .materialize("Stats.mannWhitney.d") // offsets + local cumsums both read it; pid frozen
     val wLocal = Window.partitionBy("pid").orderBy("x")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // global order over nBuckets offset rows; pid frozen by Stats.mannWhitney.d
     val wOff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     val offsets = d.groupBy(col("pid")).agg(sum(col("ca") + col("cb")).as("t"))
       .select(col("pid").as("opid"),
@@ -1090,7 +1093,7 @@ object Stats {
       .agg(
         sum(when(col(key) === goodType, 1L).otherwise(0L)).as("g"),
         sum(when(col(key) === goodType, 0L).otherwise(1L)).as("b"))
-      .localCheckpoint()
+      .materialize("Stats.woeIv.cells")
     val tot = cells.agg(sum(col("g")).as("gt"), sum(col("b")).as("bt"),
       count(lit(1)).as("k"))
     val pg  = (col("g") + 1).cast("double") / (col("gt") + col("k")).cast("double")
@@ -1129,7 +1132,7 @@ object Stats {
       .agg(
         sum(when(us < col("mid"), 1L).otherwise(0L)).as("ca"),
         sum(when(us >= col("mid"), 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint()
+      .materialize("Stats.psi.cells")
     val tot = cells.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
       count(lit(1)).as("k"))
     val pa = (col("ca") + 1).cast("double") / (col("na") + col("k")).cast("double")
@@ -1251,14 +1254,15 @@ object Stats {
       .withColumn("qu", floor(col(v) * 1000000).cast("long"))
       .groupBy(col(key), col("qu"))
       .agg(count(lit(1)).cast("long").as("cnt"))
-      .localCheckpoint()
+      .materialize("Stats.kruskalWallis.cells")
     val axis = cells.groupBy(col("qu")).agg(sum(col("cnt")).as("t"))
+    // global order over the axis: one row per distinct quantized value
     val wAxis = org.apache.spark.sql.expressions.Window
       .orderBy("qu").rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val rk = axis
       .withColumn("c0", coalesce(sum(col("t")).over(wAxis), lit(0L)))
       .withColumn("r2", lit(2L) * col("c0") + col("t") + 1)
-      .localCheckpoint()
+      .materialize("Stats.kruskalWallis.rk")
     val g = cells.join(broadcast(rk.select(col("qu"), col("r2"))), "qu")
       .groupBy(col(key))
       .agg(sum(col("cnt")).as("n_g"), sum(col("cnt") * col("r2")).as("t_j"))
@@ -1354,7 +1358,7 @@ object Stats {
       .agg(count(lit(1)).cast("long").as("n"),
         sum(col("qu").cast(dec)).as("s1"),
         sum(col("qu").cast(dec) * col("qu")).as("s2"))
-      .localCheckpoint()
+      .materialize("Stats.fdrBh.g")
     val tot = g.agg(sum(col("n")).as("n_all"), sum(col("s1")).as("s_all"),
       count(lit(1)).cast("long").as("m"))
     val a  = col("n_all").cast(dec) * col("s1") - col("n").cast(dec) * col("s_all")
@@ -1382,11 +1386,11 @@ object Stats {
     // offsets — bit-identical ranks on either route (same total
     // order), never one task holding a 1e9-key universe. k_max is a
     // one-row broadcast aggregate on both routes.
-    val mKeys = g.count()
+    val mKeys = Materialize.named("count Stats.fdrBh.keys")(g.count())
     val rankedUp =
       if (mKeys <= singlePartitionKeys) {
         val wAll = org.apache.spark.sql.expressions.Window
-          .orderBy(col("p_cheb"), col(key))
+          .orderBy(col("p_cheb"), col(key)) // mKeys <= singlePartitionKeys rows
         withP.withColumn("bh_rank", row_number().over(wAll).cast("long"))
       } else {
         val nBuckets = 32
@@ -1396,11 +1400,11 @@ object Stats {
           // range bounds are SAMPLED: two evaluations could split
           // differently, desyncing pid between the offset and rank
           // consumers — materialize once
-          .localCheckpoint()
+          .materialize("Stats.fdrBh.ranked")
         val wLocal = org.apache.spark.sql.expressions.Window
           .partitionBy("pid").orderBy(col("p_cheb"), col(key))
         val wOff = org.apache.spark.sql.expressions.Window
-          .orderBy("pid")
+          .orderBy("pid") // nBuckets rows; pid frozen by Stats.fdrBh.ranked
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
         val offsets = ranked.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
           .select(col("pid").as("opid"),
@@ -1646,10 +1650,11 @@ object Stats {
       .agg(sum(col("ia")).as("ca"), sum(col("ib")).as("cb"))
       .repartitionByRange(nBuckets, col("xq"))
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .materialize("Stats.energyDistance.d")
     val wLocal = Window.partitionBy("pid").orderBy("xq")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wSeq  = Window.partitionBy("pid").orderBy("xq")
+    // both global orders run over nBuckets offset rows; pid frozen by Stats.energyDistance.d
     val wOff  = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     val wNext = Window.orderBy("pid")
     val offsets = d.groupBy(col("pid"))
@@ -1724,9 +1729,10 @@ object Stats {
     val hist = q.groupBy(col("qu")).agg(count(lit(1)).as("c"))
       .repartitionByRange(nBuckets, col("qu"))
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .materialize("Stats.medianTest.hist")
     val wLocal = Window.partitionBy("pid").orderBy("qu")
       .rowsBetween(Window.unboundedPreceding, 0)
+    // global order over nBuckets offset rows; pid frozen by Stats.medianTest.hist
     val wOff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     val offsets = hist.groupBy(col("pid")).agg(sum(col("c")).as("tc"))
       .select(col("pid").as("opid"),
@@ -1874,10 +1880,11 @@ object Stats {
       .agg(sum(col("ia")).as("ca"), sum(col("ib")).as("cb"))
       .repartitionByRange(nBuckets, col("xq"))
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .materialize("Stats.wasserstein1.d")
     val wLocal = Window.partitionBy("pid").orderBy("xq")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wSeq  = Window.partitionBy("pid").orderBy("xq")
+    // both global orders run over nBuckets offset rows; pid frozen by Stats.wasserstein1.d
     val wOff  = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     val wNext = Window.orderBy("pid")
     val offsets = d.groupBy(col("pid"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Materialize._
 
 import graft.functions.TextFunctions._
 
@@ -363,7 +364,7 @@ object TextAnalysis {
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("total"))
     val top   = counts.orderBy(col("cnt").desc, col("tok").asc).limit(k)
-    val w     = Window.orderBy(col("cnt").desc, col("tok").asc)
+    val w     = Window.orderBy(col("cnt").desc, col("tok").asc) // the k top rows only
     top
       .withColumn("rnk", row_number().over(w).cast("long"))
       .withColumn("cum_cnt", sum(col("cnt")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
@@ -386,7 +387,7 @@ object TextAnalysis {
     val counts = documents.select(explode(split(lower(col("text")), " ")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val top = counts.orderBy(col("cnt").desc, col("tok").asc).limit(k)
-    val w   = Window.orderBy(col("cnt").desc, col("tok").asc)
+    val w   = Window.orderBy(col("cnt").desc, col("tok").asc) // the k top rows only
     top
       .withColumn("x", log(row_number().over(w).cast("double")))
       .withColumn("y", log(col("cnt").cast("double")))
@@ -467,7 +468,7 @@ object TextAnalysis {
     * (doc, term) rows, and the replica's token jitter grows those
     * 14.1x (116k → 1.64M) while docs grow 10x; per (doc, term) row
     * the op is SUBLINEAR (0.31x/row). Two rejected "fixes", both
-    * measured: localCheckpoint'ing the tf frame to kill the
+    * measured: checkpointing the tf frame to kill the
     * duplicated subtree made x10 WORSE (7.0s → 14.1s — materializing
     * the full frame costs more than recomputing the codegen'd
     * scan+explode+agg), and deriving df via a window over t was
@@ -567,17 +568,17 @@ object TextAnalysis {
     // null-free, where the kernel and the interpreted
     // transform(sequence...) form it replaced are identical);
     // checkpointed because docBg feeds the pair census AND the score
-    // join with different prunings. Corpus-sized (one row per
-    // distinct doc x bigram): conf-selected primitive, see
-    // Guards.CorpusMaterialize.
-    val docBg = Guards.materializeCorpus(documents
+    // join with different prunings. Corpus-sized: one row per
+    // distinct doc x bigram.
+    val docBg = documents
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .filter(size(col("ts")) >= 2)
       .select(col("doc_id"),
         explode(graft.functions.TextFunctions.ngrams(col("ts"), 2)).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
       .groupBy(col("doc_id"), col("bg"), col("w1"))
-      .agg(count(lit(1)).as("occ")))
+      .agg(count(lit(1)).as("occ"))
+      .materialize("TextAnalysis.bigramPerplexityScore.docBg")
     val pair = docBg.groupBy(col("bg")).agg(sum(col("occ")).as("cnt_bg"))
     val ctx = pair.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
       .agg(sum(col("cnt_bg")).as("cnt_w1"))
@@ -969,7 +970,7 @@ object TextAnalysis {
     val docBands = documents.crossJoin(maxDf)
       .groupBy(band("doc_id").as("cp"))
       .agg(count(lit(1)).as("doc_band"))
-    val w = Window.orderBy("cp").rowsBetween(Window.unboundedPreceding, 0)
+    val w = Window.orderBy("cp").rowsBetween(Window.unboundedPreceding, 0) // nCheckpoints band rows
     docBands
       .join(tokBands, Seq("cp"), "full_outer")
       .join(vocabBands, Seq("cp"), "full_outer")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Materialize._
 
 /** Time-series / financial analytics: the reference's metrics engine
   * (src/jobs/yfinance_etl/app.py:254-364 calculate_metrics,
@@ -182,8 +183,9 @@ object TimeSeries {
     val cached = emaRouteMemo.get(memoKey)
     val allShort = if (cached != null) cached.booleanValue
     else {
-      val mx = df.groupBy(col(key)).agg(count(lit(1)).as("__cnt"))
-        .agg(max(col("__cnt"))).head()
+      val mx = Materialize.named("head TimeSeries.ema.maxKeyRows") {
+        df.groupBy(col(key)).agg(count(lit(1)).as("__cnt")).agg(max(col("__cnt"))).head()
+      }
       val maxCnt = if (mx.isNullAt(0)) 0L else mx.getLong(0)
       val s = maxCnt <= safeRn
       if (emaRouteMemo.size > 1024) emaRouteMemo.clear()
@@ -619,7 +621,7 @@ object TimeSeries {
       .withColumn("c1", sum(col("mk").cast(dec)).over(wSeq.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("c2", sum((col("mk").cast(dec) * col("mk")).cast(dec)).over(wSeq.rowsBetween(Window.unboundedPreceding, 0)))
       .select(col(key), col("day"), col("rn"), col("c1"), col("c2"))
-      .localCheckpoint()
+      .materialize("TimeSeries.volCones.cum")
     horizons.map { m =>
       // exact 128-bit numerator (mk² passes int64 on pathological
       // fixture returns), imaged per row via the portable splitDouble
@@ -690,9 +692,10 @@ object TimeSeries {
     // the three reads of r below) — unmaterialized, the daily-close
     // window subtree re-evaluates for each; one slim materialization
     // runs it once
-    val rets = dailyCloseReturns(df, key, ts, v).localCheckpoint()
-    val cnt = rets.agg(
-      countDistinct(col(key)).as("nk"), countDistinct(col("day")).as("nd")).head()
+    val rets = dailyCloseReturns(df, key, ts, v).materialize("TimeSeries.corrPairsBanded.rets")
+    val cnt = Materialize.named("head TimeSeries.corrPairsBanded.sizes") {
+      rets.agg(countDistinct(col(key)).as("nk"), countDistinct(col("day")).as("nd")).head()
+    }
     val (nKeys, nSlots) = (cnt.getLong(0), cnt.getLong(1))
     // smallest w with 2^w >= ceil(keys/8), in EXACT integer arithmetic
     // (a float log2 is off-by-one exactly at powers of two, where
@@ -714,13 +717,13 @@ object TimeSeries {
         least(floor(col("slot") / wEff), lit(nBands - 1)).cast("long")
       }
     val days = broadcast(rets.select(col("day")).distinct()
-      .withColumn("slot", row_number().over(Window.orderBy("day")).cast("long") - 1))
+      .withColumn("slot", row_number().over(Window.orderBy("day")).cast("long") - 1)) // one row per day
     // r is consumed three times (signatures + both sides of the
     // exact-verification join); it is three slim columns, so
     // materializing it once beats re-running the day join per read
     val r = rets.join(days, "day")
       .select(col(key).as("k"), col("slot"), col("ret"))
-      .localCheckpoint()
+      .materialize("TimeSeries.corrPairsBanded.r")
     // sign pattern per (key, band): ascending-slot "slot:sign" string
     // md5'd — the slot list is part of the signature, so keys with
     // different day coverage inside a band never collide (they could
@@ -735,7 +738,7 @@ object TimeSeries {
           s => concat_ws(":", s("slot").cast("string"), s("sgn").cast("string"))))).as("sig"))
       // the self-join reads sigs twice; without materialization each
       // side re-runs the collect_list aggregate
-      .localCheckpoint()
+      .materialize("TimeSeries.corrPairsBanded.sigs")
     val cand = sigs.as("a")
       .join(sigs.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
@@ -803,7 +806,7 @@ object TimeSeries {
     import spark.implicits._
     // rets feeds the day grid, the vector build, and (transitively)
     // the guard's key count — materialize the window subtree once
-    val rets = dailyCloseReturns(df, key, ts, v).localCheckpoint()
+    val rets = dailyCloseReturns(df, key, ts, v).materialize("TimeSeries.correlationMatrix.rets")
     // global day -> slot index (the day universe is tiny: one row per
     // calendar day, broadcast)
     val days = broadcast(rets.select(col("day")).distinct()
@@ -827,7 +830,7 @@ object TimeSeries {
         .agg(collect_list(struct(col("k"), col("slots"), col("vals"))).as("vs")),
       rets.select(col(key).as("k")).distinct(), "correlationMatrix",
       defaultCap = if (exact) None else Some(CorrMatrixDefaultMaxKeys))
-      .localCheckpoint()
+      .materialize("TimeSeries.correlationMatrix.blocks")
     val pairsOfBlocks = blocks.as("x")
       .join(blocks.as("y"), col("x.blk") <= col("y.blk"))
       .select(col("x.vs").as("avs"), col("y.vs").as("bvs"))
@@ -1101,7 +1104,7 @@ object TimeSeries {
     // repeated subtrees). Both checkpoints sit on BOUNDED frames:
     // rets is one row per (key, day) — the corr family's checkpointed
     // grain — and wide is one row per key.
-    val rets  = dailyCloseReturns(df, key, ts, v).localCheckpoint()
+    val rets  = dailyCloseReturns(df, key, ts, v).materialize("TimeSeries.riskSnapshot.rets")
     val bench = broadcast(
       rets.filter(col(key) === benchmarkKey).select(col("day"), col("ret").as("bench_ret")))
     val volC = stddev_samp(col("ret")) * math.sqrt(TradingDays)
@@ -1115,7 +1118,7 @@ object TimeSeries {
       round(when(var_samp(col("bench_ret")) =!= 0,
         (avg(col("ret")) - covar_samp(col("ret"), col("bench_ret")) / var_samp(col("bench_ret")) * avg(col("bench_ret"))) * TradingDays),
         6).as("alpha"))
-    val wide  = base.join(mdd, Seq(key)).join(ab, Seq(key), "left").localCheckpoint()
+    val wide  = base.join(mdd, Seq(key)).join(ab, Seq(key), "left").materialize("TimeSeries.riskSnapshot.wide")
     val funds = wide.filter(col(key) =!= benchmarkKey).select(col(key), expr(
       "stack(5, 'alpha', alpha, 'beta', beta, 'max_drawdown', max_drawdown, " +
         "'sharpe', sharpe, 'volatility', volatility) AS (metric, fund_value)"))
@@ -1692,7 +1695,7 @@ object TimeSeries {
     val dc = dailyClose(events, key, ts, v)
       .withColumn("idx", (row_number().over(wSeq) - 1).cast("double"))
       .select(col(key), col("idx"), col("close"))
-      .localCheckpoint()
+      .materialize("TimeSeries.theilSen.dc")
     val a = dc.select(col(key), col("idx").as("ia"), col("close").as("ca"))
     val b = dc.select(col(key), col("idx").as("ib"), col("close").as("cb"))
     a.join(b, Seq(key)).filter(col("ib") > col("ia"))
@@ -2585,7 +2588,7 @@ object TimeSeries {
     // once (guide §1.2 remove passes)
     val rets  = dailyCloseReturns(events, key, ts, v)
       .select(col(key), col("day"), col("ret"))
-      .localCheckpoint()
+      .materialize("TimeSeries.marketTiming.rets")
     val bench = broadcast(
       rets.filter(col(key) === benchmarkKey).select(col("day"), col("ret").as("bench_ret")))
     val big = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -2915,7 +2918,7 @@ object TimeSeries {
     val c = dailyClose(events, key, ts, v)
       .withColumn("mku", floor(col("close") * 1000000).cast("long"))
       .select(col(key), col("day"), col("mku"))
-      .localCheckpoint()
+      .materialize("TimeSeries.cointegration.c")
     val bench = c.filter(col(key) === benchmarkId)
       .select(col("day"), col("mku").as("mbu"))
     val j = c.filter(col(key) =!= benchmarkId)

@@ -111,8 +111,8 @@ object BroadcastAsOfJoinExec {
     * 5M ~ a century of second bars; ~80 MB of (long, double) pairs).
     */
   def maxRightRows: Int =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(MaxRowsKey, "5000000").toInt
+    graft.operators.Guards.numericConf(MaxRowsKey, org.apache.spark.sql.internal.SQLConf.get
+      .getConfString(MaxRowsKey, "5000000"))(_.toInt)
 }
 
 object AsOfJoinStrategy extends Strategy {

@@ -210,6 +210,6 @@ object EmaAggregate {
 
   /** Conf-driven cap, read driver-side at expression build. */
   def confMaxBufferRows: Int =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(MaxBufferRowsKey, DefaultMaxBufferRows.toString).toInt
+    graft.operators.Guards.numericConf(MaxBufferRowsKey, org.apache.spark.sql.internal.SQLConf.get
+      .getConfString(MaxBufferRowsKey, DefaultMaxBufferRows.toString))(_.toInt)
 }

@@ -305,7 +305,8 @@ object Streams {
   def checkStateBound(q: org.apache.spark.sql.streaming.StreamingQuery,
                       maxKeys: Option[Long] = None): Unit = {
     val cap = maxKeys.orElse(
-      q.sparkSession.conf.getOption("graft.emaStream.maxKeys").map(_.toLong))
+      q.sparkSession.conf.getOption("graft.emaStream.maxKeys")
+        .map(graft.operators.Guards.numericConf("graft.emaStream.maxKeys", _)(_.toLong)))
     cap.foreach { mk =>
       val rows = Option(q.lastProgress).map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
       if (rows > mk) {

@@ -47,27 +47,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(Similarity.cosineNearDupPairs(emb, 0.45).limit(1).count() >= 0)
   }
 
-  test("corpus materialization conf: disk/none modes are result-identical, bad value fails loudly") {
-    import graft.operators.Guards
-    val docs = Tables.documents(spark, sf)
-    // baseline under the default ("local" eager localCheckpoint)
-    val base = Dedup.containmentPairs(docs, threshold = 0.1).collect().toSet
-    val baseBg = graft.operators.TextAnalysis.bigramPerplexityScore(docs).collect().toSet
-    assert(base.nonEmpty && baseBg.nonEmpty)
-    try {
-      for (mode <- Seq("disk", "none")) {
-        spark.conf.set(Guards.CorpusMaterialize, mode)
-        assert(Dedup.containmentPairs(docs, threshold = 0.1).collect().toSet === base,
-          s"containmentPairs differs under mode=$mode")
-        assert(graft.operators.TextAnalysis.bigramPerplexityScore(docs).collect().toSet === baseBg,
-          s"bigramPerplexityScore differs under mode=$mode")
-      }
-      spark.conf.set(Guards.CorpusMaterialize, "bogus")
-      val e = intercept[IllegalArgumentException] { Dedup.containmentPairs(docs) }
-      assert(e.getMessage.contains(Guards.CorpusMaterialize))
-    } finally spark.conf.unset(Guards.CorpusMaterialize)
-  }
-
   test("minhash-LSH candidates cover the high-jaccard pairs") {
     import spark.implicits._
     val docs  = Tables.documents(spark, sf)

@@ -19,10 +19,54 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("every declared query runs and returns rows at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n > 0, s"$name returned no rows")
+    // Build-time job ledger: every job a closure starts while it
+    // builds its DataFrame (before the action) must carry a name —
+    // a materialize site, a table scan or a named driver action — and
+    // each query's set of names must equal the committed ledger. The
+    // build runs under job group build:<query>; jobs are attributed by
+    // that group in their own properties, never by arrival order on
+    // the asynchronous listener bus. The actual ledger is written to
+    // target/build_jobs_ledger.txt on every run; copy it over
+    // src/test/resources/build_jobs_ledger.txt to accept a change.
+    val sc = spark.sparkContext
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("spark.jobGroup.id")).filter(_.startsWith("build:"))
+          .foreach(g => built.add(g.stripPrefix("build:") -> e.properties.getProperty("spark.job.description")))
     }
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries.foreach { case (name, fn) =>
+        sc.setJobGroup(s"build:$name", null)
+        val df = try fn(spark, sf) finally sc.clearJobGroup()
+        val n = df.count()
+        assert(n > 0, s"$name returned no rows")
+      }
+      org.apache.spark.graftshim.BusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+
+    import scala.jdk.CollectionConverters._
+    val byQuery = built.asScala.toSeq.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val Named = "(materialize|scan|collect|count|head|isEmpty|aggregate) [A-Za-z0-9_.]+".r
+    val unnamed = byQuery.filter(_._2.exists(d => d == null || !Named.matches(d)))
+    assert(unnamed.isEmpty, s"build-time jobs without a site name: $unnamed")
+    def line(q: String, ds: Set[String]) = s"$q: ${ds.toSeq.sorted.mkString("; ")}"
+    java.nio.file.Files.write(java.nio.file.Paths.get("target", "build_jobs_ledger.txt"),
+      byQuery.toSeq.sortBy(_._1).map((line _).tupled).mkString("", "\n", "\n").getBytes("UTF-8"))
+    val src = scala.io.Source.fromInputStream(getClass.getResourceAsStream("/build_jobs_ledger.txt"), "UTF-8")
+    val expected = try src.getLines().map(_.split(": ", 2)).map(a => a(0) -> a(1).split("; ").toSet).toMap
+      finally src.close()
+    // TimeSeries.ema memoizes its route probe per plan for the JVM's
+    // lifetime, so the probe job is missing when an earlier spec in
+    // this JVM already built the same ema
+    val memoized = "head TimeSeries.ema.maxKeyRows"
+    val diff = (byQuery.keySet ++ expected.keySet).toSeq.sorted.flatMap { q =>
+      val (got, want) = (byQuery.getOrElse(q, Set.empty[String]), expected.getOrElse(q, Set.empty[String]))
+      if (got == want || got + memoized == want) Nil
+      else Seq(s"- ${line(q, want)}", s"+ ${line(q, got)}")
+    }
+    assert(diff.isEmpty, s"build-time jobs differ from the ledger (- ledger, + this run):\n${diff.mkString("\n")}")
   }
 
   test("every query key with an oracle exists in queries") {
