@@ -20,6 +20,10 @@ change of the median, and in how many pairs the change was better
 (ties count for neither side); `better` comes from BENCHMARK.json.
 It also prints every run's failed/attempted operation counts and the
 host CPU steal perfbench measured during it.
+
+Each metric gets a verdict (see `verdict`): `gain`, `regression`,
+`unresolved` or `flat`. Only the end-to-end metrics have a bound in
+BENCHMARK.json, so only they can read `regression` or `unresolved`.
 """
 import argparse
 import json
@@ -70,7 +74,36 @@ def quartiles(xs: list) -> tuple:
     return q1, q2, q3
 
 
-def report(workload: str, pairs: list, better: dict) -> None:
+def verdict(parent: list, change: list, lower: bool, bound) -> str:
+    """One metric's verdict over paired runs (parent[i] pairs with change[i]).
+
+    gain:       the change wins at least 9 of 10 pairs and its median is
+                better than the parent's by more than the parent's
+                interquartile spread;
+    regression: the change's median is worse than the parent's by more
+                than `bound` (a fraction of the parent's median);
+    unresolved: the parent's interquartile spread is wider than `bound`,
+                unless every change run beats every parent run;
+    flat:       otherwise. A metric without a bound is `gain` or `flat`.
+    """
+    def beats(c, p):
+        return c < p if lower else c > p
+    wins = sum(1 for p, c in zip(parent, change) if beats(c, p))
+    p1, pm, p3 = quartiles(parent)
+    cm = statistics.median(change)
+    better_by = pm - cm if lower else cm - pm
+    if wins * 10 >= 9 * len(parent) and better_by > p3 - p1:
+        return "gain"
+    if bound is None or not pm:
+        return "flat"
+    if -better_by / abs(pm) > bound:
+        return "regression"
+    if (p3 - p1) / abs(pm) > bound and not all(beats(c, p) for c in change for p in parent):
+        return "unresolved"
+    return "flat"
+
+
+def report(workload: str, pairs: list, better: dict, bounds: dict) -> None:
     print(f"\n== {workload}: {len(pairs)} pairs ==")
     for seed, first, a, b in pairs:
         def counts(r):
@@ -86,7 +119,7 @@ def report(workload: str, pairs: list, better: dict) -> None:
     if not ok:
         return
     names = [k for k in ok[0][0]["metrics"] if all(k in a["metrics"] and k in b["metrics"] for a, b in ok)]
-    print(f"{'metric':<34} {'parent median [q1-q3]':>30} {'change median [q1-q3]':>30} {'delta':>8} wins")
+    print(f"{'metric':<34} {'parent median [q1-q3]':>30} {'change median [q1-q3]':>30} {'delta':>8} wins  verdict")
     for k in names:
         pa = [a["metrics"][k]["value"] for a, _ in ok]
         ch = [b["metrics"][k]["value"] for _, b in ok]
@@ -96,7 +129,8 @@ def report(workload: str, pairs: list, better: dict) -> None:
         (p1, pm, p3), (c1, cm, c3) = quartiles(pa), quartiles(ch)
         delta = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
         print(f"{k:<34} {f'{pm:.4g} [{p1:.4g}-{p3:.4g}] {unit}':>30} "
-              f"{f'{cm:.4g} [{c1:.4g}-{c3:.4g}] {unit}':>30} {delta:>8} {wins}/{len(ok)}")
+              f"{f'{cm:.4g} [{c1:.4g}-{c3:.4g}] {unit}':>30} {delta:>8} {wins}/{len(ok)}  "
+              f"{verdict(pa, ch, lower, bounds.get(k))}")
 
 
 def main() -> int:
@@ -113,6 +147,7 @@ def main() -> int:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"] if "bound" in m}
 
     results = {}
     with tempfile.TemporaryDirectory(prefix="ab_pairs_") as tmp:
@@ -130,7 +165,7 @@ def main() -> int:
                           f"{got[side].get('metrics', got[side].get('error'))}", file=sys.stderr, flush=True)
                 pairs.append((seed, order[0], got["parent"], got["change"]))
             results[w] = pairs
-            report(w, pairs, better)
+            report(w, pairs, better, bounds)
     if args.json:
         with open(args.json, "w") as f:
             json.dump({w: [{"seed": s, "first": o, "parent": a, "change": b} for s, o, a, b in ps]

@@ -224,7 +224,6 @@ object Dedup {
       .join(documents.select(col("doc_id"), col("source")), "doc_id")
       .materialize("Dedup.bloomDecontaminate.sh")
     val known = sh.filter(col("source").isin(knownSources: _*)).select(col("s")).distinct()
-      .materialize("Dedup.bloomDecontaminate.known")
     val bits  = bloomBitset(known, "s", mBits, k)
     val probes = sh.filter(!col("source").isin(knownSources: _*))
       .join(broadcast(known.withColumn("hit", lit(1))), Seq("s"), "left")
@@ -733,26 +732,17 @@ object Dedup {
     // previous two-selects-union + separate edge select ran the
     // build three times)
     val pe = pairs.select(col("da"), col("db")).materialize("Dedup.clustersBigStar.pe")
-    val allNodes = pe.select(explode(array(col("da"), col("db"))).as("node"))
-      .distinct().materialize("Dedup.clustersBigStar.allNodes")
-    // edge counts ride the checkpoint jobs via observe() — the
+    val allNodes = pe.select(explode(array(col("da"), col("db"))).as("node")).distinct()
+    // edge counts ride the checkpoint jobs (materializeCounted) — the
     // former separate count() action cost one driver round-trip per
     // round for a count of rows the checkpoint had just written
-    def cntAgg = count(lit(1)).as("c")
-    def obsCnt(o: org.apache.spark.sql.Observation): Long =
-      o.get.apply("c").asInstanceOf[Long]
-    val obs0 = new org.apache.spark.sql.Observation
-    var edges = pe.select(col("da").as("a"), col("db").as("b"))
+    var (edges, edgeCount) = pe.select(col("da").as("a"), col("db").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-      .observe(obs0, cntAgg)
-      .materialize("Dedup.clustersBigStar.edges")
-    var edgeCount = obsCnt(obs0)
+      .materializeCounted("Dedup.clustersBigStar.edges")
     var iter = 0
     var done = false
     while (!done && iter < maxIters) {
-      val obsI = new org.apache.spark.sql.Observation
-      val next      = smallStar(largeStar(edges)).observe(obsI, cntAgg).materialize("Dedup.clustersBigStar.next")
-      val nextCount = obsCnt(obsI)
+      val (next, nextCount) = smallStar(largeStar(edges)).materializeCounted("Dedup.clustersBigStar.next")
       // both sides are distinct sets: fixpoint iff same size, no diff
       // (prior round's count is carried — no redundant recount job)
       done = nextCount == edgeCount &&

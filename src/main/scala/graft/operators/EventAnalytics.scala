@@ -508,7 +508,6 @@ object EventAnalytics {
     val grouped = seq
       .groupBy(col("prev"), col("event_type").as("next"))
       .agg(count(lit(1)).as("c"))
-      .materialize("EventAnalytics.markovStationary.grouped")
     val edges = grouped.filter(col("prev").isNotNull)
     val rt = edges.groupBy(col("prev")).agg(sum(col("c")).as("t"))
     // BOUNDED state space (≤types rows / ≤types² edges) ⇒ the π·P
@@ -893,9 +892,7 @@ object EventAnalytics {
     * one midnight marker.
     */
   def peakConcurrency(events: DataFrame, gapMin: Int = 30, nBuckets: Int = 32): DataFrame = {
-    // checkpointed: sess feeds bounds + both delta-point branches —
-    // three copies of the sessionize window otherwise
-    val sess = graft.streaming.Streams.sessionizeBatch(events, gapMin).materialize("EventAnalytics.peakConcurrency.sess")
+    val sess = graft.streaming.Streams.sessionizeBatch(events, gapMin)
     val bounds = broadcast(sess.agg(
       min(col("start_us")).as("t0"), max(col("end_us") + 1L).as("t1")))
     val midnights = bounds.select(

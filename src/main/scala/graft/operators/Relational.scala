@@ -1031,12 +1031,7 @@ object Relational {
     * pb) tiebreak.
     */
   def basketPairs(lineitem: DataFrame, minCount: Long = 3, k: Int = 25): DataFrame = {
-    // checkpointed: op feeds four consumers (total, freq, both
-    // self-join sides) whose column pruning specializes each copy's
-    // scan — unmaterialized, the lineitem scan + distinct exchange
-    // ran once per consumer
     val op = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      .materialize("Relational.basketPairs.op")
     val total = op.select(col("ok")).distinct().agg(count(lit(1)).as("n_orders"))
     val freq  = op.groupBy(col("pk")).agg(count(lit(1)).as("n_p"))
     val pairs = op.select(col("ok"), col("pk").as("pa"))

@@ -841,12 +841,14 @@ object Similarity {
   /** BFS layers over the directed k-NN graph from a seed set — the
     * neighborhood-expansion pass of similarity-graph curation (seed
     * docs known bad/contaminated; everything within `maxDepth` hops
-    * is review-queue suspect). Classic distributed BFS: each round is
-    * ONE co-partitioned equi-join of the current frontier against the
-    * k·n edge frame plus an anti join against the reached set (min-
-    * depth semantics by construction — a node joins at its first
-    * reachable round), materialize truncating lineage per round
-    * (the [[graft.operators.Dedup.clusters]] loop discipline). Depth
+    * is review-queue suspect). ONE plan, a linear join chain over the
+    * shared edge frame: layer d is layer d−1 left-joined to the edges
+    * of its depth-(d−1) rows, each row and each reached neighbour
+    * (at depth d) then reduced to its min depth per vec_id — so a
+    * node keeps its first reachable round. Each layer appears once in
+    * the plan (the form that keeps a frontier and a reached frame
+    * would reference both per round and double with depth), and the
+    * edge frame is its only checkpoint. Depth
     * count is exact integers and a repeated seed counts once; output
     * is engine-exact. The edge build is [[knnGraph]]'s head (declared-
     * quadratic exact sweep at gate scale; IVF/LSH candidate edges at
@@ -857,19 +859,14 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val edges = rankedEdges(embeddings, k, exact).select(col("src"), col("dst")).materialize("Similarity.bfsLayers.edges")
-    var reached = seeds.distinct.toDF("vec_id").withColumn("depth", lit(0L)).materialize("Similarity.bfsLayers.reached")
-    var frontier = reached
-    for (d <- 1 to maxDepth) {
-      val next = frontier
-        .join(edges, frontier("vec_id") === edges("src"))
-        .select(col("dst").as("vec_id")).distinct()
-        .join(reached.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .withColumn("depth", lit(d.toLong))
-        .materialize("Similarity.bfsLayers.next")
-      reached = reached.unionByName(next).materialize("Similarity.bfsLayers.reached")
-      frontier = next
+    (1 to maxDepth).foldLeft(seeds.distinct.toDF("vec_id").withColumn("depth", lit(0L))) { (layer, d) =>
+      layer.join(edges, layer("vec_id") === edges("src") && layer("depth") === lit(d - 1L), "left")
+        .select(explode(array(
+          struct(col("vec_id"), col("depth")),
+          struct(col("dst").as("vec_id"), lit(d.toLong).as("depth")))).as("e"))
+        .filter(col("e.vec_id").isNotNull)
+        .groupBy(col("e.vec_id").as("vec_id")).agg(min(col("e.depth")).as("depth"))
     }
-    reached
   }
 
   /** Simplified (centroid-based) silhouette per IVF cell — the
@@ -925,13 +922,11 @@ object Similarity {
   def pageRankKnn(embeddings: DataFrame, k: Int = 5, iters: Int = 5,
                   scale: Long = 1000000000000L, exact: Boolean = false): DataFrame = {
     require(iters >= 1 && k >= 1, s"iters/k must be positive: iters=$iters, k=$k")
-    val edges = rankedEdges(embeddings, k, exact)
-      .select(col("src"), col("dst"))
-      .materialize("Similarity.pageRankKnn.edges") // the sweep runs once; every iteration re-reads this
+    val edges  = rankedEdges(embeddings, k, exact).select(col("src"), col("dst"))
+    // the sweep runs once, inside ed's checkpoint; every iteration re-reads ed
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
     val ed     = edges.join(outdeg, "src").materialize("Similarity.pageRankKnn.ed")
-    val nodes  = embeddings.select(col("vec_id").as("node")).materialize("Similarity.pageRankKnn.nodes")
-    val n      = Materialize.named("count Similarity.pageRankKnn.nodes")(nodes.count())
+    val (nodes, n) = embeddings.select(col("vec_id").as("node")).materializeCounted("Similarity.pageRankKnn.nodes")
     val r0     = scale / n
     val tele   = r0 * 15L / 100L
     // the rank chain is LINEAR (ranks_i feeds only ranks_{i+1}), so
@@ -1024,7 +1019,7 @@ object Similarity {
   def topPrincipalComponent(embeddings: DataFrame, iters: Int = 3): DataFrame = {
     val dec   = org.apache.spark.sql.types.DecimalType(18, 6)
     val spark = embeddings.sparkSession
-    val x = embeddings.select(toDouble(col("embedding")).as("v")).materialize("Similarity.topPrincipalComponent.x")
+    val x = embeddings.select(toDouble(col("embedding")).as("v"))
     val d = Materialize.named("head Similarity.topPrincipalComponent.dim")(x.select(size(col("v"))).head()).getInt(0)
     var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
     for (_ <- 1 to iters) {
@@ -1360,7 +1355,6 @@ object Similarity {
       .materialize("Similarity.mmrRerank.pool")
     val pv = withVecNorm(embeddings).join(pool, "vec_id")
       .select(col("vec_id"), col("v"), col("nrm"), col("qsim"))
-      .materialize("Similarity.mmrRerank.pv")
     val sims = pv.as("a").join(pv.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("pa"), col("b.vec_id").as("pb"),
         when(col("a.nrm") * col("b.nrm") =!= 0,
@@ -1407,8 +1401,7 @@ object Similarity {
     val edges = rankedEdges(embeddings, k, exact)
       .select(col("src"), col("dst"))
       .materialize("Similarity.hitsKnn.edges") // the n² sweep runs once; every round re-reads this
-    val nodes = embeddings.select(col("vec_id").as("node")).materialize("Similarity.hitsKnn.nodes")
-    val n  = Materialize.named("count Similarity.hitsKnn.nodes")(nodes.count())
+    val (nodes, n) = embeddings.select(col("vec_id").as("node")).materializeCounted("Similarity.hitsKnn.nodes")
     val s0 = scale / n
     // SPARSE iterations, dense only at the output: the old renorm
     // left-joined the full node scan and broadcast the total every
@@ -1616,9 +1609,9 @@ object Similarity {
     // EARLY EXIT on the fixed point: peeling is monotone (the active
     // set only shrinks — every survivor of round i+1 was active in
     // round i), so an unchanged count means an unchanged SET, and
-    // every later round recomputes the identical frame. The count is
-    // a near-free job over the just-checkpointed degs blocks, and the
-    // fixture converges in 2-3 of the 8 contract rounds — result
+    // every later round recomputes the identical frame. The count
+    // rides the degs checkpoint job (observe), and the fixture
+    // converges in 2-3 of the 8 contract rounds — result
     // bit-identical to running all of them (guide §1.2 remove passes).
     var prevN  = -1L
     var stable = false
@@ -1627,11 +1620,11 @@ object Similarity {
       round += 1
       // explode, not union-of-two-selects: a union references the
       // unmaterialized edges subtree once per branch
-      degs = edges.select(explode(array(col("src"), col("dst"))).as("node"))
+      val (roundDegs, n) = edges.select(explode(array(col("src"), col("dst"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).cast("long").as("deg"))
         .filter(col("deg") >= k)
-        .materialize("Similarity.kCore.degs")
-      val n = Materialize.named("count Similarity.kCore.degs")(degs.count())
+        .materializeCounted("Similarity.kCore.degs")
+      degs = roundDegs
       if (n == prevN || n == 0) stable = true
       prevN = n
       val act = degs.select(col("node"))

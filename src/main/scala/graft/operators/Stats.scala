@@ -696,7 +696,6 @@ object Stats {
       .agg(
         sum(when(col(key) === typeA, 1L).otherwise(0L)).as("ca"),
         sum(when(col(key) === typeB, 1L).otherwise(0L)).as("cb"))
-      .materialize("Stats.klDivergence.cells")
     val tot = cells.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
       count(lit(1)).as("k"))
     val pa = (col("ca") + 1).cast("double") / (col("na") + col("k")).cast("double")
@@ -1093,7 +1092,6 @@ object Stats {
       .agg(
         sum(when(col(key) === goodType, 1L).otherwise(0L)).as("g"),
         sum(when(col(key) === goodType, 0L).otherwise(1L)).as("b"))
-      .materialize("Stats.woeIv.cells")
     val tot = cells.agg(sum(col("g")).as("gt"), sum(col("b")).as("bt"),
       count(lit(1)).as("k"))
     val pg  = (col("g") + 1).cast("double") / (col("gt") + col("k")).cast("double")
@@ -1132,7 +1130,6 @@ object Stats {
       .agg(
         sum(when(us < col("mid"), 1L).otherwise(0L)).as("ca"),
         sum(when(us >= col("mid"), 1L).otherwise(0L)).as("cb"))
-      .materialize("Stats.psi.cells")
     val tot = cells.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
       count(lit(1)).as("k"))
     val pa = (col("ca") + 1).cast("double") / (col("na") + col("k")).cast("double")
@@ -1262,7 +1259,6 @@ object Stats {
     val rk = axis
       .withColumn("c0", coalesce(sum(col("t")).over(wAxis), lit(0L)))
       .withColumn("r2", lit(2L) * col("c0") + col("t") + 1)
-      .materialize("Stats.kruskalWallis.rk")
     val g = cells.join(broadcast(rk.select(col("qu"), col("r2"))), "qu")
       .groupBy(col(key))
       .agg(sum(col("cnt")).as("n_g"), sum(col("cnt") * col("r2")).as("t_j"))

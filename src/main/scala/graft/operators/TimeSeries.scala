@@ -611,9 +611,7 @@ object TimeSeries {
     // The per-window sums are recovered by exact decimal differencing
     // cum[i] − cum[i−m] — bit-identical values, so vn and every
     // downstream IEEE chain are unchanged. All horizons' lags ride
-    // the SAME (key, day) sort, and the cum frame is materialized
-    // once so the per-horizon branches don't re-run the daily-close
-    // aggregate + window (guide §1.2 remove passes, §4 per-row work).
+    // the SAME (key, day) sort (guide §4 per-row work).
     val wSeq = Window.partitionBy(key).orderBy("day")
     val cum = dailyCloseReturns(events, key, ts, v)
       .withColumn("mk", floor(col("ret") * 1000000).cast("long"))
@@ -621,7 +619,6 @@ object TimeSeries {
       .withColumn("c1", sum(col("mk").cast(dec)).over(wSeq.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("c2", sum((col("mk").cast(dec) * col("mk")).cast(dec)).over(wSeq.rowsBetween(Window.unboundedPreceding, 0)))
       .select(col(key), col("day"), col("rn"), col("c1"), col("c2"))
-      .materialize("TimeSeries.volCones.cum")
     horizons.map { m =>
       // exact 128-bit numerator (mk² passes int64 on pathological
       // fixture returns), imaged per row via the portable splitDouble
@@ -736,9 +733,6 @@ object TimeSeries {
       .select(col("k"), col("band"),
         md5(concat_ws(",", transform(col("sv"),
           s => concat_ws(":", s("slot").cast("string"), s("sgn").cast("string"))))).as("sig"))
-      // the self-join reads sigs twice; without materialization each
-      // side re-runs the collect_list aggregate
-      .materialize("TimeSeries.corrPairsBanded.sigs")
     val cand = sigs.as("a")
       .join(sigs.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
@@ -2582,13 +2576,8 @@ object TimeSeries {
     */
   def marketTiming(events: DataFrame, benchmarkKey: Long,
                    key: String = "user_id", ts: String = "ts", v: String = "value"): DataFrame = {
-    // rets feeds TWO consumers (the broadcast benchmark slice and the
-    // fact side) — unmaterialized, the daily-close aggregate + lag
-    // window ran once per consumer; one slim materialization runs it
-    // once (guide §1.2 remove passes)
     val rets  = dailyCloseReturns(events, key, ts, v)
       .select(col(key), col("day"), col("ret"))
-      .materialize("TimeSeries.marketTiming.rets")
     val bench = broadcast(
       rets.filter(col(key) === benchmarkKey).select(col("day"), col("ret").as("bench_ret")))
     val big = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -2908,17 +2897,9 @@ object TimeSeries {
   def cointegration(events: DataFrame, benchmarkId: Long = 0L,
                     key: String = "user_id", ts: String = "ts", v: String = "value"): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    // the daily-close frame feeds TWO consumers (the broadcast
-    // benchmark slice and the fact side) — unmaterialized, the
-    // daily-close aggregate ran once per consumer; one SLIM
-    // materialization runs it once (the marketTiming/theilSen move,
-    // guide §1.2 remove passes). j itself is then two cheap reads of
-    // the checkpointed scan + a broadcast join, so it no longer
-    // needs its own checkpoint.
     val c = dailyClose(events, key, ts, v)
       .withColumn("mku", floor(col("close") * 1000000).cast("long"))
       .select(col(key), col("day"), col("mku"))
-      .materialize("TimeSeries.cointegration.c")
     val bench = c.filter(col(key) === benchmarkId)
       .select(col("day"), col("mku").as("mbu"))
     val j = c.filter(col(key) =!= benchmarkId)

@@ -403,23 +403,44 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("bfs layers: matches a local BFS over the collected knn edges, seeds at depth 0") {
-    val emb   = Tables.embeddings(spark, sf)
-    val seeds = Seq(0L, 1L, 2L)
-    val edges = Similarity.knnGraph(emb, 5).collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .groupBy(_._1).map { case (s, a) => s -> a.map(_._2).toSet }
-    // local reference BFS
-    var depth = seeds.map(_ -> 0L).toMap
-    var frontier = seeds.toSet
-    for (d <- 1 to 3) {
-      val next = frontier.flatMap(n => edges.getOrElse(n, Set.empty)) -- depth.keySet
-      depth ++= next.map(_ -> d.toLong)
-      frontier = next
+    import spark.implicits._
+    /** bfsLayers against a local reference BFS over knnGraph's edges; returns the result. */
+    def check(emb: org.apache.spark.sql.DataFrame, seeds: Seq[Long], k: Int, maxDepth: Int,
+              exact: Boolean = false): Map[Long, Long] = {
+      val edges = Similarity.knnGraph(emb, k, exact).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+        .groupBy(_._1).map { case (s, a) => s -> a.map(_._2).toSet }
+      var depth = seeds.map(_ -> 0L).toMap
+      var frontier = seeds.toSet
+      for (d <- 1 to maxDepth) {
+        val next = frontier.flatMap(n => edges.getOrElse(n, Set.empty)) -- depth.keySet
+        depth ++= next.map(_ -> d.toLong)
+        frontier = next
+      }
+      val got = Similarity.bfsLayers(emb, seeds, k, maxDepth, exact).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === depth, s"distributed BFS must equal the local reference (seeds $seeds, maxDepth $maxDepth)")
+      seeds.foreach(s => assert(got(s) === 0L))
+      got
     }
-    val got = Similarity.bfsLayers(emb, seeds, 5, 3).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === depth, "distributed BFS must equal the local reference")
-    seeds.foreach(s => assert(got(s) === 0L))
+    val emb = Tables.embeddings(spark, sf)
+    check(emb, Seq(0L, 1L, 2L), 5, 3)
+    // maxDepth 0: the seeds alone
+    assert(check(emb, Seq(0L, 1L, 2L), 5, 0) === Map(0L -> 0L, 1L -> 0L, 2L -> 0L))
+    // a seed absent from the corpus stays a depth-0 row and reaches nothing
+    val absent = Long.MaxValue
+    assert(check(emb, Seq(absent), 5, 3) === Map(absent -> 0L))
+    assert(check(emb, Seq(0L, absent), 5, 3)(absent) === 0L)
+    // maxDepth past the graph's reach: two far-apart clusters, and the
+    // exact k = 2 sweep keeps every edge inside its cluster, so the
+    // frontier empties after a few rounds and cluster b is never reached
+    val clusters = Seq(
+      (0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)), (2L, Array(0.8f, 0.2f)), (3L, Array(0.7f, 0.3f)),
+      (10L, Array(-1.0f, 0.0f)), (11L, Array(-0.9f, -0.1f)), (12L, Array(-0.8f, -0.2f)), (13L, Array(-0.7f, -0.3f))
+    ).toDF("vec_id", "embedding")
+    val far = check(clusters, Seq(0L), 2, 10, exact = true)
+    assert(far.keySet === Set(0L, 1L, 2L, 3L))
+    assert(far.values.max < 10L, "the frontier must empty before maxDepth")
   }
 
   test("bfs layers: a repeated seed counts once, one row per vec_id") {

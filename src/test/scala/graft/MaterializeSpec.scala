@@ -69,4 +69,28 @@ class MaterializeSpec extends AnyFunSuite {
       .select(raise_error(lit("boom"))).collect()))
     assert(sc.getLocalProperty(Desc) === null)
   }
+
+  private def resourceLines(name: String): Seq[String] = {
+    val src = scala.io.Source.fromInputStream(getClass.getResourceAsStream(name), "UTF-8")
+    try src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toList finally src.close()
+  }
+
+  test("every materialize site has a row in materialize_sites.txt with its reason, and every row is a live site") {
+    val ledger = resourceLines("/build_jobs_ledger.txt")
+      .flatMap(_.split(": ", 2).lift(1).toSeq.flatMap(_.split("; ")))
+      .collect { case n if n.startsWith("materialize ") => n.stripPrefix("materialize ") }.toSet
+    val rows = resourceLines("/materialize_sites.txt").map(_.split("\\s+").toSeq)
+    rows.foreach(r => assert(r.length == 2 && Set("pid", "loop", "measured")(r(1)), s"bad row: ${r.mkString(" ")}"))
+    val priced = rows.map(_.head)
+    assert(priced.distinct.length === priced.length, "one row per site")
+    val call = """\.materialize(?:Counted)?\("([^"]+)"\)""".r
+    val inMain = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src", "main", "scala"))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally files.close()
+    }.flatMap(f => call.findAllMatchIn(new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
+      .filterNot(_.startsWith("<")).toSet
+    assert(inMain.nonEmpty)
+    assert((ledger ++ inMain) -- priced === Set.empty[String], "sites without a row in materialize_sites.txt")
+    assert(priced.toSet -- (ledger ++ inMain) === Set.empty[String], "rows naming no site the ledger or src/main uses")
+  }
 }
