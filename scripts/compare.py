@@ -8,6 +8,9 @@ bytes would; otherwise both sides are sorted first.
 Float columns are additionally compared BITWISE (int64 view), because
 the driver hashes bytes: value-equal but bit-different outputs
 (e.g. -0.0 vs +0.0) fail there.
+A dump with no oracle entry, and an oracle entry with no dump, FAIL
+too: neither side is skipped. The last line counts the OKs over every
+name on either side.
 
 Usage: python3 scripts/compare.py <sfdir> <outdir>
 """
@@ -43,8 +46,16 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     with open(f"{outdir}/oracle_sql.json") as f:
         oracles = json.load(f)
-    n_bad = 0
+    dumps = {d for d in os.listdir(outdir) if os.path.isdir(os.path.join(outdir, d))}
+    n_bad = n_ok = 0
+    for name in sorted(dumps - oracles.keys()):
+        print(f"FAIL {name}: dump has no oracle_sql.json entry")
+        n_bad += 1
     for name, sql in sorted(oracles.items()):
+        if name not in dumps:
+            print(f"FAIL {name}: oracle has no dump")
+            n_bad += 1
+            continue
         try:
             got = pd.read_parquet(f"{outdir}/{name}")
             want = con.execute(sql).df()
@@ -100,6 +111,7 @@ def main() -> int:
             else:
                 print(f"OK   {name} ({len(got_n)} rows, "
                       f"{'ordered' if ordered else 'unordered'}, bit-exact)")
+                n_ok += 1
         except AssertionError:
             try:
                 pd.testing.assert_frame_equal(
@@ -108,6 +120,7 @@ def main() -> int:
             except AssertionError as e:
                 print(f"FAIL {name}: {str(e)[:400]}")
                 n_bad += 1
+    print(f"{n_ok} OK / {len(dumps | oracles.keys())}")
     return 1 if n_bad else 0
 
 

@@ -593,7 +593,7 @@ object Bench {
     * scale linearly in rows and to make the deliberate exceptions
     * visible, not to hide them.
     */
-  private val ScaleQueries = Seq(
+  private[graft] val ScaleQueries = Seq(
     "q_redact_pii", "q_repetition_score", "q_corr_matrix", "q_risk_snapshot",
     "q_ngram_jaccard", "q_ema", "q_corpus_dedup", "q_dedup_keep_best",
     "q_dedup_clusters", "q_bollinger", "q_shipping_priority", "q_large_volume_cust",
@@ -639,7 +639,7 @@ object Bench {
     * q_corr_matrix eat 143.8s of the shared 300s before any r8 dedup
     * headliner ran, and the official artifact reported 10 skips.
     */
-  private val ScaleQuadratic =
+  private[graft] val ScaleQuadratic =
     // declared-quadratic by OUTPUT or algorithmic contract:
     // q_corr_matrix emits keys² cells (banded twin is the scale
     // default), q_ngram_jaccard is the bounded-corpus exact PPJoin

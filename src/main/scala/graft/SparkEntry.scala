@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.operators._
+import graft.queries.Query
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
+/** Driver contract — see SURVEY.md §2 for the inventory. Both maps are
+  * derived from the registry ([[graft.queries.Query.all]]), where each
+  * query's closure sits beside its DuckDB oracle.
   *
   * Determinism rules (§6): every query ends in an explicit ORDER BY
   * over a unique key set, double aggregates round to 6 dp on both
@@ -18,9806 +19,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_pushdown")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- A. ETL / relational core -------------------------------------
-    "q_agg_pushdown" -> ((s, dir) =>
-      Relational.pricingSummary(Tables.lineitem(s, dir))),
-    "q_transform_project" -> ((s, dir) =>
-      Relational.projectTransform(Tables.events(s, dir)).orderBy("event_id")),
-    "q_validate_filter" -> ((s, dir) =>
-      Relational
-        .validateFilter(Tables.eventsRange(s, dir, "2024-01-05", "2024-01-20"), Seq("click", "purchase"), "2024-01-05", "2024-01-20")
-        .select(col("event_id"), col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"), col("value"))
-        .orderBy("event_id")),
-    "q_latest_per_key" -> ((s, dir) =>
-      Relational
-        .latestPerKey(Tables.events(s, dir))
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"))
-        .orderBy("user_id")),
-    "q_dim_join" -> ((s, dir) =>
-      Relational
-        .dimJoin(Tables.customer(s, dir), Tables.nation(s, dir), Tables.region(s, dir))
-        .orderBy("region_name", "nation_name")),
-    "q_multi_join_agg" -> ((s, dir) =>
-      Relational
-        .revenueByNation(
-          Tables.lineitem(s, dir), Tables.orders(s, dir),
-          Tables.customer(s, dir), Tables.nation(s, dir), "BUILDING")
-        .orderBy("nation_name")),
-    "q_shipping_priority" -> ((s, dir) =>
-      Relational
-        .shippingPriority(
-          Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir),
-          "BUILDING", "1998-06-01", 10)
-        .orderBy("rnk")),
-    "q_large_volume_cust" -> ((s, dir) =>
-      Relational
-        .largeVolumeCustomers(
-          Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir), 300.0)
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)),
-    "q_small_qty_revenue" -> ((s, dir) =>
-      Relational.smallQuantityRevenue(Tables.lineitem(s, dir), Tables.part(s, dir))
-        .orderBy("brand")),
-    "q_qualified_suppliers" -> ((s, dir) =>
-      Relational
-        .qualifiedSuppliers(Tables.supplier(s, dir), Tables.part(s, dir), Tables.lineitem(s, dir))
-        .orderBy("s_suppkey")),
-    "q_min_cost_supplier" -> ((s, dir) =>
-      Relational
-        .minCostSupplier(Tables.part(s, dir), Tables.supplier(s, dir),
-          Tables.nation(s, dir), Tables.lineitem(s, dir))
-        .orderBy("p_partkey", "s_suppkey")),
-    "q_dormant_customers" -> ((s, dir) =>
-      Relational
-        .dormantRichCustomers(Tables.customer(s, dir), Tables.orders(s, dir))
-        .orderBy("segment")),
-    "q_ship_priority_classes" -> ((s, dir) =>
-      Relational
-        .shipPriorityClasses(Tables.lineitem(s, dir), Tables.orders(s, dir),
-          "1997-01-01", "1998-01-01")
-        .orderBy("l_returnflag")),
-    "q_promo_share" -> ((s, dir) =>
-      Relational
-        .promoRevenueShare(Tables.lineitem(s, dir), Tables.part(s, dir),
-          "1997-01-01", "1997-03-01")
-        .withColumn("promo_share", round(col("promo_share"), 6))),
-    "q_or_predicate_revenue" -> ((s, dir) =>
-      Relational.brandSizeQtyRevenue(Tables.lineitem(s, dir), Tables.part(s, dir))),
-    "q_waiting_suppliers" -> ((s, dir) =>
-      Relational
-        .waitingSuppliers(Tables.supplier(s, dir), Tables.lineitem(s, dir),
-          Tables.orders(s, dir))),
-    // bloom semi-join reduction as a checked twin: the oracle is the
-    // PLAIN join+aggregate (no bloom anywhere) — no false negatives
-    // means the reduction provably changes transport, not the answer
-    "q_bloom_join" -> ((s, dir) =>
-      Relational
-        .bloomFilteredJoin(
-          Tables.lineitem(s, dir),
-          Tables.orders(s, dir).filter(col("o_totalprice") > 450000.0),
-          "l_orderkey", "o_orderkey")
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          sum(col("l_extendedprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-            .cast("double").as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .orderBy("o_orderpriority")),
-    "q_late_orders" -> ((s, dir) =>
-      Relational
-        .latePriorityOrders(Tables.orders(s, dir), Tables.lineitem(s, dir),
-          "1996-01-01", "1997-01-01", lateDays = 30)
-        .orderBy("o_orderpriority")),
-    "q_local_supplier_volume" -> ((s, dir) =>
-      Relational
-        .localSupplierVolume(Tables.customer(s, dir), Tables.orders(s, dir),
-          Tables.lineitem(s, dir), Tables.supplier(s, dir), Tables.nation(s, dir),
-          Tables.region(s, dir), "ASIA", "1996-01-01", "1998-01-01")
-        .orderBy("nation_name")),
-    "q_volume_shipping" -> ((s, dir) =>
-      Relational
-        .volumeShipping(Tables.supplier(s, dir), Tables.lineitem(s, dir),
-          Tables.orders(s, dir), Tables.customer(s, dir), Tables.nation(s, dir),
-          "NATION_3", "NATION_5")
-        .orderBy("supp_nation", "cust_nation", "ship_year")),
-    "q_market_share" -> ((s, dir) =>
-      Relational
-        .marketShare(Tables.part(s, dir), Tables.supplier(s, dir), Tables.lineitem(s, dir),
-          Tables.orders(s, dir), Tables.customer(s, dir), Tables.nation(s, dir),
-          Tables.region(s, dir), "NATION_3", "ASIA", "STANDARD")
-        .orderBy("order_year")),
-    "q_product_profit" -> ((s, dir) =>
-      Relational
-        .productTypeProfit(Tables.part(s, dir), Tables.supplier(s, dir),
-          Tables.lineitem(s, dir), Tables.orders(s, dir), Tables.nation(s, dir),
-          "bolt", costPct = 60)
-        .orderBy("nation_name", "order_year")),
-    "q_returned_items" -> ((s, dir) =>
-      Relational
-        .returnedItemReport(Tables.customer(s, dir), Tables.orders(s, dir),
-          Tables.lineitem(s, dir), Tables.nation(s, dir),
-          "1996-04-01", "1996-10-01", k = 20)),
-    "q_important_parts" -> ((s, dir) =>
-      Relational
-        .importantParts(Tables.lineitem(s, dir), Tables.supplier(s, dir),
-          Tables.nation(s, dir), "NATION_3", meanMult = 2L)
-        .orderBy("l_partkey")),
-    "q_cust_order_distribution" -> ((s, dir) =>
-      Relational
-        .custOrderDistribution(Tables.customer(s, dir), Tables.orders(s, dir), "5-LOW")
-        .orderBy(col("custdist").desc, col("c_count").desc)),
-    "q_top_supplier" -> ((s, dir) =>
-      Relational
-        .topSupplier(Tables.supplier(s, dir), Tables.lineitem(s, dir),
-          "1996-01-01", "1996-04-01")
-        .orderBy("s_suppkey")),
-    "q_supplier_part_counts" -> ((s, dir) =>
-      Relational
-        .supplierCountByPart(Tables.part(s, dir), Tables.supplier(s, dir),
-          Tables.lineitem(s, dir))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))),
-    "q_pivot_wide" -> ((s, dir) =>
-      Relational
-        .pivotWide(Tables.events(s, dir), Seq("click", "error", "purchase", "signup", "view"))
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("day")),
-    "q_pivot_fill_zero" -> ((s, dir) =>
-      Relational
-        .pivotWide(Tables.events(s, dir), Seq("click", "error", "purchase", "signup", "view"), fillZero = true)
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("day")),
-    "q_symbol_search" -> ((s, dir) =>
-      Relational.symbolSearch(Tables.part(s, dir), "small", "p_partkey", "p_name")
-        .orderBy("match_rank", "p_name", "p_partkey")),
-    "q_parse_percent" -> ((s, dir) => {
-      import graft.functions.ParseFunctions._
-      val k = col("o_orderkey")
-      val messy = Tables.orders(s, dir).select(
-        k,
-        when(k % 13 === 0, lit("N/A"))
-          .otherwise(concat((k % 89).cast("string"), lit("."), (k % 10).cast("string"), lit("%")))
-          .as("pct_str"),
-        when(k % 17 === 0, lit("?"))
-          .otherwise(concat(
-            lit("$"), (k % 999).cast("string"), lit("."), (k % 90 + 10).cast("string"),
-            element_at(array(lit(""), lit("K"), lit("M"), lit("B")), (k % 4 + 1).cast("int"))))
-          .as("cur_str"))
-      messy.select(
-        k, col("pct_str"), col("cur_str"),
-        parsePercent(col("pct_str")).as("pct"),
-        parseCurrency(col("cur_str")).as("cur_usd"))
-        .orderBy("o_orderkey")
-    }),
-    "q_ohlc_resample" -> ((s, dir) =>
-      Relational
-        .ohlcResample(Tables.events(s, dir))
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_ohlc_weekly" -> ((s, dir) =>
-      Relational
-        .ohlcResample(Tables.events(s, dir), "week")
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_unpivot_long" -> ((s, dir) =>
-      Relational.unpivotOhlc(Tables.events(s, dir))
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start", "field")),
-    "q_topn_per_group" -> ((s, dir) =>
-      Relational.topNPerGroup(Tables.orders(s, dir), 3).orderBy("o_custkey", "rnk")),
-    "q_filter_agg" -> ((s, dir) =>
-      Relational.filterAgg(Tables.lineitem(s, dir), "1996-01-01", "1997-01-01")),
-    "q_semi_join" -> ((s, dir) =>
-      Relational
-        .semiJoinPriority(Tables.orders(s, dir), Tables.lineitem(s, dir), 45)
-        .orderBy("o_orderpriority")),
-    "q_anti_join" -> ((s, dir) =>
-      Relational
-        .antiJoinIdle(Tables.customer(s, dir), Tables.orders(s, dir), 450000)
-        .orderBy("c_mktsegment")),
-    "q_json_extract" -> ((s, dir) =>
-      Relational.jsonExtractAgg(Tables.events(s, dir)).orderBy("event_type")),
-    "q_asof_join" -> ((s, dir) =>
-      TimeSeries.asOfJoin(Tables.events(s, dir), "purchase", "view").orderBy("user_id", "ts_us")),
-    "q_asof_tolerance" -> ((s, dir) =>
-      TimeSeries.asOfJoinTolerance(Tables.events(s, dir), "purchase", "view", 120)
-        .orderBy("user_id", "ts_us")),
-    "q_asof_global" -> ((s, dir) => {
-      val ev     = Tables.events(s, dir)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val quotes = ev.filter(col("user_id") === 0 && col("event_type") === "view")
-        .select(col("ts"), col("value"))
-      graft.plans.AsOfJoinApi
-        .globalAsOfJoin(trades, quotes, "ts", "ts", "value")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"), col("asof_val"))
-        .orderBy("event_id")
-    }),
-    "q_except_keys" -> ((s, dir) =>
-      Relational.exceptKeys(Tables.customer(s, dir), Tables.orders(s, dir), "BUILDING", 450000)
-        .orderBy("c_custkey")),
-    "q_intersect_keys" -> ((s, dir) =>
-      Relational.intersectKeys(Tables.customer(s, dir), Tables.orders(s, dir), "BUILDING", 450000)
-        .orderBy("c_custkey")),
-    "q_percentiles" -> ((s, dir) =>
-      Stats.percentiles(Tables.events(s, dir)).orderBy("event_type")),
-    "q_histogram" -> ((s, dir) =>
-      Stats.histogram(Tables.events(s, dir), 50.0).orderBy("bin")),
-    "q_ks_test" -> ((s, dir) =>
-      Stats.ksTest(Tables.events(s, dir), "view", "click")),
-    "q_chi2" -> ((s, dir) =>
-      Stats.chi2Independence(Tables.events(s, dir))),
-    "q_grouping_sets" -> ((s, dir) =>
-      Stats.groupingSetsSummary(Tables.lineitem(s, dir))
-        .orderBy("returnflag", "linestatus")),
-    "q_gap_detect" -> ((s, dir) =>
-      Stats.gapDetect(Tables.events(s, dir))
-        .orderBy("user_id", "gap_start")),
-    "q_rollup" -> ((s, dir) =>
-      Stats.rollupSummary(Tables.events(s, dir)).orderBy("event_type", "cohort")),
-    "q_cube" -> ((s, dir) =>
-      Stats.cubeSummary(Tables.events(s, dir)).orderBy("event_type", "cohort")),
-    "q_distinct_counts" -> ((s, dir) =>
-      Stats.distinctCounts(Tables.lineitem(s, dir)).orderBy("l_returnflag")),
-    "q_clean_normalize" -> ((s, dir) =>
-      Stats.cleanNormalize(Tables.documents(s, dir)).orderBy("doc_id")),
-    // CMS frequency sketch on the gate in the approx_distinct style:
-    // md5 buckets replay in SQL, so exact count AND sketch estimate
-    // both hash-match; the one-sided bound rides as a flag
-    "q_heavy_hitters" -> ((s, dir) =>
-      Stats.heavyHittersChecked(Tables.documents(s, dir)).orderBy("tok")),
-    "q_fill_forward" -> ((s, dir) =>
-      Stats.fillForward(Tables.events(s, dir)).orderBy("user_id", "ts_us")),
-    "q_resample_ffill" -> ((s, dir) =>
-      Stats.resampleDailyFfill(Tables.events(s, dir), "2024-01-01", "2024-01-30")
-        .orderBy("user_id", "day")),
-    "q_hash_sample" -> ((s, dir) =>
-      Sampling.hashSample(Tables.events(s, dir), "event_id", 10)
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
-        .orderBy("event_id")),
-    "q_dataset_split" -> ((s, dir) =>
-      Sampling.datasetSplit(Tables.events(s, dir), "event_id")
-        .groupBy("split", "event_type").agg(count(lit(1)).as("n"))
-        .orderBy("split", "event_type")),
-    "q_stratified_sample" -> ((s, dir) =>
-      Sampling.stratifiedSample(Tables.events(s, dir), "event_type", "event_id", 50)
-        .select(col("event_type"), col("event_id"))
-        .orderBy("event_type", "event_id")),
-    // downweight four sources to a target mixture; the rest pass through
-    "q_domain_mix" -> ((s, dir) =>
-      Sampling.domainMix(Tables.documents(s, dir),
-        Map("src0" -> 10, "src1" -> 25, "src2" -> 50, "src3" -> 75))
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")),
-    // cap every source at an 800-token contribution, exact running-
-    // sum variant (prefix-closed in the md5 hash order)
-    "q_token_budget_sample" -> ((s, dir) =>
-      Sampling.tokenBudgetSample(Tables.documents(s, dir), 800)
-        .orderBy("source", "cum_tok")),
-    // same budget, rate-based variant: the zero-sort 100 TB path —
-    // hits the budget in expectation via a per-row 32-bit threshold
-    "q_token_budget_rate" -> ((s, dir) =>
-      Sampling.tokenBudgetSampleRate(Tables.documents(s, dir), 800)
-        .orderBy("doc_id")),
-    // 50 docs drawn with probability ~ token count (integer
-    // Efraimidis–Spirakis race, internally clamped at maxWeight) —
-    // md5-derived, so the oracle mirrors the race keys bit-for-bit
-    "q_weighted_sample" -> ((s, dir) =>
-      Sampling.weightedSample(Tables.documents(s, dir), "doc_id",
-        size(split(col("text"), " ")), k = 50)
-        .orderBy(col("race").desc, col("doc_id").asc)),
-    // temperature-rebalanced mixture (alpha=1/2): integer cross-
-    // multiplied keep rule + surfaced per-source saturation audit
-    "q_temperature_mix" -> ((s, dir) =>
-      Sampling.temperatureMix(Tables.documents(s, dir), targetDocs = 200)
-        .orderBy("doc_id")),
-    // rational alpha = 3/10 (the mC4 exponent): w = floor(n^0.3) via
-    // float seed + exact integer-root correction — no float pow in
-    // the result path, so both engines compute the identical w
-    "q_temperature_mix_alpha" -> ((s, dir) =>
-      Sampling.temperatureMixAlpha(Tables.documents(s, dir), targetDocs = 200)
-        .orderBy("doc_id")),
-    "q_time_features" -> ((s, dir) =>
-      Relational.timeFeatures(Tables.events(s, dir)).orderBy("event_id")),
-    // 2-hour promo windows opened by purchase events (fixed duration
-    // => start-monotone; per-tick dedupe via max) — each event picks
-    // up the active window's level
-    "q_interval_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val ivl = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("ivl_val"))
-        .select(col("user_id"), col("ts").as("ivl_from"),
-          (col("ts") + expr("INTERVAL 2 HOURS")).as("ivl_to"), col("ivl_val"))
-      Relational.intervalJoin(ev, ivl).orderBy("user_id", "ts_us", "event_id")
-    }),
-    "q_rank_suite" -> ((s, dir) =>
-      Stats.rankSuite(Tables.events(s, dir)).orderBy("event_id")),
-    "q_scd2_intervals" -> ((s, dir) =>
-      Relational.scd2Intervals(Tables.events(s, dir))
-        .select(col("user_id"), col("value"),
-          unix_micros(col("valid_from")).as("from_us"),
-          unix_micros(col("valid_to")).as("to_us"), col("event_id"))
-        .orderBy("user_id", "from_us", "event_id")),
-    "q_winsorize" -> ((s, dir) =>
-      Stats.winsorize(Tables.events(s, dir), "event_type", 0.05, 0.95).orderBy("event_id")),
-    "q_monthly_returns" -> ((s, dir) =>
-      TimeSeries.monthlyReturns(Tables.events(s, dir))
-        .withColumn("month", date_format(col("month"), "yyyy-MM"))
-        .orderBy("user_id", "month")),
-    "q_concentration" -> ((s, dir) =>
-      TimeSeries.concentration(Tables.events(s, dir), 10, 10).orderBy("portfolio")),
-
-    // ---- B. financial analytics ---------------------------------------
-    "q_daily_returns" -> ((s, dir) =>
-      TimeSeries
-        .dailyReturns(Tables.events(s, dir))
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("ret"))
-        .orderBy("user_id", "ts_us")),
-    "q_metrics_summary" -> ((s, dir) =>
-      TimeSeries
-        .metricsSummary(TimeSeries.dailyReturns(Tables.events(s, dir)))
-        .orderBy("user_id")),
-    "q_ytd_return" -> ((s, dir) =>
-      TimeSeries.ytdReturn(Tables.events(s, dir)).orderBy("user_id")),
-    "q_max_drawdown" -> ((s, dir) =>
-      TimeSeries.maxDrawdown(Tables.events(s, dir)).orderBy("user_id")),
-    "q_drawdown_duration" -> ((s, dir) =>
-      TimeSeries.drawdownDuration(Tables.events(s, dir)).orderBy("user_id")),
-    "q_portfolio_return" -> ((s, dir) =>
-      TimeSeries.portfolioReturn(Tables.events(s, dir))
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("day")),
-    "q_cumulative_returns" -> ((s, dir) =>
-      TimeSeries
-        .cumulativeReturns(Tables.events(s, dir))
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("cum_return"))
-        .orderBy("user_id", "ts_us")),
-    "q_sma" -> ((s, dir) =>
-      TimeSeries
-        .sma(Tables.events(s, dir), 10)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("sma"))
-        .orderBy("user_id", "ts_us")),
-    "q_ema" -> ((s, dir) =>
-      TimeSeries
-        .ema(Tables.events(s, dir), 20)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("ema"))
-        .orderBy("user_id", "ts_us")),
-    "q_wma" -> ((s, dir) =>
-      TimeSeries
-        .wma(Tables.events(s, dir), 10)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("wma"))
-        .orderBy("user_id", "ts_us")),
-    "q_hma" -> ((s, dir) =>
-      TimeSeries
-        .hma(Tables.events(s, dir), 16)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("hma"))
-        .orderBy("user_id", "ts_us")),
-    "q_roc" -> ((s, dir) =>
-      TimeSeries
-        .roc(Tables.events(s, dir), 10)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("roc"))
-        .orderBy("user_id", "ts_us")),
-    "q_dpo" -> ((s, dir) =>
-      TimeSeries
-        .dpo(Tables.events(s, dir), 10)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("dpo"))
-        .orderBy("user_id", "ts_us")),
-    "q_tsi" -> ((s, dir) =>
-      TimeSeries.tsi(Tables.events(s, dir)).orderBy("user_id", "day")),
-    "q_force_index" -> ((s, dir) =>
-      TimeSeries.forceIndex(Tables.events(s, dir)).orderBy("user_id", "day")),
-    "q_stoch_rsi" -> ((s, dir) =>
-      TimeSeries.stochRsi(Tables.events(s, dir))
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("rsi"), col("stoch_rsi"), col("stoch_rsi_d"))
-        .orderBy("user_id", "ts_us")),
-    "q_mass_index" -> ((s, dir) =>
-      TimeSeries.massIndex(Tables.events(s, dir)).orderBy("user_id", "day")),
-    "q_coppock" -> ((s, dir) =>
-      TimeSeries.coppock(Tables.events(s, dir)).orderBy("user_id", "day")),
-    "q_elder_ray" -> ((s, dir) =>
-      TimeSeries.elderRay(Tables.events(s, dir)).orderBy("user_id", "day")),
-    "q_adl_chaikin" -> ((s, dir) =>
-      TimeSeries.adlChaikin(Tables.events(s, dir)).orderBy("user_id", "day")),
-    // sketch estimates are engine-specific, so the query surface is
-    // the checked twin: exact values hash-matched, sketch quality as
-    // engine-deterministic within-bound booleans (oracle says TRUE)
-    "q_approx_distinct" -> ((s, dir) =>
-      Stats.approxDistinctChecked(Tables.lineitem(s, dir)).orderBy("l_returnflag")),
-    // the incremental 100 TB sketch pattern (per-shard HLL -> union)
-    // on the driver gate, same checked-twin design
-    "q_sketch_merge" -> ((s, dir) =>
-      Stats.sketchMergeChecked(Tables.lineitem(s, dir)).orderBy("l_returnflag")),
-    // the skew remedy's RESULT equivalence on the driver gate (the
-    // bench's skew section carries its throughput story)
-    "q_salted_join" -> ((s, dir) =>
-      Relational
-        .saltedJoin(Tables.lineitem(s, dir), Tables.orders(s, dir),
-          "l_orderkey", "o_orderkey", "l_partkey", 8)
-        .select(col("l_orderkey"), col("l_linenumber"), col("o_totalprice"))
-        .orderBy("l_orderkey", "l_linenumber")),
-    "q_approx_percentiles" -> ((s, dir) =>
-      Stats.approxPercentilesChecked(Tables.events(s, dir)).orderBy("event_type")),
-    "q_ema_fold" -> ((s, dir) =>
-      TimeSeries.emaFold(Tables.events(s, dir), 20).orderBy("user_id")),
-    "q_trend_flag" -> ((s, dir) =>
-      TimeSeries
-        .trendFlag(Tables.events(s, dir))
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("uptrend"))
-        .orderBy("user_id", "ts_us")),
-    "q_sortino" -> ((s, dir) =>
-      TimeSeries
-        .sortino(TimeSeries.dailyReturns(Tables.events(s, dir)))
-        .orderBy("user_id")),
-    "q_tracking_error" -> ((s, dir) =>
-      TimeSeries.trackingError(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_alpha_beta" -> ((s, dir) =>
-      TimeSeries.alphaBeta(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_rsi" -> ((s, dir) =>
-      TimeSeries.rsi(Tables.events(s, dir), 14)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("rsi"))
-        .orderBy("user_id", "ts_us")),
-    "q_macd" -> ((s, dir) =>
-      TimeSeries.macd(Tables.events(s, dir))
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("macd"), col("signal"), col("hist"))
-        .orderBy("user_id", "ts_us")),
-    "q_bollinger" -> ((s, dir) =>
-      TimeSeries.bollinger(Tables.events(s, dir), 20, 2.0)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("mid"), col("upper"), col("lower"))
-        .orderBy("user_id", "ts_us")),
-    "q_stochastic" -> ((s, dir) =>
-      TimeSeries.stochastic(Tables.events(s, dir), 14, 3)
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_atr" -> ((s, dir) =>
-      TimeSeries.atr(Tables.events(s, dir), 14)
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_obv" -> ((s, dir) =>
-      TimeSeries.obv(Tables.events(s, dir))
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("user_id", "day")),
-    "q_donchian" -> ((s, dir) =>
-      TimeSeries.donchian(Tables.events(s, dir), 20)
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_cmf" -> ((s, dir) =>
-      TimeSeries.cmf(Tables.events(s, dir), 20)
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("user_id", "day")),
-    "q_hurst" -> ((s, dir) =>
-      TimeSeries.hurst(Tables.events(s, dir)).orderBy("user_id")),
-    "q_half_life" -> ((s, dir) =>
-      TimeSeries.halfLife(Tables.events(s, dir)).orderBy("user_id")),
-    "q_rolling_beta" -> ((s, dir) =>
-      TimeSeries.rollingBeta(Tables.events(s, dir), 0L, 10)
-        .orderBy("user_id", "day")),
-    "q_ewma_vol" -> ((s, dir) =>
-      TimeSeries.ewmaVol(Tables.events(s, dir))
-        .orderBy("user_id", "day")),
-    "q_amihud" -> ((s, dir) =>
-      TimeSeries.amihudIlliquidity(Tables.events(s, dir)).orderBy("user_id")),
-    "q_roll_spread" -> ((s, dir) =>
-      TimeSeries.rollSpread(Tables.events(s, dir)).orderBy("user_id")),
-    "q_mutual_info" -> ((s, dir) =>
-      Stats.mutualInfo(Tables.events(s, dir))),
-    "q_kl_divergence" -> ((s, dir) =>
-      Stats.klDivergence(Tables.events(s, dir), "view", "purchase", 50.0)),
-    "q_burstiness" -> ((s, dir) =>
-      EventAnalytics.burstiness(Tables.events(s, dir)).orderBy("user_id")),
-    "q_markov_stationary" -> ((s, dir) =>
-      EventAnalytics.markovStationary(Tables.events(s, dir)).orderBy("event_type")),
-    "q_spearman_corr" -> ((s, dir) =>
-      TimeSeries.spearmanCorr(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_kendall_trend" -> ((s, dir) =>
-      TimeSeries.kendallTauTrend(Tables.events(s, dir)).orderBy("user_id")),
-    "q_capture_ratios" -> ((s, dir) =>
-      TimeSeries.captureRatios(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_cci" -> ((s, dir) =>
-      TimeSeries.cci(Tables.events(s, dir), 20).orderBy("user_id", "day")),
-    "q_aroon" -> ((s, dir) =>
-      TimeSeries.aroon(Tables.events(s, dir), 25).orderBy("user_id", "day")),
-    "q_jarque_bera" -> ((s, dir) =>
-      TimeSeries.jarqueBera(Tables.events(s, dir)).orderBy("user_id")),
-    "q_k_anonymity" -> ((s, dir) =>
-      Sampling.kAnonymity(Tables.documents(s, dir))
-        .orderBy("lang", "source", "len_bucket")),
-    "q_common_neighbors" -> ((s, dir) =>
-      Similarity.commonNeighbors(Tables.embeddings(s, dir)).orderBy("a", "b")),
-    "q_resource_alloc" -> ((s, dir) =>
-      Similarity.resourceAllocation(Tables.embeddings(s, dir)).orderBy("a", "b")),
-    "q_kcore" -> ((s, dir) =>
-      Similarity.kCore(Tables.embeddings(s, dir)).orderBy("node")),
-    "q_forecast_backtest" -> ((s, dir) =>
-      TimeSeries.forecastBacktest(Tables.events(s, dir)).orderBy("user_id")),
-    "q_anova" -> ((s, dir) =>
-      Stats.anovaF(Tables.events(s, dir))),
-    "q_kruskal" -> ((s, dir) =>
-      Stats.kruskalWallis(Tables.events(s, dir)).orderBy("event_type")),
-    "q_levene" -> ((s, dir) =>
-      Stats.levene(Tables.events(s, dir)).orderBy("event_type")),
-    "q_fdr_bh" -> ((s, dir) =>
-      Stats.fdrBh(Tables.events(s, dir)).orderBy("user_id")),
-    "q_grubbs" -> ((s, dir) =>
-      Stats.grubbs(Tables.events(s, dir)).orderBy("event_type")),
-    "q_knn_classify" -> ((s, dir) =>
-      Similarity.knnClassify(Tables.embeddings(s, dir)).orderBy("qid")),
-    "q_ljung_box" -> ((s, dir) =>
-      TimeSeries.ljungBox(Tables.events(s, dir), 5).orderBy("user_id")),
-    "q_entropy_rate" -> ((s, dir) =>
-      EventAnalytics.entropyRate(Tables.events(s, dir))),
-    "q_inequality" -> ((s, dir) =>
-      Relational.inequalityIndices(Tables.orders(s, dir))),
-    "q_vortex" -> ((s, dir) =>
-      TimeSeries.vortex(Tables.events(s, dir), 14).orderBy("user_id", "day")),
-    "q_cointegration" -> ((s, dir) =>
-      TimeSeries.cointegration(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_pq_distortion" -> ((s, dir) =>
-      Embedding.pqDistortion(Tables.embeddings(s, dir), 8, 16).orderBy("j")),
-    "q_cmo" -> ((s, dir) =>
-      TimeSeries.chandeMomentum(Tables.events(s, dir), 14).orderBy("user_id", "day")),
-    "q_ultimate_osc" -> ((s, dir) =>
-      TimeSeries.ultimateOscillator(Tables.events(s, dir)).orderBy("user_id", "day")),
-    "q_assortativity" -> ((s, dir) =>
-      Similarity.degreeAssortativity(Tables.embeddings(s, dir), 5)),
-    "q_code_detect" -> ((s, dir) =>
-      TextAnalysis.codeDetect(Tables.documents(s, dir)).orderBy("source")),
-    "q_woe_iv" -> ((s, dir) =>
-      Stats.woeIv(Tables.events(s, dir)).orderBy("bin")),
-    "q_psi" -> ((s, dir) =>
-      Stats.psi(Tables.events(s, dir))),
-    "q_lang_confusion" -> ((s, dir) =>
-      TextAnalysis.langConfusion(Tables.documents(s, dir))
-        .orderBy("lang", "lang_pred")),
-    "q_dedup_sim_histogram" -> ((s, dir) =>
-      Dedup.dedupSimHistogram(Tables.documents(s, dir)).orderBy("bucket")),
-    "q_streaks" -> ((s, dir) =>
-      TimeSeries.streaks(Tables.events(s, dir)).orderBy("user_id")),
-    "q_adx" -> ((s, dir) =>
-      TimeSeries.adx(Tables.events(s, dir), 14).orderBy("user_id", "day")),
-    "q_trix" -> ((s, dir) =>
-      TimeSeries.trix(Tables.events(s, dir), 15).orderBy("user_id", "day")),
-    "q_heikin_ashi" -> ((s, dir) =>
-      TimeSeries.heikinAshi(Tables.events(s, dir)).orderBy("user_id", "day")),
-    "q_pacf" -> ((s, dir) =>
-      TimeSeries.pacf(Tables.events(s, dir)).orderBy("user_id")),
-    "q_market_timing" -> ((s, dir) =>
-      TimeSeries.marketTiming(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_bootstrap_ci" -> ((s, dir) =>
-      Stats.bootstrapCi(Tables.events(s, dir)).orderBy("event_type")),
-    "q_hits" -> ((s, dir) =>
-      Similarity.hitsKnn(Tables.embeddings(s, dir), 5, 3).orderBy("node")),
-    "q_degree_hist" -> ((s, dir) =>
-      Similarity.degreeHist(Tables.embeddings(s, dir), 5).orderBy("degree")),
-    "q_label_prop" -> ((s, dir) =>
-      Similarity.labelPropagation(Tables.embeddings(s, dir), 5, 3).orderBy("node")),
-    "q_anomaly_days" -> ((s, dir) =>
-      EventAnalytics.anomalyDays(Tables.events(s, dir)).orderBy("event_type", "day")),
-    "q_funnel_windowed" -> ((s, dir) =>
-      EventAnalytics.funnelWindowed(Tables.events(s, dir), 72)),
-    "q_attribution" -> ((s, dir) =>
-      EventAnalytics.attribution(Tables.events(s, dir)).orderBy("channel")),
-    "q_template_prefixes" -> ((s, dir) =>
-      TextAnalysis.templatePrefixes(Tables.documents(s, dir), 2).orderBy("source", "rnk")),
-    "q_cvar" -> ((s, dir) =>
-      TimeSeries.cvar(Tables.events(s, dir), 0.05).orderBy("user_id")),
-    "q_mmr_rerank" -> ((s, dir) =>
-      Similarity.mmrRerank(Tables.embeddings(s, dir), 0L, 20, 5).orderBy("sel_rank")),
-    "q_stickiness" -> ((s, dir) =>
-      EventAnalytics.stickiness(Tables.events(s, dir), 28).orderBy("day")),
-    "q_fk_integrity" -> ((s, dir) =>
-      Relational.fkIntegrity(Tables.orders(s, dir), Tables.lineitem(s, dir),
-        Tables.customer(s, dir), Tables.supplier(s, dir), Tables.part(s, dir),
-        Tables.nation(s, dir), Tables.region(s, dir)).orderBy("relation")),
-    "q_seasonal_index" -> ((s, dir) =>
-      Relational.seasonalIndex(Tables.orders(s, dir)).orderBy("month")),
-    "q_lang_mix" -> ((s, dir) =>
-      TextAnalysis.langMix(Tables.documents(s, dir)).orderBy("source", "lang_pred")),
-    "q_volume_profile" -> ((s, dir) =>
-      TimeSeries.volumeProfile(Tables.events(s, dir), 10).orderBy("user_id", "bin")),
-    "q_cross_sectional_rank" -> ((s, dir) =>
-      TimeSeries.crossSectionalRank(Tables.events(s, dir)).orderBy("day", "rnk")),
-    "q_quintile_spread" -> ((s, dir) =>
-      TimeSeries.quintileSpread(Tables.events(s, dir)).orderBy("day")),
-    "q_drawdown_episodes" -> ((s, dir) =>
-      TimeSeries.drawdownEpisodes(Tables.events(s, dir)).orderBy("user_id", "eid")),
-    "q_lead_lag_corr" -> ((s, dir) =>
-      TimeSeries.leadLagCorr(Tables.events(s, dir), 0L, 2)
-        .orderBy("user_id", "shift")),
-    "q_zscore_normalize" -> ((s, dir) =>
-      Stats.zscoreNormalize(Tables.events(s, dir)).orderBy("event_id")),
-    "q_equidepth_histogram" -> ((s, dir) =>
-      Stats.equidepthHistogram(Tables.events(s, dir), 10).orderBy("bucket")),
-    "q_iqr_outliers" -> ((s, dir) =>
-      Stats.iqrOutliers(Tables.events(s, dir)).orderBy("event_type")),
-    "q_user_features" -> ((s, dir) =>
-      EventAnalytics.userFeatures(Tables.events(s, dir)).orderBy("user_id")),
-    "q_key_skew" -> ((s, dir) =>
-      Relational.keySkew(Tables.lineitem(s, dir), "l_orderkey")),
-    "q_abc_classes" -> ((s, dir) =>
-      Relational.abcClasses(Tables.lineitem(s, dir)).orderBy("abc_class")),
-    "q_doc_novelty" -> ((s, dir) =>
-      TextAnalysis.docNovelty(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_intrinsic_dim" -> ((s, dir) =>
-      Similarity.intrinsicDim(Tables.embeddings(s, dir))),
-    // reconcile events against a deterministically-perturbed derived
-    // copy (2% rows dropped, 2% values shifted via the md5 bucket
-    // rule) — the migration-validation shape with a known answer
-    "q_reconcile" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value").cast("decimal(18,6)").as("v6"))
-      val bucket =
-        conv(substring(md5(col("event_id").cast("string")), 1, 8), 16, 10).cast("long") % 100
-      val b = ev.filter(bucket >= 2)
-        .withColumn("v6",
-          when(bucket < 4, (col("v6").cast("double") + 1).cast("decimal(18,6)"))
-            .otherwise(col("v6")))
-      Relational.reconcile(ev, b, "event_id", Seq("user_id", "event_type", "v6"))
-    }),
-    "q_top_paths" -> ((s, dir) =>
-      EventAnalytics.topPaths(Tables.events(s, dir), 5, 10)),
-    "q_contribution_delta" -> ((s, dir) =>
-      Relational.contributionDelta(
-        Tables.lineitem(s, dir), Tables.orders(s, dir),
-        Tables.customer(s, dir), Tables.nation(s, dir),
-        "1995-01-01", "1996-01-01", "1996-01-01", "1997-01-01")
-        .orderBy("n_name", "o_orderpriority")),
-    "q_target_encoding" -> ((s, dir) =>
-      Stats.targetEncoding(Tables.events(s, dir), 20).orderBy("event_type")),
-    "q_ab_test" -> ((s, dir) =>
-      Stats.abTest(Tables.events(s, dir), "view", "click", 100.0)),
-    "q_peaks" -> ((s, dir) =>
-      TimeSeries.peaks(Tables.events(s, dir), 5.0)
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("user_id", "day")),
-    "q_ichimoku" -> ((s, dir) =>
-      TimeSeries.ichimoku(Tables.events(s, dir))
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_pivot_points" -> ((s, dir) =>
-      TimeSeries.pivotPoints(Tables.events(s, dir))
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_parkinson_vol" -> ((s, dir) =>
-      TimeSeries.parkinsonVol(Tables.events(s, dir))
-        .orderBy("user_id")),
-    "q_rolling_stats" -> ((s, dir) =>
-      TimeSeries.rollingStats(Tables.events(s, dir), 0L, 30)
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("user_id", "day")),
-    "q_corr_matrix" -> ((s, dir) =>
-      TimeSeries.correlationMatrix(Tables.events(s, dir)).orderBy("ka", "kb")),
-    "q_corr_pairs_banded" -> ((s, dir) =>
-      TimeSeries.corrPairsBanded(Tables.events(s, dir)).orderBy("ka", "kb")),
-    "q_period_returns" -> ((s, dir) =>
-      TimeSeries
-        .periodReturn(Tables.eventsRange(s, dir, "2024-01-05", "2024-01-25"), "2024-01-05", "2024-01-25")
-        .orderBy("user_id")),
-    "q_yield_ratio" -> ((s, dir) =>
-      TimeSeries.yieldRatio(Tables.events(s, dir), "purchase").orderBy("user_id")),
-    "q_vwap" -> ((s, dir) =>
-      TimeSeries.vwap(Tables.events(s, dir))
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("user_id", "day")),
-    "q_info_ratio" -> ((s, dir) =>
-      TimeSeries.informationRatio(Tables.events(s, dir), 0L).orderBy("user_id")),
-    // thresholds sized to the synthetic series' dispersion (the
-    // operator defaults keep the reference's real-fund values) so
-    // the gate genuinely splits the population
-    "q_benchmark_check" -> ((s, dir) =>
-      TimeSeries.benchmarkValidation(Tables.events(s, dir), 0L,
-        minCorr = 0.3, minR2 = 0.1, maxTePct = 100000.0, betaLo = 0.0, betaHi = 2.0)
-        .orderBy("user_id")),
-    "q_momentum_rank" -> ((s, dir) =>
-      TimeSeries.momentumRank(Tables.events(s, dir), 10)
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("day", "mom_rank")),
-    // periods are QTD/YTD/1Y/… buckets in production; here scaled to
-    // the one-month fixture (trailing week / fortnight / month-to-date)
-    "q_peer_performance" -> ((s, dir) =>
-      TimeSeries.peerPerformance(Tables.events(s, dir),
-        Seq(("mtd", "2024-01-01", "2024-02-01"),
-            ("p1w", "2024-01-24", "2024-02-01"),
-            ("p2w", "2024-01-17", "2024-02-01")), 0L)
-        .orderBy("period", "user_id")),
-    "q_risk_snapshot" -> ((s, dir) =>
-      TimeSeries.riskSnapshot(Tables.events(s, dir), 0L).orderBy("metric", "user_id")),
-    "q_portfolio_turnover" -> ((s, dir) =>
-      TimeSeries.portfolioTurnover(Tables.events(s, dir), "2024-01-15", 10)
-        .orderBy("portfolio")),
-    "q_var_historical" -> ((s, dir) =>
-      TimeSeries.varHistorical(Tables.events(s, dir), 0.05).orderBy("user_id")),
-    "q_dow_returns" -> ((s, dir) =>
-      TimeSeries.dowReturns(Tables.events(s, dir)).orderBy("user_id", "dow")),
-    // quarter bars in production; week grain here so the one-month
-    // fixture has real bar-over-bar deltas (thresholds at the weekly
-    // volatility quartiles so the alert genuinely splits)
-    "q_indicator_trends" -> ((s, dir) =>
-      TimeSeries.indicatorTrends(Tables.events(s, dir), "week", 40.0, 55.0)
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-
-    // ---- C. text analysis ---------------------------------------------
-    "q_sentiment" -> ((s, dir) =>
-      TextAnalysis.sentiment(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_token_count" -> ((s, dir) =>
-      TextAnalysis.tokenCounts(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_lang_id" -> ((s, dir) =>
-      TextAnalysis.langId(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprints(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_chunk_documents" -> ((s, dir) =>
-      TextAnalysis.chunk(Tables.documents(s, dir), 100, 20).orderBy("doc_id", "chunk_id")),
-    "q_tfidf_topterms" -> ((s, dir) =>
-      TextAnalysis.tfidfTopTerms(Tables.documents(s, dir), 5).orderBy("doc_id", "rnk")),
-    // unigram cross-entropy (CCNet-style perplexity filter); cutoff
-    // 3.402 ~ the fixture median, so the keep flag is non-trivial
-    "q_perplexity" -> ((s, dir) =>
-      TextAnalysis.perplexityScore(Tables.documents(s, dir), 3.402).orderBy("doc_id")),
-    // bigram cross-entropy (one Markov order up); cutoff 3.386 ~ the
-    // fixture median, so the keep flag is non-trivial
-    "q_bigram_perplexity" -> ((s, dir) =>
-      TextAnalysis.bigramPerplexityScore(Tables.documents(s, dir), 3.386).orderBy("doc_id")),
-    "q_repetition_score" -> ((s, dir) =>
-      TextAnalysis.repetitionScore(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_quality_gate" -> ((s, dir) =>
-      TextAnalysis.qualityGate(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_top_bigrams" -> ((s, dir) =>
-      TextAnalysis.topBigrams(Tables.documents(s, dir), 20)),
-    "q_char_ngrams" -> ((s, dir) =>
-      TextAnalysis.charNgrams(Tables.documents(s, dir), 3, 20)),
-    "q_pmi_bigrams" -> ((s, dir) =>
-      TextAnalysis.pmiCollocations(Tables.documents(s, dir), 5, 20)),
-    "q_vocab_coverage" -> ((s, dir) =>
-      TextAnalysis.vocabCoverage(Tables.documents(s, dir), 20)),
-    "q_cluster_topterms" -> ((s, dir) =>
-      TextAnalysis.clusterTopTerms(Tables.documents(s, dir), 8, 16, 3)
-        .orderBy("cell", "rnk")),
-    "q_corpus_stats" -> ((s, dir) =>
-      TextAnalysis.corpusStats(Tables.documents(s, dir)).orderBy("lang_pred")),
-
-    // ---- D. deduplication ---------------------------------------------
-    "q_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(Tables.documents(s, dir)).orderBy("fp")),
-    "q_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(Tables.documents(s, dir), 3, 0.8).orderBy("da", "db")),
-    // the corpus-scale default for Jaccard dedup: LSH-banded
-    // candidates + exact verification (deterministic — minhash is
-    // md5-derived, so the oracle mirrors candidates AND scores)
-    "q_ngram_jaccard_banded" -> ((s, dir) =>
-      Dedup.ngramJaccardPairsBanded(Tables.documents(s, dir), 3, 0.8).orderBy("da", "db")),
-    "q_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLshCandidatesFast(Tables.documents(s, dir)).orderBy("da", "db")),
-    "q_simhash" -> ((s, dir) =>
-      Dedup.simhashFast(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_curation_pipeline" -> ((s, dir) =>
-      Dedup.curationPipeline(Tables.documents(s, dir), 100, 20).orderBy("chunk_fp")),
-    "q_simhash_neardup" -> ((s, dir) =>
-      Dedup.simhashNearDupPairs(Tables.documents(s, dir), 4).orderBy("da", "db")),
-    "q_simhash_wide" -> ((s, dir) =>
-      Dedup.simhashWide(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_simhash_wide_neardup" -> ((s, dir) =>
-      Dedup.simhashNearDupPairsWide(Tables.documents(s, dir)).orderBy("da", "db")),
-    "q_dedup_clusters" -> ((s, dir) =>
-      Dedup.clusters(Dedup.minhashLshCandidatesFast(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-    // the adversarial-diameter fallback on the driver gate: identical
-    // output contract to clusters(), same recursive-CTE oracle
-    "q_dedup_clusters_bigstar" -> ((s, dir) =>
-      Dedup.clustersBigStar(Dedup.minhashLshCandidatesFast(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-    "q_repeated_spans" -> ((s, dir) =>
-      Dedup.repeatedSpans(Tables.documents(s, dir)).orderBy("span_fp")),
-    // span REMOVAL with doc reconstruction: tokens under corpus-
-    // repeated spans struck everywhere but the first holder
-    "q_strip_spans" -> ((s, dir) =>
-      Dedup.stripRepeatedSpans(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_cdc_chunks" -> ((s, dir) =>
-      Dedup.cdcChunks(Tables.documents(s, dir)).orderBy("source")),
-    // asymmetric containment near-dup: subset/quote-inclusion pairs
-    // Jaccard misses; stop-shingle df cap bounds the posting lists
-    "q_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(Tables.documents(s, dir)).orderBy("da", "db")),
-    // character-level fuzzy near-dup: prefix blocking + Levenshtein
-    // confirm — sees single-char edits the token shingles miss
-    "q_edit_neardup" -> ((s, dir) =>
-      Dedup.editNearDup(Tables.documents(s, dir)).orderBy("doc_a", "doc_b")),
-    "q_corpus_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.dropNearDuplicates(docs, Dedup.minhashLshCandidatesFast(docs))
-        .select(col("doc_id"), md5(col("text")).as("text_fp"))
-        .orderBy("doc_id")
-    }),
-    "q_dedup_keep_best" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.keepBest(docs, Dedup.minhashLshCandidatesFast(docs),
-        TextAnalysis.qualityScore(docs)).orderBy("cluster_id")
-    }),
-    // eval set = docs 0-4 (13-grams in production; 3 on the short
-    // synthetic texts so overlap genuinely splits the corpus)
-    "q_decontaminate" -> ((s, dir) =>
-      Dedup.decontaminate(Tables.documents(s, dir), Seq(0L, 1L, 2L, 3L, 4L), 3)
-        .orderBy("doc_id")),
-    // sketch-path decontamination: exact overlap hash-matched, the
-    // Bloom no-false-negative invariant as an oracle-asserted
-    // literal-TRUE flag (checked-twin pattern)
-    "q_bloom_decontaminate" -> ((s, dir) =>
-      Dedup.bloomDecontaminate(Tables.documents(s, dir), Seq("src0", "src1"))
-        .orderBy("doc_id")),
-    "q_pack_sequences" -> ((s, dir) =>
-      TextAnalysis.packSequences(Tables.documents(s, dir), 256, 8)
-        .orderBy("doc_id")),
-    // tokenizer APPLY (greedy BPE over the in-repo merge table) —
-    // the real-token stage the word-count twins approximate
-    "q_bpe_encode" -> ((s, dir) =>
-      TextAnalysis.bpeEncodeStats(Tables.documents(s, dir)).orderBy("source")),
-    "q_pack_sequences_bpe" -> ((s, dir) =>
-      TextAnalysis.packSequencesBpe(Tables.documents(s, dir), 256, 8)
-        .orderBy("doc_id")),
-    // tokenizer TRAIN: one BPE learn iteration — frequency-weighted
-    // adjacent-pair census over the current tokenization, top-20
-    "q_bpe_train" -> ((s, dir) =>
-      TextAnalysis.bpeTrainStep(Tables.documents(s, dir), 20)),
-
-    "q_redact_pii" -> ((s, dir) => {
-      import graft.functions.ParseFunctions.redactPii
-      val k = col("o_orderkey")
-      // synthesize contact-card strings so the scrub has real
-      // targets. Card digits derive from kid = key mod 1e9 (the
-      // pre-offset id under GenScale's +rep*1e9 replica shift, and
-      // the identity on any driver fixture), NOT the raw key: the
-      // synthesized per-row text must keep a key-magnitude-
-      // independent length, or a scaled fixture would inflate the
-      // regex work per row and the scale bench would measure the
-      // fixture instead of the operator
-      val kid = k % GenScale.Off
-      val messy = Tables.orders(s, dir).select(
-        k,
-        concat(
-          lit("order "), kid.cast("string"),
-          lit(" contact user"), (kid % 97).cast("string"), lit("@mail"), (kid % 7).cast("string"), lit(".com"),
-          lit(" ph +"), (kid % 9 + 1).cast("string"), lit("-"), (kid % 900 + 100).cast("string"), lit("-"), (kid % 9000 + 1000).cast("string"),
-          lit(" acct "), (kid * 137 + 10000000).cast("string")).as("contact"))
-      // sort FIRST, scrub AFTER: a projection under an orderBy is
-      // evaluated twice (the range partitioner's bounds-sampling job
-      // runs the exchange's whole child, then the real pass runs it
-      // again — two ~1.5 s single-task regex stages at sf0.1), and
-      // the post-sort position also runs the scrub on the RANGE
-      // partitions instead of the unsplit scan task
-      messy.orderBy("o_orderkey")
-        .select(k, col("contact"), redactPii(col("contact")).as("redacted"))
-    }),
-    "q_rag_pipeline" -> ((s, dir) =>
-      Embedding.ragRetrieve(Tables.documents(s, dir), "fast spark query join merge")
-        .orderBy("rnk")),
-    "q_rag_batch" -> ((s, dir) => {
-      import s.implicits._
-      val queries = Seq((1L, "gain up good value"), (2L, "slow error bad join"), (3L, "spark table scan"))
-        .toDF("qid", "query")
-      Embedding.ragRetrieveBatch(Tables.documents(s, dir), queries, k = 3)
-        .orderBy("qid", "rnk")
-    }),
-    // lexical retrieval next to the embedding RAG path: Okapi BM25
-    // (Lucene idf form), per-pair term sums folded in term order so
-    // scores hash-match the oracle bit-for-bit
-    "q_bm25_topk" -> ((s, dir) =>
-      TextAnalysis.bm25TopK(Tables.documents(s, dir),
-        Seq((1L, "gain up good value"), (2L, "slow error bad join"), (3L, "spark table scan")), k = 5)
-        .orderBy("query_id", "rnk")),
-
-    // ---- E. similarity search -----------------------------------------
-    "q_ann_bruteforce" -> ((s, dir) =>
-      Similarity
-        .bruteForceTopK(Tables.embeddings(s, dir), Seq(0L, 1L, 2L, 3L, 4L), 5)
-        .orderBy("qid", "rnk")),
-    // semi-hard negative mining: per anchor, hardest k non-duplicate
-    // vectors inside the [floor, dup) similarity band
-    "q_hard_negatives" -> ((s, dir) =>
-      Similarity
-        .hardNegatives(Tables.embeddings(s, dir), Seq(0L, 1L, 2L, 3L, 4L), 5)
-        .orderBy("anchor_id", "rnk")),
-    // same queries/k over int8-quantized vectors: all-integer dots
-    // and norms (scales cancel in the cosine), 4x less memory at
-    // scale — scores are exact integer math + one IEEE sqrt
-    "q_ann_int8" -> ((s, dir) =>
-      Similarity
-        .int8BruteForceTopK(Tables.embeddings(s, dir), Seq(0L, 1L, 2L, 3L, 4L), 5)
-        .orderBy("qid", "rnk")),
-    "q_embed_neardup" -> ((s, dir) =>
-      Similarity.cosineNearDupPairs(Tables.embeddings(s, dir), 0.45).orderBy("va", "vb")),
-    // SemDeDup shape: exact cosine only within IVF cells. Seed
-    // quantizer for the same reason as q_ann_ivf (deterministic,
-    // cross-engine hashable); same threshold as q_embed_neardup so
-    // the within-cell pairs are a direct subset of the exact sweep
-    "q_semantic_dedup" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = Similarity.ivfTrain(emb, nlist = 16, iters = 0)
-      Similarity.ivfNearDupPairs(emb, 0.45, cents).orderBy("va", "vb")
-    }),
-    // the TRAINED-quantizer semantic dedup on the gate: Lloyd
-    // centroids are float means (run-nondeterministic), so the
-    // within-cell PAIR SET cannot be hash-matched — but three
-    // invariants hold for ANY centroid outcome and are what the
-    // operator promises: (1) within-cell pairs ⊆ the exact sweep
-    // (a within-cell pair at/above threshold IS an exact pair);
-    // (2) scores bit-equal to the exact sweep (same block kernel);
-    // (3) candidate volume at most half the full pair space (the
-    // reason the operator exists; 16 trained cells on this corpus
-    // leave a wide margin — the spec pins the tighter 4x bound).
-    // Emitted as oracle-asserted literal-TRUE booleans next to the
-    // engine-deterministic exact-pair count — the checked-twin
-    // pattern (q_ann_ivf_trained) applied to the dedup shape, and
-    // the query drives train → codegen'd assign → dense blocking →
-    // in-cell sweep end-to-end on the driver gate.
-    "q_semantic_dedup_trained" -> ((s, dir) => {
-      val emb    = Tables.embeddings(s, dir)
-      val cents  = Similarity.ivfTrain(emb, nlist = 16, iters = 3)
-      val within = Similarity.ivfNearDupPairs(emb, 0.45, cents)
-      val exact  = Similarity.cosineNearDupPairs(emb, 0.45)
-      val stats = within
-        .join(exact.select(col("va"), col("vb"), col("cos").as("cos_x")), Seq("va", "vb"), "left")
-        .agg(
-          coalesce(sum(when(col("cos_x").isNull, 1L).otherwise(0L)), lit(0L)).as("n_missing"),
-          coalesce(sum(when(col("cos_x") =!= col("cos"), 1L).otherwise(0L)), lit(0L)).as("n_diff"))
-      val occ = Similarity
-        .assignCells(emb.select(col("vec_id"),
-          graft.functions.VectorFunctions.toDouble(col("embedding")).as("v")), cents)
-        .groupBy(col("cell")).agg(count(lit(1)).as("c"))
-        .agg(
-          coalesce(sum(col("c") * (col("c") - 1)), lit(0L)).as("cand2"),
-          coalesce(sum(col("c")), lit(0L)).as("n"))
-      val nExact = exact.agg(count(lit(1)).as("n_exact_pairs"))
-      stats.crossJoin(occ).crossJoin(nExact).select(
-        col("n_exact_pairs"),
-        (col("n_missing") === 0L).as("subset_ok"),
-        (col("n_diff") === 0L).as("scores_equal"),
-        (col("cand2") * 2 <= col("n") * (col("n") - 1)).as("volume_bounded"))
-    }),
-    "q_ann_lsh_buckets" -> ((s, dir) =>
-      Similarity.lshBuckets(Tables.embeddings(s, dir)).orderBy("vec_id")),
-    "q_knn_graph" -> ((s, dir) =>
-      Similarity.knnGraph(Tables.embeddings(s, dir), k = 5)
-        .orderBy("src", "rnk")),
-    "q_pq_codes" -> ((s, dir) =>
-      Embedding.pqCodes(Tables.embeddings(s, dir), m = 8, nc = 16)
-        .orderBy("vec_id", "j")),
-    "q_random_projection" -> ((s, dir) =>
-      Embedding.randomProject(Tables.embeddings(s, dir), 8, 64)
-        .orderBy("vec_id", "j")),
-    // IVF search end-to-end on the driver gate: codegen'd cell
-    // assignment + nprobe probing + exact in-cell cosine rank. The
-    // quantizer is the deterministic SEED (first nlist vectors by
-    // vec_id, zero Lloyd iterations): iterated centroids are float
-    // MEANS, whose partial-sum order differs between engines, so
-    // they cannot be hash-matched bit-exactly — the Lloyd-trained
-    // path keeps its spec coverage (full-probe == brute force,
-    // codegen/HOF bit-identity) in DedupSimilaritySpec instead.
-    "q_ann_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = Similarity.ivfTrain(emb, nlist = 16, iters = 0)
-      Similarity.ivfSearch(emb, cents, Seq(0L, 1L, 2L, 3L, 4L), 5, nprobe = 4)
-        .orderBy("qid", "rnk")
-    }),
-    "q_kmeans_step" -> ((s, dir) =>
-      Similarity.kmeansStep(Tables.embeddings(s, dir)).orderBy("cell", "dim")),
-    "q_ivf_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = Similarity.ivfTrain(emb, nlist = 16, iters = 0)
-      Similarity.ivfRecall(emb, cents, Seq(0L, 1L, 2L, 3L, 4L), 5, nprobe = 4)
-        .orderBy("qid")
-    }),
-    "q_cluster_silhouette" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = Similarity.ivfTrain(emb, nlist = 16, iters = 0)
-      Similarity.clusterSilhouette(emb, cents).orderBy("cell")
-    }),
-    "q_bfs_layers" -> ((s, dir) =>
-      Similarity.bfsLayers(Tables.embeddings(s, dir), Seq(0L, 1L, 2L), 5, 3)
-        .orderBy("vec_id")),
-    "q_cluster_purity" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = Similarity.ivfTrain(emb, nlist = 16, iters = 0)
-      Similarity.clusterPurity(emb, cents).orderBy("cell")
-    }),
-    "q_retrieval_precision" -> ((s, dir) =>
-      Similarity.retrievalPrecision(Tables.embeddings(s, dir), Seq(0L, 1L, 2L, 3L, 4L), 5)
-        .orderBy("qid")),
-    "q_feature_corr" -> ((s, dir) =>
-      Similarity.featureLabelCorr(Tables.embeddings(s, dir)).orderBy("dim")),
-    // the TRAINED IVF path on the gate: Lloyd centroids are float
-    // MEANS (partial-sum order differs across engines and runs), so
-    // the trained quantizer itself can never hash-match — but with
-    // nprobe == nlist the search output is EXACTLY brute force no
-    // matter where the centroids landed (the quantizer only
-    // partitions the candidate space, and a full probe visits all of
-    // it). So the query runs train -> codegen'd assign -> full probe
-    // -> exact rank, which hash-matches the brute-force oracle and
-    // drives the trained pipeline end-to-end; the half-probe recall
-    // rides as a margin-safe boolean the oracle asserts TRUE — the
-    // checked-twin pattern applied to training. The gate bound is
-    // deliberately WEAK (>= 1 hit of 5): Lloyd training is run-
-    // nondeterministic (float partial-sum order), so the oracle flag
-    // only guards total per-qid collapse with >= 2 hits of margin
-    // under the >= 3 the spec pins on the fixture — the tight bound
-    // lives in CI where a flake is a rerun, not a red driver gate
-    "q_ann_ivf_trained" -> ((s, dir) => {
-      val emb   = Tables.embeddings(s, dir)
-      val cents = Similarity.ivfTrain(emb, nlist = 16, iters = 3)
-      val qids  = Seq(0L, 1L, 2L, 3L, 4L)
-      val full  = Similarity.ivfSearch(emb, cents, qids, 5, nprobe = 16)
-      val half  = Similarity.ivfSearch(emb, cents, qids, 5, nprobe = 8)
-      val hits = full.select(col("qid"), col("vec_id"))
-        .join(half.select(col("qid").as("hq"), col("vec_id").as("hv")),
-          col("qid") === col("hq") && col("vec_id") === col("hv"))
-        .groupBy(col("qid")).agg(count(lit(1)).as("hits"))
-        .select(col("qid").as("hq2"), col("hits"))
-      full.join(hits, col("qid") === col("hq2"), "left")
-        .select(col("qid"), col("vec_id"), col("cos"), col("rnk"),
-          (coalesce(col("hits"), lit(0L)) >= 1L).as("half_recall_ok"))
-        .orderBy("qid", "rnk")
-    }),
-
-    // ---- F. streaming (batch equivalents; streaming twins in graft.streaming) --
-    "q_windowed_agg" -> ((s, dir) =>
-      graft.streaming.Streams
-        .windowedAggBatch(Tables.events(s, dir))
-        .orderBy("window_start", "event_type")),
-    "q_cohort_retention" -> ((s, dir) =>
-      EventAnalytics.cohortRetention(Tables.events(s, dir))
-        .withColumn("cohort", date_format(col("cohort"), "yyyy-MM-dd"))
-        .orderBy("cohort", "day_offset")),
-    "q_funnel" -> ((s, dir) =>
-      EventAnalytics.funnel(Tables.events(s, dir))
-        .orderBy("stage")),
-    "q_session_stats" -> ((s, dir) =>
-      EventAnalytics.sessionStats(Tables.events(s, dir))
-        .orderBy("user_id")),
-    "q_top_transitions" -> ((s, dir) =>
-      EventAnalytics.topTransitions(Tables.events(s, dir), k = 20)),
-    "q_time_to_conversion" -> ((s, dir) =>
-      EventAnalytics.timeToConversion(Tables.events(s, dir))
-        .orderBy("user_id")),
-    "q_sessionize" -> ((s, dir) =>
-      graft.streaming.Streams
-        .sessionizeBatch(Tables.events(s, dir))
-        .orderBy("user_id", "session_id")),
-
-    // ---- G. multimodal plumbing (stubbed decode, real distribution) ----
-    "q_multimodal_features" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      Multimodal
-        .extractFeatures(Multimodal.mediaFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")))
-        .toDF()
-    }),
-    "q_wav_stats" -> ((s, dir) =>
-      Multimodal
-        .wavStats(Multimodal.wavFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_bmp_stats" -> ((s, dir) =>
-      Multimodal
-        .bmpStats(Multimodal.bmpFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_png_stats" -> ((s, dir) =>
-      Multimodal
-        .pngStats(Multimodal.pngFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_utf8_stats" -> ((s, dir) =>
-      Multimodal
-        .utf8Stats(Multimodal.utf8FromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_utf16_stats" -> ((s, dir) =>
-      Multimodal
-        .utf16Stats(Multimodal.utf16FromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_punycode_stats" -> ((s, dir) =>
-      Multimodal
-        .punycodeStats(Multimodal.punycodeFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_base64_stats" -> ((s, dir) =>
-      Multimodal
-        .base64Stats(Multimodal.base64FromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_deflate_stats" -> ((s, dir) =>
-      Multimodal
-        .deflateStats(Multimodal.deflateFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_snappy_stats" -> ((s, dir) =>
-      Multimodal
-        .snappyStats(Multimodal.snappyFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_proto_stats" -> ((s, dir) =>
-      Multimodal
-        .protoStats(Multimodal.protoFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_lz4_stats" -> ((s, dir) =>
-      Multimodal
-        .lz4Stats(Multimodal.lz4FromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_targz_stats" -> ((s, dir) =>
-      Multimodal
-        .targzStats(Multimodal.targzFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_zip_stats" -> ((s, dir) =>
-      Multimodal
-        .zipStats(Multimodal.zipFromDocuments(Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_qoi_stats" -> ((s, dir) =>
-      Multimodal
-        .qoiStats(Multimodal.qoiFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_mulaw_stats" -> ((s, dir) =>
-      Multimodal
-        .g711Stats(Multimodal.g711FromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id"), "mulaw").toDF())),
-    "q_alaw_stats" -> ((s, dir) =>
-      Multimodal
-        .g711Stats(Multimodal.g711FromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id"), "alaw").toDF())),
-    "q_gif_stats" -> ((s, dir) =>
-      Multimodal
-        .gifStats(Multimodal.gifFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_jpeg_stats" -> ((s, dir) =>
-      Multimodal
-        .jpegStats(Multimodal.jpegFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_binary_entropy" -> ((s, dir) =>
-      Multimodal
-        .byteStats(Multimodal.mediaFromDocuments(
-          Tables.documents(s, dir).orderBy("doc_id")).toDF())),
-    "q_binary_chunks" -> ((s, dir) =>
-      Multimodal
-        .chunkDedupStats(Multimodal.mediaFromDocuments(
-          Tables.documents(s, dir)).toDF())
-        .orderBy("media_id")),
-    "q_binary_magic" -> ((s, dir) =>
-      Multimodal
-        .sniffFormat(Multimodal.mediaWithHeaders(Tables.documents(s, dir)))
-        .orderBy("media_id")),
-    "q_binary_neardup" -> ((s, dir) =>
-      Multimodal
-        .binaryNearDup(Multimodal.mediaFromDocuments(Tables.documents(s, dir)).toDF())
-        .orderBy("media_a", "media_b")),
-    // ---- late-r11: indicators, hypothesis tests, activity, graph ----
-    "q_williams_r" -> ((s, dir) =>
-      TimeSeries.williamsR(Tables.events(s, dir), 14)
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_mfi" -> ((s, dir) =>
-      TimeSeries.mfi(Tables.events(s, dir), 14)
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("user_id", "day")),
-    "q_keltner" -> ((s, dir) =>
-      TimeSeries.keltner(Tables.events(s, dir), 20, 10, 2.0)
-        .withColumn("bar_start", date_format(col("bar_start"), "yyyy-MM-dd"))
-        .orderBy("user_id", "bar_start")),
-    "q_acf" -> ((s, dir) =>
-      TimeSeries.acf(Tables.events(s, dir), 5)
-        .orderBy("user_id", "lag_k")),
-    "q_welch_ttest" -> ((s, dir) =>
-      Stats.welchTTest(Tables.events(s, dir), "click", "purchase")),
-    "q_mann_whitney" -> ((s, dir) =>
-      Stats.mannWhitney(Tables.events(s, dir), "click", "purchase")),
-    "q_dau_wau" -> ((s, dir) =>
-      EventAnalytics.rollingActiveUsers(Tables.events(s, dir), 7)
-        .withColumn("grid_day", date_format(col("grid_day"), "yyyy-MM-dd"))
-        .orderBy("grid_day")),
-    "q_new_vs_returning" -> ((s, dir) =>
-      EventAnalytics.newVsReturning(Tables.events(s, dir))
-        .withColumn("d", date_format(col("d"), "yyyy-MM-dd"))
-        .orderBy("d")),
-    "q_zipf_slope" -> ((s, dir) =>
-      TextAnalysis.zipfSlope(Tables.documents(s, dir), 100)),
-    "q_cluster_sizes" -> ((s, dir) =>
-      Dedup.clusterSizeProfile(Tables.documents(s, dir),
-        Dedup.minhashLshCandidatesFast(Tables.documents(s, dir)))
-        .orderBy("cluster_size")),
-    "q_pq_search" -> ((s, dir) =>
-      Embedding.pqSearch(Tables.embeddings(s, dir), Seq(0L, 1L, 2L), 5, 8, 16)
-        .orderBy("qid", "rnk")),
-    "q_pagerank" -> ((s, dir) =>
-      Similarity.pageRankKnn(Tables.embeddings(s, dir), 5, 5)
-        .orderBy("node")),
-    // IVF-PQ composition: coarse probe bounds the candidate set,
-    // ADC bounds per-candidate cost — the FAISS IndexIVFPQ shape
-    "q_ivfpq_search" -> ((s, dir) =>
-      Embedding.ivfPqSearch(Tables.embeddings(s, dir), Seq(0L, 1L, 2L), 5, 16, 4, 8, 16)
-        .orderBy("qid", "rnk")),
-    "q_merge_upsert" -> ((s, dir) =>
-      Relational.mergeUpsert(Tables.events(s, dir), "2024-01-20")
-        .orderBy("user_id")),
-    "q_calmar" -> ((s, dir) =>
-      TimeSeries.calmar(Tables.events(s, dir)).orderBy("user_id")),
-    "q_ulcer_index" -> ((s, dir) =>
-      TimeSeries.ulcerIndex(Tables.events(s, dir)).orderBy("user_id")),
-    "q_omega_ratio" -> ((s, dir) =>
-      TimeSeries.omegaRatio(Tables.events(s, dir)).orderBy("user_id")),
-    "q_jaccard_estimate" -> ((s, dir) =>
-      Dedup.jaccardEstimatePairs(Tables.documents(s, dir)).orderBy("da", "db")),
-    "q_robust_zscore" -> ((s, dir) =>
-      Stats.robustZscore(Tables.events(s, dir)).orderBy("user_id")),
-    "q_moments" -> ((s, dir) =>
-      Stats.momentsProfile(Tables.events(s, dir)).orderBy("user_id")),
-    "q_cusum" -> ((s, dir) =>
-      TimeSeries.cusum(Tables.events(s, dir)).orderBy("user_id")),
-    "q_linreg_trend" -> ((s, dir) =>
-      TimeSeries.linearTrend(Tables.events(s, dir)).orderBy("user_id")),
-    "q_entropy_profile" -> ((s, dir) =>
-      EventAnalytics.behaviorEntropy(Tables.events(s, dir)).orderBy("user_id")),
-    // registry = docs 0-249, batch = the rest: the bloom shortcut +
-    // exact confirm join must leave is_new EXACT (hash-matched)
-    "q_incremental_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.incrementalDedup(
-        docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250))
-        .orderBy("doc_id")
-    }),
-    "q_theilsen" -> ((s, dir) =>
-      TimeSeries.theilSen(Tables.events(s, dir)).orderBy("user_id")),
-    "q_benford" -> ((s, dir) =>
-      Stats.benfordTest(Tables.events(s, dir)).orderBy("digit")),
-    "q_profile_table" -> ((s, dir) =>
-      Relational.profileTable(Tables.events(s, dir))),
-    "q_power_users" -> ((s, dir) =>
-      EventAnalytics.powerUsers(Tables.events(s, dir)).orderBy("rank")),
-    // day-grain cohorts + 1-day horizon: scaled to the one-month
-    // fixture (production defaults are week/7) so the gate sees a
-    // genuine churned/active split, not an all-zero column
-    "q_churn" -> ((s, dir) =>
-      EventAnalytics.churn(Tables.events(s, dir), horizonDays = 1, cohortGrain = "day")
-        .withColumn("cohort_week", date_format(col("cohort_week"), "yyyy-MM-dd"))
-        .orderBy("cohort_week")),
-    "q_variance_ratio" -> ((s, dir) =>
-      TimeSeries.varianceRatio(Tables.events(s, dir)).orderBy("user_id")),
-    "q_readability" -> ((s, dir) =>
-      TextAnalysis.readability(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_triangle_count" -> ((s, dir) =>
-      Similarity.triangleStats(Tables.embeddings(s, dir)).orderBy("vec_id")),
-    "q_embed_norms" -> ((s, dir) =>
-      Similarity.embedNorms(Tables.embeddings(s, dir)).orderBy("label")),
-    "q_source_overlap" -> ((s, dir) =>
-      Dedup.sourceOverlap(Tables.documents(s, dir)).orderBy("sa", "sb")),
-    "q_seasonal_decompose" -> ((s, dir) =>
-      TimeSeries.seasonalDecompose(Tables.events(s, dir))
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .orderBy("user_id", "day")),
-    "q_survival_curve" -> ((s, dir) =>
-      EventAnalytics.survivalCurve(Tables.events(s, dir)).orderBy("day_offset")),
-    "q_vocab_shift" -> ((s, dir) =>
-      TextAnalysis.vocabShift(Tables.documents(s, dir))),
-    "q_basket_pairs" -> ((s, dir) =>
-      Relational.basketPairs(Tables.lineitem(s, dir))
-        .orderBy(col("n_ab").desc, col("pa"), col("pb"))),
-    "q_revenue_cohorts" -> ((s, dir) =>
-      Relational.revenueCohorts(Tables.orders(s, dir))
-        .withColumn("cohort", date_format(col("cohort"), "yyyy-MM"))
-        .orderBy("cohort", "offset_m")),
-    "q_rfm" -> ((s, dir) =>
-      Relational.rfm(Tables.orders(s, dir)).orderBy("o_custkey")),
-    "q_pareto_frontier" -> ((s, dir) =>
-      Relational.paretoFrontier(Tables.lineitem(s, dir), Tables.orders(s, dir))
-        .orderBy("best_lag", "l_partkey")),
-    "q_ship_lag" -> ((s, dir) =>
-      Relational.shipLagProfile(Tables.lineitem(s, dir), Tables.orders(s, dir))
-        .orderBy("o_orderpriority")),
-    "q_runs_test" -> ((s, dir) =>
-      Stats.runsTest(Tables.events(s, dir)).orderBy("user_id")),
-    "q_sign_test" -> ((s, dir) =>
-      Stats.signTest(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_friedman" -> ((s, dir) =>
-      Stats.friedman(Tables.events(s, dir))),
-    "q_wasserstein" -> ((s, dir) =>
-      Stats.wasserstein1(Tables.events(s, dir), "view", "click")),
-    "q_energy_distance" -> ((s, dir) =>
-      Stats.energyDistance(Tables.events(s, dir), "view", "click")),
-    "q_median_test" -> ((s, dir) =>
-      Stats.medianTest(Tables.events(s, dir), "view", "click")),
-    "q_cochran_q" -> ((s, dir) =>
-      Stats.cochranQ(Tables.events(s, dir))),
-    "q_garch_filter" -> ((s, dir) =>
-      TimeSeries.garchFilter(Tables.events(s, dir)).orderBy("user_id", "day")),
-    "q_vol_cones" -> ((s, dir) =>
-      TimeSeries.volCones(Tables.events(s, dir)).orderBy("horizon")),
-    "q_effective_sample_size" -> ((s, dir) =>
-      Sampling.effectiveSampleSize(Tables.documents(s, dir)).orderBy("source")),
-    "q_kupiec_pof" -> ((s, dir) =>
-      TimeSeries.kupiecPof(Tables.events(s, dir)).orderBy("user_id")),
-    "q_hodges_lehmann" -> ((s, dir) =>
-      Stats.hodgesLehmann(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_turning_points" -> ((s, dir) =>
-      Stats.turningPoints(Tables.events(s, dir)).orderBy("user_id")),
-    "q_knn_outliers" -> ((s, dir) =>
-      Similarity.knnOutliers(Tables.embeddings(s, dir)).orderBy("vec_id")),
-    "q_isotropy" -> ((s, dir) =>
-      Similarity.isotropy(Tables.embeddings(s, dir))),
-    "q_dim_variance" -> ((s, dir) =>
-      Similarity.dimVariance(Tables.embeddings(s, dir)).orderBy("dim")),
-    "q_importance_weights" -> ((s, dir) =>
-      Sampling.importanceWeights(Tables.documents(s, dir)).orderBy("source", "lang")),
-    "q_supplier_hhi" -> ((s, dir) =>
-      Relational.supplierHhi(
-        Tables.lineitem(s, dir), Tables.supplier(s, dir), Tables.nation(s, dir))
-        .orderBy("n_name")),
-    "q_wilcoxon_signed" -> ((s, dir) =>
-      Stats.wilcoxonSigned(Tables.events(s, dir), 0L).orderBy("user_id")),
-    "q_perm_entropy" -> ((s, dir) =>
-      Stats.permutationEntropy(Tables.events(s, dir)).orderBy("user_id")),
-    "q_discount_elasticity" -> ((s, dir) =>
-      Relational.discountElasticity(Tables.lineitem(s, dir), Tables.part(s, dir))
-        .orderBy("p_brand")),
-    "q_gini" -> ((s, dir) =>
-      EventAnalytics.gini(Tables.events(s, dir))),
-    "q_inter_event" -> ((s, dir) =>
-      EventAnalytics.interEventGaps(Tables.events(s, dir)).orderBy("user_id")),
-    "q_hourly_profile" -> ((s, dir) =>
-      EventAnalytics.hourlyProfile(Tables.events(s, dir)).orderBy("isodow", "hour")),
-    "q_top_pc" -> ((s, dir) =>
-      Similarity.topPrincipalComponent(Tables.embeddings(s, dir)).orderBy("dim")),
-    "q_centroid_outliers" -> ((s, dir) =>
-      Similarity.centroidOutliers(Tables.embeddings(s, dir)).orderBy("label", "rnk")),
-    "q_embed_drift" -> ((s, dir) =>
-      Similarity.embedDrift(Tables.embeddings(s, dir)).orderBy("label")),
-    "q_dup_rate_by_source" -> ((s, dir) =>
-      Dedup.dupRateBySource(Tables.documents(s, dir)).orderBy("source")),
-    "q_pc_project" -> ((s, dir) =>
-      Similarity.pcProject(Tables.embeddings(s, dir)).orderBy("vec_id")),
-    "q_class_balance" -> ((s, dir) =>
-      Similarity.classBalance(Tables.embeddings(s, dir)).orderBy("label")),
-    "q_ttr" -> ((s, dir) =>
-      TextAnalysis.lexicalDiversity(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_char_composition" -> ((s, dir) =>
-      TextAnalysis.charComposition(Tables.documents(s, dir)).orderBy("source")),
-    "q_encoding_anomalies" -> ((s, dir) =>
-      TextAnalysis.encodingAnomalies(Tables.documents(s, dir)).orderBy("doc_id")),
-    "q_heaps_law" -> ((s, dir) =>
-      TextAnalysis.heapsLaw(Tables.documents(s, dir)).orderBy("cp")),
-    "q_dispersion" -> ((s, dir) =>
-      EventAnalytics.dispersionIndex(Tables.events(s, dir)).orderBy("event_type")),
-    "q_lorenz_curve" -> ((s, dir) =>
-      EventAnalytics.lorenzCurve(Tables.events(s, dir)).orderBy("decile")),
-    "q_activation_lag" -> ((s, dir) =>
-      EventAnalytics.activationLag(Tables.events(s, dir))),
-    "q_peak_concurrency" -> ((s, dir) =>
-      EventAnalytics.peakConcurrency(Tables.events(s, dir)).orderBy("day")),
-    "q_changepoint" -> ((s, dir) =>
-      Stats.changepoint(Tables.events(s, dir)).orderBy("user_id")),
-    "q_matryoshka" -> ((s, dir) =>
-      Similarity.matryoshkaAudit(Tables.embeddings(s, dir)).orderBy("label")),
-    "q_js_divergence" -> ((s, dir) =>
-      TextAnalysis.jsDivergence(Tables.documents(s, dir)).orderBy("source")),
-    "q_token_gini" -> ((s, dir) =>
-      TextAnalysis.tokenGini(Tables.documents(s, dir)).orderBy("source"))
-  )
+  /** Every declared query's closure, by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.all.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] = {
-    val base = oracleSqlBase
-    // big-star emits the identical (doc_id, cluster_id) contract as
-    // min-label propagation — one oracle, two implementations checked
-    base +
-      ("q_dedup_clusters_bigstar" -> base("q_dedup_clusters")) +
-      ("q_bpe_encode" -> bpeEncodeOracle) +
-      ("q_pack_sequences_bpe" -> packSequencesBpeOracle) +
-      ("q_bpe_train" -> bpeTrainOracle)
-  }
-
-  /** The BPE-apply fold as DuckDB SQL, GENERATED from the same
-    * in-repo merge table the engine compiles in
-    * ([[graft.plans.GraftHashOps.BpeMerges]] — shared DATA, like a
-    * decoder's quant table; the fold ALGORITHM here is an
-    * independent re-implementation). Symbols ride a '/'-delimited
-    * string; each merge is one list_reduce pass whose lambda merges
-    * `x = b` into an accumulator whose LAST symbol is `a` — the
-    * identical greedy left-to-right single-pass semantics as
-    * GraftHashOps.bpeTokenizeWord. `w` is the word column in scope.
-    */
-  /** One MATERIALIZED CTE per merge (nesting the 79 folds into one
-    * expression hits DuckDB's binder recursion cap at 128, and a
-    * non-materialized chain gets re-inlined right back into that
-    * nesting). The chain starts from CTE `dw(w)` and ends in
-    * `s<nMerges>(w, sym)`; the distinct word set is tiny, so 79
-    * materializations are free.
-    */
-  private def bpeFoldCtes: String = {
-    val init = "array_to_string(list_transform(generate_series(1, length(w)), i -> w[i]), '/')"
-    val first = s"s0 AS MATERIALIZED (\n  SELECT w, $init AS sym FROM dw\n)"
-    val steps = graft.plans.GraftHashOps.BpeMerges.zipWithIndex.map { case ((a, b), i) =>
-      val pass = s"list_reduce(string_split(sym, '/'), (acc, x) -> " +
-        s"CASE WHEN x = '$b' AND (acc = '$a' OR ends_with(acc, '/$a')) " +
-        s"THEN substr(acc, 1, length(acc) - ${a.length}) || '$a$b' " +
-        s"ELSE acc || '/' || x END)"
-      s"s${i + 1} AS MATERIALIZED (\n  SELECT w, $pass AS sym FROM s$i\n)"
-    }
-    (first +: steps).mkString(", ")
-  }
-
-  private def bpeFoldLast: String = s"s${graft.plans.GraftHashOps.BpeMerges.length}"
-
-  private def bpeVocabSql: String =
-    (graft.plans.GraftHashOps.BpeBaseSingles.map(c => s"'$c'") ++
-      graft.plans.GraftHashOps.BpeMerges.map { case (a, b) => s"'$a$b'" })
-      .distinct.mkString("[", ", ", "]")
-
-  // independent derivation, BPE: the fold runs over the DISTINCT
-  // word set (the corpus repeats words massively), then joins back —
-  // counts are exact integers, the two rates one IEEE division each
-  private def bpeEncodeOracle: String =
-    s"""WITH w0 AS (
-       |  SELECT doc_id, source, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-       |  FROM documents
-       |), dw AS (
-       |  SELECT DISTINCT w FROM w0
-       |), $bpeFoldCtes, enc AS (
-       |  SELECT w, string_split(sym, '/') AS toks FROM $bpeFoldLast
-       |), wt AS (
-       |  SELECT w, CAST(len(toks) AS BIGINT) AS n_tokens,
-       |    CAST(len(list_filter(toks, t -> NOT list_contains($bpeVocabSql, t))) AS BIGINT) AS n_oov
-       |  FROM enc
-       |), sums AS (
-       |  SELECT w0.source,
-       |    CAST(count(*) AS BIGINT) AS n_words,
-       |    CAST(sum(wt.n_tokens) AS BIGINT) AS n_tokens,
-       |    CAST(sum(wt.n_oov) AS BIGINT) AS n_oov
-       |  FROM w0 JOIN wt USING (w) GROUP BY 1
-       |), docs AS (
-       |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM documents GROUP BY 1
-       |)
-       |SELECT d.source, d.n_docs,
-       |  coalesce(s.n_words, 0) AS n_words,
-       |  coalesce(s.n_tokens, 0) AS n_tokens,
-       |  coalesce(s.n_oov, 0) AS n_oov,
-       |  CAST(s.n_tokens AS DOUBLE) / CAST(s.n_words AS DOUBLE) AS tokens_per_word,
-       |  CAST(s.n_oov AS DOUBLE) / CAST(s.n_tokens AS DOUBLE) AS oov_rate
-       |FROM docs d LEFT JOIN sums s USING (source) ORDER BY source""".stripMargin
-
-  private def packSequencesBpeOracle: String =
-    s"""WITH w0 AS (
-       |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-       |  FROM documents
-       |), dw AS (
-       |  SELECT DISTINCT w FROM w0
-       |), $bpeFoldCtes, enc AS (
-       |  SELECT w, CAST(len(string_split(sym, '/')) AS BIGINT) AS n_toks FROM $bpeFoldLast
-       |), dt AS (
-       |  SELECT d.doc_id, d.doc_id % 8 AS shard, CAST(coalesce(s.n, 0) AS BIGINT) AS n_tokens
-       |  FROM documents d LEFT JOIN (
-       |    SELECT w0.doc_id, sum(enc.n_toks) AS n FROM w0 JOIN enc USING (w) GROUP BY 1
-       |  ) s USING (doc_id)
-       |), c AS (
-       |  SELECT doc_id, shard, n_tokens,
-       |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-       |  FROM dt
-       |)
-       |SELECT doc_id, shard, n_tokens,
-       |  CAST(floor(cum_before / 256.0) AS BIGINT) AS bin,
-       |  cum_before % 256 AS offset_in_bin
-       |FROM c ORDER BY doc_id""".stripMargin
-
-  // independent derivation, BPE train step: same distinct-word fold
-  // as the apply oracle, then every adjacent pair of each word's
-  // token sequence unnests with its 1-based index and aggregates
-  // weighted by the word's corpus frequency; top-20 under the same
-  // total order (count DESC, lhs, rhs) as the engine's TakeOrdered
-  private def bpeTrainOracle: String =
-    s"""WITH w0 AS (
-       |  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w FROM documents
-       |), wf AS (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS freq FROM w0 GROUP BY 1
-       |), dw AS (
-       |  SELECT w FROM wf
-       |), $bpeFoldCtes, enc AS (
-       |  SELECT w, string_split(sym, '/') AS toks FROM $bpeFoldLast
-       |), pr AS (
-       |  SELECT wf.w, wf.freq, enc.toks[t.i] AS lhs, enc.toks[t.i + 1] AS rhs
-       |  FROM wf JOIN enc USING (w)
-       |  CROSS JOIN UNNEST(generate_series(1, CAST(len(enc.toks) - 1 AS BIGINT))) AS t(i)
-       |)
-       |SELECT lhs, rhs,
-       |  CAST(sum(freq) AS BIGINT) AS pair_count,
-       |  CAST(count(DISTINCT w) AS BIGINT) AS n_words
-       |FROM pr GROUP BY 1, 2
-       |ORDER BY pair_count DESC, lhs, rhs LIMIT 20""".stripMargin
-
-  /** The celled-quantizer oracle prelude, emitted ONCE and
-    * interpolated into every graph-family oracle so the nlist/
-    * ncoarse/fpc formulas and both argmin tie-breaks cannot
-    * desynchronize between copies — they MUST mirror
-    * [[graft.operators.Similarity.knnAssignCells]] (TWO-LEVEL:
-    * coarse argmin over the first ncoarse = ceil(√nlist) vectors by
-    * vec_id, then fine argmin over that coarse cell's first
-    * fpc_c = ceil(nlist·|cell|/n) members — PROPORTIONAL fine
-    * allocation; cell = ccell·(nlist+1) + fidx;
-    * both levels tie to the lowest id, matching the codegen'd
-    * IvfAssign/IvfAssignNested strict-< scans) exactly, and a celled
-    * oracle with a drifted copy would cost a gate round. `margin`
-    * matches the enclosing stripMargin literal; `cols` threads extra
-    * per-vector columns (label for the classify oracle) through the
-    * assignment CTEs.
-    * CTEs are MATERIALIZED: DuckDB re-inlines referenced CTEs, and
-    * inside iterative oracles the assignment cross-join explodes
-    * combinatorially without it.
-    */
-  private def celledCtes(margin: String, cols: Seq[String] = Nil): String = {
-    val ecols = cols.map(c => s"e.$c, ").mkString
-    val vcols = cols.map(c => s"vc.$c, ").mkString
-    val bcols = cols.map(c => s"$c, ").mkString
-    Seq(
-      "), nl AS (",
-      "  SELECT nlist, ntot,",
-      "    CAST(ceil(sqrt(CAST(nlist AS DOUBLE))) AS BIGINT) AS ncoarse",
-      "  FROM (SELECT CASE WHEN count(*) <= 512 THEN 1",
-      "    ELSE greatest(16, (count(*) + 255) // 256) END AS nlist,",
-      "    count(*) AS ntot FROM e)",
-      "), coarse AS (",
-      "  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ccell, v AS cc",
-      "  FROM e QUALIFY ccell < (SELECT ncoarse FROM nl)",
-      "), cd AS MATERIALIZED (",
-      s"  SELECT e.vec_id, ${ecols}e.v, coarse.ccell,",
-      "    list_dot_product(",
-      "      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - coarse.cc[i]),",
-      "      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - coarse.cc[i])) AS d2",
-      "  FROM e CROSS JOIN coarse",
-      "), vc AS MATERIALIZED (",
-      s"  SELECT vec_id, ${bcols}v, ccell,",
-      "    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, ccell ASC) AS rn",
-      "  FROM cd QUALIFY rn = 1",
-      "), fcents AS MATERIALIZED (",
-      "  SELECT ccell, row_number() OVER (PARTITION BY ccell ORDER BY vec_id) - 1 AS fidx,",
-      "    count(*) OVER (PARTITION BY ccell) AS ccnt, v AS fc",
-      "  FROM vc QUALIFY fidx < ((SELECT nlist FROM nl) * ccnt + (SELECT ntot FROM nl) - 1)",
-      "    // (SELECT ntot FROM nl)",
-      "), fd AS MATERIALIZED (",
-      s"  SELECT vc.vec_id, ${vcols}vc.v, vc.ccell, f.fidx,",
-      "    list_dot_product(",
-      "      list_transform(generate_series(1, len(vc.v)), i -> vc.v[i] - f.fc[i]),",
-      "      list_transform(generate_series(1, len(vc.v)), i -> vc.v[i] - f.fc[i])) AS d2",
-      "  FROM vc JOIN fcents f ON vc.ccell = f.ccell",
-      "), acell AS MATERIALIZED (",
-      s"  SELECT vec_id, ${bcols}v, ccell * ((SELECT nlist FROM nl) + 1) + fidx AS cell,",
-      "    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, fidx ASC) AS rn",
-      "  FROM fd QUALIFY rn = 1",
-      "), n AS MATERIALIZED (",
-      s"  SELECT vec_id, ${bcols}cell, v, sqrt(list_dot_product(v, v)) AS nn FROM acell",
-      ")").map(l => margin + "|" + l).mkString("\n")
-  }
-
-  private def oracleSqlBase: Map[String, String] = Map(
-    "q_agg_pushdown" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-        |  CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate < TIMESTAMP '1998-12-01'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_transform_project" ->
-      """SELECT event_id, user_id AS ticker_id, event_type AS field,
-        |  value AS px, strftime(ts, '%Y-%m-%d') AS px_date
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_validate_filter" ->
-      """SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us, value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-20'
-        |  AND upper(event_type) IN ('CLICK', 'PURCHASE')
-        |ORDER BY event_id""".stripMargin,
-    "q_latest_per_key" ->
-      """SELECT user_id, epoch_us(ts) AS ts_us, event_type, value
-        |FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events
-        |) WHERE rn = 1
-        |ORDER BY user_id""".stripMargin,
-    "q_dim_join" ->
-      """SELECT r_name AS region_name, n_name AS nation_name,
-        |  count(*) AS n_customers, CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY region_name, nation_name""".stripMargin,
-    "q_multi_join_agg" ->
-      """SELECT n_name AS nation_name,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY n_name
-        |ORDER BY nation_name""".stripMargin,
-    "q_shipping_priority" ->
-      """WITH agg AS (
-        |  SELECT l_orderkey,
-        |    strftime(o_orderdate, '%Y-%m-%d') AS order_date, o_orderpriority,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  WHERE c_mktsegment = 'BUILDING'
-        |    AND o_orderdate < TIMESTAMP '1998-06-01'
-        |    AND l_shipdate > TIMESTAMP '1998-06-01'
-        |  GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |)
-        |SELECT l_orderkey, order_date, o_orderpriority, revenue,
-        |  row_number() OVER (ORDER BY revenue DESC, l_orderkey ASC) AS rnk
-        |FROM agg
-        |QUALIFY rnk <= 10
-        |ORDER BY rnk""".stripMargin,
-    "q_large_volume_cust" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300
-        |)
-        |SELECT c_name, c_custkey, o_orderkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-        |  o_totalprice, CAST(qty AS DOUBLE) AS order_qty
-        |FROM big
-        |JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey ASC""".stripMargin,
-    "q_small_qty_revenue" ->
-      """SELECT p.p_brand AS brand,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
-        |  count(*) AS n_lines
-        |FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        |WHERE l.l_quantity < (
-        |  SELECT CAST(0.2 AS DOUBLE) * avg(l2.l_quantity)
-        |  FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
-        |GROUP BY p.p_brand
-        |ORDER BY brand""".stripMargin,
-    "q_qualified_suppliers" ->
-      """SELECT s.s_suppkey, s.s_name, s.s_acctbal
-        |FROM supplier s
-        |WHERE EXISTS (
-        |  SELECT 1 FROM lineitem l
-        |  WHERE l.l_suppkey = s.s_suppkey
-        |    AND l.l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'hot gear%')
-        |    AND l.l_quantity > (
-        |      SELECT CAST(1.8 AS DOUBLE) * avg(l2.l_quantity)
-        |      FROM lineitem l2
-        |      WHERE l2.l_partkey = l.l_partkey))
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_min_cost_supplier" ->
-      """SELECT DISTINCT p.p_partkey, p.p_name, s.s_suppkey, s.s_name, n.n_name,
-        |  round(l.l_extendedprice / l.l_quantity, 6) AS unit_cost
-        |FROM part p
-        |JOIN lineitem l ON l.l_partkey = p.p_partkey
-        |JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        |JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |WHERE p.p_size <= 10 AND l.l_quantity > 0
-        |  AND l.l_extendedprice / l.l_quantity = (
-        |    SELECT min(l2.l_extendedprice / l2.l_quantity)
-        |    FROM lineitem l2
-        |    WHERE l2.l_partkey = p.p_partkey AND l2.l_quantity > 0)
-        |ORDER BY p_partkey, s_suppkey""".stripMargin,
-    "q_dormant_customers" ->
-      """SELECT c.c_mktsegment AS segment,
-        |  count(*) AS n_custs,
-        |  CAST(sum(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM customer c
-        |WHERE CAST(c.c_acctbal AS DECIMAL(18,2)) *
-        |    (SELECT CAST(count(*) AS DECIMAL(12,0)) FROM customer WHERE c_acctbal > 0)
-        |  > (SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) FROM customer WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000.0)
-        |GROUP BY c.c_mktsegment
-        |ORDER BY segment""".stripMargin,
-    "q_ship_priority_classes" ->
-      """SELECT l.l_returnflag,
-        |  CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_count,
-        |  CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_count
-        |FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1997-01-01' AND l.l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l.l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q_promo_share" ->
-      """SELECT
-        |  round(100.0 * CAST(coalesce(sum(CASE WHEN p.p_type = 'PROMO'
-        |      THEN CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2))) END), 0) AS DOUBLE)
-        |    / CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE), 6) AS promo_share,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1997-01-01' AND l.l_shipdate < TIMESTAMP '1997-03-01'""".stripMargin,
-    "q_or_predicate_revenue" ->
-      """SELECT
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        |WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15 AND l.l_quantity BETWEEN 1 AND 20)
-        |   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 10 AND 30 AND l.l_quantity BETWEEN 10 AND 35)
-        |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 20 AND 50 AND l.l_quantity BETWEEN 20 AND 50)""".stripMargin,
-    "q_waiting_suppliers" ->
-      """SELECT s.s_name, count(*) AS numwait
-        |FROM supplier s, lineitem l1, orders o
-        |WHERE o.o_orderkey = l1.l_orderkey AND l1.l_suppkey = s.s_suppkey
-        |  AND o.o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o.o_orderdate + INTERVAL 45 DAY
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |      AND l3.l_shipdate > o.o_orderdate + INTERVAL 45 DAY)
-        |GROUP BY s.s_name
-        |ORDER BY numwait DESC, s_name ASC
-        |LIMIT 20""".stripMargin,
-    "q_bloom_join" ->
-      """SELECT o.o_orderpriority,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_totalprice > 450000.0
-        |GROUP BY o.o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_late_orders" ->
-      """SELECT o.o_orderpriority, count(*) AS order_count
-        |FROM orders o
-        |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01' AND o.o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |    WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY o.o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_local_supplier_volume" ->
-      """SELECT n.n_name AS nation_name,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey
-        |WHERE r.r_name = 'ASIA'
-        |  AND o.o_orderdate >= TIMESTAMP '1996-01-01' AND o.o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n.n_name
-        |ORDER BY nation_name""".stripMargin,
-    "q_volume_shipping" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  year(l.l_shipdate) AS ship_year,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-        |WHERE (n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_5')
-        |   OR (n1.n_name = 'NATION_5' AND n2.n_name = 'NATION_3')
-        |GROUP BY 1, 2, 3
-        |ORDER BY supp_nation, cust_nation, ship_year""".stripMargin,
-    "q_market_share" ->
-      """SELECT year(o.o_orderdate) AS order_year,
-        |  round(CAST(coalesce(sum(CASE WHEN n2.n_name = 'NATION_3'
-        |      THEN CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2))) END), 0) AS DOUBLE)
-        |    / CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE), 6) AS mkt_share,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem l
-        |JOIN part p ON p.p_partkey = l.l_partkey AND p.p_type = 'STANDARD'
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
-        |JOIN region r ON n1.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
-        |JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
-        |GROUP BY 1
-        |ORDER BY order_year""".stripMargin,
-    "q_product_profit" ->
-      """SELECT n.n_name AS nation_name, year(o.o_orderdate) AS order_year,
-        |  round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |    - CAST(sum(CAST(p.p_retailprice AS DECIMAL(18,2)) * CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) * (60.0 / 100.0), 6) AS profit,
-        |  count(*) AS n_lines
-        |FROM lineitem l
-        |JOIN part p ON p.p_partkey = l.l_partkey AND p.p_name LIKE '%bolt%'
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |GROUP BY 1, 2
-        |ORDER BY nation_name, order_year""".stripMargin,
-    "q_returned_items" ->
-      """SELECT c.c_custkey, c.c_name, n.n_name AS nation_name,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS lost_revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |WHERE l.l_returnflag = 'R'
-        |  AND o.o_orderdate >= TIMESTAMP '1996-04-01' AND o.o_orderdate < TIMESTAMP '1996-10-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY lost_revenue DESC, c_custkey ASC
-        |LIMIT 20""".stripMargin,
-    "q_important_parts" ->
-      """WITH pp AS (
-        |  SELECT l.l_partkey, sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS value_d
-        |  FROM lineitem l
-        |  WHERE l.l_suppkey IN (
-        |    SELECT s.s_suppkey FROM supplier s
-        |    JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |    WHERE n.n_name = 'NATION_3')
-        |  GROUP BY l.l_partkey)
-        |SELECT l_partkey, CAST(value_d AS DOUBLE) AS part_value
-        |FROM pp
-        |WHERE value_d * (SELECT count(*) FROM pp) > (SELECT sum(value_d) FROM pp) * 2
-        |ORDER BY l_partkey""".stripMargin,
-    "q_cust_order_distribution" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (
-        |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-        |  FROM customer c
-        |  LEFT JOIN orders o ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '5-LOW'
-        |  GROUP BY c.c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l.l_suppkey,
-        |    sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS rev_d
-        |  FROM lineitem l
-        |  WHERE l.l_shipdate >= TIMESTAMP '1996-01-01' AND l.l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l.l_suppkey)
-        |SELECT s.s_suppkey, s.s_name, CAST(rev_d AS DOUBLE) AS total_revenue
-        |FROM rev
-        |JOIN supplier s ON rev.l_suppkey = s.s_suppkey
-        |WHERE rev_d = (SELECT max(rev_d) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_supplier_part_counts" ->
-      """SELECT p.p_brand, p.p_type, p.p_size, count(DISTINCT pr.l_suppkey) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pr
-        |JOIN part p ON p.p_partkey = pr.l_partkey
-        |WHERE p.p_brand <> 'Brand#1' AND p.p_type <> 'PROMO'
-        |  AND p.p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
-        |  AND pr.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q_pivot_wide" ->
-      """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (WHERE event_type = 'click') AS DOUBLE) AS click,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (event_type = 'error') AS DOUBLE) AS error,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (WHERE event_type = 'purchase') AS DOUBLE) AS purchase,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (event_type = 'signup') AS DOUBLE) AS signup,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (event_type = 'view') AS DOUBLE) AS view
-        |FROM events
-        |GROUP BY date_trunc('day', ts)
-        |ORDER BY day""".stripMargin,
-    "q_pivot_fill_zero" ->
-      """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |  coalesce(CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (WHERE event_type = 'click') AS DOUBLE), 0) AS click,
-        |  coalesce(CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (event_type = 'error') AS DOUBLE), 0) AS error,
-        |  coalesce(CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (WHERE event_type = 'purchase') AS DOUBLE), 0) AS purchase,
-        |  coalesce(CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (event_type = 'signup') AS DOUBLE), 0) AS signup,
-        |  coalesce(CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (event_type = 'view') AS DOUBLE), 0) AS view
-        |FROM events
-        |GROUP BY date_trunc('day', ts)
-        |ORDER BY day""".stripMargin,
-    "q_symbol_search" ->
-      """SELECT p_partkey, p_name,
-        |  CAST(CASE WHEN lower(p_name) = 'small' THEN 0
-        |            WHEN starts_with(lower(p_name), 'small') THEN 1
-        |            ELSE 2 END AS BIGINT) AS match_rank
-        |FROM part
-        |WHERE contains(lower(p_name), 'small')
-        |ORDER BY match_rank, p_name, p_partkey""".stripMargin,
-    "q_parse_percent" ->
-      """WITH m AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 13 = 0 THEN 'N/A'
-        |         ELSE CAST(o_orderkey % 89 AS VARCHAR) || '.' || CAST(o_orderkey % 10 AS VARCHAR) || '%' END AS pct_str,
-        |    CASE WHEN o_orderkey % 17 = 0 THEN '?'
-        |         ELSE '$' || CAST(o_orderkey % 999 AS VARCHAR) || '.' || CAST(o_orderkey % 90 + 10 AS VARCHAR) ||
-        |              (['','K','M','B'])[CAST(o_orderkey % 4 AS INT) + 1] END AS cur_str
-        |  FROM orders
-        |)
-        |SELECT o_orderkey, pct_str, cur_str,
-        |  CASE WHEN regexp_matches(pct_str, '^\s*(-?[0-9]+(\.[0-9]+)?)%\s*$')
-        |       THEN CAST(regexp_extract(pct_str, '^\s*(-?[0-9]+(\.[0-9]+)?)%\s*$', 1) AS DOUBLE) END AS pct,
-        |  CASE WHEN regexp_matches(cur_str, '^\s*\$(-?[0-9]+(\.[0-9]+)?)([KMB])?\s*$')
-        |       THEN CAST(regexp_extract(cur_str, '^\s*\$(-?[0-9]+(\.[0-9]+)?)([KMB])?\s*$', 1) AS DOUBLE)
-        |            * CASE regexp_extract(cur_str, '^\s*\$(-?[0-9]+(\.[0-9]+)?)([KMB])?\s*$', 3)
-        |                WHEN 'K' THEN 1e3 WHEN 'M' THEN 1e6 WHEN 'B' THEN 1e9 ELSE 1.0 END END AS cur_usd
-        |FROM m ORDER BY o_orderkey""".stripMargin,
-    "q_redact_pii" ->
-      """WITH m AS (
-        |  SELECT o_orderkey, o_orderkey % 1000000000 AS kid
-        |  FROM orders
-        |), c AS (
-        |  SELECT o_orderkey,
-        |    'order ' || CAST(kid AS VARCHAR) ||
-        |    ' contact user' || CAST(kid % 97 AS VARCHAR) || '@mail' || CAST(kid % 7 AS VARCHAR) || '.com' ||
-        |    ' ph +' || CAST(kid % 9 + 1 AS VARCHAR) || '-' || CAST(kid % 900 + 100 AS VARCHAR) || '-' || CAST(kid % 9000 + 1000 AS VARCHAR) ||
-        |    ' acct ' || CAST(kid * 137 + 10000000 AS VARCHAR) AS contact
-        |  FROM m
-        |)
-        |SELECT o_orderkey, contact,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(contact, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\+?[0-9]{1,3}[- .][0-9]{3}[- .][0-9]{4}', '<PHONE>', 'g'),
-        |    '[0-9]{8,}', '<ID>', 'g') AS redacted
-        |FROM c ORDER BY o_orderkey""".stripMargin,
-    "q_rag_pipeline" ->
-      """WITH chunks AS (
-        |  SELECT doc_id, off // 80 AS chunk_id, substr(text, CAST(off AS INT) + 1, 100) AS chunk
-        |  FROM (SELECT doc_id, text, unnest(generate_series(0, len(text) - 1, 80)) AS off FROM documents)
-        |), emb AS (
-        |  SELECT doc_id, chunk_id,
-        |    list_transform(generate_series(0, 15), i ->
-        |      coalesce(list_sum(list_transform(string_split(lower(chunk), ' '),
-        |        t -> CASE WHEN CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 16 = i
-        |             THEN 1.0 - 2 * (CAST('0x' || substr(md5(t), 9, 1) AS BIGINT) % 2) ELSE 0.0 END)), 0.0)) AS v
-        |  FROM chunks
-        |), q AS (
-        |  SELECT list_transform(generate_series(0, 15), i ->
-        |      coalesce(list_sum(list_transform(string_split('fast spark query join merge', ' '),
-        |        t -> CASE WHEN CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 16 = i
-        |             THEN 1.0 - 2 * (CAST('0x' || substr(md5(t), 9, 1) AS BIGINT) % 2) ELSE 0.0 END)), 0.0)) AS qv
-        |), scored AS (
-        |  SELECT doc_id, chunk_id,
-        |    list_dot_product(e.v, q.qv)
-        |      / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-        |  FROM emb e CROSS JOIN q
-        |  WHERE sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv)) != 0
-        |)
-        |SELECT doc_id, chunk_id, cos,
-        |  row_number() OVER (ORDER BY cos DESC, doc_id, chunk_id) AS rnk
-        |FROM (SELECT * FROM scored ORDER BY cos DESC, doc_id, chunk_id LIMIT 5)
-        |ORDER BY rnk""".stripMargin,
-    "q_rag_batch" ->
-      """WITH chunks AS (
-        |  SELECT doc_id, off // 80 AS chunk_id, substr(text, CAST(off AS INT) + 1, 100) AS chunk
-        |  FROM (SELECT doc_id, text, unnest(generate_series(0, len(text) - 1, 80)) AS off FROM documents)
-        |), emb AS (
-        |  SELECT doc_id, chunk_id,
-        |    list_transform(generate_series(0, 15), i ->
-        |      coalesce(list_sum(list_transform(string_split(lower(chunk), ' '),
-        |        t -> CASE WHEN CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 16 = i
-        |             THEN 1.0 - 2 * (CAST('0x' || substr(md5(t), 9, 1) AS BIGINT) % 2) ELSE 0.0 END)), 0.0)) AS v
-        |  FROM chunks
-        |), q AS (
-        |  SELECT CAST(qid AS BIGINT) AS qid,
-        |    list_transform(generate_series(0, 15), i ->
-        |      coalesce(list_sum(list_transform(string_split(lower(query), ' '),
-        |        t -> CASE WHEN CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 16 = i
-        |             THEN 1.0 - 2 * (CAST('0x' || substr(md5(t), 9, 1) AS BIGINT) % 2) ELSE 0.0 END)), 0.0)) AS qv
-        |  FROM (VALUES (1, 'gain up good value'), (2, 'slow error bad join'), (3, 'spark table scan')) AS vq(qid, query)
-        |), scored AS (
-        |  SELECT q.qid, e.doc_id, e.chunk_id,
-        |    list_dot_product(e.v, q.qv)
-        |      / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-        |  FROM emb e CROSS JOIN q
-        |  WHERE sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv)) != 0
-        |)
-        |SELECT qid, doc_id, chunk_id, cos,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, doc_id, chunk_id) AS rnk
-        |FROM scored
-        |QUALIFY rnk <= 3
-        |ORDER BY qid, rnk""".stripMargin,
-    // per-pair BM25 sums fold in TERM order on both engines (the
-    // q_perplexity determinism recipe); formula trees mirrored
-    // operation-for-operation so doubles are bit-identical
-    "q_bm25_topk" ->
-      """WITH tf AS (
-        |  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents)
-        |  GROUP BY doc_id, t
-        |), dfq AS (
-        |  SELECT t, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY t
-        |), dl AS (
-        |  SELECT doc_id, CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS dl FROM documents
-        |), st AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT) AS tot FROM documents
-        |), q AS (
-        |  SELECT query_id, unnest(list_distinct(string_split(lower(q_text), ' '))) AS t
-        |  FROM (VALUES (CAST(1 AS BIGINT), 'gain up good value'),
-        |               (CAST(2 AS BIGINT), 'slow error bad join'),
-        |               (CAST(3 AS BIGINT), 'spark table scan')) AS vq(query_id, q_text)
-        |), terms AS (
-        |  SELECT q.query_id, tf.doc_id, tf.t,
-        |    ln(1 + (CAST(st.n_docs AS DOUBLE) - CAST(dfq.df AS DOUBLE) + 0.5) / (CAST(dfq.df AS DOUBLE) + 0.5))
-        |      * (CAST(tf.tf AS DOUBLE) * (1.2 + 1.0)) /
-        |      (CAST(tf.tf AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-        |        (CAST(dl.dl AS DOUBLE) * CAST(st.n_docs AS DOUBLE) / CAST(st.tot AS DOUBLE)))) AS term
-        |  FROM tf JOIN q USING (t) JOIN dfq USING (t) JOIN dl USING (doc_id) CROSS JOIN st
-        |), sc AS (
-        |  SELECT query_id, doc_id,
-        |    round(list_reduce(list(term ORDER BY t), (a, b) -> a + b), 6) AS score
-        |  FROM terms GROUP BY query_id, doc_id
-        |)
-        |SELECT query_id, doc_id, score,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id ASC) AS BIGINT) AS rnk
-        |FROM sc
-        |QUALIFY rnk <= 5
-        |ORDER BY query_id, rnk""".stripMargin,
-    "q_ohlc_resample" ->
-      """SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS bar_start,
-        |  min_by(value, ts) AS open,
-        |  max(value) AS high,
-        |  min(value) AS low,
-        |  max_by(value, ts) AS close,
-        |  count(*) AS n_obs
-        |FROM events
-        |GROUP BY user_id, date_trunc('day', ts)
-        |ORDER BY user_id, bar_start""".stripMargin,
-    "q_ohlc_weekly" ->
-      """SELECT user_id, strftime(date_trunc('week', ts), '%Y-%m-%d') AS bar_start,
-        |  min_by(value, ts) AS open,
-        |  max(value) AS high,
-        |  min(value) AS low,
-        |  max_by(value, ts) AS close,
-        |  count(*) AS n_obs
-        |FROM events
-        |GROUP BY user_id, date_trunc('week', ts)
-        |ORDER BY user_id, bar_start""".stripMargin,
-    "q_topn_per_group" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rnk
-        |FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rnk
-        |  FROM orders
-        |)
-        |WHERE rnk <= 3
-        |ORDER BY o_custkey, rnk""".stripMargin,
-    "q_filter_agg" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue, count(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q_semi_join" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders
-        |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_quantity > 45)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_anti_join" ->
-      """SELECT c_mktsegment, count(*) AS n_idle_customers
-        |FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 450000)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_json_extract" ->
-      """SELECT event_type, count(*) AS n,
-        |  avg(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS avg_k,
-        |  min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_asof_join" ->
-      """SELECT t.user_id, epoch_us(t.ts) AS ts_us, t.value, q.value AS asof_val
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') t
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') q
-        |  ON t.user_id = q.user_id AND q.ts <= t.ts
-        |ORDER BY t.user_id, ts_us""".stripMargin,
-    "q_asof_tolerance" ->
-      """SELECT t.user_id, epoch_us(t.ts) AS ts_us, t.value,
-        |  CASE WHEN epoch_us(t.ts) - epoch_us(q.ts) <= 7200000000 THEN q.value END AS asof_val,
-        |  CASE WHEN epoch_us(t.ts) - epoch_us(q.ts) <= 7200000000 THEN epoch_us(t.ts) - epoch_us(q.ts) END AS asof_age_us
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') t
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') q
-        |  ON t.user_id = q.user_id AND q.ts <= t.ts
-        |ORDER BY t.user_id, ts_us""".stripMargin,
-    "q_asof_global" ->
-      """SELECT t.event_id, t.user_id, epoch_us(t.ts) AS ts_us, t.value, q.value AS asof_val
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') t
-        |ASOF LEFT JOIN (SELECT ts, value FROM events WHERE user_id = 0 AND event_type = 'view') q
-        |  ON q.ts <= t.ts
-        |ORDER BY t.event_id""".stripMargin,
-    "q_except_keys" ->
-      """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |EXCEPT
-        |SELECT o_custkey FROM orders WHERE o_totalprice > 450000
-        |ORDER BY c_custkey""".stripMargin,
-    "q_intersect_keys" ->
-      """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE o_totalprice > 450000
-        |ORDER BY c_custkey""".stripMargin,
-    "q_percentiles" ->
-      """SELECT event_type,
-        |  round(quantile_cont(value, 0.25), 6) AS p25,
-        |  round(quantile_cont(value, 0.5), 6) AS p50,
-        |  round(quantile_cont(value, 0.9), 6) AS p90
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_histogram" ->
-      """SELECT CAST(floor(value / 50.0) AS BIGINT) AS bin, count(*) AS n,
-        |  min(value) AS bin_min, max(value) AS bin_max
-        |FROM events GROUP BY 1 ORDER BY bin""".stripMargin,
-    // the oracle's single global cumsum IS the distributed prefix sum's
-    // semantics: offset + local cumsum = global prefix count wherever
-    // the range bounds land
-    "q_ks_test" ->
-      """WITH base AS (
-        |  SELECT value AS x,
-        |    CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS ia,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ib
-        |  FROM events WHERE event_type IN ('view', 'click')
-        |), d AS (
-        |  SELECT x, sum(ia) AS ca, sum(ib) AS cb FROM base GROUP BY x
-        |), c AS (
-        |  SELECT x,
-        |    sum(ca) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS cuma,
-        |    sum(cb) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS cumb
-        |  FROM d
-        |), t AS (
-        |  SELECT CAST((SELECT sum(ca) FROM d) AS BIGINT) AS n_a,
-        |         CAST((SELECT sum(cb) FROM d) AS BIGINT) AS n_b
-        |)
-        |SELECT n_a, n_b,
-        |  round(max(abs(CAST(cuma AS DOUBLE) / n_a - CAST(cumb AS DOUBLE) / n_b)), 6) AS ks_stat
-        |FROM c, t GROUP BY n_a, n_b""".stripMargin,
-    "q_chi2" ->
-      """WITH cells AS (
-        |  SELECT event_type AS et, isodow(ts) AS dow, count(*) AS o
-        |  FROM events GROUP BY 1, 2
-        |), rt AS (SELECT et, sum(o) AS rt FROM cells GROUP BY et),
-        |ct AS (SELECT dow, sum(o) AS ct FROM cells GROUP BY dow),
-        |tot AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-        |  count(DISTINCT et) AS nr, count(DISTINCT dow) AS nc FROM cells),
-        |grid AS (
-        |  SELECT rt.et, ct.dow, rt.rt, ct.ct, coalesce(cells.o, 0) AS o0
-        |  FROM rt CROSS JOIN ct
-        |  LEFT JOIN cells ON cells.et = rt.et AND cells.dow = ct.dow
-        |)
-        |SELECT n, (nr - 1) * (nc - 1) AS dof,
-        |  round(sum(pow(CAST(o0 AS DOUBLE) - CAST(rt * ct AS DOUBLE) / n, 2)
-        |    / (CAST(rt * ct AS DOUBLE) / n)), 6) AS chi2
-        |FROM grid CROSS JOIN tot
-        |GROUP BY n, dof""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-        |  coalesce(l_linestatus, 'ALL') AS linestatus,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus), ())
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    "q_gap_detect" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), g AS (
-        |  SELECT user_id, day,
-        |    lead(day) OVER (PARTITION BY user_id ORDER BY day) AS next_day
-        |  FROM bars
-        |)
-        |SELECT user_id,
-        |  strftime(day + INTERVAL 1 DAY, '%Y-%m-%d') AS gap_start,
-        |  CAST(date_diff('day', day, next_day) - 1 AS BIGINT) AS gap_days
-        |FROM g
-        |WHERE next_day IS NOT NULL AND date_diff('day', day, next_day) > 1
-        |ORDER BY user_id, gap_start""".stripMargin,
-    "q_ichimoku" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), m AS (
-        |  SELECT user_id, bar_start, close,
-        |    (max(high) OVER w9 + min(low) OVER w9) / 2 AS tenkan_raw,
-        |    (max(high) OVER w26 + min(low) OVER w26) / 2 AS kijun_raw,
-        |    (max(high) OVER w52 + min(low) OVER w52) / 2 AS senkou_b_raw
-        |  FROM bars
-        |  WINDOW
-        |    w9  AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 8 PRECEDING AND CURRENT ROW),
-        |    w26 AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 25 PRECEDING AND CURRENT ROW),
-        |    w52 AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 51 PRECEDING AND CURRENT ROW)
-        |), l AS (
-        |  SELECT user_id, bar_start, close, tenkan_raw, kijun_raw,
-        |    round(lag((tenkan_raw + kijun_raw) / 2, 26) OVER ws, 6) AS senkou_a,
-        |    round(lag(senkou_b_raw, 26) OVER ws, 6) AS senkou_b,
-        |    lead(close, 26) OVER ws AS chikou
-        |  FROM m
-        |  WINDOW ws AS (PARTITION BY user_id ORDER BY bar_start)
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start,
-        |  round(tenkan_raw, 6) AS tenkan, round(kijun_raw, 6) AS kijun,
-        |  senkou_a, senkou_b, chikou,
-        |  CASE WHEN senkou_a IS NOT NULL AND senkou_b IS NOT NULL
-        |    THEN close > greatest(senkou_a, senkou_b) END AS above_cloud
-        |FROM l
-        |ORDER BY user_id, bar_start""".stripMargin,
-    "q_pivot_points" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), l AS (
-        |  SELECT user_id, bar_start, close,
-        |    lag(high) OVER ws AS h1, lag(low) OVER ws AS l1, lag(close) OVER ws AS c1
-        |  FROM bars
-        |  WINDOW ws AS (PARTITION BY user_id ORDER BY bar_start)
-        |), p AS (
-        |  SELECT user_id, bar_start, close, h1, l1, (h1 + l1 + c1) / 3 AS p_raw FROM l
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start, close,
-        |  round(p_raw, 6) AS pivot,
-        |  round(p_raw * 2 - l1, 6) AS r1,
-        |  round(p_raw * 2 - h1, 6) AS s1,
-        |  round(p_raw + (h1 - l1), 6) AS r2,
-        |  round(p_raw - (h1 - l1), 6) AS s2,
-        |  CASE WHEN p_raw IS NOT NULL THEN close > p_raw END AS above_pivot
-        |FROM p
-        |ORDER BY user_id, bar_start""".stripMargin,
-    "q_cube" ->
-      """SELECT coalesce(event_type, 'ALL') AS event_type,
-        |  coalesce(user_id % 10, -1) AS cohort,
-        |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY CUBE(event_type, user_id % 10)
-        |ORDER BY event_type, cohort""".stripMargin,
-    "q_unpivot_long" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    min_by(value, ts) AS open, max(value) AS high, min(value) AS low,
-        |    max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start, field, px FROM (
-        |  SELECT user_id, bar_start, 'open' AS field, open AS px FROM bars
-        |  UNION ALL SELECT user_id, bar_start, 'high', high FROM bars
-        |  UNION ALL SELECT user_id, bar_start, 'low', low FROM bars
-        |  UNION ALL SELECT user_id, bar_start, 'close', close FROM bars
-        |)
-        |ORDER BY user_id, bar_start, field""".stripMargin,
-    "q_rollup" ->
-      """SELECT coalesce(event_type, 'ALL') AS event_type,
-        |  coalesce(user_id % 10, -1) AS cohort,
-        |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY ROLLUP(event_type, user_id % 10)
-        |ORDER BY event_type, cohort""".stripMargin,
-    "q_distinct_counts" ->
-      """SELECT l_returnflag,
-        |  count(DISTINCT l_orderkey) AS n_orders,
-        |  count(DISTINCT l_suppkey) AS n_suppliers,
-        |  count(*) AS n_lines
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // the within_bound flags are engine-deterministic (HLL++/GK are
-    // deterministic given the data) — the oracle asserts they hold
-    "q_approx_distinct" ->
-      """SELECT l_returnflag,
-        |  count(DISTINCT l_orderkey) AS n_orders,
-        |  count(DISTINCT l_suppkey) AS n_suppliers,
-        |  TRUE AS orders_within_bound,
-        |  TRUE AS suppliers_within_bound
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_sketch_merge" ->
-      """SELECT l_returnflag,
-        |  count(DISTINCT l_orderkey) AS n_orders,
-        |  TRUE AS merge_within_bound
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_salted_join" ->
-      """SELECT l_orderkey, l_linenumber, o_totalprice
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_approx_percentiles" ->
-      """SELECT event_type,
-        |  round(quantile_cont(value, 0.25), 6) AS p25_exact,
-        |  round(quantile_cont(value, 0.5), 6) AS p50_exact,
-        |  round(quantile_cont(value, 0.9), 6) AS p90_exact,
-        |  TRUE AS p25_within_bound,
-        |  TRUE AS p50_within_bound,
-        |  TRUE AS p90_within_bound
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_clean_normalize" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS norm_text,
-        |  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS norm_fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // the d x w counter matrix replays exactly: buckets are md5 of
-    // the row-tagged token, counters integer sums — est is min over
-    // the token's d counters, all engine-deterministic
-    "q_heavy_hitters" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents
-        |), counts AS (
-        |  SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM counts
-        |), hot AS (
-        |  SELECT tok, cnt FROM counts CROSS JOIN tot WHERE cnt * 100 >= n_total
-        |), pairs AS (
-        |  SELECT r.r,
-        |    CAST(concat('0x', substr(md5(concat(CAST(r.r AS VARCHAR), ':', t.tok)), 1, 8)) AS BIGINT) % 16 AS b,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM toks t CROSS JOIN (SELECT unnest([0, 1, 2]) AS r) r
-        |  GROUP BY 1, 2
-        |), est AS (
-        |  SELECT h.tok, min(p.c) AS cms_est
-        |  FROM hot h JOIN pairs p
-        |    ON p.b = CAST(concat('0x', substr(md5(concat(CAST(p.r AS VARCHAR), ':', h.tok)), 1, 8)) AS BIGINT) % 16
-        |  GROUP BY h.tok
-        |)
-        |SELECT h.tok, h.cnt, e.cms_est, CAST(e.cms_est >= h.cnt AS INT) AS cms_upper_ok
-        |FROM hot h JOIN est e USING (tok)
-        |ORDER BY tok""".stripMargin,
-    "q_fill_forward" ->
-      """SELECT user_id, epoch_us(ts) AS ts_us,
-        |  last_value(CASE WHEN event_type != 'error' THEN value END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled
-        |FROM events ORDER BY user_id, ts_us""".stripMargin,
-    "q_resample_ffill" ->
-      """WITH grid AS (
-        |  SELECT user_id, unnest(generate_series(DATE '2024-01-01', DATE '2024-01-30', INTERVAL 1 DAY)) AS day
-        |  FROM (SELECT DISTINCT user_id FROM events)
-        |), closes AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |)
-        |SELECT g.user_id, strftime(g.day, '%Y-%m-%d') AS day,
-        |  last_value(c.close IGNORE NULLS)
-        |    OVER (PARTITION BY g.user_id ORDER BY g.day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS close_ffill
-        |FROM grid g LEFT JOIN closes c ON g.user_id = c.user_id AND g.day = c.day
-        |ORDER BY g.user_id, day""".stripMargin,
-    "q_hash_sample" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-        |FROM events
-        |WHERE CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 10
-        |ORDER BY event_id""".stripMargin,
-    "q_dataset_split" ->
-      """WITH s AS (
-        |  SELECT event_type,
-        |    CASE
-        |      WHEN CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 90 THEN 'train'
-        |      WHEN CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 95 THEN 'val'
-        |      ELSE 'test'
-        |    END AS split
-        |  FROM events
-        |)
-        |SELECT split, event_type, count(*) AS n
-        |FROM s GROUP BY split, event_type ORDER BY split, event_type""".stripMargin,
-    "q_domain_mix" ->
-      """SELECT doc_id, source
-        |FROM documents
-        |WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 <
-        |  CASE source WHEN 'src0' THEN 10 WHEN 'src1' THEN 25 WHEN 'src2' THEN 50 WHEN 'src3' THEN 75 ELSE 100 END
-        |ORDER BY doc_id""".stripMargin,
-    "q_token_budget_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, len(string_split(text, ' ')) AS n_tok,
-        |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, source, n_tok,
-        |    sum(n_tok) OVER (PARTITION BY source ORDER BY h ASC, doc_id ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tok
-        |  FROM d
-        |)
-        |SELECT doc_id, source, n_tok, CAST(cum_tok AS BIGINT) AS cum_tok
-        |FROM c WHERE cum_tok <= 800
-        |ORDER BY source, cum_tok""".stripMargin,
-    "q_token_budget_rate" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, len(string_split(text, ' ')) AS n_tok FROM documents
-        |), t AS (
-        |  SELECT source, CAST(sum(n_tok) AS BIGINT) AS tot_tok FROM d GROUP BY source
-        |)
-        |SELECT d.doc_id, d.source, d.n_tok
-        |FROM d JOIN t USING (source)
-        |WHERE CAST(CAST(concat('0x', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS DOUBLE) <
-        |  least(800.0 / CAST(t.tot_tok AS DOUBLE), 1.0) * 4294967296.0
-        |ORDER BY d.doc_id""".stripMargin,
-    "q_weighted_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    least(greatest(CAST(len(string_split(text, ' ')) AS BIGINT), 1), 1000) AS w
-        |  FROM documents
-        |), r AS (
-        |  SELECT doc_id, w,
-        |    list_max(list_transform(range(w), j ->
-        |      CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':', CAST(j AS VARCHAR))), 1, 15)) AS BIGINT))) AS race
-        |  FROM d
-        |)
-        |SELECT doc_id, w, race FROM r
-        |ORDER BY race DESC, doc_id ASC LIMIT 50""".stripMargin,
-    "q_temperature_mix" ->
-      """WITH c AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_src,
-        |    CAST(floor(sqrt(count(*))) AS BIGINT) AS w
-        |  FROM documents GROUP BY source
-        |), s AS (
-        |  SELECT c.*, (SELECT CAST(sum(w) AS BIGINT) FROM c) AS sum_w FROM c
-        |), r AS (
-        |  SELECT s.*,
-        |    CAST(CAST(200 AS HUGEINT) * w // sum_w AS BIGINT) AS target_n
-        |  FROM s
-        |)
-        |SELECT d.doc_id, d.source, r.n_src, r.w, r.target_n,
-        |  r.target_n >= r.n_src AS saturated
-        |FROM documents d JOIN r ON d.source = r.source
-        |WHERE CAST(CAST(concat('0x', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS HUGEINT)
-        |    * r.sum_w * r.n_src
-        |  < CAST(200 AS HUGEINT) * r.w * 4294967296
-        |ORDER BY d.doc_id""".stripMargin,
-    // w = floor(n^(3/10)) characterized by w^10 <= n^3 < (w+1)^10:
-    // the float pow only SEEDS a +/-2 candidate window, the exact
-    // HUGEINT comparison picks w — identical on both engines even
-    // when their pow differs in the last ulp
-    "q_temperature_mix_alpha" ->
-      """WITH c AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_src,
-        |    CAST(floor(pow(count(*), 0.3)) AS BIGINT) AS w0
-        |  FROM documents GROUP BY source
-        |), wv AS (
-        |  SELECT source, n_src, max(cand) AS w
-        |  FROM (
-        |    SELECT c.source, c.n_src, u.cand
-        |    FROM c, unnest(generate_series(greatest(c.w0 - 2, 1), c.w0 + 2)) AS u(cand)
-        |    WHERE CAST(u.cand AS HUGEINT) * u.cand * u.cand * u.cand * u.cand
-        |          * u.cand * u.cand * u.cand * u.cand * u.cand
-        |      <= CAST(c.n_src AS HUGEINT) * c.n_src * c.n_src
-        |  ) GROUP BY source, n_src
-        |), s AS (
-        |  SELECT wv.*, (SELECT CAST(sum(w) AS BIGINT) FROM wv) AS sum_w FROM wv
-        |), r AS (
-        |  SELECT s.*, CAST(CAST(200 AS HUGEINT) * w // sum_w AS BIGINT) AS target_n FROM s
-        |)
-        |SELECT d.doc_id, d.source, r.n_src, r.w, r.target_n,
-        |  r.target_n >= r.n_src AS saturated
-        |FROM documents d JOIN r ON d.source = r.source
-        |WHERE CAST(CAST(concat('0x', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS HUGEINT)
-        |    * r.sum_w * r.n_src
-        |  < CAST(200 AS HUGEINT) * r.w * 4294967296
-        |ORDER BY d.doc_id""".stripMargin,
-    "q_stratified_sample" ->
-      """SELECT event_type, event_id
-        |FROM (
-        |  SELECT event_type, event_id,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC, event_id ASC) AS rn
-        |  FROM events
-        |)
-        |WHERE rn <= 50
-        |ORDER BY event_type, event_id""".stripMargin,
-    "q_interval_join" ->
-      """WITH ivl AS (
-        |  SELECT user_id, ts AS f, ts + INTERVAL 2 HOUR AS u, max(value) AS ivl_val
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |)
-        |SELECT e.user_id, epoch_us(e.ts) AS ts_us, e.event_id, e.value,
-        |  epoch_us(i.f) AS ivl_from_us, i.ivl_val
-        |FROM events e JOIN ivl i ON e.user_id = i.user_id AND e.ts >= i.f AND e.ts < i.u
-        |QUALIFY row_number() OVER (PARTITION BY e.event_id ORDER BY i.f DESC) = 1
-        |ORDER BY e.user_id, ts_us, e.event_id""".stripMargin,
-    "q_time_features" ->
-      """SELECT event_id, year(ts) AS yr, month(ts) AS mo, dayofweek(ts) AS dow,
-        |  dayofyear(ts) AS doy, hour(ts) AS hr
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_rank_suite" ->
-      """SELECT event_id, user_id, value,
-        |  rank() OVER wv AS rnk,
-        |  dense_rank() OVER wv AS drnk,
-        |  percent_rank() OVER wv AS prnk,
-        |  cume_dist() OVER wv AS cdist,
-        |  ntile(4) OVER wv AS quartile,
-        |  lead(value, 1) OVER (PARTITION BY user_id ORDER BY ts) AS next_value
-        |FROM events
-        |WINDOW wv AS (PARTITION BY user_id ORDER BY value DESC, event_id ASC)
-        |ORDER BY event_id""".stripMargin,
-    "q_scd2_intervals" ->
-      """SELECT user_id, value,
-        |  epoch_us(ts) AS from_us,
-        |  epoch_us(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) AS to_us,
-        |  event_id
-        |FROM events
-        |ORDER BY user_id, from_us, event_id""".stripMargin,
-    "q_winsorize" ->
-      """WITH b AS (
-        |  SELECT event_type,
-        |    quantile_cont(value, 0.05) AS lo, quantile_cont(value, 0.95) AS hi
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT event_id, e.event_type,
-        |  round(greatest(b.lo, least(b.hi, e.value)), 6) AS value_w
-        |FROM events e JOIN b ON e.event_type = b.event_type
-        |ORDER BY event_id""".stripMargin,
-    "q_monthly_returns" ->
-      """WITH m AS (
-        |  SELECT user_id, date_trunc('month', ts) AS month, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |)
-        |SELECT user_id, strftime(month, '%Y-%m') AS month,
-        |  close,
-        |  CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS mret
-        |FROM m WINDOW w AS (PARTITION BY user_id ORDER BY month)
-        |ORDER BY user_id, month""".stripMargin,
-    "q_daily_returns" ->
-      """SELECT user_id, epoch_us(ts) AS ts_us,
-        |  CASE WHEN lag(value) OVER w != 0 THEN value / lag(value) OVER w - 1 END AS ret
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |QUALIFY CASE WHEN lag(value) OVER w != 0 THEN value / lag(value) OVER w - 1 END IS NOT NULL
-        |ORDER BY user_id, ts_us""".stripMargin,
-    "q_metrics_summary" ->
-      """WITH r AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(value) OVER w != 0 THEN value / lag(value) OVER w - 1 END AS ret
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |  QUALIFY ret IS NOT NULL
-        |)
-        |SELECT user_id,
-        |  round(avg(ret) * 252, 6) AS ann_return,
-        |  round(stddev_samp(ret) * sqrt(252), 6) AS volatility,
-        |  round(CASE WHEN stddev_samp(ret) != 0
-        |    THEN (avg(ret) * 252) / (stddev_samp(ret) * sqrt(252)) END, 6) AS sharpe
-        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_ytd_return" ->
-      """SELECT user_id,
-        |  CASE WHEN min_by(value, ts) != 0 THEN max_by(value, ts) / min_by(value, ts) - 1 END AS ytd_return
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_max_drawdown" ->
-      """WITH rm AS (
-        |  SELECT user_id, value,
-        |    max(value) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_max
-        |  FROM events
-        |)
-        |SELECT user_id, min(CASE WHEN run_max != 0 THEN value / run_max - 1 END) AS max_drawdown
-        |FROM rm GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_portfolio_return" ->
-      """WITH latest AS (
-        |  SELECT user_id, max_by(value, ts) AS level FROM events GROUP BY user_id
-        |), tot AS (
-        |  SELECT CAST(sum(CAST(level AS DECIMAL(18,2))) AS DOUBLE) AS total_level FROM latest
-        |), w AS (
-        |  SELECT user_id, level / total_level AS w FROM latest CROSS JOIN tot
-        |), dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER win != 0 THEN close / lag(close) OVER win - 1 END AS ret
-        |  FROM dc WINDOW win AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |)
-        |SELECT strftime(r.day, '%Y-%m-%d') AS day,
-        |  round(sum(w.w * r.ret), 6) AS port_ret
-        |FROM r JOIN w USING (user_id)
-        |GROUP BY r.day ORDER BY day""".stripMargin,
-    "q_concentration" ->
-      """WITH latest AS (
-        |  SELECT user_id, CAST(max_by(value, ts) AS DECIMAL(18,2)) AS level,
-        |    user_id % 10 AS portfolio
-        |  FROM events GROUP BY user_id
-        |), r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY portfolio ORDER BY level DESC, user_id ASC) AS rnk
-        |  FROM latest
-        |)
-        |, m AS (
-        |  SELECT portfolio, count(*) AS n_holdings,
-        |    CAST(sum(CASE WHEN rnk <= 10 THEN level END) AS DOUBLE) / CAST(sum(level) AS DOUBLE) AS top_share,
-        |    CAST(max(level) AS DOUBLE) / CAST(sum(level) AS DOUBLE) AS max_weight,
-        |    CAST(sum(level * level) AS DOUBLE) / (CAST(sum(level) AS DOUBLE) * CAST(sum(level) AS DOUBLE)) AS hhi
-        |  FROM r GROUP BY portfolio
-        |)
-        |SELECT portfolio, n_holdings,
-        |  top_share,
-        |  CASE WHEN top_share > 0.5 THEN 'exceeds' WHEN top_share > 0.5 * 0.9 THEN 'approaching' ELSE 'within' END AS top_share_status,
-        |  max_weight,
-        |  CASE WHEN max_weight > 0.25 THEN 'exceeds' WHEN max_weight > 0.25 * 0.9 THEN 'approaching' ELSE 'within' END AS max_weight_status,
-        |  hhi,
-        |  CASE WHEN hhi > 0.15 THEN 'exceeds' WHEN hhi > 0.15 * 0.9 THEN 'approaching' ELSE 'within' END AS hhi_status
-        |FROM m ORDER BY portfolio""".stripMargin,
-    "q_drawdown_duration" ->
-      """WITH rm AS (
-        |  SELECT user_id, ts, value,
-        |    max(value) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_max
-        |  FROM events
-        |), u AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN value < run_max THEN 1 ELSE 0 END AS under
-        |  FROM rm
-        |), s AS (
-        |  SELECT user_id, under,
-        |    sum(1 - under) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS streak_id
-        |  FROM u
-        |), l AS (
-        |  SELECT user_id, streak_id, CAST(sum(under) AS BIGINT) AS streak_len
-        |  FROM s GROUP BY user_id, streak_id
-        |)
-        |SELECT user_id, max(streak_len) AS max_underwater_run
-        |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_cumulative_returns" ->
-      """SELECT user_id, epoch_us(ts) AS ts_us,
-        |  CASE WHEN first_value(value) OVER w != 0 THEN value / first_value(value) OVER w END AS cum_return
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts_us""".stripMargin,
-    "q_sma" ->
-      """SELECT user_id, epoch_us(ts) AS ts_us,
-        |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN 9 PRECEDING AND CURRENT ROW), 6) AS sma
-        |FROM events ORDER BY user_id, ts_us""".stripMargin,
-    "q_ema" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS rn
-        |  FROM events
-        |), g AS (
-        |  SELECT *, CASE WHEN rn = 0 THEN value ELSE (2.0/21) * value * pow(1 - 2.0/21, -rn) END AS gg
-        |  FROM o
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us,
-        |  round(pow(1 - 2.0/21, rn) * sum(gg) OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS ema
-        |FROM g ORDER BY user_id, ts_us""".stripMargin,
-    // DuckDB list_reduce folds left seeded with the first element —
-    // the exact arithmetic of EmaAggregate.eval (y = a*x + (1-a)*y in
-    // ts order), so the doubles are bit-identical, not just close
-    "q_ema_fold" ->
-      """SELECT user_id,
-        |  round(list_reduce(list(value ORDER BY ts), (y, x) -> (2.0/21)*x + (1 - 2.0/21)*y), 6) AS ema_final
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // exact-integer weighted numerator, ONE final IEEE division of
-    // exact operands -> bit-identical doubles, UNROUNDED
-    "q_wma" ->
-      """WITH q AS (
-        |  SELECT user_id, ts, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), l AS (
-        |  SELECT user_id, ts,
-        |    10*lag(qu,0) OVER w + 9*lag(qu,1) OVER w + 8*lag(qu,2) OVER w
-        |    + 7*lag(qu,3) OVER w + 6*lag(qu,4) OVER w + 5*lag(qu,5) OVER w
-        |    + 4*lag(qu,6) OVER w + 3*lag(qu,7) OVER w + 2*lag(qu,8) OVER w
-        |    + 1*lag(qu,9) OVER w AS wsum
-        |  FROM q WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us, CAST(wsum AS DOUBLE) / 55000000.0 AS wma
-        |FROM l ORDER BY user_id, ts_us""".stripMargin,
-    // HMA(16): d = 68*WMA8num - 9*WMA16num over common denominator
-    // 1224; outer WMA4 of d_num; single division by 10*1224*1e6
-    "q_hma" ->
-      """WITH q AS (
-        |  SELECT user_id, ts, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), l AS (
-        |  SELECT user_id, ts,
-        |    68*(8*lag(qu,0) OVER w + 7*lag(qu,1) OVER w + 6*lag(qu,2) OVER w
-        |        + 5*lag(qu,3) OVER w + 4*lag(qu,4) OVER w + 3*lag(qu,5) OVER w
-        |        + 2*lag(qu,6) OVER w + 1*lag(qu,7) OVER w)
-        |    - 9*(16*lag(qu,0) OVER w + 15*lag(qu,1) OVER w + 14*lag(qu,2) OVER w
-        |        + 13*lag(qu,3) OVER w + 12*lag(qu,4) OVER w + 11*lag(qu,5) OVER w
-        |        + 10*lag(qu,6) OVER w + 9*lag(qu,7) OVER w + 8*lag(qu,8) OVER w
-        |        + 7*lag(qu,9) OVER w + 6*lag(qu,10) OVER w + 5*lag(qu,11) OVER w
-        |        + 4*lag(qu,12) OVER w + 3*lag(qu,13) OVER w + 2*lag(qu,14) OVER w
-        |        + 1*lag(qu,15) OVER w) AS d_num
-        |  FROM q WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |), h AS (
-        |  SELECT user_id, ts,
-        |    4*lag(d_num,0) OVER w2 + 3*lag(d_num,1) OVER w2
-        |    + 2*lag(d_num,2) OVER w2 + 1*lag(d_num,3) OVER w2 AS hsum
-        |  FROM l WINDOW w2 AS (PARTITION BY user_id ORDER BY ts)
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us, CAST(hsum AS DOUBLE) / 12240000000.0 AS hma
-        |FROM h ORDER BY user_id, ts_us""".stripMargin,
-    "q_roc" ->
-      """WITH q AS (
-        |  SELECT user_id, ts, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), l AS (
-        |  SELECT user_id, ts, qu, lag(qu, 10) OVER (PARTITION BY user_id ORDER BY ts) AS lq
-        |  FROM q
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us,
-        |  CASE WHEN lq <> 0 THEN CAST((qu - lq) * 100 AS DOUBLE) / CAST(lq AS DOUBLE) END AS roc
-        |FROM l ORDER BY user_id, ts_us""".stripMargin,
-    "q_dpo" ->
-      """WITH q AS (
-        |  SELECT user_id, ts, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), l AS (
-        |  SELECT user_id, ts,
-        |    10*lag(qu,6) OVER w
-        |    - (lag(qu,0) OVER w + lag(qu,1) OVER w + lag(qu,2) OVER w + lag(qu,3) OVER w
-        |       + lag(qu,4) OVER w + lag(qu,5) OVER w + lag(qu,6) OVER w + lag(qu,7) OVER w
-        |       + lag(qu,8) OVER w + lag(qu,9) OVER w) AS num
-        |  FROM q WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us, CAST(num AS DOUBLE) / 10000000.0 AS dpo
-        |FROM l ORDER BY user_id, ts_us""".stripMargin,
-    "q_trend_flag" ->
-      """SELECT user_id, epoch_us(ts) AS ts_us,
-        |  CAST(value > lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS INT) AS uptrend
-        |FROM events
-        |QUALIFY lag(value) OVER (PARTITION BY user_id ORDER BY ts) IS NOT NULL
-        |ORDER BY user_id, ts_us""".stripMargin,
-    "q_sortino" ->
-      """WITH r AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(value) OVER w != 0 THEN value / lag(value) OVER w - 1 END AS ret
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |  QUALIFY ret IS NOT NULL
-        |)
-        |SELECT user_id,
-        |  round(CASE WHEN stddev_pop(CASE WHEN ret - 0.01/252 < 0 THEN ret - 0.01/252 END) != 0
-        |    THEN avg(ret - 0.01/252) / stddev_pop(CASE WHEN ret - 0.01/252 < 0 THEN ret - 0.01/252 END) END, 6) AS sortino
-        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_tracking_error" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), b AS (SELECT day, ret AS bench_ret FROM r WHERE user_id = 0)
-        |SELECT r.user_id,
-        |  round(stddev_pop(r.ret - b.bench_ret) * sqrt(252) * 100, 6) AS tracking_error_pct
-        |FROM r JOIN b USING (day)
-        |WHERE r.user_id != 0
-        |GROUP BY r.user_id ORDER BY r.user_id""".stripMargin,
-    "q_alpha_beta" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), b AS (SELECT day, ret AS bench_ret FROM r WHERE user_id = 0)
-        |SELECT r.user_id,
-        |  round(CASE WHEN var_samp(b.bench_ret) != 0
-        |    THEN covar_samp(r.ret, b.bench_ret) / var_samp(b.bench_ret) END, 6) AS beta,
-        |  round(CASE WHEN var_samp(b.bench_ret) != 0
-        |    THEN (avg(r.ret) - covar_samp(r.ret, b.bench_ret) / var_samp(b.bench_ret) * avg(b.bench_ret)) * 252 END, 6) AS alpha,
-        |  round(CASE WHEN var_samp(r.ret) != 0 AND var_samp(b.bench_ret) != 0
-        |    THEN pow(corr(r.ret, b.bench_ret), 2) END, 6) AS r_squared
-        |FROM r JOIN b USING (day)
-        |WHERE r.user_id != 0
-        |GROUP BY r.user_id ORDER BY r.user_id""".stripMargin,
-    // terms fold in TOKEN order on both sides (list(... ORDER BY
-    // tok) + list_reduce here, sort_array + aggregate in Spark), so
-    // the float accumulation order is a function of the document
-    // alone and the score hash-matches
-    "q_perplexity" ->
-      """WITH dt AS (
-        |  SELECT doc_id, tok, count(*) AS occ
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-        |  GROUP BY doc_id, tok
-        |), c AS (
-        |  SELECT tok, CAST(sum(occ) AS BIGINT) AS cnt FROM dt GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM c
-        |), terms AS (
-        |  SELECT dt.doc_id, dt.tok, dt.occ,
-        |    -CAST(dt.occ AS DOUBLE) * ln(CAST(c.cnt AS DOUBLE) / CAST(tot.n_total AS DOUBLE)) AS term
-        |  FROM dt JOIN c USING (tok) CROSS JOIN tot
-        |), x AS (
-        |  SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_tok,
-        |    round(list_reduce(list(term ORDER BY tok), (a, b) -> a + b) / CAST(sum(occ) AS DOUBLE), 6) AS xent
-        |  FROM terms GROUP BY doc_id
-        |)
-        |SELECT doc_id, n_tok, xent, CAST(xent <= 3.402 AS INT) AS keep
-        |FROM x ORDER BY doc_id""".stripMargin,
-    // terms fold in BIGRAM order on both sides — same determinism
-    // recipe as q_perplexity, one Markov order up; the context count
-    // is the row sum of the bigram table on both engines
-    "q_bigram_perplexity" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-        |), db AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(ts)), i -> ts[i] || ' ' || ts[i + 1])) AS bg
-        |  FROM toks WHERE len(ts) >= 2
-        |), dt AS (
-        |  SELECT doc_id, bg, string_split(bg, ' ')[1] AS w1, count(*) AS occ
-        |  FROM db GROUP BY 1, 2, 3
-        |), pair AS (
-        |  SELECT bg, CAST(sum(occ) AS BIGINT) AS cnt_bg FROM dt GROUP BY bg
-        |), ctx AS (
-        |  SELECT string_split(bg, ' ')[1] AS w1, CAST(sum(cnt_bg) AS BIGINT) AS cnt_w1
-        |  FROM pair GROUP BY 1
-        |), terms AS (
-        |  SELECT dt.doc_id, dt.bg, dt.occ,
-        |    -CAST(dt.occ AS DOUBLE) * ln(CAST(p.cnt_bg AS DOUBLE) / CAST(c.cnt_w1 AS DOUBLE)) AS term
-        |  FROM dt JOIN pair p USING (bg) JOIN ctx c ON dt.w1 = c.w1
-        |), x AS (
-        |  SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_bg,
-        |    round(list_reduce(list(term ORDER BY bg), (a, b) -> a + b) / CAST(sum(occ) AS DOUBLE), 6) AS xent
-        |  FROM terms GROUP BY doc_id
-        |)
-        |SELECT doc_id, n_bg, xent, CAST(xent <= 3.386 AS INT) AS keep
-        |FROM x ORDER BY doc_id""".stripMargin,
-    "q_tfidf_topterms" ->
-      """WITH tf AS (
-        |  SELECT doc_id, t, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents)
-        |  GROUP BY doc_id, t
-        |), dfx AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
-        |n AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT doc_id, t AS term, round(tf * ln(n_docs / df), 6) AS tfidf,
-        |  row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY round(tf * ln(n_docs / df), 6) DESC, t ASC) AS rnk
-        |FROM tf JOIN dfx USING (t) CROSS JOIN n
-        |QUALIFY rnk <= 5
-        |ORDER BY doc_id, rnk""".stripMargin,
-    "q_rsi" ->
-      """WITH d AS (
-        |  SELECT user_id, ts,
-        |    value - lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS delta
-        |  FROM events
-        |  QUALIFY delta IS NOT NULL
-        |), o AS (
-        |  SELECT user_id, ts, delta,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS rn
-        |  FROM d
-        |), g AS (
-        |  SELECT *,
-        |    CASE WHEN rn = 0 THEN greatest(delta, 0) ELSE (1.0/14) * greatest(delta, 0) * pow(1 - 1.0/14, -rn) END AS gg,
-        |    CASE WHEN rn = 0 THEN greatest(-delta, 0) ELSE (1.0/14) * greatest(-delta, 0) * pow(1 - 1.0/14, -rn) END AS gl
-        |  FROM o
-        |), s AS (
-        |  SELECT user_id, ts,
-        |    pow(1 - 1.0/14, rn) * sum(gg) OVER wr AS avg_gain,
-        |    pow(1 - 1.0/14, rn) * sum(gl) OVER wr AS avg_loss
-        |  FROM g
-        |  WINDOW wr AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us,
-        |  round(CASE WHEN avg_loss != 0 THEN 100.0 - 100.0 / (1.0 + avg_gain / avg_loss) ELSE 100.0 END, 6) AS rsi
-        |FROM s ORDER BY user_id, ts_us""".stripMargin,
-    "q_macd" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS rn
-        |  FROM events
-        |), f AS (
-        |  SELECT *,
-        |    CASE WHEN rn = 0 THEN value ELSE (2.0/13) * value * pow(1 - 2.0/13, -rn) END AS gf,
-        |    CASE WHEN rn = 0 THEN value ELSE (2.0/27) * value * pow(1 - 2.0/27, -rn) END AS gs
-        |  FROM o
-        |), e AS (
-        |  SELECT user_id, ts, rn,
-        |    pow(1 - 2.0/13, rn) * sum(gf) OVER wr AS ema_fast,
-        |    pow(1 - 2.0/27, rn) * sum(gs) OVER wr AS ema_slow
-        |  FROM f
-        |  WINDOW wr AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |), m AS (
-        |  SELECT *, ema_fast - ema_slow AS macd FROM e
-        |), g AS (
-        |  SELECT *, CASE WHEN rn = 0 THEN macd ELSE (2.0/10) * macd * pow(1 - 2.0/10, -rn) END AS gm
-        |  FROM m
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us, round(macd, 6) AS macd,
-        |  round(pow(1 - 2.0/10, rn) * sum(gm) OVER wr, 6) AS signal,
-        |  round(macd - pow(1 - 2.0/10, rn) * sum(gm) OVER wr, 6) AS hist
-        |FROM g
-        |WINDOW wr AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts_us""".stripMargin,
-    "q_bollinger" ->
-      """SELECT user_id, epoch_us(ts) AS ts_us,
-        |  round(avg(value) OVER w, 6) AS mid,
-        |  round(avg(value) OVER w + 2.0 * (CASE WHEN count(*) OVER w >= 2 THEN stddev_samp(value) OVER w END), 6) AS upper,
-        |  round(avg(value) OVER w - 2.0 * (CASE WHEN count(*) OVER w >= 2 THEN stddev_samp(value) OVER w END), 6) AS lower
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts_us""".stripMargin,
-    "q_stochastic" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), k AS (
-        |  SELECT user_id, bar_start,
-        |    CASE WHEN max(high) OVER w != min(low) OVER w
-        |      THEN (close - min(low) OVER w) / (max(high) OVER w - min(low) OVER w) * 100 END AS pct_k
-        |  FROM bars
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start,
-        |  round(pct_k, 6) AS pct_k,
-        |  round(avg(pct_k) OVER w2, 6) AS pct_d
-        |FROM k
-        |WINDOW w2 AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, bar_start""".stripMargin,
-    "q_atr" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, bar_start,
-        |    CASE WHEN lag(close) OVER ws IS NULL THEN high - low
-        |         ELSE greatest(high - low, abs(high - lag(close) OVER ws), abs(low - lag(close) OVER ws))
-        |    END AS tr
-        |  FROM bars
-        |  WINDOW ws AS (PARTITION BY user_id ORDER BY bar_start)
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start,
-        |  round(tr, 6) AS tr,
-        |  round(avg(tr) OVER (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 13 PRECEDING AND CURRENT ROW), 6) AS atr
-        |FROM t
-        |ORDER BY user_id, bar_start""".stripMargin,
-    "q_obv" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    max_by(value, ts) AS close,
-        |    CAST(sum(coalesce(CAST(json_extract_string(props, '$.k') AS BIGINT), 0)) AS BIGINT) AS volume
-        |  FROM events GROUP BY 1, 2
-        |), s AS (
-        |  SELECT user_id, day, close, volume,
-        |    CASE WHEN lag(close) OVER ws IS NULL THEN 0
-        |         ELSE CAST(sign(close - lag(close) OVER ws) AS BIGINT) * volume
-        |    END AS sv
-        |  FROM bars
-        |  WINDOW ws AS (PARTITION BY user_id ORDER BY day)
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day, close, volume,
-        |  CAST(sum(sv) OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS obv
-        |FROM s
-        |ORDER BY user_id, day""".stripMargin,
-    "q_donchian" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), d AS (
-        |  SELECT user_id, bar_start, close,
-        |    max(high) OVER w AS upper, min(low) OVER w AS lower
-        |  FROM bars
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-        |), e AS (
-        |  SELECT user_id, bar_start, upper, lower, close,
-        |    lag(upper) OVER ws AS prev_upper, lag(lower) OVER ws AS prev_lower
-        |  FROM d
-        |  WINDOW ws AS (PARTITION BY user_id ORDER BY bar_start)
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start, upper, lower,
-        |  round((upper + lower) / 2, 6) AS mid,
-        |  coalesce(close > prev_upper, false) AS breakout_up,
-        |  coalesce(close < prev_lower, false) AS breakout_down
-        |FROM e
-        |ORDER BY user_id, bar_start""".stripMargin,
-    "q_cmf" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close,
-        |    CAST(sum(coalesce(CAST(json_extract_string(props, '$.k') AS BIGINT), 0)) AS BIGINT) AS volume
-        |  FROM events GROUP BY 1, 2
-        |), m AS (
-        |  SELECT user_id, day, volume,
-        |    CASE WHEN high != low THEN ((close - low) - (high - close)) / (high - low) ELSE 0.0 END
-        |      * CAST(volume AS DOUBLE) AS mfv
-        |  FROM bars
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day, volume,
-        |  round(mfv, 6) + 0.0 AS mfv,
-        |  round(CASE WHEN sum(volume) OVER w != 0
-        |    THEN sum(mfv) OVER w / CAST(sum(volume) OVER w AS DOUBLE) END, 6) + 0.0 AS cmf
-        |FROM m
-        |WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, day""".stripMargin,
-    "q_parkinson_vol" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max(value) AS high, min(value) AS low
-        |  FROM events GROUP BY 1, 2
-        |)
-        |SELECT user_id, count(*) AS n_bars,
-        |  round(sqrt(sum(pow(ln(high / low), 2)) / (4.0 * ln(2.0) * count(*))), 6) AS parkinson_vol
-        |FROM bars WHERE low > 0
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    "q_rolling_stats" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), b AS (SELECT day, ret AS bench_ret FROM r WHERE user_id = 0),
-        |j AS (
-        |  SELECT r.user_id, r.day, r.ret, b.bench_ret
-        |  FROM r JOIN b USING (day) WHERE r.user_id != 0
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |  round(CASE WHEN count(*) OVER w2 >= 2
-        |    THEN stddev_samp(ret) OVER w2 * sqrt(252) END, 6) AS roll_vol,
-        |  round(CASE WHEN count(*) OVER w2 >= 2
-        |      AND stddev_samp(ret) OVER w2 != 0 AND stddev_samp(bench_ret) OVER w2 != 0
-        |    THEN corr(ret, bench_ret) OVER w2 END, 6) AS roll_corr
-        |FROM j
-        |WINDOW w2 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 29 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, day""".stripMargin,
-    "q_corr_matrix" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |)
-        |, s AS (
-        |  SELECT a.user_id AS ka, b.user_id AS kb,
-        |    count(*) AS n, sum(a.ret) AS sx, sum(b.ret) AS sy,
-        |    sum(a.ret * a.ret) AS sxx, sum(b.ret * b.ret) AS syy,
-        |    sum(a.ret * b.ret) AS sxy
-        |  FROM r a JOIN r b ON a.day = b.day AND a.user_id < b.user_id
-        |  GROUP BY a.user_id, b.user_id
-        |)
-        |SELECT ka, kb,
-        |  round(CASE WHEN n >= 2 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-        |    THEN (n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END, 6) AS corr_ret
-        |FROM s
-        |ORDER BY ka, kb""".stripMargin,
-    // banding reproduced verbatim: slot//6 band, ascending-slot
-    // "slot:sign" pattern md5 bucket, exact closed-form corr on the
-    // candidate pairs only, filter on the ROUNDED value (both
-    // engines branch on identical 6-dp decimals)
-    "q_corr_pairs_banded" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), days AS (
-        |  SELECT day, row_number() OVER (ORDER BY day) - 1 AS slot
-        |  FROM (SELECT DISTINCT day FROM r0)
-        |), r AS (
-        |  SELECT r0.user_id AS k, days.slot, r0.ret FROM r0 JOIN days USING (day)
-        |), wd AS (
-        |  SELECT greatest(6, CASE WHEN needed <= 1 THEN 0
-        |           ELSE length(bin(needed - 1)) END) AS weff, nd
-        |  FROM (SELECT (count(DISTINCT k) + 7) // 8 AS needed,
-        |          count(DISTINCT slot) AS nd FROM r)
-        |), sigs AS (
-        |  SELECT k,
-        |    CASE WHEN weff = 6 THEN slot // 6
-        |         ELSE least(slot // weff, greatest(1, nd // weff) - 1) END AS band,
-        |    md5(string_agg(slot || ':' || (CASE WHEN ret >= 0 THEN 1 ELSE 0 END), ',' ORDER BY slot)) AS sig
-        |  FROM r, wd GROUP BY k, band
-        |), cand AS (
-        |  SELECT DISTINCT a.k AS ka, b.k AS kb
-        |  FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.k < b.k
-        |), s AS (
-        |  SELECT c.ka, c.kb, count(*) AS n,
-        |    sum(x.ret) AS sx, sum(y.ret) AS sy, sum(x.ret * x.ret) AS sxx,
-        |    sum(y.ret * y.ret) AS syy, sum(x.ret * y.ret) AS sxy
-        |  FROM cand c JOIN r x ON c.ka = x.k JOIN r y ON c.kb = y.k AND x.slot = y.slot
-        |  GROUP BY 1, 2
-        |), cc AS (
-        |  SELECT ka, kb,
-        |    round(CASE WHEN n >= 2 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-        |      THEN (n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END, 6) AS corr_ret
-        |  FROM s
-        |)
-        |SELECT ka, kb, corr_ret FROM cc WHERE abs(corr_ret) >= 0.3
-        |ORDER BY ka, kb""".stripMargin,
-    "q_period_returns" ->
-      """SELECT user_id,
-        |  CASE WHEN min_by(value, ts) != 0 THEN max_by(value, ts) / min_by(value, ts) - 1 END AS period_return
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-25'
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_yield_ratio" ->
-      """SELECT user_id,
-        |  CASE WHEN max_by(value, ts) != 0
-        |    THEN coalesce(CAST(sum(CAST(CASE WHEN event_type = 'purchase' THEN value END AS DECIMAL(18,2))) AS DOUBLE), 0)
-        |      / max_by(value, ts) * 100 END AS yield_pct
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_benchmark_check" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), b AS (SELECT day, ret AS bench_ret FROM r WHERE user_id = 0)
-        |SELECT r.user_id,
-        |  round(corr(r.ret, b.bench_ret), 6) AS corr_test,
-        |  round(pow(corr(r.ret, b.bench_ret), 2), 6) AS r_squared,
-        |  round(stddev_pop(r.ret - b.bench_ret) * sqrt(252) * 100, 6) AS tracking_error_pct,
-        |  round(CASE WHEN var_samp(b.bench_ret) != 0
-        |    THEN covar_samp(r.ret, b.bench_ret) / var_samp(b.bench_ret) END, 6) AS beta,
-        |  CAST(corr(r.ret, b.bench_ret) > 0.3 AS INT) AS corr_pass,
-        |  CAST(pow(corr(r.ret, b.bench_ret), 2) > 0.1 AS INT) AS r2_pass,
-        |  CAST(stddev_pop(r.ret - b.bench_ret) * sqrt(252) * 100 < 100000.0 AS INT) AS te_pass,
-        |  CAST(CASE WHEN var_samp(b.bench_ret) != 0
-        |    THEN covar_samp(r.ret, b.bench_ret) / var_samp(b.bench_ret) END BETWEEN 0.0 AND 2.0 AS INT) AS beta_pass,
-        |  CAST(corr(r.ret, b.bench_ret) > 0.3 AND pow(corr(r.ret, b.bench_ret), 2) > 0.1
-        |    AND stddev_pop(r.ret - b.bench_ret) * sqrt(252) * 100 < 100000.0
-        |    AND (CASE WHEN var_samp(b.bench_ret) != 0
-        |      THEN covar_samp(r.ret, b.bench_ret) / var_samp(b.bench_ret) END BETWEEN 0.0 AND 2.0) AS INT) AS all_pass
-        |FROM r JOIN b USING (day)
-        |WHERE r.user_id != 0
-        |GROUP BY r.user_id ORDER BY r.user_id""".stripMargin,
-    "q_momentum_rank" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close, 10) OVER w != 0 THEN close / lag(close, 10) OVER w - 1 END AS trail_ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY trail_ret IS NOT NULL
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day, trail_ret,
-        |  row_number() OVER (PARTITION BY day ORDER BY trail_ret DESC, user_id ASC) AS mom_rank
-        |FROM t ORDER BY day, mom_rank""".stripMargin,
-    "q_peer_performance" ->
-      """WITH p(period, p_start, p_end) AS (VALUES
-        |  ('mtd', TIMESTAMP '2024-01-01', TIMESTAMP '2024-02-01'),
-        |  ('p1w', TIMESTAMP '2024-01-24', TIMESTAMP '2024-02-01'),
-        |  ('p2w', TIMESTAMP '2024-01-17', TIMESTAMP '2024-02-01')
-        |), r AS (
-        |  SELECT p.period, e.user_id,
-        |    CASE WHEN min_by(e.value, e.ts) != 0
-        |      THEN max_by(e.value, e.ts) / min_by(e.value, e.ts) - 1 END AS period_return
-        |  FROM events e JOIN p ON e.ts >= p.p_start AND e.ts < p.p_end
-        |  GROUP BY p.period, e.user_id
-        |), rr AS (SELECT * FROM r WHERE period_return IS NOT NULL
-        |), b AS (SELECT period, period_return AS bench_return FROM rr WHERE user_id = 0
-        |), pe AS (
-        |  SELECT period, user_id, period_return,
-        |    row_number() OVER (PARTITION BY period ORDER BY period_return DESC, user_id ASC) AS peer_rank,
-        |    row_number() OVER (PARTITION BY period ORDER BY period_return ASC, user_id ASC) AS rna,
-        |    count(*) OVER (PARTITION BY period) AS n
-        |  FROM rr WHERE user_id != 0
-        |), m AS (
-        |  SELECT period, avg(period_return) AS peer_median FROM pe
-        |  WHERE rna = CAST(floor((n + 1) / 2.0) AS BIGINT) OR rna = CAST(floor(n / 2.0) AS BIGINT) + 1
-        |  GROUP BY period
-        |)
-        |SELECT pe.period, pe.user_id, pe.period_return, b.bench_return, m.peer_median,
-        |  pe.peer_rank,
-        |  CAST(pe.peer_rank AS VARCHAR) || '/' || CAST(pe.n AS VARCHAR) AS peer_ranking
-        |FROM pe JOIN m USING (period) LEFT JOIN b USING (period)
-        |ORDER BY period, user_id""".stripMargin,
-    "q_risk_snapshot" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), base AS (
-        |  SELECT user_id,
-        |    round(stddev_samp(ret) * sqrt(252), 6) AS volatility,
-        |    round(CASE WHEN stddev_samp(ret) != 0 THEN (avg(ret) * 252) / (stddev_samp(ret) * sqrt(252)) END, 6) AS sharpe
-        |  FROM r GROUP BY user_id
-        |), rm AS (
-        |  SELECT user_id, value,
-        |    max(value) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_max
-        |  FROM events
-        |), mdd AS (
-        |  SELECT user_id, min(CASE WHEN run_max != 0 THEN value / run_max - 1 END) AS max_drawdown
-        |  FROM rm GROUP BY user_id
-        |), b AS (SELECT day, ret AS bench_ret FROM r WHERE user_id = 0
-        |), ab AS (
-        |  SELECT r.user_id,
-        |    round(CASE WHEN var_samp(b.bench_ret) != 0
-        |      THEN covar_samp(r.ret, b.bench_ret) / var_samp(b.bench_ret) END, 6) AS beta,
-        |    round(CASE WHEN var_samp(b.bench_ret) != 0
-        |      THEN (avg(r.ret) - covar_samp(r.ret, b.bench_ret) / var_samp(b.bench_ret) * avg(b.bench_ret)) * 252 END, 6) AS alpha
-        |  FROM r JOIN b USING (day) WHERE r.user_id != 0 GROUP BY r.user_id
-        |), wide AS (
-        |  SELECT base.user_id, volatility, sharpe, max_drawdown, beta, alpha
-        |  FROM base JOIN mdd USING (user_id) LEFT JOIN ab USING (user_id)
-        |), funds AS (
-        |  SELECT user_id, metric, fund_value FROM (
-        |    SELECT user_id, 'alpha' AS metric, alpha AS fund_value FROM wide WHERE user_id != 0
-        |    UNION ALL SELECT user_id, 'beta', beta FROM wide WHERE user_id != 0
-        |    UNION ALL SELECT user_id, 'max_drawdown', max_drawdown FROM wide WHERE user_id != 0
-        |    UNION ALL SELECT user_id, 'sharpe', sharpe FROM wide WHERE user_id != 0
-        |    UNION ALL SELECT user_id, 'volatility', volatility FROM wide WHERE user_id != 0
-        |  ) WHERE fund_value IS NOT NULL
-        |), bl AS (
-        |  SELECT 'alpha' AS metric, CAST(0.0 AS DOUBLE) AS bench_value FROM wide WHERE user_id = 0
-        |  UNION ALL SELECT 'beta', CAST(1.0 AS DOUBLE) FROM wide WHERE user_id = 0
-        |  UNION ALL SELECT 'max_drawdown', max_drawdown FROM wide WHERE user_id = 0
-        |  UNION ALL SELECT 'sharpe', sharpe FROM wide WHERE user_id = 0
-        |  UNION ALL SELECT 'volatility', volatility FROM wide WHERE user_id = 0
-        |), fr AS (
-        |  SELECT user_id, metric, fund_value,
-        |    row_number() OVER (PARTITION BY metric ORDER BY fund_value ASC, user_id ASC) AS rna,
-        |    count(*) OVER (PARTITION BY metric) AS n
-        |  FROM funds
-        |), m AS (
-        |  SELECT metric, avg(fund_value) AS peer_median FROM fr
-        |  WHERE rna = CAST(floor((n + 1) / 2.0) AS BIGINT) OR rna = CAST(floor(n / 2.0) AS BIGINT) + 1
-        |  GROUP BY metric
-        |)
-        |SELECT f.metric, f.user_id, f.fund_value, bl.bench_value, m.peer_median
-        |FROM funds f LEFT JOIN bl USING (metric) JOIN m USING (metric)
-        |ORDER BY metric, user_id""".stripMargin,
-    "q_var_historical" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), x AS (
-        |  SELECT user_id, ret,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ret ASC, day ASC) AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS n
-        |  FROM r
-        |)
-        |SELECT user_id, ret AS var_ret, rn AS k, n
-        |FROM x WHERE rn = CAST(ceil(n * 0.05) AS BIGINT)
-        |ORDER BY user_id""".stripMargin,
-    "q_dow_returns" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |)
-        |SELECT user_id, CAST(dayofweek(day) AS BIGINT) AS dow,
-        |  round(avg(ret), 6) AS avg_ret, count(*) AS n_days
-        |FROM r GROUP BY 1, 2
-        |ORDER BY user_id, dow""".stripMargin,
-    "q_portfolio_turnover" ->
-      """WITH s1 AS (
-        |  SELECT user_id, CAST(max_by(value, ts) AS DECIMAL(12,2)) AS l1, user_id % 10 AS portfolio
-        |  FROM events WHERE ts < TIMESTAMP '2024-01-15' GROUP BY user_id
-        |), s2 AS (
-        |  SELECT user_id, CAST(max_by(value, ts) AS DECIMAL(12,2)) AS l2, user_id % 10 AS portfolio
-        |  FROM events GROUP BY user_id
-        |), t1 AS (SELECT portfolio, CAST(sum(l1) AS DECIMAL(18,2)) AS t1 FROM s1 GROUP BY portfolio
-        |), t2 AS (SELECT portfolio, CAST(sum(l2) AS DECIMAL(18,2)) AS t2 FROM s2 GROUP BY portfolio
-        |), j AS (
-        |  SELECT coalesce(s1.portfolio, s2.portfolio) AS portfolio,
-        |    coalesce(l1, CAST(0 AS DECIMAL(12,2))) AS l1,
-        |    coalesce(l2, CAST(0 AS DECIMAL(12,2))) AS l2
-        |  FROM s1 FULL OUTER JOIN s2 ON s1.user_id = s2.user_id AND s1.portfolio = s2.portfolio
-        |), a AS (
-        |  SELECT j.portfolio, sum(abs(j.l1 * t2.t2 - j.l2 * t1.t1)) AS sd
-        |  FROM j JOIN t1 USING (portfolio) JOIN t2 USING (portfolio)
-        |  GROUP BY j.portfolio
-        |)
-        |SELECT a.portfolio,
-        |  CASE WHEN CAST(t1.t1 * t2.t2 AS DOUBLE) != 0.0
-        |    THEN 0.5 * (CAST(a.sd AS DOUBLE) / CAST(t1.t1 * t2.t2 AS DOUBLE)) END AS turnover
-        |FROM a JOIN t1 USING (portfolio) JOIN t2 USING (portfolio)
-        |ORDER BY portfolio""".stripMargin,
-    "q_indicator_trends" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, value, CAST(json_extract_string(props, '$.k') AS BIGINT) AS vol
-        |  FROM events
-        |), bars AS (
-        |  SELECT user_id, date_trunc('week', ts) AS bar_start,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / CAST(count(value) AS DOUBLE) AS nav,
-        |    CAST(sum(vol) AS BIGINT) AS volume,
-        |    round(stddev_samp(value), 6) AS volatility
-        |  FROM e GROUP BY 1, 2
-        |), d AS (
-        |  SELECT user_id, bar_start, nav, nav - lag(nav) OVER w AS d_nav,
-        |    volume, volume - lag(volume) OVER w AS d_volume, volatility
-        |  FROM bars WINDOW w AS (PARTITION BY user_id ORDER BY bar_start)
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start,
-        |  nav, d_nav,
-        |  CASE WHEN d_nav IS NULL THEN NULL WHEN d_nav > 0 THEN 'up' WHEN d_nav < 0 THEN 'down' ELSE 'flat' END AS nav_trend,
-        |  volume, d_volume,
-        |  CASE WHEN d_volume IS NULL THEN NULL WHEN d_volume > 0 THEN 'up' WHEN d_volume < 0 THEN 'down' ELSE 'flat' END AS volume_trend,
-        |  volatility,
-        |  CASE WHEN volatility > 55.0 THEN 'red' WHEN volatility > 40.0 THEN 'yellow' ELSE 'green' END AS alert
-        |FROM d ORDER BY user_id, bar_start""".stripMargin,
-    "q_vwap" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, value, CAST(json_extract_string(props, '$.k') AS BIGINT) AS vol
-        |  FROM events
-        |)
-        |SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |  CAST(sum(vol) AS BIGINT) AS volume,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2)) * CAST(vol AS DECIMAL(14,0))) AS DOUBLE) / CAST(sum(vol) AS DOUBLE) AS vwap
-        |FROM e WHERE vol IS NOT NULL AND vol > 0
-        |GROUP BY user_id, date_trunc('day', ts)
-        |ORDER BY user_id, day""".stripMargin,
-    "q_info_ratio" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), b AS (SELECT day, ret AS bench_ret FROM r WHERE user_id = 0)
-        |SELECT r.user_id,
-        |  round(CASE WHEN stddev_samp(r.ret - b.bench_ret) != 0
-        |    THEN (avg(r.ret - b.bench_ret) * 252) / (stddev_samp(r.ret - b.bench_ret) * sqrt(252)) END, 6) AS info_ratio
-        |FROM r JOIN b USING (day)
-        |WHERE r.user_id != 0
-        |GROUP BY r.user_id ORDER BY r.user_id""".stripMargin,
-    "q_sentiment" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('fast','big','gain','good','up')))::DOUBLE AS p,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('slow','small','error','bad','down')))::DOUBLE AS n
-        |  FROM documents
-        |)
-        |SELECT doc_id, CASE WHEN p + n > 0 THEN (p - n) / (p + n) ELSE 0.0 END AS polarity
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  len(string_split(text, ' ')) AS ws_tokens,
-        |  len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS re_tokens,
-        |  len(text) AS len_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_lang_id" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('the','a','and','of'))) AS hits_en,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('el','la','y','de'))) AS hits_es,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('le','les','et','des'))) AS hits_fr,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('der','die','und','von'))) AS hits_de,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('de5','shi4','le5','zai4'))) AS hits_zh
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CASE
-        |    WHEN hits_en >= hits_es AND hits_en >= hits_fr AND hits_en >= hits_de AND hits_en >= hits_zh AND hits_en > 0 THEN 'en'
-        |    WHEN hits_es >= hits_fr AND hits_es >= hits_de AND hits_es >= hits_zh AND hits_es > 0 THEN 'es'
-        |    WHEN hits_fr >= hits_de AND hits_fr >= hits_zh AND hits_fr > 0 THEN 'fr'
-        |    WHEN hits_de >= hits_zh AND hits_de > 0 THEN 'de'
-        |    WHEN hits_zh > 0 THEN 'zh'
-        |    ELSE 'und'
-        |  END AS lang_pred
-        |FROM h ORDER BY doc_id""".stripMargin,
-    "q_quality_score" ->
-      """SELECT doc_id,
-        |  least(len(text)::DOUBLE / 500.0, 1.0) * 0.4
-        |    + (len(list_filter(string_split(lower(text), ' '), x -> x IN ('the','a','and','of','el','la','y','de','le','les','et','des','der','die','und','von','de5','shi4','le5','zai4')))::DOUBLE
-        |       / len(string_split(lower(text), ' '))::DOUBLE) * 0.3
-        |    + (len(list_filter(string_split(lower(text), ' '), x -> regexp_full_match(x, '[a-z]+')))::DOUBLE
-        |       / len(string_split(lower(text), ' '))::DOUBLE) * 0.3 AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_fingerprint" ->
-      """SELECT doc_id, md5(lower(text)) AS fp, substr(md5(lower(text)), 1, 8) AS fp_short
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_repetition_score" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS toks,
-        |    list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 1, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+1], ' ')) AS bg
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN len(toks) > 0 THEN 1.0 - len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE END AS dup_word_ratio,
-        |  CASE WHEN len(bg) > 0 THEN 1.0 - len(list_distinct(bg))::DOUBLE / len(bg)::DOUBLE END AS dup_bigram_ratio
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q_quality_gate" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    len(toks) AS n_words,
-        |    list_sum(list_transform(toks, t -> len(t)))::DOUBLE / len(toks)::DOUBLE AS mean_word_len,
-        |    len(list_filter(toks, t -> regexp_matches(t, '[a-z]')))::DOUBLE / len(toks)::DOUBLE AS alpha_frac,
-        |    len(list_filter(toks, t -> t IN ('the','a','and','of','el','la','y','de','le','les','et','des','der','die','und','von','de5','shi4','le5','zai4'))) AS stop_hits
-        |  FROM t
-        |)
-        |SELECT doc_id, n_words, mean_word_len,
-        |  alpha_frac, stop_hits,
-        |  CAST(n_words BETWEEN 5 AND 100000 AND mean_word_len BETWEEN 2.0 AND 12.0
-        |    AND alpha_frac >= 0.7 AND stop_hits >= 1 AS INT) AS keep
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q_char_ngrams" ->
-      """WITH d AS (
-        |  SELECT lower(text) AS t FROM documents WHERE length(text) >= 3
-        |), g AS (
-        |  SELECT substring(t, CAST(u AS INT), 3) AS gram
-        |  FROM (SELECT t, unnest(generate_series(1, length(t) - 2)) AS u FROM d)
-        |)
-        |SELECT gram, count(*) AS n_grams
-        |FROM g GROUP BY gram
-        |ORDER BY n_grams DESC, gram ASC
-        |LIMIT 20""".stripMargin,
-    "q_top_bigrams" ->
-      """WITH bg AS (
-        |  SELECT unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 1, 0)),
-        |    i -> array_to_string(string_split(lower(text), ' ')[i:i+1], ' '))) AS bigram
-        |  FROM documents
-        |)
-        |SELECT bigram, count(*) AS n
-        |FROM bg GROUP BY bigram
-        |ORDER BY n DESC, bigram ASC
-        |LIMIT 20""".stripMargin,
-    "q_pmi_bigrams" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents
-        |), uni AS (
-        |  SELECT tok, count(*) AS cu FROM toks GROUP BY tok
-        |), bg AS (
-        |  SELECT unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 1, 0)),
-        |    i -> array_to_string(string_split(lower(text), ' ')[i:i+1], ' '))) AS bigram
-        |  FROM documents
-        |), bi AS (
-        |  SELECT bigram, count(*) AS cxy FROM bg GROUP BY bigram
-        |), nu AS (SELECT sum(cu) AS nu FROM uni),
-        |nb AS (SELECT sum(cxy) AS nb FROM bi),
-        |cand AS (
-        |  SELECT b.bigram, b.cxy, ux.cu AS cx, uy.cu AS cy
-        |  FROM bi b
-        |  JOIN uni ux ON ux.tok = string_split(b.bigram, ' ')[1]
-        |  JOIN uni uy ON uy.tok = string_split(b.bigram, ' ')[2]
-        |  WHERE b.cxy >= 5
-        |)
-        |SELECT bigram, cxy AS n,
-        |  round(ln(CAST(cxy AS DOUBLE)) + 2.0 * ln(CAST(nu AS DOUBLE))
-        |    - ln(CAST(nb AS DOUBLE)) - ln(CAST(cx AS DOUBLE)) - ln(CAST(cy AS DOUBLE)), 6) AS pmi
-        |FROM cand CROSS JOIN nu CROSS JOIN nb
-        |ORDER BY pmi DESC, bigram ASC
-        |LIMIT 20""".stripMargin,
-    "q_vocab_coverage" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents
-        |), counts AS (
-        |  SELECT tok, count(*) AS cnt FROM toks GROUP BY tok
-        |), total AS (SELECT sum(cnt) AS total FROM counts),
-        |top AS (SELECT tok, cnt FROM counts ORDER BY cnt DESC, tok ASC LIMIT 20)
-        |SELECT CAST(row_number() OVER w AS BIGINT) AS rnk, tok, cnt,
-        |  round(CAST(sum(cnt) OVER (ORDER BY cnt DESC, tok ASC ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-        |    / CAST(total AS DOUBLE), 6) AS cum_share
-        |FROM top CROSS JOIN total
-        |WINDOW w AS (ORDER BY cnt DESC, tok ASC)
-        |ORDER BY rnk""".stripMargin,
-    "q_cluster_topterms" ->
-      """WITH e AS (
-        |  SELECT doc_id, list_transform(generate_series(0, 15), i ->
-        |    coalesce(list_sum(list_transform(string_split(lower(text), ' '),
-        |      t -> CASE WHEN CAST('0x' || substr(md5(t), 1, 8) AS BIGINT) % 16 = i
-        |           THEN 1.0 - 2 * (CAST('0x' || substr(md5(t), 9, 1) AS BIGINT) % 2) ELSE 0.0 END)), 0.0)) AS v
-        |  FROM documents
-        |), cents AS (
-        |  SELECT row_number() OVER (ORDER BY doc_id) - 1 AS cell, v AS c
-        |  FROM e QUALIFY cell < 8
-        |), d AS (
-        |  SELECT e.doc_id, cents.cell,
-        |    list_dot_product(
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i]),
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i])) AS d2
-        |  FROM e CROSS JOIN cents
-        |), assigned AS (
-        |  SELECT doc_id, cell,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY d2 ASC, cell ASC) AS rn
-        |  FROM d QUALIFY rn = 1
-        |), ctoks AS (
-        |  SELECT a.cell, unnest(string_split(lower(doc.text), ' ')) AS tok
-        |  FROM assigned a JOIN documents doc ON doc.doc_id = a.doc_id
-        |), counts AS (
-        |  SELECT cell, tok, count(*) AS cnt FROM ctoks GROUP BY 1, 2
-        |), dfc AS (
-        |  SELECT tok, count(*) AS dfc FROM counts GROUP BY tok
-        |), nc AS (SELECT count(DISTINCT cell) AS n_cells FROM assigned),
-        |scored AS (
-        |  SELECT c.cell, c.tok, c.cnt,
-        |    round(c.cnt * ln(CAST(n_cells AS DOUBLE) / CAST(d.dfc AS DOUBLE)), 6) AS score
-        |  FROM counts c JOIN dfc d USING (tok) CROSS JOIN nc
-        |)
-        |SELECT cell,
-        |  CAST(row_number() OVER (PARTITION BY cell ORDER BY score DESC, tok ASC) AS BIGINT) AS rnk,
-        |  tok, cnt, score
-        |FROM scored
-        |QUALIFY rnk <= 3
-        |ORDER BY cell, rnk""".stripMargin,
-    "q_corpus_stats" ->
-      """WITH h AS (
-        |  SELECT doc_id, text,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('the','a','and','of'))) AS hits_en,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('el','la','y','de'))) AS hits_es,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('le','les','et','des'))) AS hits_fr,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('der','die','und','von'))) AS hits_de,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('de5','shi4','le5','zai4'))) AS hits_zh
-        |  FROM documents
-        |), l AS (
-        |  SELECT doc_id,
-        |    CASE
-        |      WHEN hits_en >= hits_es AND hits_en >= hits_fr AND hits_en >= hits_de AND hits_en >= hits_zh AND hits_en > 0 THEN 'en'
-        |      WHEN hits_es >= hits_fr AND hits_es >= hits_de AND hits_es >= hits_zh AND hits_es > 0 THEN 'es'
-        |      WHEN hits_fr >= hits_de AND hits_fr >= hits_zh AND hits_fr > 0 THEN 'fr'
-        |      WHEN hits_de >= hits_zh AND hits_de > 0 THEN 'de'
-        |      WHEN hits_zh > 0 THEN 'zh'
-        |      ELSE 'und'
-        |    END AS lang_pred,
-        |    len(string_split(text, ' ')) AS n_toks,
-        |    len(text) AS n_chars
-        |  FROM h
-        |)
-        |SELECT lang_pred, count(*) AS n_docs,
-        |  avg(n_toks) AS avg_tokens,
-        |  max(n_toks) AS max_tokens,
-        |  round(quantile_cont(n_chars, 0.5), 6) AS p50_chars
-        |FROM l GROUP BY lang_pred ORDER BY lang_pred""".stripMargin,
-    "q_chunk_documents" ->
-      """SELECT doc_id, off // 80 AS chunk_id, substr(text, CAST(off AS INT) + 1, 100) AS chunk
-        |FROM (
-        |  SELECT doc_id, text, unnest(generate_series(0, len(text) - 1, 80)) AS off
-        |  FROM documents
-        |)
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-    "q_edit_neardup" ->
-      """WITH pre AS (
-        |  SELECT doc_id, substring(text, 1, 32) AS blk, substring(text, 1, 200) AS head
-        |  FROM documents
-        |), ok AS (
-        |  SELECT blk FROM pre GROUP BY blk HAVING count(*) <= 256
-        |), p AS (
-        |  SELECT pre.* FROM pre JOIN ok USING (blk)
-        |)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  levenshtein(a.head, b.head) AS dist,
-        |  greatest(length(a.head), length(b.head)) AS max_len
-        |FROM p a JOIN p b ON a.blk = b.blk AND a.doc_id < b.doc_id
-        |WHERE levenshtein(a.head, b.head) * 5 <= greatest(length(a.head), length(b.head)) * 1
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q_dedup_exact" ->
-      """SELECT md5(lower(text)) AS fp, min(doc_id) AS canonical_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(lower(text)) ORDER BY fp""".stripMargin,
-    "q_curation_pipeline" ->
-      """WITH cleaned AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS text
-        |  FROM documents
-        |), chunks AS (
-        |  SELECT doc_id, off // 80 AS chunk_id, substr(text, CAST(off AS INT) + 1, 100) AS chunk
-        |  FROM (SELECT doc_id, text, unnest(generate_series(0, len(text) - 1, 80)) AS off FROM cleaned)
-        |)
-        |SELECT md5(chunk) AS chunk_fp,
-        |  min(doc_id * 1000 + chunk_id) // 1000 AS canonical_doc,
-        |  min(doc_id * 1000 + chunk_id) % 1000 AS canonical_chunk,
-        |  count(*) AS n_copies
-        |FROM chunks GROUP BY md5(chunk) ORDER BY chunk_fp""".stripMargin,
-    "q_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id
-        |)
-        |SELECT da, db, i::DOUBLE / (x.n + y.n - i) AS jaccard
-        |FROM inter JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-        |WHERE i::DOUBLE / (x.n + y.n - i) >= 0.8
-        |ORDER BY da, db""".stripMargin,
-    // candidates CTE mirrors q_minhash_lsh (the fast signature
-    // expression is spec'd bit-identical to this composed plan),
-    // verification mirrors q_ngram_jaccard's exact intersection —
-    // banding is md5-deterministic, so the whole banded result
-    // hash-matches, pairs and scores both
-    "q_ngram_jaccard_banded" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(s), 9, 8) AS BIGINT) AS h2
-        |  FROM sh
-        |), mh AS (
-        |  SELECT doc_id, j, min((h1 + j * h2) % 4294967296) AS m
-        |  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS j) js
-        |  GROUP BY doc_id, j
-        |), sig AS (
-        |  SELECT doc_id, j // 2 AS band,
-        |    concat(min(CASE WHEN j % 2 = 0 THEN m END), ':', min(CASE WHEN j % 2 = 1 THEN m END)) AS sig
-        |  FROM mh GROUP BY doc_id, j // 2
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.da, c.db, count(*) AS i
-        |  FROM cand c JOIN sh a ON a.doc_id = c.da JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY c.da, c.db
-        |)
-        |SELECT da, db, i::DOUBLE / (x.n + y.n - i) AS jaccard
-        |FROM inter JOIN sz x ON da = x.doc_id JOIN sz y ON db = y.doc_id
-        |WHERE i::DOUBLE / (x.n + y.n - i) >= 0.8
-        |ORDER BY da, db""".stripMargin,
-    "q_decontaminate" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), ev AS (SELECT DISTINCT s FROM sh WHERE doc_id IN (0, 1, 2, 3, 4)
-        |), hits AS (
-        |  SELECT doc_id, count(*) AS n_overlap FROM sh JOIN ev USING (s)
-        |  WHERE doc_id NOT IN (0, 1, 2, 3, 4) GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-        |  CAST(coalesce(h.n_overlap, 0) > 0 AS INT) AS contaminated
-        |FROM documents d LEFT JOIN hits h USING (doc_id)
-        |WHERE d.doc_id NOT IN (0, 1, 2, 3, 4)
-        |ORDER BY doc_id""".stripMargin,
-    "q_bloom_decontaminate" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), src AS (SELECT doc_id, source FROM documents
-        |), known AS (
-        |  SELECT DISTINCT s FROM sh JOIN src USING (doc_id) WHERE source IN ('src0', 'src1')
-        |), hits AS (
-        |  SELECT sh.doc_id, count(*) AS n_overlap
-        |  FROM sh JOIN src USING (doc_id) JOIN known USING (s)
-        |  WHERE source NOT IN ('src0', 'src1') GROUP BY sh.doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-        |  CAST(coalesce(h.n_overlap, 0) > 0 AS INT) AS contaminated,
-        |  1 AS bloom_consistent
-        |FROM documents d LEFT JOIN hits h USING (doc_id)
-        |WHERE d.source NOT IN ('src0', 'src1')
-        |ORDER BY doc_id""".stripMargin,
-    "q_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-        |  FROM t
-        |)
-        |SELECT doc_id, shard, n_tokens,
-        |  CAST(floor(cum_before / 256.0) AS BIGINT) AS bin,
-        |  cum_before % 256 AS offset_in_bin
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q_minhash_lsh" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(s), 9, 8) AS BIGINT) AS h2
-        |  FROM sh
-        |), mh AS (
-        |  SELECT doc_id, j, min((h1 + j * h2) % 4294967296) AS m
-        |  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS j) js
-        |  GROUP BY doc_id, j
-        |), sig AS (
-        |  SELECT doc_id, j // 2 AS band,
-        |    concat(min(CASE WHEN j % 2 = 0 THEN m END), ':', min(CASE WHEN j % 2 = 1 THEN m END)) AS sig
-        |  FROM mh GROUP BY doc_id, j // 2
-        |)
-        |SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |ORDER BY da, db""".stripMargin,
-    "q_repeated_spans" ->
-      """WITH sp AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS span
-        |  FROM documents
-        |)
-        |SELECT md5(span) AS span_fp, min(span) AS span,
-        |  count(*) AS n_docs, min(doc_id) AS first_doc
-        |FROM sp GROUP BY md5(span) HAVING count(*) >= 2
-        |ORDER BY span_fp""".stripMargin,
-    // positions are 1-based here vs 0-based in Spark, but the KEPT
-    // TOKEN SET is identical — only text/counters are emitted
-    "q_strip_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents
-        |), g AS (
-        |  SELECT doc_id, i, md5(array_to_string(ts[i:i+2], ' ')) AS span_fp
-        |  FROM t, unnest(generate_series(1, greatest(len(ts) - 2, 0))) AS u(i)
-        |), reg AS (
-        |  SELECT span_fp, min(doc_id) AS first_doc
-        |  FROM g GROUP BY span_fp HAVING count(DISTINCT doc_id) >= 2
-        |), cov AS (
-        |  SELECT g.doc_id, list(DISTINCT g.i) AS starts
-        |  FROM g JOIN reg USING (span_fp)
-        |  WHERE g.doc_id != reg.first_doc
-        |  GROUP BY g.doc_id
-        |), kept AS (
-        |  SELECT t.doc_id, t.ts,
-        |    list_filter(generate_series(1, len(t.ts)),
-        |      k -> len(list_filter(coalesce(c.starts, CAST([] AS BIGINT[])),
-        |             s -> s <= k AND k <= s + 2)) = 0) AS ks
-        |  FROM t LEFT JOIN cov c USING (doc_id)
-        |)
-        |SELECT doc_id,
-        |  -- array_to_string of an EMPTY list is NULL in DuckDB;
-        |  -- Spark's array_join gives '' — a fully-stripped doc must
-        |  -- compare equal
-        |  coalesce(array_to_string(list_transform(ks, k -> ts[k]), ' '), '') AS clean_text,
-        |  CAST(len(ts) AS BIGINT) AS n_toks,
-        |  CAST(len(ts) - len(ks) AS BIGINT) AS n_removed
-        |FROM kept ORDER BY doc_id""".stripMargin,
-    // gear-hash CDC: the rolling cut state is an exact-integer
-    // struct fold (seeded from the first char — list_reduce has no
-    // init), mirrored element-for-element
-    "q_cdc_chunks" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, text,
-        |    list_transform(generate_series(1, length(text)), i -> unicode(text[i])) AS codes
-        |  FROM documents
-        |), el AS (
-        |  -- state rides a FLAT BIGINT list [h, pos, last, cut...]:
-        |  -- DuckDB 1.0's list_reduce evaluates struct-field lambdas
-        |  -- inconsistently (minimal repro: conditional list_append
-        |  -- in one field sees a different iteration's state)
-        |  SELECT doc_id, source, text,
-        |    list_transform(codes, c -> [(CAST(c AS BIGINT) * 2654435761) % 4294967296, 1, 0]) AS els
-        |  FROM d
-        |), f AS (
-        |  SELECT doc_id, source, text,
-        |    list_reduce(els, (a, x) ->
-        |      CASE WHEN (a[2] + 1 - a[3] >= 16) AND ((a[1]*2 + x[1]) % 4294967296) % 64 = 0
-        |           THEN list_concat([0, a[2] + 1, a[2] + 1], list_concat(a[4:], [a[2] + 1]))
-        |           ELSE list_concat([(a[1]*2 + x[1]) % 4294967296, a[2] + 1, a[3]], a[4:]) END) AS st
-        |  FROM el
-        |), bb AS (
-        |  SELECT doc_id, source, text,
-        |    list_prepend(0, st[4:]) AS starts,
-        |    list_append(st[4:], CAST(length(text) AS BIGINT)) AS ends
-        |  FROM f
-        |), ch0 AS (
-        |  SELECT doc_id, source, text,
-        |    unnest(list_transform(generate_series(1, len(starts)),
-        |      i -> {'s': starts[i], 'e': ends[i]})) AS se
-        |  FROM bb
-        |), ch AS (
-        |  SELECT doc_id, source, CAST(se.e - se.s AS BIGINT) AS chunk_len,
-        |    md5(substr(text, se.s + 1, se.e - se.s)) AS chunk_md5
-        |  FROM ch0 WHERE se.e > se.s
-        |)
-        |SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_chunks,
-        |  CAST(count(DISTINCT chunk_md5) AS BIGINT) AS n_unique,
-        |  CAST(count(*) - count(DISTINCT chunk_md5) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS dup_ratio,
-        |  CAST(sum(chunk_len) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_chunk_len
-        |FROM ch GROUP BY 1 ORDER BY source""".stripMargin,
-    // integer overlap / min-size ratio — one IEEE division, exact on
-    // both engines; sizes computed AFTER the df cap on both sides
-    "q_containment" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), f AS (
-        |  SELECT s FROM sh GROUP BY s HAVING count(*) <= 50
-        |), k AS (
-        |  SELECT sh.doc_id, sh.s FROM sh JOIN f USING (s)
-        |), sz AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM k GROUP BY doc_id
-        |), p AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, CAST(count(*) AS BIGINT) AS overlap
-        |  FROM k a JOIN k b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT p.da, p.db, p.overlap, sa.n_sh AS n_a, sb.n_sh AS n_b,
-        |  CAST(p.overlap AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE) AS containment
-        |FROM p JOIN sz sa ON p.da = sa.doc_id JOIN sz sb ON p.db = sb.doc_id
-        |WHERE CAST(p.overlap AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE) >= 0.5
-        |ORDER BY da, db""".stripMargin,
-    "q_dedup_clusters" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(s), 9, 8) AS BIGINT) AS h2
-        |  FROM sh
-        |), mh AS (
-        |  SELECT doc_id, j, min((h1 + j * h2) % 4294967296) AS m
-        |  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS j) js
-        |  GROUP BY doc_id, j
-        |), sig AS (
-        |  SELECT doc_id, j // 2 AS band,
-        |    concat(min(CASE WHEN j % 2 = 0 THEN m END), ':', min(CASE WHEN j % 2 = 1 THEN m END)) AS sig
-        |  FROM mh GROUP BY doc_id, j // 2
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT da AS a, db AS b FROM cand UNION SELECT db, da FROM cand
-        |), reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a AND e.b != r.a
-        |)
-        |SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
-    "q_dedup_keep_best" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(s), 9, 8) AS BIGINT) AS h2
-        |  FROM sh
-        |), mh AS (
-        |  SELECT doc_id, j, min((h1 + j * h2) % 4294967296) AS m
-        |  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS j) js
-        |  GROUP BY doc_id, j
-        |), sig AS (
-        |  SELECT doc_id, j // 2 AS band,
-        |    concat(min(CASE WHEN j % 2 = 0 THEN m END), ':', min(CASE WHEN j % 2 = 1 THEN m END)) AS sig
-        |  FROM mh GROUP BY doc_id, j // 2
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT da AS a, db AS b FROM cand UNION SELECT db, da FROM cand
-        |), reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a AND e.b != r.a
-        |), labels AS (
-        |  SELECT a AS node, least(a, min(b)) AS cluster_id FROM reach GROUP BY a
-        |), q AS (
-        |  SELECT doc_id,
-        |    least(len(text)::DOUBLE / 500.0, 1.0) * 0.4
-        |      + (len(list_filter(string_split(lower(text), ' '), x -> x IN ('the','a','and','of','el','la','y','de','le','les','et','des','der','die','und','von','de5','shi4','le5','zai4')))::DOUBLE
-        |         / len(string_split(lower(text), ' '))::DOUBLE) * 0.3
-        |      + (len(list_filter(string_split(lower(text), ' '), x -> regexp_full_match(x, '[a-z]+')))::DOUBLE
-        |         / len(string_split(lower(text), ' '))::DOUBLE) * 0.3 AS quality
-        |  FROM documents
-        |), lab AS (
-        |  SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id, q.quality
-        |  FROM documents d LEFT JOIN labels l ON d.doc_id = l.node JOIN q USING (doc_id)
-        |)
-        |SELECT cluster_id, doc_id AS keep_id, quality
-        |FROM lab
-        |QUALIFY row_number() OVER (PARTITION BY cluster_id ORDER BY quality DESC, doc_id ASC) = 1
-        |ORDER BY cluster_id""".stripMargin,
-    "q_corpus_dedup" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(s), 9, 8) AS BIGINT) AS h2
-        |  FROM sh
-        |), mh AS (
-        |  SELECT doc_id, j, min((h1 + j * h2) % 4294967296) AS m
-        |  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS j) js
-        |  GROUP BY doc_id, j
-        |), sig AS (
-        |  SELECT doc_id, j // 2 AS band,
-        |    concat(min(CASE WHEN j % 2 = 0 THEN m END), ':', min(CASE WHEN j % 2 = 1 THEN m END)) AS sig
-        |  FROM mh GROUP BY doc_id, j // 2
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT da AS a, db AS b FROM cand UNION SELECT db, da FROM cand
-        |), reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a AND e.b != r.a
-        |), labels AS (
-        |  SELECT a AS node, least(a, min(b)) AS cluster_id FROM reach GROUP BY a
-        |)
-        |SELECT doc_id, md5(text) AS text_fp
-        |FROM documents
-        |WHERE doc_id NOT IN (SELECT node FROM labels WHERE cluster_id != node)
-        |ORDER BY doc_id""".stripMargin,
-    "q_simhash" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents
-        |), h AS (
-        |  SELECT doc_id, CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS h FROM tok
-        |), bits AS (
-        |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS b) bs
-        |  GROUP BY doc_id, b
-        |)
-        |SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_simhash_neardup" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents
-        |), h AS (
-        |  SELECT doc_id, CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS h FROM tok
-        |), bits AS (
-        |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS b) bs
-        |  GROUP BY doc_id, b
-        |), sh2 AS (
-        |  SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bits GROUP BY doc_id
-        |)
-        |SELECT a.doc_id AS da, b.doc_id AS db,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS dist
-        |FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 4
-        |ORDER BY da, db""".stripMargin,
-    // both 60-bit lanes from one md5: lane 0 = hex chars 1-15 (the
-    // 60-bit simhash exactly), lane 1 = chars 16-30
-    "q_simhash_wide" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents
-        |), h AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(t), 16, 15) AS BIGINT) AS h2
-        |  FROM tok
-        |), bits AS (
-        |  SELECT doc_id, b,
-        |    sum(CASE WHEN (h1 >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s1,
-        |    sum(CASE WHEN (h2 >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s2
-        |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS b) bs
-        |  GROUP BY doc_id, b
-        |)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN s1 > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sh_lo,
-        |  CAST(sum(CASE WHEN s2 > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sh_hi
-        |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // the banded join is an exact candidate generator (pigeonhole),
-    // so the oracle is the quadratic sweep over the same signature
-    "q_simhash_wide_neardup" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents
-        |), h AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(t), 16, 15) AS BIGINT) AS h2
-        |  FROM tok
-        |), bits AS (
-        |  SELECT doc_id, b,
-        |    sum(CASE WHEN (h1 >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s1,
-        |    sum(CASE WHEN (h2 >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s2
-        |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS b) bs
-        |  GROUP BY doc_id, b
-        |), sh AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN s1 > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sh_lo,
-        |    CAST(sum(CASE WHEN s2 > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sh_hi
-        |  FROM bits GROUP BY doc_id
-        |)
-        |SELECT a.doc_id AS da, b.doc_id AS db,
-        |  CAST(bit_count(xor(a.sh_lo, b.sh_lo)) + bit_count(xor(a.sh_hi, b.sh_hi)) AS BIGINT) AS dist
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sh_lo, b.sh_lo)) + bit_count(xor(a.sh_hi, b.sh_hi)) <= 4
-        |ORDER BY da, db""".stripMargin,
-    "q_ann_bruteforce" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), n AS (
-        |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nn FROM e
-        |), scored AS (
-        |  SELECT q.vec_id AS qid, e.vec_id,
-        |    CASE WHEN q.nn * e.nn != 0 THEN list_dot_product(q.v, e.v) / (q.nn * e.nn) END AS cos
-        |  FROM n q JOIN n e ON q.vec_id < 5 AND e.vec_id != q.vec_id
-        |)
-        |SELECT qid, vec_id, cos,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rnk
-        |FROM scored
-        |QUALIFY rnk <= 5
-        |ORDER BY qid, rnk""".stripMargin,
-    // the band predicate applies BEFORE the per-anchor top-k on both
-    // engines; scores are the same sequential dots as q_ann_bruteforce
-    "q_hard_negatives" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), n AS (
-        |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nn FROM e
-        |), scored AS (
-        |  SELECT q.vec_id AS anchor_id, e.vec_id AS negative_id,
-        |    CASE WHEN q.nn * e.nn != 0 THEN list_dot_product(q.v, e.v) / (q.nn * e.nn) END AS cos
-        |  FROM n q JOIN n e ON q.vec_id < 5 AND e.vec_id != q.vec_id
-        |), banded AS (
-        |  SELECT anchor_id, negative_id, cos,
-        |    CAST(row_number() OVER (PARTITION BY anchor_id ORDER BY cos DESC, negative_id ASC) AS BIGINT) AS rnk
-        |  FROM scored
-        |  WHERE cos < 0.95 AND cos >= 0.3
-        |)
-        |SELECT anchor_id, negative_id, cos, rnk
-        |FROM banded
-        |WHERE rnk <= 5
-        |ORDER BY anchor_id, rnk""".stripMargin,
-    // quantized levels live in DOUBLE lists on both sides: every
-    // value is integral and < 2^53, so dots/norms are exact and the
-    // score is deterministic integer math + one IEEE sqrt
-    "q_ann_int8" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), sc AS (
-        |  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS s
-        |  FROM e
-        |), z AS (
-        |  SELECT vec_id, list_transform(v, x -> floor(x / s + 0.5)) AS qv
-        |  FROM sc WHERE s != 0
-        |), n AS (
-        |  SELECT vec_id, qv, sqrt(list_dot_product(qv, qv)) AS qn FROM z
-        |), scored AS (
-        |  SELECT q.vec_id AS qid, e.vec_id,
-        |    list_dot_product(q.qv, e.qv) / (q.qn * e.qn) AS qcos
-        |  FROM n q JOIN n e ON q.vec_id < 5 AND e.vec_id != q.vec_id
-        |  WHERE q.qn * e.qn != 0
-        |)
-        |SELECT qid, vec_id, qcos,
-        |  row_number() OVER (PARTITION BY qid ORDER BY qcos DESC, vec_id ASC) AS rnk
-        |FROM scored
-        |QUALIFY rnk <= 5
-        |ORDER BY qid, rnk""".stripMargin,
-    "q_embed_neardup" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), n AS (
-        |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nn FROM e
-        |)
-        |SELECT a.vec_id AS va, b.vec_id AS vb,
-        |  list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |FROM n a JOIN n b ON a.vec_id < b.vec_id
-        |WHERE a.nn * b.nn != 0
-        |  AND list_dot_product(a.v, b.v) / (a.nn * b.nn) >= 0.45
-        |ORDER BY va, vb""".stripMargin,
-    // mirrors ivfNearDupPairs: rank-seeded quantizer + d2 argmin
-    // assignment (the q_ann_ivf pattern), then the q_embed_neardup
-    // cosine restricted to same-cell pairs
-    "q_semantic_dedup" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), cents AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS c
-        |  FROM e QUALIFY cell < 16
-        |), d AS (
-        |  SELECT e.vec_id, e.v, cents.cell,
-        |    list_dot_product(
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i]),
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i])) AS d2
-        |  FROM e CROSS JOIN cents
-        |), assigned AS (
-        |  SELECT vec_id, v, cell,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS rn
-        |  FROM d QUALIFY rn = 1
-        |), n AS (
-        |  SELECT vec_id, cell, v, sqrt(list_dot_product(v, v)) AS nn FROM assigned
-        |)
-        |SELECT a.vec_id AS va, b.vec_id AS vb,
-        |  list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |WHERE a.nn * b.nn != 0
-        |  AND list_dot_product(a.v, b.v) / (a.nn * b.nn) >= 0.45
-        |ORDER BY va, vb""".stripMargin,
-    // the trained-dedup gate: the three invariants are TRUE for any
-    // Lloyd outcome (see the query comment); the one engine-
-    // deterministic number is the exact sweep's pair count
-    "q_semantic_dedup_trained" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), n AS (
-        |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nn FROM e
-        |), p AS (
-        |  SELECT a.vec_id AS va, b.vec_id AS vb
-        |  FROM n a JOIN n b ON a.vec_id < b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |    AND list_dot_product(a.v, b.v) / (a.nn * b.nn) >= 0.45
-        |)
-        |SELECT count(*) AS n_exact_pairs, TRUE AS subset_ok,
-        |  TRUE AS scores_equal, TRUE AS volume_bounded
-        |FROM p""".stripMargin,
-    "q_ann_lsh_buckets" ->
-      """WITH dirs AS (
-        |  SELECT p, list_transform(generate_series(0, 63), i ->
-        |    CASE WHEN CAST('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 1) AS INT) % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END) AS d
-        |  FROM (SELECT unnest(generate_series(0, 7)) AS p)
-        |), proj AS (
-        |  SELECT e.vec_id, dirs.p,
-        |    list_dot_product(list_transform(e.embedding, x -> x::DOUBLE), dirs.d) AS pr
-        |  FROM embeddings e CROSS JOIN dirs
-        |)
-        |SELECT vec_id, CAST(sum(CASE WHEN pr > 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-        |FROM proj GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-    // edge scores are the same sequential dots as q_ann_bruteforce;
-    // the mutual flag is a pure self-join of the ranked edge set
-    "q_knn_graph" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, edges AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), top AS (
-        |  SELECT src, dst, cos,
-        |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |  FROM edges
-        |  QUALIFY rnk <= 5
-        |)
-        |SELECT t.src, t.dst, t.cos, t.rnk, (m.src IS NOT NULL) AS mutual
-        |FROM top t LEFT JOIN top m ON t.src = m.dst AND t.dst = m.src
-        |ORDER BY t.src, t.rnk""".stripMargin,
-    // the squared-distance chain is the same explicit left-associated
-    // 8-term sum the Spark side evaluates — no HOF fold on either
-    // engine whose reduction order could differ
-    "q_pq_codes" -> {
-      val terms = (1 to 8)
-        .map(i => s"(s.v[js.j*8+$i]-cb.cv[js.j*8+$i])*(s.v[js.j*8+$i]-cb.cv[js.j*8+$i])")
-        .mkString(" + ")
-      s"""WITH e AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-         |), js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         |cb AS (
-         |  SELECT js.j, c.vec_id AS code, c.v AS cv FROM e c CROSS JOIN js WHERE c.vec_id < 16
-         |), d AS (
-         |  SELECT s.vec_id, js.j, cb.code, $terms AS dist
-         |  FROM e s CROSS JOIN js JOIN cb ON cb.j = js.j
-         |)
-         |SELECT vec_id, j, code, round(dist, 6) AS dist FROM (
-         |  SELECT vec_id, j, code, dist,
-         |    row_number() OVER (PARTITION BY vec_id, j ORDER BY dist ASC, code ASC) AS rn
-         |  FROM d
-         |) WHERE rn = 1
-         |ORDER BY vec_id, j""".stripMargin
-    },
-    "q_random_projection" ->
-      """WITH dirs AS (
-        |  SELECT j, list_transform(generate_series(0, 63), i ->
-        |    CASE WHEN CAST('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 1) AS INT) % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END) AS d
-        |  FROM (SELECT unnest(generate_series(0, 7)) AS j)
-        |)
-        |SELECT e.vec_id, dirs.j,
-        |  round(list_dot_product(list_transform(e.embedding, x -> x::DOUBLE), dirs.d), 6) + 0.0 AS p
-        |FROM embeddings e CROSS JOIN dirs
-        |ORDER BY vec_id, j""".stripMargin,
-    // mirrors ivfSearch exactly: seed quantizer = first 16 vectors
-    // BY RANK (row_number over vec_id, cell = rank - 1 — the same
-    // orderBy/limit + positional-id semantics as ivfTrain, so the
-    // mirror holds even if vec_ids stop being contiguous from 0),
-    // bit-identical float->double casts in both engines, d2 as a
-    // self-dot-product of the difference list (the same sequential
-    // multiply-accumulate list_dot_product is proven to share with
-    // Spark's fold in q_ann_bruteforce), argmin and probe ranked
-    // (d2 ASC, cell ASC), cosine rank (cos DESC, vec_id ASC)
-    "q_ann_ivf" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), cents AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS c
-        |  FROM e QUALIFY cell < 16
-        |), d AS (
-        |  SELECT e.vec_id, e.v, cents.cell,
-        |    list_dot_product(
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i]),
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i])) AS d2
-        |  FROM e CROSS JOIN cents
-        |), assigned AS (
-        |  SELECT vec_id, v, cell,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS rn
-        |  FROM d QUALIFY rn = 1
-        |), n AS (
-        |  SELECT vec_id, cell, v, sqrt(list_dot_product(v, v)) AS nn FROM assigned
-        |), qc AS (
-        |  SELECT vec_id AS qid, cell,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS prb
-        |  FROM d WHERE vec_id IN (0, 1, 2, 3, 4) QUALIFY prb <= 4
-        |), scored AS (
-        |  SELECT qc.qid, n.vec_id,
-        |    CASE WHEN qn.nn * n.nn != 0
-        |         THEN list_dot_product(qn.v, n.v) / (qn.nn * n.nn) END AS cos
-        |  FROM qc
-        |  JOIN n ON n.cell = qc.cell
-        |  JOIN n qn ON qn.vec_id = qc.qid
-        |  WHERE n.vec_id != qc.qid
-        |)
-        |SELECT qid, vec_id, cos,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rnk
-        |FROM scored
-        |QUALIFY rnk <= 5
-        |ORDER BY qid, rnk""".stripMargin,
-    // micro-quantized per-cell sums are exact; the new mean is one
-    // int/int IEEE division and drift one subtraction — no
-    // cross-dimension float sums (the (cell,dim) grid IS the output)
-    "q_kmeans_step" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), cents AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS c
-        |  FROM e QUALIFY cell < 16
-        |), d AS (
-        |  SELECT e.vec_id, e.v, cents.cell,
-        |    list_dot_product(
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i]),
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i])) AS d2
-        |  FROM e CROSS JOIN cents
-        |), assigned AS (
-        |  SELECT vec_id, v, cell,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS rn
-        |  FROM d QUALIFY rn = 1
-        |), x0 AS (
-        |  SELECT cell, unnest(list_zip(v, generate_series(1, len(v)))) AS z FROM assigned
-        |), x AS (
-        |  SELECT cell, z[2] - 1 AS dim, CAST(floor(z[1] * 1000000) AS BIGINT) AS qu FROM x0
-        |), g AS (
-        |  SELECT cell, dim, CAST(count(*) AS BIGINT) AS n_cell, CAST(sum(qu) AS BIGINT) AS s
-        |  FROM x GROUP BY 1, 2
-        |), o0 AS (
-        |  SELECT cell, unnest(list_zip(c, generate_series(1, len(c)))) AS z FROM cents
-        |), o AS (
-        |  SELECT cell, z[2] - 1 AS dim, z[1] AS mean_old FROM o0
-        |)
-        |SELECT CAST(g.cell AS INT) AS cell, CAST(g.dim AS INT) AS dim, n_cell,
-        |  CAST(s AS DOUBLE) / (CAST(n_cell AS DOUBLE) * 1000000.0) AS mean_new,
-        |  o.mean_old,
-        |  CAST(s AS DOUBLE) / (CAST(n_cell AS DOUBLE) * 1000000.0) - o.mean_old AS delta
-        |FROM g JOIN o ON o.cell = g.cell AND o.dim = g.dim
-        |ORDER BY cell, dim""".stripMargin,
-    "q_ewma_vol" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day, (close / prev - 1) * (close / prev - 1) AS r2
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), o AS (
-        |  SELECT user_id, day, r2,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY day) - 1 AS rn
-        |  FROM r
-        |), g AS (
-        |  SELECT *, CASE WHEN rn = 0 THEN r2 ELSE (1 - 0.94) * r2 * pow(0.94, -rn) END AS gg
-        |  FROM o
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |  round(sqrt(pow(0.94, rn) * sum(gg) OVER (PARTITION BY user_id ORDER BY rn
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) * sqrt(252.0), 6) AS ewma_vol_ann
-        |FROM g ORDER BY user_id, day""".stripMargin,
-    "q_amihud" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    max_by(value, ts) AS close,
-        |    CAST(sum(coalesce(CAST(json_extract_string(props, '$.k') AS BIGINT), 0)) AS BIGINT) AS volume
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, close / lag(close) OVER ws - 1 AS ret,
-        |    close * CAST(volume AS DOUBLE) AS dv
-        |  FROM bars
-        |  WINDOW ws AS (PARTITION BY user_id ORDER BY day)
-        |)
-        |SELECT user_id, count(*) AS n_days,
-        |  round(avg(abs(ret) / dv) * 1e9, 6) AS amihud_1e9
-        |FROM r WHERE ret IS NOT NULL AND dv > 0
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    "q_roll_spread" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), q AS (
-        |  SELECT user_id, day, CAST(close AS DECIMAL(18,6)) AS cq FROM c
-        |), d AS (
-        |  SELECT user_id, day,
-        |    cq - lag(cq) OVER (PARTITION BY user_id ORDER BY day) AS d
-        |  FROM q
-        |), dd AS (
-        |  SELECT user_id, d, lag(d) OVER (PARTITION BY user_id ORDER BY day) AS dl
-        |  FROM d
-        |), m AS (
-        |  SELECT user_id, count(*) AS n_days,
-        |    sum(d) AS sd, sum(dl) AS sl,
-        |    sum(CAST(d AS DECIMAL(19,6)) * CAST(dl AS DECIMAL(19,6))) AS sdl
-        |  FROM dd WHERE d IS NOT NULL AND dl IS NOT NULL
-        |  GROUP BY user_id
-        |), b AS (
-        |  SELECT user_id, n_days,
-        |    n_days * CAST(sdl AS DOUBLE) - CAST(sd AS DOUBLE) * CAST(sl AS DOUBLE) AS covn
-        |  FROM m
-        |)
-        |SELECT user_id, n_days,
-        |  round(covn / (CAST(n_days AS DOUBLE) * CAST(n_days AS DOUBLE)), 6) AS autocov,
-        |  round(CASE WHEN covn < 0
-        |    THEN 2.0 * sqrt(-covn / (CAST(n_days AS DOUBLE) * CAST(n_days AS DOUBLE))) END, 6) AS roll_spread
-        |FROM b
-        |ORDER BY user_id""".stripMargin,
-    "q_rolling_beta" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CAST(floor((close / prev - 1) * 1000000) AS BIGINT) AS mk
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), b AS (
-        |  SELECT day, mk AS mb FROM r WHERE user_id = 0
-        |), j AS (
-        |  SELECT r.user_id, r.day, r.mk, b.mb FROM r JOIN b USING (day)
-        |), m AS (
-        |  SELECT user_id, day,
-        |    count(*) OVER w AS k,
-        |    sum(mb) OVER w AS sx, sum(mk) OVER w AS sy,
-        |    sum(mb * mk) OVER w AS sxy, sum(mb * mb) OVER w AS sxx
-        |  FROM j
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day, CAST(k AS BIGINT) AS n_obs,
-        |  round(CASE WHEN k > 1 AND (k * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-        |    THEN (k * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / (k * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END, 6) AS beta
-        |FROM m
-        |ORDER BY user_id, day""".stripMargin,
-    "q_half_life" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), q AS (
-        |  SELECT user_id, day, CAST(close AS DECIMAL(18,6)) AS cq,
-        |    lag(CAST(close AS DECIMAL(18,6))) OVER (PARTITION BY user_id ORDER BY day) AS xq
-        |  FROM c
-        |), m AS (
-        |  SELECT user_id, count(*) AS n_days,
-        |    sum(xq) AS sx, sum(cq - xq) AS sy,
-        |    sum(CAST(xq AS DECIMAL(19,6)) * CAST(cq - xq AS DECIMAL(19,6))) AS sxy,
-        |    sum(CAST(xq AS DECIMAL(19,6)) * CAST(xq AS DECIMAL(19,6))) AS sxx
-        |  FROM q WHERE xq IS NOT NULL GROUP BY user_id
-        |), b AS (
-        |  SELECT user_id, n_days,
-        |    n_days * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS covn,
-        |    n_days * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS varx
-        |  FROM m
-        |)
-        |SELECT user_id, n_days,
-        |  round(CASE WHEN varx > 0 THEN covn / varx END, 6) AS beta,
-        |  round(CASE WHEN varx > 0 AND covn / varx < 0 AND covn / varx > -1
-        |    THEN -0.6931471805599453 / ln(1.0 + covn / varx) END, 6) AS half_life_days
-        |FROM b
-        |ORDER BY user_id""".stripMargin,
-    "q_mutual_info" ->
-      """WITH cells AS (
-        |  SELECT event_type AS et, isodow(ts) AS dow, count(*) AS o
-        |  FROM events GROUP BY 1, 2
-        |), rt AS (SELECT et, sum(o) AS rt FROM cells GROUP BY et
-        |), ct AS (SELECT dow, sum(o) AS ct FROM cells GROUP BY dow
-        |), tot AS (
-        |  SELECT sum(o) AS n, count(DISTINCT et) AS nr, count(DISTINCT dow) AS nc FROM cells
-        |), grid AS (
-        |  SELECT rt.et, ct.dow, rt.rt, ct.ct, coalesce(cells.o, 0) AS o0
-        |  FROM rt CROSS JOIN ct
-        |  LEFT JOIN cells ON cells.et = rt.et AND cells.dow = ct.dow
-        |), terms AS (
-        |  SELECT tot.n, tot.nr, tot.nc,
-        |    CASE WHEN o0 > 0 THEN (CAST(o0 AS DOUBLE) / tot.n)
-        |      * ln((CAST(o0 AS DOUBLE) * CAST(tot.n AS DOUBLE))
-        |          / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE)))
-        |      / 0.6931471805599453 ELSE 0.0 END AS mi_term,
-        |    pow(CAST(o0 AS DOUBLE) - (rt * ct) / CAST(tot.n AS DOUBLE), 2)
-        |      / ((rt * ct) / CAST(tot.n AS DOUBLE)) AS chi_term
-        |  FROM grid CROSS JOIN tot
-        |)
-        |SELECT CAST(n AS BIGINT) AS n, round(sum(mi_term), 6) AS mi_bits,
-        |  round(sqrt(sum(chi_term) / CAST(n * least(nr - 1, nc - 1) AS DOUBLE)), 6) AS cramers_v
-        |FROM terms GROUP BY n, nr, nc""".stripMargin,
-    "q_kl_divergence" ->
-      """WITH cells AS (
-        |  SELECT CAST(floor(value / 50.0) AS BIGINT) AS bin,
-        |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-        |  FROM events WHERE event_type IN ('view', 'purchase')
-        |  GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(sum(ca) AS BIGINT) AS na, CAST(sum(cb) AS BIGINT) AS nb,
-        |    count(*) AS k FROM cells
-        |), terms AS (
-        |  SELECT na, nb, k,
-        |    (CAST(ca + 1 AS DOUBLE) / CAST(na + k AS DOUBLE))
-        |      * ln((CAST(ca + 1 AS DOUBLE) / CAST(na + k AS DOUBLE))
-        |          / (CAST(cb + 1 AS DOUBLE) / CAST(nb + k AS DOUBLE)))
-        |      / 0.6931471805599453 AS tab,
-        |    (CAST(cb + 1 AS DOUBLE) / CAST(nb + k AS DOUBLE))
-        |      * ln((CAST(cb + 1 AS DOUBLE) / CAST(nb + k AS DOUBLE))
-        |          / (CAST(ca + 1 AS DOUBLE) / CAST(na + k AS DOUBLE)))
-        |      / 0.6931471805599453 AS tba
-        |  FROM cells CROSS JOIN tot
-        |)
-        |SELECT na, nb, k AS n_bins,
-        |  round(sum(tab), 6) AS kl_ab_bits,
-        |  round(sum(tba), 6) AS kl_ba_bits,
-        |  round(sum(tab + tba), 6) AS jeffreys_bits
-        |FROM terms GROUP BY na, nb, k""".stripMargin,
-    "q_burstiness" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) AS gap_us
-        |  FROM events
-        |), m AS (
-        |  SELECT user_id, count(*) AS n_gaps,
-        |    sum(CAST(gap_us AS DECIMAL(19,0))) AS sg,
-        |    sum(CAST(gap_us AS DECIMAL(19,0)) * CAST(gap_us AS DECIMAL(19,0))) AS sgg
-        |  FROM g WHERE gap_us IS NOT NULL GROUP BY user_id
-        |), b AS (
-        |  SELECT user_id, n_gaps,
-        |    CAST(sg AS DOUBLE) / n_gaps AS mu,
-        |    CAST(sgg AS DOUBLE) / n_gaps
-        |      - (CAST(sg AS DOUBLE) / n_gaps) * (CAST(sg AS DOUBLE) / n_gaps) AS va
-        |  FROM m
-        |), s AS (
-        |  SELECT user_id, n_gaps, mu,
-        |    sqrt(CASE WHEN va > 0 THEN va ELSE 0.0 END) AS sd
-        |  FROM b
-        |)
-        |SELECT user_id, n_gaps,
-        |  mu / 1000000.0 AS mean_gap_s,
-        |  sd / 1000000.0 AS sd_gap_s,
-        |  CASE WHEN sd + mu != 0.0 THEN (sd - mu) / (sd + mu) END AS burstiness
-        |FROM s
-        |ORDER BY user_id""".stripMargin,
-    "q_spearman_corr" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CAST(floor((close / prev - 1) * 1000000) AS BIGINT) AS mk
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), b AS (
-        |  SELECT day, mk AS mb FROM r WHERE user_id = 0
-        |), j AS (
-        |  SELECT r.user_id, r.day, r.mk, b.mb FROM r JOIN b USING (day)
-        |  WHERE r.user_id != 0
-        |), k AS (
-        |  SELECT user_id,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY mk, day) AS rx,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY mb, day) AS ry
-        |  FROM j
-        |), m AS (
-        |  SELECT user_id, count(*) AS n_days,
-        |    sum(rx * ry) AS sxy, sum(rx * rx) AS sxx, sum(rx) AS sx
-        |  FROM k GROUP BY 1
-        |)
-        |SELECT user_id, CAST(n_days AS BIGINT) AS n_days,
-        |  CASE WHEN n_days > 1 AND (n_days * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-        |    THEN (n_days * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      / (n_days * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END AS spearman_rho
-        |FROM m
-        |ORDER BY user_id""".stripMargin,
-    "q_kendall_trend" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CAST(floor((close / prev - 1) * 1000000) AS BIGINT) AS mk
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), p AS (
-        |  SELECT a.user_id, a.mk AS ma, b.mk AS mb
-        |  FROM r a JOIN r b ON a.user_id = b.user_id AND a.day < b.day
-        |)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(sum(CASE WHEN mb > ma THEN 1 ELSE 0 END) AS BIGINT) AS concordant,
-        |  CAST(sum(CASE WHEN mb < ma THEN 1 ELSE 0 END) AS BIGINT) AS discordant,
-        |  CAST(sum(CASE WHEN mb = ma THEN 1 ELSE 0 END) AS BIGINT) AS ties,
-        |  CAST(sum(CASE WHEN mb > ma THEN 1 ELSE 0 END)
-        |     - sum(CASE WHEN mb < ma THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE) AS tau
-        |FROM p GROUP BY 1
-        |ORDER BY user_id""".stripMargin,
-    "q_capture_ratios" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CAST(floor((close / prev - 1) * 1000000) AS BIGINT) AS mk
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), b AS (
-        |  SELECT day, mk AS mb FROM r WHERE user_id = 0
-        |), j AS (
-        |  SELECT r.user_id, r.mk, b.mb FROM r JOIN b USING (day)
-        |  WHERE r.user_id != 0
-        |), m AS (
-        |  SELECT user_id,
-        |    sum(CASE WHEN mb > 0 THEN mk ELSE 0 END) AS sk_up,
-        |    sum(CASE WHEN mb > 0 THEN mb ELSE 0 END) AS sb_up,
-        |    sum(CASE WHEN mb > 0 THEN 1 ELSE 0 END) AS n_up,
-        |    sum(CASE WHEN mb < 0 THEN mk ELSE 0 END) AS sk_dn,
-        |    sum(CASE WHEN mb < 0 THEN mb ELSE 0 END) AS sb_dn,
-        |    sum(CASE WHEN mb < 0 THEN 1 ELSE 0 END) AS n_dn
-        |  FROM j GROUP BY 1
-        |)
-        |SELECT user_id, CAST(n_up AS BIGINT) AS n_up, CAST(n_dn AS BIGINT) AS n_dn,
-        |  CASE WHEN n_up > 0 AND sb_up != 0
-        |    THEN CAST(sk_up AS DOUBLE) / CAST(sb_up AS DOUBLE) END AS up_capture,
-        |  CASE WHEN n_dn > 0 AND sb_dn != 0
-        |    THEN CAST(sk_dn AS DOUBLE) / CAST(sb_dn AS DOUBLE) END AS down_capture,
-        |  (CASE WHEN n_up > 0 AND sb_up != 0
-        |    THEN CAST(sk_up AS DOUBLE) / CAST(sb_up AS DOUBLE) END)
-        |  - (CASE WHEN n_dn > 0 AND sb_dn != 0
-        |    THEN CAST(sk_dn AS DOUBLE) / CAST(sb_dn AS DOUBLE) END) AS capture_spread
-        |FROM m
-        |ORDER BY user_id""".stripMargin,
-    "q_cci" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, bar_start,
-        |    CAST(floor((high + low + close) / 3 * 1000000) AS BIGINT) AS tpu
-        |  FROM bars
-        |), w AS (
-        |  SELECT user_id, bar_start, tpu,
-        |    count(*) OVER win AS cnt,
-        |    sum(tpu) OVER win AS s,
-        |    list(tpu) OVER win AS l
-        |  FROM t
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-        |), d AS (
-        |  SELECT user_id, bar_start, tpu, cnt, s,
-        |    list_sum(list_transform(l, e -> abs(e * 20 - s))) AS dev
-        |  FROM w
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS day,
-        |  CASE WHEN cnt = 20 AND dev > 0
-        |    THEN (CAST(tpu AS DOUBLE) * 20 - CAST(s AS DOUBLE)) * 20
-        |      / (0.015 * CAST(dev AS DOUBLE)) END AS cci
-        |FROM d
-        |ORDER BY user_id, day""".stripMargin,
-    "q_aroon" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), e AS (
-        |  SELECT user_id, day,
-        |    CAST(floor(close * 1000000) AS BIGINT) + 2000000000 AS mh,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY day) AS BIGINT) - 1 AS idx
-        |  FROM c
-        |), enc AS (
-        |  SELECT user_id, day, idx,
-        |    mh * 1048576 + idx AS code_hi,
-        |    mh * 1048576 + (1048575 - idx) AS code_lo
-        |  FROM e
-        |), w AS (
-        |  SELECT user_id, day, idx,
-        |    count(*) OVER win AS cnt,
-        |    (max(code_hi) OVER win) % 1048576 AS hi_idx,
-        |    1048575 - ((min(code_lo) OVER win) % 1048576) AS lo_idx
-        |  FROM enc
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 24 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |  CASE WHEN cnt = 25
-        |    THEN CAST(25 - (idx - hi_idx) AS DOUBLE) * 100 / 25 END AS aroon_up,
-        |  CASE WHEN cnt = 25
-        |    THEN CAST(25 - (idx - lo_idx) AS DOUBLE) * 100 / 25 END AS aroon_down,
-        |  CASE WHEN cnt = 25
-        |    THEN CAST(25 - (idx - hi_idx) AS DOUBLE) * 100 / 25
-        |       - CAST(25 - (idx - lo_idx) AS DOUBLE) * 100 / 25 END AS aroon_osc
-        |FROM w
-        |ORDER BY user_id, day""".stripMargin,
-    "q_jarque_bera" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id,
-        |    CAST(floor((close / prev - 1) * 1000) AS BIGINT) AS mk0
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), k AS (
-        |  SELECT user_id, abs(mk0) <= 1000000 AS keep,
-        |    CASE WHEN abs(mk0) <= 1000000 THEN mk0 ELSE 0 END AS mk
-        |  FROM r
-        |), m AS (
-        |  SELECT user_id,
-        |    sum(CASE WHEN keep THEN 1 ELSE 0 END) AS n_days,
-        |    sum(CASE WHEN keep THEN 0 ELSE 1 END) AS n_excluded,
-        |    sum(CAST(mk AS HUGEINT)) AS s1,
-        |    sum(CAST(mk AS HUGEINT) * mk) AS s2,
-        |    sum(CAST(mk AS HUGEINT) * mk * mk) AS s3,
-        |    sum(CAST(mk AS HUGEINT) * mk * mk * mk) AS s4
-        |  FROM k GROUP BY 1
-        |), b AS (
-        |  SELECT user_id, n_days, n_excluded,
-        |    CAST(n_days AS DOUBLE) AS nd,
-        |    CASE WHEN s1 < 0 THEN -(CAST(abs(s1) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s1) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(s1 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s1 % 9007199254740992 AS DOUBLE) END AS d1,
-        |    CASE WHEN s2 < 0 THEN -(CAST(abs(s2) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s2) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(s2 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s2 % 9007199254740992 AS DOUBLE) END AS d2,
-        |    CASE WHEN s3 < 0 THEN -(CAST(abs(s3) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s3) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(s3 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s3 % 9007199254740992 AS DOUBLE) END AS d3,
-        |    CASE WHEN s4 < 0 THEN -(CAST(abs(s4) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s4) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(s4 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s4 % 9007199254740992 AS DOUBLE) END AS d4
-        |  FROM m
-        |), mm AS (
-        |  SELECT user_id, n_days, n_excluded, nd,
-        |    d2 / nd - (d1 / nd) * (d1 / nd) AS m2,
-        |    d3 / nd - 3.0 * (d1 / nd) * (d2 / nd)
-        |      + 2.0 * (d1 / nd) * (d1 / nd) * (d1 / nd) AS m3,
-        |    d4 / nd - 4.0 * (d1 / nd) * (d3 / nd)
-        |      + 6.0 * (d1 / nd) * (d1 / nd) * (d2 / nd)
-        |      - 3.0 * (d1 / nd) * (d1 / nd) * (d1 / nd) * (d1 / nd) AS m4
-        |  FROM b
-        |), s AS (
-        |  SELECT user_id, n_days, n_excluded, nd, m2,
-        |    m3 / (m2 * sqrt(m2)) AS skew,
-        |    m4 / (m2 * m2) AS kurt
-        |  FROM mm
-        |)
-        |SELECT user_id, CAST(n_days AS BIGINT) AS n_days,
-        |  CAST(n_excluded AS BIGINT) AS n_excluded,
-        |  CASE WHEN n_days > 3 AND m2 > 0 THEN skew END AS skewness,
-        |  CASE WHEN n_days > 3 AND m2 > 0 THEN kurt - 3 END AS excess_kurtosis,
-        |  CASE WHEN n_days > 3 AND m2 > 0
-        |    THEN nd / 6 * (skew * skew + (kurt - 3) * (kurt - 3) / 4) END AS jarque_bera
-        |FROM s
-        |ORDER BY user_id""".stripMargin,
-    "q_k_anonymity" ->
-      """WITH g AS (
-        |  SELECT lang, source, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
-        |    count(*) AS class_size
-        |  FROM documents GROUP BY 1, 2, 3
-        |), t AS (SELECT sum(class_size) AS total FROM g)
-        |SELECT lang, source, len_bucket, CAST(class_size AS BIGINT) AS class_size,
-        |  class_size < 5 AS at_risk,
-        |  CAST(class_size AS DOUBLE) / CAST(total AS DOUBLE) AS corpus_share
-        |FROM g, t
-        |ORDER BY lang, source, len_bucket""".stripMargin,
-    "q_common_neighbors" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, edges AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), top AS (
-        |  SELECT src, dst,
-        |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |  FROM edges
-        |  QUALIFY rnk <= 5
-        |), deg AS (
-        |  SELECT src, count(*) AS deg FROM top GROUP BY 1
-        |), ok AS (
-        |  SELECT dst FROM top GROUP BY dst HAVING count(*) <= 256
-        |), capped AS (
-        |  SELECT t.src, t.dst FROM top t JOIN ok USING (dst)
-        |), cn AS (
-        |  SELECT e1.src AS a, e2.src AS b, count(*) AS common
-        |  FROM capped e1 JOIN capped e2 ON e1.dst = e2.dst AND e1.src < e2.src
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |)
-        |SELECT cn.a, cn.b, CAST(cn.common AS BIGINT) AS common,
-        |  CAST(da.deg AS BIGINT) AS da, CAST(db.deg AS BIGINT) AS db,
-        |  CAST(cn.common AS DOUBLE)
-        |    / CAST(da.deg + db.deg - cn.common AS DOUBLE) AS jaccard
-        |FROM cn JOIN deg da ON da.src = cn.a JOIN deg db ON db.src = cn.b
-        |ORDER BY a, b""".stripMargin,
-    "q_forecast_backtest" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), l AS (
-        |  SELECT user_id,
-        |    CAST(floor(close * 1000000) AS BIGINT) AS mku,
-        |    lag(CAST(floor(close * 1000000) AS BIGINT), 7)
-        |      OVER (PARTITION BY user_id ORDER BY day) AS lagS,
-        |    lag(CAST(floor(close * 1000000) AS BIGINT), 1)
-        |      OVER (PARTITION BY user_id ORDER BY day) AS lag1
-        |  FROM c
-        |), m AS (
-        |  SELECT user_id, count(*) AS n_scored,
-        |    sum(abs(mku - lagS)) AS se_naive,
-        |    sum(abs(mku - lag1)) AS se_persist
-        |  FROM l WHERE lagS IS NOT NULL AND lag1 IS NOT NULL GROUP BY 1
-        |)
-        |SELECT user_id, CAST(n_scored AS BIGINT) AS n_scored,
-        |  CAST(se_naive AS DOUBLE) / CAST(n_scored AS DOUBLE) / 1000000 AS mae_naive,
-        |  CAST(se_persist AS DOUBLE) / CAST(n_scored AS DOUBLE) / 1000000 AS mae_persist,
-        |  CASE WHEN se_persist > 0
-        |    THEN (CAST(se_naive AS DOUBLE) / CAST(n_scored AS DOUBLE))
-        |       / (CAST(se_persist AS DOUBLE) / CAST(n_scored AS DOUBLE)) END AS mase
-        |FROM m
-        |ORDER BY user_id""".stripMargin,
-    "q_anova" ->
-      """WITH q AS (
-        |  SELECT event_type, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), g AS (
-        |  SELECT event_type, count(*) AS n_g,
-        |    sum(CAST(qu AS HUGEINT)) AS s_g,
-        |    sum(CAST(qu AS HUGEINT) * qu) AS ss_g
-        |  FROM q GROUP BY 1
-        |), gs AS (
-        |  SELECT *, CASE WHEN s_g < 0
-        |      THEN -(CAST(abs(s_g) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s_g) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s_g // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s_g % 9007199254740992 AS DOUBLE) END AS sdg
-        |  FROM g
-        |), t AS (
-        |  SELECT event_type, n_g, s_g, ss_g,
-        |    CAST(floor((sdg * sdg / CAST(n_g AS DOUBLE)) / 1000000.0) AS BIGINT) AS tq
-        |  FROM gs
-        |), m AS (
-        |  SELECT count(*) AS k_groups, sum(n_g) AS n_total,
-        |    sum(s_g) AS s_all, sum(ss_g) AS q_all, sum(tq) AS t_all
-        |  FROM t
-        |), b AS (
-        |  SELECT k_groups, n_total,
-        |    CAST(n_total AS DOUBLE) AS nd, CAST(k_groups AS DOUBLE) AS kd,
-        |    CASE WHEN s_all < 0
-        |      THEN -(CAST(abs(s_all) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s_all) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s_all // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s_all % 9007199254740992 AS DOUBLE) END AS sD,
-        |    (CASE WHEN q_all < 0
-        |      THEN -(CAST(abs(q_all) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(q_all) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(q_all // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(q_all % 9007199254740992 AS DOUBLE) END) / 1000000.0 AS qD,
-        |    CAST(t_all AS DOUBLE) AS tD
-        |  FROM m
-        |), c AS (
-        |  SELECT k_groups, n_total, nd, kd, tD, qD,
-        |    (sD * sD / nd) / 1000000.0 AS cf
-        |  FROM b
-        |), d AS (
-        |  SELECT k_groups, n_total, nd, kd,
-        |    tD - cf AS ssb, qD - tD AS ssw, qD - cf AS sst
-        |  FROM c
-        |)
-        |SELECT CAST(k_groups AS BIGINT) AS k_groups, CAST(n_total AS BIGINT) AS n_total,
-        |  CASE WHEN k_groups > 1 AND ssw > 0
-        |    THEN (ssb / (kd - 1)) / (ssw / (nd - kd)) END AS f_stat,
-        |  CASE WHEN sst > 0 THEN ssb / sst END AS eta_sq
-        |FROM d""".stripMargin,
-    // doubled mid-ranks off the bounded value axis are exact ints;
-    // T_j^2/n_g folds through exact hugeint floor division; H is one
-    // IEEE chain via the split-limb rebuild, UNROUNDED
-    "q_kruskal" ->
-      """WITH q AS (
-        |  SELECT event_type, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), c AS (
-        |  SELECT event_type, qu, count(*) AS cnt FROM q GROUP BY 1, 2
-        |), ax AS (
-        |  SELECT qu, sum(cnt) AS t FROM c GROUP BY 1
-        |), rk AS (
-        |  SELECT qu, t,
-        |    coalesce(sum(t) OVER (ORDER BY qu ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS c0
-        |  FROM ax
-        |), r2 AS (
-        |  SELECT qu, 2*c0 + t + 1 AS r2 FROM rk
-        |), g AS (
-        |  SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n_g, CAST(sum(cnt * r2.r2) AS BIGINT) AS t_j
-        |  FROM c JOIN r2 USING (qu) GROUP BY 1
-        |), gq AS (
-        |  SELECT event_type, n_g, t_j,
-        |    (CAST(t_j AS HUGEINT)*t_j - (CAST(t_j AS HUGEINT)*t_j) % n_g) // n_g AS q_j
-        |  FROM g
-        |), m AS (
-        |  SELECT CAST(sum(n_g) AS BIGINT) AS n_total, sum(q_j) AS s_all,
-        |    count(*) AS k_groups
-        |  FROM gq
-        |), tt AS (
-        |  SELECT sum(CAST(t AS HUGEINT)*t*t - t) AS t3 FROM ax
-        |), b AS (
-        |  SELECT m.n_total, m.k_groups, tt.t3,
-        |    CAST(n_total AS DOUBLE) AS ntd,
-        |    CASE WHEN s_all < 0
-        |      THEN -(CAST(abs(s_all) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s_all) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s_all // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s_all % 9007199254740992 AS DOUBLE) END AS sD,
-        |    CASE WHEN t3 < 0
-        |      THEN -(CAST(abs(t3) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(t3) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(t3 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(t3 % 9007199254740992 AS DOUBLE) END AS t3d
-        |  FROM m, tt
-        |), h AS (
-        |  SELECT n_total, k_groups,
-        |    3.0 * sD / (ntd * (ntd + 1.0)) - 3.0 * (ntd + 1.0) AS h_stat,
-        |    1.0 - t3d / (ntd * ntd * ntd - ntd) AS ctie
-        |  FROM b
-        |)
-        |SELECT g.event_type, g.n_g,
-        |  CAST(t_j AS DOUBLE) / (2.0 * CAST(n_g AS DOUBLE)) AS mean_rank,
-        |  h.n_total, CAST(h.k_groups AS BIGINT) AS k_groups,
-        |  CASE WHEN h.k_groups > 1 THEN h_stat END AS h_stat,
-        |  CASE WHEN h.k_groups > 1 AND ctie > 0 THEN h_stat / ctie END AS h_tie_adj
-        |FROM gq g, h ORDER BY event_type""".stripMargin,
-    // doubled-median order statistics keep z integer; the F chain is
-    // byte-for-byte the q_anova oracle over z
-    "q_levene" ->
-      """WITH q AS (
-        |  SELECT event_type, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), o AS (
-        |  SELECT event_type, qu,
-        |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY qu) AS BIGINT) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM q
-        |), med AS (
-        |  SELECT event_type,
-        |    sum(CASE WHEN rn = (n + 1) // 2 THEN qu END)
-        |    + sum(CASE WHEN rn = (n + 2) // 2 THEN qu END) AS m2
-        |  FROM o WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2 GROUP BY 1
-        |), z AS (
-        |  SELECT q.event_type, abs(2 * qu - m2) AS zv FROM q JOIN med USING (event_type)
-        |), g AS (
-        |  SELECT event_type, count(*) AS n_g,
-        |    sum(CAST(zv AS HUGEINT)) AS s_g,
-        |    sum(CAST(zv AS HUGEINT) * zv) AS ss_g
-        |  FROM z GROUP BY 1
-        |), gs AS (
-        |  SELECT *, CASE WHEN s_g < 0
-        |      THEN -(CAST(abs(s_g) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s_g) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s_g // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s_g % 9007199254740992 AS DOUBLE) END AS sdg
-        |  FROM g
-        |), t AS (
-        |  SELECT event_type, n_g, s_g, ss_g,
-        |    CAST(floor((sdg * sdg / CAST(n_g AS DOUBLE)) / 1000000.0) AS BIGINT) AS tq
-        |  FROM gs
-        |), m AS (
-        |  SELECT count(*) AS k_groups, sum(n_g) AS n_total,
-        |    sum(s_g) AS s_all, sum(ss_g) AS q_all, sum(tq) AS t_all
-        |  FROM t
-        |), bb AS (
-        |  SELECT k_groups, n_total,
-        |    CAST(n_total AS DOUBLE) AS nd, CAST(k_groups AS DOUBLE) AS kd,
-        |    CASE WHEN s_all < 0
-        |      THEN -(CAST(abs(s_all) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s_all) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s_all // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s_all % 9007199254740992 AS DOUBLE) END AS sD,
-        |    (CASE WHEN q_all < 0
-        |      THEN -(CAST(abs(q_all) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(q_all) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(q_all // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(q_all % 9007199254740992 AS DOUBLE) END) / 1000000.0 AS qD,
-        |    CAST(t_all AS DOUBLE) AS tD
-        |  FROM m
-        |), cc AS (
-        |  SELECT k_groups, n_total, nd, kd, tD, qD,
-        |    (sD * sD / nd) / 1000000.0 AS cf
-        |  FROM bb
-        |), dd AS (
-        |  SELECT k_groups, n_total, nd, kd,
-        |    tD - cf AS ssb, qD - tD AS ssw, qD - cf AS sst
-        |  FROM cc
-        |), f AS (
-        |  SELECT CAST(k_groups AS BIGINT) AS k_groups, CAST(n_total AS BIGINT) AS n_total,
-        |    CASE WHEN k_groups > 1 AND ssw > 0
-        |      THEN (ssb / (kd - 1)) / (ssw / (nd - kd)) END AS bf_stat,
-        |    CASE WHEN sst > 0 THEN ssb / sst END AS eta_sq
-        |  FROM dd
-        |), pg AS (
-        |  SELECT z.event_type, CAST(count(*) AS BIGINT) AS n_g,
-        |    CAST(max(med.m2) AS DOUBLE) / 2000000.0 AS median_value,
-        |    CAST(sum(CAST(zv AS HUGEINT)) AS DOUBLE) / (CAST(count(*) AS DOUBLE) * 2000000.0) AS mean_absdev
-        |  FROM z JOIN med USING (event_type) GROUP BY 1
-        |)
-        |SELECT pg.event_type, pg.n_g, pg.median_value, pg.mean_absdev,
-        |  f.k_groups, f.n_total, f.bf_stat, f.eta_sq
-        |FROM pg, f ORDER BY event_type""".stripMargin,
-    // exact 128-bit A/B moments; Chebyshev p-bound is a pure IEEE
-    // chain (no t-CDF, which no two engines agree on bitwise); the
-    // BH reject set compares bit-identical doubles
-    "q_fdr_bh" ->
-      """WITH q AS (
-        |  SELECT user_id, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), g AS (
-        |  SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(qu AS HUGEINT)) AS s1,
-        |    sum(CAST(qu AS HUGEINT) * qu) AS s2
-        |  FROM q GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(sum(n) AS BIGINT) AS n_all, sum(s1) AS s_all,
-        |    CAST(count(*) AS BIGINT) AS m
-        |  FROM g
-        |), w AS (
-        |  SELECT g.*, tot.n_all, tot.m,
-        |    CAST(n_all AS HUGEINT) * s1 - CAST(n AS HUGEINT) * s_all AS a,
-        |    CAST(n AS HUGEINT) * s2 - s1 * s1 AS b
-        |  FROM g, tot
-        |), d AS (
-        |  SELECT *, CASE WHEN a < 0
-        |      THEN -(CAST(abs(a) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(a) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(a // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(a % 9007199254740992 AS DOUBLE) END AS a_sd,
-        |    CASE WHEN b < 0
-        |      THEN -(CAST(abs(b) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(b) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(b // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(b % 9007199254740992 AS DOUBLE) END AS b_sd
-        |  FROM w
-        |), t AS (
-        |  SELECT *, CASE WHEN b > 0 AND n > 1
-        |    THEN CAST(n - 1 AS DOUBLE) * ((a_sd / CAST(n_all AS DOUBLE)) * (a_sd / CAST(n_all AS DOUBLE))) / b_sd
-        |    END AS t2
-        |  FROM d
-        |), p AS (
-        |  SELECT *, CASE WHEN t2 IS NULL THEN 1.0::DOUBLE
-        |    WHEN t2 = 0 THEN 1.0::DOUBLE
-        |    ELSE least(1.0::DOUBLE, 1.0::DOUBLE / t2) END AS p_cheb
-        |  FROM t
-        |), r AS (
-        |  SELECT *, CAST(row_number() OVER (ORDER BY p_cheb, user_id) AS BIGINT) AS bh_rank
-        |  FROM p
-        |), o AS (
-        |  SELECT *, p_cheb <= 0.05::DOUBLE * CAST(bh_rank AS DOUBLE) / CAST(m AS DOUBLE) AS ok
-        |  FROM r
-        |), km AS (
-        |  SELECT *, max(CASE WHEN ok THEN bh_rank END) OVER () AS k_max FROM o
-        |)
-        |SELECT user_id, n, t2, p_cheb, bh_rank, m,
-        |  coalesce(bh_rank <= k_max, false) AS rejected
-        |FROM km ORDER BY user_id""".stripMargin,
-    "q_grubbs" ->
-      """WITH q AS (
-        |  SELECT event_type, CAST(floor(value * 1000000) AS BIGINT) AS qu FROM events
-        |), g AS (
-        |  SELECT event_type, count(*) AS n,
-        |    sum(CAST(qu AS HUGEINT)) AS s1,
-        |    sum(CAST(qu AS HUGEINT) * qu) AS s2,
-        |    min(qu) AS mn, max(qu) AS mx
-        |  FROM q GROUP BY 1
-        |), b AS (
-        |  SELECT event_type, n, mn, mx, CAST(n AS DOUBLE) AS nd,
-        |    CASE WHEN s1 < 0
-        |      THEN -(CAST(abs(s1) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s1) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s1 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s1 % 9007199254740992 AS DOUBLE) END AS d1,
-        |    CASE WHEN s2 < 0
-        |      THEN -(CAST(abs(s2) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s2) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s2 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s2 % 9007199254740992 AS DOUBLE) END AS d2
-        |  FROM g
-        |), c AS (
-        |  SELECT event_type, n, mn, mx, nd,
-        |    d1 / nd AS mean, (d2 - d1 * d1 / nd) / (nd - 1) AS vr
-        |  FROM b
-        |), d AS (
-        |  SELECT *, sqrt(vr) AS sd,
-        |    CAST(mx AS DOUBLE) - mean AS dev_hi,
-        |    mean - CAST(mn AS DOUBLE) AS dev_lo
-        |  FROM c
-        |)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  mean / 1000000 AS mean_value,
-        |  CASE WHEN n > 1 AND vr >= 0 THEN sd / 1000000 END AS std_value,
-        |  CASE WHEN n > 2 AND vr > 0 THEN greatest(dev_hi, dev_lo) / sd END AS grubbs_g,
-        |  CASE WHEN n > 2 AND vr > 0
-        |    THEN CAST(CASE WHEN dev_hi >= dev_lo THEN mx ELSE mn END AS DOUBLE) / 1000000 END AS suspect_value,
-        |  CASE WHEN n > 2 AND vr > 0 THEN dev_hi >= dev_lo END AS suspect_is_max
-        |FROM d
-        |ORDER BY event_type""".stripMargin,
-    "q_knn_classify" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ", Seq("label"))}, q AS (
-        |  SELECT vec_id AS qid, label AS q_label, v AS qv, nn AS qn, cell
-        |  FROM n WHERE vec_id % 20 = 0
-        |), s AS (
-        |  SELECT q.qid, q.q_label, c.vec_id, c.label,
-        |    list_dot_product(q.qv, c.v) / (q.qn * c.nn) AS cos
-        |  FROM n c JOIN q ON q.cell = c.cell AND q.qn * c.nn != 0
-        |  WHERE c.vec_id % 20 != 0
-        |), t AS (
-        |  SELECT qid, q_label, label,
-        |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rnk
-        |  FROM s QUALIFY rnk <= 5
-        |), v AS (
-        |  SELECT qid, q_label, label, count(*) AS votes FROM t GROUP BY 1, 2, 3
-        |), w AS (
-        |  SELECT qid, q_label, label, votes,
-        |    row_number() OVER (PARTITION BY qid ORDER BY votes DESC, label ASC) AS pr
-        |  FROM v QUALIFY pr = 1
-        |)
-        |SELECT qid, q_label, label AS predicted_label, CAST(votes AS BIGINT) AS votes,
-        |  label = q_label AS correct
-        |FROM w
-        |ORDER BY qid""".stripMargin,
-    "q_ljung_box" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), l AS (
-        |  SELECT user_id, ret,
-        |    lag(ret, 1) OVER w AS l1, lag(ret, 2) OVER w AS l2, lag(ret, 3) OVER w AS l3,
-        |    lag(ret, 4) OVER w AS l4, lag(ret, 5) OVER w AS l5
-        |  FROM r WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |), u AS (
-        |  SELECT user_id, 1 AS lag_k, ret, l1 AS ret_lag FROM l
-        |  UNION ALL SELECT user_id, 2, ret, l2 FROM l
-        |  UNION ALL SELECT user_id, 3, ret, l3 FROM l
-        |  UNION ALL SELECT user_id, 4, ret, l4 FROM l
-        |  UNION ALL SELECT user_id, 5, ret, l5 FROM l
-        |), a AS (
-        |  SELECT user_id, lag_k, count(*) AS n_pairs,
-        |    round(CASE WHEN var_samp(ret) != 0 AND var_samp(ret_lag) != 0
-        |      THEN corr(ret, ret_lag) END, 6) AS acf
-        |  FROM u WHERE ret_lag IS NOT NULL
-        |  GROUP BY user_id, lag_k
-        |), p AS (
-        |  SELECT user_id,
-        |    CAST(max(CASE WHEN lag_k = 1 THEN n_pairs END) + 1 AS BIGINT) AS n_obs,
-        |    count(CASE WHEN acf IS NOT NULL THEN 1 END) AS k_present,
-        |    max(CASE WHEN lag_k = 1 THEN acf END) AS r1,
-        |    max(CASE WHEN lag_k = 2 THEN acf END) AS r2,
-        |    max(CASE WHEN lag_k = 3 THEN acf END) AS r3,
-        |    max(CASE WHEN lag_k = 4 THEN acf END) AS r4,
-        |    max(CASE WHEN lag_k = 5 THEN acf END) AS r5
-        |  FROM a GROUP BY 1
-        |)
-        |SELECT user_id, n_obs,
-        |  CASE WHEN k_present = 5 AND n_obs > 6 THEN
-        |    (r1 * r1 / (CAST(n_obs AS DOUBLE) - 1)
-        |     + r2 * r2 / (CAST(n_obs AS DOUBLE) - 2)
-        |     + r3 * r3 / (CAST(n_obs AS DOUBLE) - 3)
-        |     + r4 * r4 / (CAST(n_obs AS DOUBLE) - 4)
-        |     + r5 * r5 / (CAST(n_obs AS DOUBLE) - 5))
-        |    * CAST(n_obs AS DOUBLE) * (CAST(n_obs AS DOUBLE) + 2)
-        |  END AS ljung_box_q
-        |FROM p
-        |ORDER BY user_id""".stripMargin,
-    "q_entropy_rate" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |), edges AS (
-        |  SELECT prev, event_type AS next, count(*) AS c
-        |  FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2
-        |), rt AS (SELECT prev, sum(c) AS t FROM edges GROUP BY 1
-        |), tot AS (SELECT sum(c) AS nn, count(DISTINCT next) AS n_states FROM edges
-        |), hc AS (
-        |  SELECT nn, n_states, round(sum(
-        |    -(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))
-        |      * (ln(CAST(c AS DOUBLE) / CAST(t AS DOUBLE)) / 0.6931471805599453)
-        |  ), 6) AS h_cond_bits
-        |  FROM edges JOIN rt USING (prev), tot
-        |  GROUP BY nn, n_states
-        |), marg AS (SELECT next, sum(c) AS m FROM edges GROUP BY 1
-        |), hn AS (
-        |  SELECT round(sum(
-        |    -(CAST(m AS DOUBLE) / CAST(nn AS DOUBLE))
-        |      * (ln(CAST(m AS DOUBLE) / CAST(nn AS DOUBLE)) / 0.6931471805599453)
-        |  ), 6) AS h_next_bits
-        |  FROM marg, tot
-        |)
-        |SELECT CAST(nn AS BIGINT) AS n_transitions,
-        |  CAST(n_states AS BIGINT) AS n_states,
-        |  h_cond_bits, h_next_bits,
-        |  round(h_next_bits - h_cond_bits, 6) AS info_gain_bits
-        |FROM hc, hn""".stripMargin,
-    "q_inequality" ->
-      """WITH pc AS (
-        |  SELECT o_custkey, sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS x
-        |  FROM orders GROUP BY 1
-        |  HAVING sum(CAST(floor(o_totalprice * 100) AS BIGINT)) > 0
-        |), tot AS (SELECT count(*) AS n, sum(x) AS s FROM pc
-        |), t AS (
-        |  SELECT n, s,
-        |    CAST(floor(CAST(x AS DOUBLE) * CAST(n AS DOUBLE) / CAST(s AS DOUBLE)
-        |      * ln(CAST(x AS DOUBLE) * CAST(n AS DOUBLE) / CAST(s AS DOUBLE)) * 1e9) AS BIGINT) AS tu,
-        |    CAST(floor(ln(CAST(x AS DOUBLE)) * 1e9) AS BIGINT) AS lu
-        |  FROM pc, tot
-        |), m AS (SELECT n, s, sum(tu) AS tsum, sum(lu) AS lsum FROM t GROUP BY 1, 2)
-        |SELECT CAST(n AS BIGINT) AS n_customers,
-        |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 100, 6) AS mean_revenue,
-        |  round(CAST(tsum AS DOUBLE) / 1e9 / CAST(n AS DOUBLE), 6) AS theil_t,
-        |  round(1.0 - exp(CAST(lsum AS DOUBLE) / 1e9 / CAST(n AS DOUBLE))
-        |    / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS atkinson_1
-        |FROM m""".stripMargin,
-    "q_vortex" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, bar_start,
-        |    CAST(floor(abs(high - lag(low) OVER w) * 1000000) AS BIGINT) AS vmp,
-        |    CAST(floor(abs(low - lag(high) OVER w) * 1000000) AS BIGINT) AS vmm,
-        |    CAST(floor(greatest(high - low,
-        |      abs(high - lag(close) OVER w),
-        |      abs(low - lag(close) OVER w)) * 1000000) AS BIGINT) AS tru
-        |  FROM bars WINDOW w AS (PARTITION BY user_id ORDER BY bar_start)
-        |  QUALIFY vmp IS NOT NULL
-        |), m AS (
-        |  SELECT user_id, bar_start, count(*) OVER wn AS cnt,
-        |    sum(vmp) OVER wn AS sp, sum(vmm) OVER wn AS sm, sum(tru) OVER wn AS st
-        |  FROM t
-        |  WINDOW wn AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS day,
-        |  CASE WHEN cnt = 14 AND st > 0 THEN CAST(sp AS DOUBLE) / CAST(st AS DOUBLE) END AS vi_plus,
-        |  CASE WHEN cnt = 14 AND st > 0 THEN CAST(sm AS DOUBLE) / CAST(st AS DOUBLE) END AS vi_minus,
-        |  CASE WHEN cnt = 14 AND st > 0 THEN CAST(sp - sm AS DOUBLE) / CAST(st AS DOUBLE) END AS vi_diff
-        |FROM m
-        |ORDER BY user_id, day""".stripMargin,
-    "q_cointegration" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    CAST(floor(max_by(value, ts) * 1000000) AS BIGINT) AS mku
-        |  FROM events GROUP BY 1, 2
-        |), b AS (
-        |  SELECT day, mku AS mbu FROM c WHERE user_id = 0
-        |), j AS (
-        |  SELECT c.user_id, c.day, c.mku AS x, b.mbu AS y
-        |  FROM c JOIN b USING (day) WHERE c.user_id != 0
-        |), o AS (
-        |  SELECT user_id, count(*) AS n_days,
-        |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-        |    sum(CAST(x AS HUGEINT) * y) AS sxy, sum(CAST(y AS HUGEINT) * y) AS syy
-        |  FROM j GROUP BY 1
-        |), od AS (
-        |  SELECT user_id, n_days, CAST(n_days AS DOUBLE) AS nd,
-        |    CASE WHEN sx < 0 THEN -(CAST(abs(sx) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sx) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(sx // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sx % 9007199254740992 AS DOUBLE) END AS sxd,
-        |    CASE WHEN sy < 0 THEN -(CAST(abs(sy) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sy) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(sy // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sy % 9007199254740992 AS DOUBLE) END AS syd,
-        |    CASE WHEN sxy < 0 THEN -(CAST(abs(sxy) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sxy) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(sxy // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sxy % 9007199254740992 AS DOUBLE) END AS sxyd,
-        |    CASE WHEN syy < 0 THEN -(CAST(abs(syy) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(syy) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(syy // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(syy % 9007199254740992 AS DOUBLE) END AS syyd
-        |  FROM o
-        |), ok AS (
-        |  SELECT user_id, n_days, nd,
-        |    CASE WHEN nd * syyd - syd * syd > 0
-        |      THEN (nd * sxyd - sxd * syd) / (nd * syyd - syd * syd) END AS beta,
-        |    CASE WHEN nd * syyd - syd * syd > 0
-        |      THEN sxd / nd - (nd * sxyd - sxd * syd) / (nd * syyd - syd * syd) * (syd / nd) END AS alpha
-        |  FROM od
-        |), r AS (
-        |  SELECT j.user_id, j.day, ok.n_days, ok.beta,
-        |    CAST(floor(CAST(j.x AS DOUBLE) - (ok.alpha + ok.beta * CAST(j.y AS DOUBLE))) AS BIGINT) AS e
-        |  FROM j JOIN ok ON ok.user_id = j.user_id
-        |), l AS (
-        |  SELECT user_id, n_days, beta, e,
-        |    lag(e) OVER (PARTITION BY user_id ORDER BY day) AS ep
-        |  FROM r
-        |), d AS (
-        |  SELECT user_id, max(n_days) AS n_days, max(beta) AS beta,
-        |    sum(CAST(ep AS HUGEINT) * (e - ep)) AS sed,
-        |    sum(CAST(ep AS HUGEINT) * ep) AS see
-        |  FROM l WHERE ep IS NOT NULL GROUP BY 1
-        |), dd AS (
-        |  SELECT user_id, n_days, beta, see,
-        |    CASE WHEN sed < 0 THEN -(CAST(abs(sed) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sed) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(sed // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sed % 9007199254740992 AS DOUBLE) END AS sedd,
-        |    CASE WHEN see < 0 THEN -(CAST(abs(see) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(see) % 9007199254740992 AS DOUBLE))
-        |         ELSE CAST(see // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(see % 9007199254740992 AS DOUBLE) END AS seed
-        |  FROM d
-        |)
-        |SELECT user_id, CAST(n_days AS BIGINT) AS n_days, beta,
-        |  CASE WHEN see > 0 THEN sedd / seed END AS gamma,
-        |  round(CASE WHEN see > 0 AND sedd / seed < 0 AND sedd / seed > -1
-        |    THEN -0.6931471805599453 / ln(1.0 + sedd / seed) END, 6) AS spread_half_life
-        |FROM dd
-        |ORDER BY user_id""".stripMargin,
-    "q_pq_distortion" -> {
-      val terms = (1 to 8)
-        .map(i => s"(s.v[js.j*8+$i]-cb.cv[js.j*8+$i])*(s.v[js.j*8+$i]-cb.cv[js.j*8+$i])")
-        .mkString(" + ")
-      s"""WITH e AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-         |), js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         |cb AS (
-         |  SELECT js.j, c.vec_id AS code, c.v AS cv FROM e c CROSS JOIN js WHERE c.vec_id < 16
-         |), d AS (
-         |  SELECT s.vec_id, js.j, cb.code, $terms AS dist
-         |  FROM e s CROSS JOIN js JOIN cb ON cb.j = js.j
-         |), codes AS (
-         |  SELECT vec_id, j, round(dist, 6) AS dist FROM (
-         |    SELECT vec_id, j, code, dist,
-         |      row_number() OVER (PARTITION BY vec_id, j ORDER BY dist ASC, code ASC) AS rn
-         |    FROM d
-         |  ) WHERE rn = 1
-         |), cu AS (
-         |  SELECT j, CAST(round(dist * 1000000, 0) AS BIGINT) AS du FROM codes
-         |), pj AS (
-         |  SELECT j, count(*) AS n_vecs, sum(du) AS su, max(du) AS mxu FROM cu GROUP BY 1
-         |), tot AS (SELECT sum(su) AS stot FROM pj)
-         |SELECT j, CAST(n_vecs AS BIGINT) AS n_vecs,
-         |  CAST(su AS DOUBLE) / CAST(n_vecs AS DOUBLE) / 1000000 AS mean_sq_dist,
-         |  CAST(mxu AS DOUBLE) / 1000000 AS max_sq_dist,
-         |  CASE WHEN stot > 0 THEN CAST(su AS DOUBLE) / CAST(stot AS DOUBLE) END AS distortion_share
-         |FROM pj, tot
-         |ORDER BY j""".stripMargin
-    },
-    "q_cmo" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CAST(floor((close / prev - 1) * 1000000) AS BIGINT) AS mk
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), w AS (
-        |  SELECT user_id, day, count(*) OVER wn AS cnt,
-        |    sum(greatest(mk, 0)) OVER wn AS sg,
-        |    sum(greatest(-mk, 0)) OVER wn AS sl
-        |  FROM r
-        |  WINDOW wn AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |  CASE WHEN cnt = 14 AND sg + sl > 0
-        |    THEN 100.0 * CAST(sg - sl AS DOUBLE) / CAST(sg + sl AS DOUBLE) END AS cmo
-        |FROM w
-        |ORDER BY user_id, day""".stripMargin,
-    "q_ultimate_osc" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, bar_start,
-        |    CAST(floor((close - least(low, lag(close) OVER w)) * 1000000) AS BIGINT) AS bpu,
-        |    CAST(floor((greatest(high, lag(close) OVER w)
-        |      - least(low, lag(close) OVER w)) * 1000000) AS BIGINT) AS tru
-        |  FROM bars WINDOW w AS (PARTITION BY user_id ORDER BY bar_start)
-        |  QUALIFY bpu IS NOT NULL
-        |), m AS (
-        |  SELECT user_id, bar_start,
-        |    count(*) OVER w28 AS cnt,
-        |    sum(bpu) OVER w7 AS bp1, sum(tru) OVER w7 AS tr1,
-        |    sum(bpu) OVER w14 AS bp2, sum(tru) OVER w14 AS tr2,
-        |    sum(bpu) OVER w28 AS bp3, sum(tru) OVER w28 AS tr3
-        |  FROM t
-        |  WINDOW
-        |    w7 AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 6 PRECEDING AND CURRENT ROW),
-        |    w14 AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 13 PRECEDING AND CURRENT ROW),
-        |    w28 AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 27 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS day,
-        |  CASE WHEN cnt = 28 AND tr1 > 0 AND tr2 > 0 AND tr3 > 0
-        |    THEN 100.0 * (4.0 * (CAST(bp1 AS DOUBLE) / CAST(tr1 AS DOUBLE))
-        |      + 2.0 * (CAST(bp2 AS DOUBLE) / CAST(tr2 AS DOUBLE))
-        |      + CAST(bp3 AS DOUBLE) / CAST(tr3 AS DOUBLE)) / 7 END AS ultimate_osc
-        |FROM m
-        |ORDER BY user_id, day""".stripMargin,
-    "q_assortativity" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, edges AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), top AS (
-        |  SELECT src, dst,
-        |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |  FROM edges
-        |  QUALIFY rnk <= 5
-        |), deg AS (
-        |  SELECT src, count(*) AS deg FROM top GROUP BY 1
-        |), j AS (
-        |  SELECT t.src, t.dst, a.deg AS dx, b.deg AS dy
-        |  FROM top t JOIN deg a ON a.src = t.src JOIN deg b ON b.src = t.dst
-        |), m AS (
-        |  SELECT count(*) AS n_edges, sum(dx) AS sx, sum(dy) AS sy,
-        |    sum(dx * dy) AS sxy, sum(dx * dx) AS sxx, sum(dy * dy) AS syy
-        |  FROM j
-        |)
-        |SELECT CAST(n_edges AS BIGINT) AS n_edges,
-        |  CASE WHEN (CAST(n_edges AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-        |        AND (CAST(n_edges AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-        |    THEN (CAST(n_edges AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / sqrt((CAST(n_edges AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |           * (CAST(n_edges AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-        |  END AS assortativity
-        |FROM m""".stripMargin,
-    "q_code_detect" ->
-      """WITH f AS (
-        |  SELECT source, CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(length(text) - length(regexp_replace(text, '[{}\[\]();=<>#]', '', 'g')) AS BIGINT) AS n_sym,
-        |    CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS n_dig
-        |  FROM documents
-        |), g AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    sum(CASE WHEN n_sym * 20 > n_chars THEN 1 ELSE 0 END) AS n_code_like,
-        |    sum(n_sym) AS sym_chars, sum(n_dig) AS digit_chars, sum(n_chars) AS total_chars
-        |  FROM f GROUP BY 1
-        |)
-        |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-        |  CAST(n_code_like AS BIGINT) AS n_code_like,
-        |  CAST(sym_chars AS BIGINT) AS sym_chars,
-        |  CAST(digit_chars AS BIGINT) AS digit_chars,
-        |  CAST(total_chars AS BIGINT) AS total_chars,
-        |  CAST(n_code_like AS DOUBLE) / CAST(n_docs AS DOUBLE) AS code_share
-        |FROM g
-        |ORDER BY source""".stripMargin,
-    "q_woe_iv" ->
-      """WITH cells AS (
-        |  SELECT CAST(floor(value / 50.0) AS BIGINT) AS bin,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS g,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 0 ELSE 1 END) AS b
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1
-        |), tot AS (SELECT sum(g) AS gt, sum(b) AS bt, count(*) AS k FROM cells
-        |), t AS (
-        |  SELECT bin, g, b,
-        |    CAST(g + 1 AS DOUBLE) / CAST(gt + k AS DOUBLE) AS pg,
-        |    CAST(b + 1 AS DOUBLE) / CAST(bt + k AS DOUBLE) AS pb
-        |  FROM cells, tot
-        |), u AS (
-        |  SELECT bin, g AS n_good, b AS n_bad,
-        |    round(ln(pg / pb), 6) AS woe,
-        |    round((pg - pb) * ln(pg / pb), 6) AS iv_term,
-        |    CAST(round((pg - pb) * ln(pg / pb) * 1000000, 0) AS BIGINT) AS tu
-        |  FROM t
-        |)
-        |SELECT bin, CAST(n_good AS BIGINT) AS n_good, CAST(n_bad AS BIGINT) AS n_bad,
-        |  woe, iv_term,
-        |  CAST(sum(tu) OVER () AS DOUBLE) / 1000000 AS iv_total
-        |FROM u
-        |ORDER BY bin""".stripMargin,
-    "q_psi" ->
-      """WITH mid AS (
-        |  SELECT CAST((min(epoch_us(ts)) + max(epoch_us(ts))
-        |    - (min(epoch_us(ts)) + max(epoch_us(ts))) % 2) / 2 AS BIGINT) AS mid
-        |  FROM events
-        |), cells AS (
-        |  SELECT CAST(floor(value / 50.0) AS BIGINT) AS bin,
-        |    sum(CASE WHEN epoch_us(ts) < mid THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN epoch_us(ts) >= mid THEN 1 ELSE 0 END) AS cb
-        |  FROM events, mid WHERE value IS NOT NULL GROUP BY 1
-        |), tot AS (SELECT sum(ca) AS na, sum(cb) AS nb, count(*) AS k FROM cells
-        |), p AS (
-        |  SELECT na, nb, k, round(sum(
-        |    (CAST(ca + 1 AS DOUBLE) / CAST(na + k AS DOUBLE)
-        |      - CAST(cb + 1 AS DOUBLE) / CAST(nb + k AS DOUBLE))
-        |    * ln((CAST(ca + 1 AS DOUBLE) / CAST(na + k AS DOUBLE))
-        |       / (CAST(cb + 1 AS DOUBLE) / CAST(nb + k AS DOUBLE)))
-        |  ), 6) AS psi
-        |  FROM cells, tot GROUP BY na, nb, k
-        |)
-        |SELECT CAST(na AS BIGINT) AS n_first_half, CAST(nb AS BIGINT) AS n_second_half,
-        |  CAST(k AS BIGINT) AS n_bins, psi, psi > 0.2 AS drift_alert
-        |FROM p""".stripMargin,
-    "q_lang_confusion" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('the','a','and','of'))) AS hits_en,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('el','la','y','de'))) AS hits_es,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('le','les','et','des'))) AS hits_fr,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('der','die','und','von'))) AS hits_de,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('de5','shi4','le5','zai4'))) AS hits_zh
-        |  FROM documents
-        |), p AS (
-        |  SELECT doc_id,
-        |    CASE
-        |      WHEN hits_en >= hits_es AND hits_en >= hits_fr AND hits_en >= hits_de AND hits_en >= hits_zh AND hits_en > 0 THEN 'en'
-        |      WHEN hits_es >= hits_fr AND hits_es >= hits_de AND hits_es >= hits_zh AND hits_es > 0 THEN 'es'
-        |      WHEN hits_fr >= hits_de AND hits_fr >= hits_zh AND hits_fr > 0 THEN 'fr'
-        |      WHEN hits_de >= hits_zh AND hits_de > 0 THEN 'de'
-        |      WHEN hits_zh > 0 THEN 'zh'
-        |      ELSE 'und'
-        |    END AS lang_pred
-        |  FROM h
-        |), m AS (
-        |  SELECT d.lang, p.lang_pred, count(*) AS n_docs
-        |  FROM documents d JOIN p USING (doc_id) GROUP BY 1, 2
-        |), rt AS (SELECT lang, sum(n_docs) AS t FROM m GROUP BY 1)
-        |SELECT m.lang, m.lang_pred, CAST(m.n_docs AS BIGINT) AS n_docs,
-        |  m.lang = m.lang_pred AS correct,
-        |  CAST(m.n_docs AS DOUBLE) / CAST(rt.t AS DOUBLE) AS share_of_lang
-        |FROM m JOIN rt ON rt.lang = m.lang
-        |ORDER BY 1, 2""".stripMargin,
-    "q_dedup_sim_histogram" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(s), 9, 8) AS BIGINT) AS h2
-        |  FROM sh
-        |), mh AS (
-        |  SELECT doc_id, j, min((h1 + j * h2) % 4294967296) AS m
-        |  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS j) js
-        |  GROUP BY doc_id, j
-        |), sig AS (
-        |  SELECT doc_id, j // 2 AS band,
-        |    concat(min(CASE WHEN j % 2 = 0 THEN m END), ':', min(CASE WHEN j % 2 = 1 THEN m END)) AS sig
-        |  FROM mh GROUP BY doc_id, j // 2
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-        |), inter AS (
-        |  SELECT c.da, c.db, count(*) AS i
-        |  FROM cand c JOIN sh a ON a.doc_id = c.da JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY c.da, c.db
-        |), scored AS (
-        |  SELECT c.da, c.db, coalesce(inter.i, 0) AS i, x.n AS na, y.n AS nb
-        |  FROM cand c
-        |  LEFT JOIN inter ON inter.da = c.da AND inter.db = c.db
-        |  JOIN sz x ON c.da = x.doc_id JOIN sz y ON c.db = y.doc_id
-        |), hst AS (
-        |  SELECT (10 * i) // (na + nb - i) AS bucket, count(*) AS n_pairs
-        |  FROM scored GROUP BY 1
-        |), t AS (SELECT sum(n_pairs) AS tt FROM hst)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(n_pairs AS BIGINT) AS n_pairs,
-        |  CAST(n_pairs AS DOUBLE) / CAST(tt AS DOUBLE) AS share
-        |FROM hst, t
-        |ORDER BY bucket""".stripMargin,
-    "q_streaks" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CAST(floor((close / prev - 1) * 1000000) AS BIGINT) AS mk
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), s AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN mk > 0 THEN 1 WHEN mk < 0 THEN -1 ELSE 0 END AS s
-        |  FROM r
-        |), f AS (
-        |  SELECT user_id, day, s,
-        |    CASE WHEN lag(s) OVER w IS NULL OR s != lag(s) OVER w THEN 1 ELSE 0 END AS chg
-        |  FROM s WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |), g0 AS (
-        |  SELECT user_id, day, s,
-        |    sum(chg) OVER (PARTITION BY user_id ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM f
-        |), g AS (
-        |  SELECT user_id, sid, count(*) AS len, max(s) AS sgn FROM g0 GROUP BY 1, 2
-        |), mxt AS (SELECT user_id, max(sid) AS mx FROM g GROUP BY 1)
-        |SELECT g.user_id,
-        |  CAST(coalesce(max(CASE WHEN sgn = 1 THEN len END), 0) AS BIGINT) AS longest_up,
-        |  CAST(coalesce(max(CASE WHEN sgn = -1 THEN len END), 0) AS BIGINT) AS longest_down,
-        |  CAST(max(CASE WHEN sid = mx THEN sgn * len END) AS BIGINT) AS current_streak
-        |FROM g JOIN mxt ON mxt.user_id = g.user_id
-        |GROUP BY g.user_id
-        |ORDER BY 1""".stripMargin,
-    "q_adx" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, bar_start,
-        |    CAST(floor(CASE WHEN (high - lag(high) OVER w) > (lag(low) OVER w - low)
-        |        AND (high - lag(high) OVER w) > 0
-        |      THEN high - lag(high) OVER w ELSE 0.0 END * 1000000) AS BIGINT) AS dmp,
-        |    CAST(floor(CASE WHEN (lag(low) OVER w - low) > (high - lag(high) OVER w)
-        |        AND (lag(low) OVER w - low) > 0
-        |      THEN lag(low) OVER w - low ELSE 0.0 END * 1000000) AS BIGINT) AS dmn,
-        |    CAST(floor(greatest(high - low,
-        |      abs(high - lag(close) OVER w),
-        |      abs(low - lag(close) OVER w)) * 1000000) AS BIGINT) AS tru,
-        |    lag(high) OVER w IS NOT NULL AS has_prev
-        |  FROM bars WINDOW w AS (PARTITION BY user_id ORDER BY bar_start)
-        |  QUALIFY has_prev
-        |), m AS (
-        |  SELECT user_id, bar_start, count(*) OVER wn AS cnt,
-        |    sum(dmp) OVER wn AS sp, sum(dmn) OVER wn AS sn, sum(tru) OVER wn AS st
-        |  FROM t
-        |  WINDOW wn AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |), d AS (
-        |  SELECT *,
-        |    CASE WHEN cnt = 14 AND st > 0 AND (sp + sn) > 0
-        |      THEN CAST(floor(100.0 * CAST(abs(sp - sn) AS DOUBLE) / CAST(sp + sn AS DOUBLE) * 1000000) AS BIGINT)
-        |    END AS dxu
-        |  FROM m
-        |), f AS (
-        |  SELECT *, count(dxu) OVER wn AS dx_cnt, sum(dxu) OVER wn AS dx_sum
-        |  FROM d
-        |  WINDOW wn AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS day,
-        |  CASE WHEN cnt = 14 AND st > 0 THEN 100.0 * CAST(sp AS DOUBLE) / CAST(st AS DOUBLE) END AS di_plus,
-        |  CASE WHEN cnt = 14 AND st > 0 THEN 100.0 * CAST(sn AS DOUBLE) / CAST(st AS DOUBLE) END AS di_minus,
-        |  CAST(dxu AS DOUBLE) / 1000000.0 AS dx,
-        |  CASE WHEN dx_cnt = 14 THEN CAST(dx_sum AS DOUBLE) / 14000000.0 END AS adx
-        |FROM f
-        |ORDER BY user_id, day""".stripMargin,
-    "q_trix" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), l0 AS (
-        |  SELECT user_id, list(close ORDER BY day) AS xs, list(day ORDER BY day) AS ds
-        |  FROM bars GROUP BY user_id
-        |), r1 AS (
-        |  SELECT user_id, xs, ds, unnest(generate_series(1, len(xs))) AS rn FROM l0
-        |), v1 AS (
-        |  -- each EMA stage is the seeded strict left fold of the
-        |  -- recurrence y = (1-a)*y + a*x, mirroring Spark's
-        |  -- aggregate() HOF bit-for-bit
-        |  SELECT user_id, ds, rn,
-        |    list_reduce(xs[1:rn], (y, x) -> (1 - 2.0/16) * y + (2.0/16) * x) AS e1
-        |  FROM r1
-        |), l1 AS (SELECT user_id, any_value(ds) AS ds, list(e1 ORDER BY rn) AS e1s FROM v1 GROUP BY user_id
-        |), v2 AS (
-        |  SELECT user_id, ds, e1s, unnest(generate_series(1, len(e1s))) AS rn FROM l1
-        |), w2 AS (
-        |  SELECT user_id, ds, rn,
-        |    list_reduce(e1s[1:rn], (y, x) -> (1 - 2.0/16) * y + (2.0/16) * x) AS e2
-        |  FROM v2
-        |), l2 AS (SELECT user_id, any_value(ds) AS ds, list(e2 ORDER BY rn) AS e2s FROM w2 GROUP BY user_id
-        |), v3 AS (
-        |  SELECT user_id, ds, e2s, unnest(generate_series(1, len(e2s))) AS rn FROM l2
-        |), w3 AS (
-        |  SELECT user_id, ds, e2s, rn,
-        |    list_reduce(e2s[1:rn], (y, x) -> (1 - 2.0/16) * y + (2.0/16) * x) AS e3
-        |  FROM v3
-        |), p AS (
-        |  SELECT user_id, ds[rn] AS day, e3,
-        |    lag(e3) OVER (PARTITION BY user_id ORDER BY rn) AS prev
-        |  FROM w3
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |  e3 AS triple_ema,
-        |  CASE WHEN prev != 0 THEN (e3 / prev - 1) * 100 END AS trix
-        |FROM p
-        |ORDER BY user_id, day""".stripMargin,
-    // four nested EMA recurrences as seeded strict left folds (the
-    // q_trix determinism finding); TSI = one IEEE division of
-    // bit-identical doubles, UNROUNDED
-    "q_tsi" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), l0 AS (
-        |  SELECT user_id, list(close ORDER BY day) AS xs, list(day ORDER BY day) AS ds
-        |  FROM bars GROUP BY user_id
-        |), m AS (
-        |  SELECT user_id, ds,
-        |    list_transform(generate_series(2, len(xs)), i -> xs[i] - xs[i-1]) AS ms
-        |  FROM l0 WHERE len(xs) >= 2
-        |), r1 AS (
-        |  SELECT user_id, ds, ms, unnest(generate_series(1, len(ms))) AS rn FROM m
-        |), v1 AS (
-        |  SELECT user_id, ds, rn,
-        |    list_reduce(ms[1:rn], (y, x) -> (1 - 2.0/26) * y + (2.0/26) * x) AS e1,
-        |    list_reduce(list_transform(ms[1:rn], z -> abs(z)),
-        |      (y, x) -> (1 - 2.0/26) * y + (2.0/26) * x) AS e1a
-        |  FROM r1
-        |), l1 AS (
-        |  SELECT user_id, any_value(ds) AS ds,
-        |    list(e1 ORDER BY rn) AS e1s, list(e1a ORDER BY rn) AS e1as
-        |  FROM v1 GROUP BY user_id
-        |), r2 AS (
-        |  SELECT user_id, ds, e1s, e1as, unnest(generate_series(1, len(e1s))) AS rn FROM l1
-        |), v2 AS (
-        |  SELECT user_id, ds, rn,
-        |    list_reduce(e1s[1:rn], (y, x) -> (1 - 2.0/14) * y + (2.0/14) * x) AS e2,
-        |    list_reduce(e1as[1:rn], (y, x) -> (1 - 2.0/14) * y + (2.0/14) * x) AS e2a
-        |  FROM r2
-        |)
-        |SELECT user_id, strftime(ds[rn + 1], '%Y-%m-%d') AS day,
-        |  CASE WHEN e2a != 0 THEN 100.0 * e2 / e2a END AS tsi
-        |FROM v2
-        |ORDER BY user_id, day""".stripMargin,
-    // builds on q_rsi's 6dp chain: window min/max PICK existing
-    // doubles, %K one fixed chain at 6dp, %D the stochastic recipe
-    "q_stoch_rsi" ->
-      """WITH d AS (
-        |  SELECT user_id, ts,
-        |    value - lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS delta
-        |  FROM events
-        |  QUALIFY delta IS NOT NULL
-        |), o AS (
-        |  SELECT user_id, ts, delta,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS rn
-        |  FROM d
-        |), g AS (
-        |  SELECT *,
-        |    CASE WHEN rn = 0 THEN greatest(delta, 0) ELSE (1.0/14) * greatest(delta, 0) * pow(1 - 1.0/14, -rn) END AS gg,
-        |    CASE WHEN rn = 0 THEN greatest(-delta, 0) ELSE (1.0/14) * greatest(-delta, 0) * pow(1 - 1.0/14, -rn) END AS gl
-        |  FROM o
-        |), s AS (
-        |  SELECT user_id, ts,
-        |    pow(1 - 1.0/14, rn) * sum(gg) OVER wr AS avg_gain,
-        |    pow(1 - 1.0/14, rn) * sum(gl) OVER wr AS avg_loss
-        |  FROM g
-        |  WINDOW wr AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |), r AS (
-        |  SELECT user_id, ts,
-        |    round(CASE WHEN avg_loss != 0 THEN 100.0 - 100.0 / (1.0 + avg_gain / avg_loss) ELSE 100.0 END, 6) AS rsi
-        |  FROM s
-        |), k AS (
-        |  SELECT user_id, ts, rsi,
-        |    min(rsi) OVER wn AS lo, max(rsi) OVER wn AS hi,
-        |    count(rsi) OVER wn AS nw
-        |  FROM r
-        |  WINDOW wn AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |), k2 AS (
-        |  SELECT user_id, ts, rsi,
-        |    round(CASE WHEN nw = 14 AND hi != lo THEN (rsi - lo) / (hi - lo) * 100 END, 6) AS stoch_rsi
-        |  FROM k
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us, rsi, stoch_rsi,
-        |  avg(stoch_rsi) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS stoch_rsi_d
-        |FROM k2 ORDER BY user_id, ts_us""".stripMargin,
-    // both smoothings are seeded strict left folds; the rolling
-    // 25-sum is a seeded slice fold — identical accumulation order
-    // cross-engine, UNROUNDED
-    "q_mass_index" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max(value) - min(value) AS rng
-        |  FROM events GROUP BY 1, 2
-        |), l0 AS (
-        |  SELECT user_id, list(rng ORDER BY day) AS rs, list(day ORDER BY day) AS ds
-        |  FROM bars GROUP BY user_id
-        |), e1t AS (
-        |  SELECT user_id, ds,
-        |    list_transform(generate_series(1, len(rs)),
-        |      i -> list_reduce(rs[1:i], (y, x) -> (1 - 2.0/10) * y + (2.0/10) * x)) AS e1
-        |  FROM l0
-        |), e2t AS (
-        |  SELECT user_id, ds, e1,
-        |    list_transform(generate_series(1, len(e1)),
-        |      i -> list_reduce(e1[1:i], (y, x) -> (1 - 2.0/10) * y + (2.0/10) * x)) AS e2
-        |  FROM e1t
-        |), rt AS (
-        |  SELECT user_id, ds,
-        |    list_transform(generate_series(1, len(e1)),
-        |      i -> CASE WHEN e2[i] != 0 THEN e1[i] / e2[i] END) AS ratios
-        |  FROM e2t
-        |), rr AS (
-        |  SELECT user_id, ds, ratios, unnest(generate_series(1, len(ratios))) AS rn FROM rt
-        |)
-        |SELECT user_id, strftime(ds[rn], '%Y-%m-%d') AS day,
-        |  ratios[rn] AS ema_ratio,
-        |  CASE WHEN rn >= 25 THEN list_reduce(ratios[rn-24:rn], (a, b) -> a + b) END AS mass_index
-        |FROM rr ORDER BY user_id, day""".stripMargin,
-    // each ROC is one IEEE division of exact micro-longs; the
-    // weighted sum is an explicit left-associated lag chain (never a
-    // windowed float SUM), one constant division — UNROUNDED
-    "q_coppock" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), q AS (
-        |  SELECT user_id, day, CAST(floor(close * 1000000) AS BIGINT) AS qc FROM dc
-        |), r AS (
-        |  SELECT user_id, day,
-        |    (CASE WHEN lag(qc, 14) OVER w != 0
-        |      THEN CAST((qc - lag(qc, 14) OVER w) * 100 AS DOUBLE) / CAST(lag(qc, 14) OVER w AS DOUBLE) END)
-        |    + (CASE WHEN lag(qc, 11) OVER w != 0
-        |      THEN CAST((qc - lag(qc, 11) OVER w) * 100 AS DOUBLE) / CAST(lag(qc, 11) OVER w AS DOUBLE) END) AS roc_sum
-        |  FROM q WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |  (10.0 * roc_sum + 9.0 * lag(roc_sum, 1) OVER w2 + 8.0 * lag(roc_sum, 2) OVER w2
-        |   + 7.0 * lag(roc_sum, 3) OVER w2 + 6.0 * lag(roc_sum, 4) OVER w2
-        |   + 5.0 * lag(roc_sum, 5) OVER w2 + 4.0 * lag(roc_sum, 6) OVER w2
-        |   + 3.0 * lag(roc_sum, 7) OVER w2 + 2.0 * lag(roc_sum, 8) OVER w2
-        |   + 1.0 * lag(roc_sum, 9) OVER w2) / 55.0 AS coppock
-        |FROM r WINDOW w2 AS (PARTITION BY user_id ORDER BY day)
-        |ORDER BY user_id, day""".stripMargin,
-    // raw FI is the exact long Δqc·vol over constant 1e6; the EMA(13)
-    // is the seeded strict-left-fold recurrence (q_trix finding),
-    // bit-identical to Spark's aggregate() fold — UNROUNDED
-    "q_force_index" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    max_by(value, ts) AS close,
-        |    CAST(sum(coalesce(CAST(json_extract_string(props, '$.k') AS BIGINT), 0)) AS BIGINT) AS volume
-        |  FROM events GROUP BY 1, 2
-        |), l0 AS (
-        |  SELECT user_id,
-        |    list(CAST(floor(close * 1000000) AS BIGINT) ORDER BY day) AS qcs,
-        |    list(volume ORDER BY day) AS vols,
-        |    list(day ORDER BY day) AS ds
-        |  FROM bars GROUP BY user_id
-        |), m AS (
-        |  SELECT user_id, ds,
-        |    list_transform(generate_series(2, len(qcs)),
-        |      i -> CAST((qcs[i] - qcs[i-1]) * vols[i] AS DOUBLE)) AS fis
-        |  FROM l0 WHERE len(qcs) >= 2
-        |), r AS (
-        |  SELECT user_id, ds, fis, unnest(generate_series(1, len(fis))) AS rn FROM m
-        |)
-        |SELECT user_id, strftime(ds[rn + 1], '%Y-%m-%d') AS day,
-        |  fis[rn] / 1000000 AS force_raw,
-        |  list_reduce(fis[1:rn], (y, x) -> (1 - 2.0/14) * y + (2.0/14) * x) / 1000000 AS force_ema
-        |FROM r ORDER BY user_id, day""".stripMargin,
-    // bull/bear power = exact bar double minus the EMA(13) strict
-    // left fold over raw closes — one subtraction, UNROUNDED
-    "q_elder_ray" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), l0 AS (
-        |  SELECT user_id,
-        |    list(high ORDER BY day) AS hs, list(low ORDER BY day) AS ls,
-        |    list(close ORDER BY day) AS cs, list(day ORDER BY day) AS ds
-        |  FROM bars GROUP BY user_id
-        |), r AS (
-        |  SELECT user_id, ds, hs, ls, cs, unnest(generate_series(1, len(cs))) AS rn FROM l0
-        |)
-        |SELECT user_id, strftime(ds[rn], '%Y-%m-%d') AS day,
-        |  hs[rn] - list_reduce(cs[1:rn], (y, x) -> (1 - 2.0/14) * y + (2.0/14) * x) AS bull_power,
-        |  ls[rn] - list_reduce(cs[1:rn], (y, x) -> (1 - 2.0/14) * y + (2.0/14) * x) AS bear_power
-        |FROM r ORDER BY user_id, day""".stripMargin,
-    // mfv is one fixed IEEE chain per bar; ADL is the strict-left
-    // cumsum fold (windowed running SUM over doubles is not engine-
-    // portable — DuckDB tree-aggregates); both smoothings fold the
-    // SAME adl list — all UNROUNDED
-    "q_adl_chaikin" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close,
-        |    CAST(sum(coalesce(CAST(json_extract_string(props, '$.k') AS BIGINT), 0)) AS BIGINT) AS volume
-        |  FROM events GROUP BY 1, 2
-        |), l0 AS (
-        |  SELECT user_id,
-        |    list(CASE WHEN high != low
-        |         THEN ((close - low) - (high - close)) / (high - low) * CAST(volume AS DOUBLE)
-        |         ELSE 0.0 END ORDER BY day) AS mfvs,
-        |    list(day ORDER BY day) AS ds
-        |  FROM bars GROUP BY user_id
-        |), a AS (
-        |  SELECT user_id, ds,
-        |    list_transform(generate_series(1, len(mfvs)),
-        |      i -> list_reduce(mfvs[1:i], (y, x) -> y + x)) AS adls
-        |  FROM l0 WHERE len(mfvs) >= 1
-        |), r AS (
-        |  SELECT user_id, ds, adls, unnest(generate_series(1, len(adls))) AS rn FROM a
-        |)
-        |SELECT user_id, strftime(ds[rn], '%Y-%m-%d') AS day,
-        |  adls[rn] AS adl,
-        |  list_reduce(adls[1:rn], (y, x) -> (1 - 2.0/4) * y + (2.0/4) * x)
-        |    - list_reduce(adls[1:rn], (y, x) -> (1 - 2.0/11) * y + (2.0/11) * x) AS chaikin_osc
-        |FROM r ORDER BY user_id, day""".stripMargin,
-    "q_heikin_ashi" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    min_by(value, ts) AS open, max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), o AS (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY bar_start) - 1 AS rn,
-        |    (((open + high) + low) + close) / 4 AS ha_close
-        |  FROM bars
-        |), z AS (
-        |  SELECT *, CASE WHEN rn = 0 THEN (open + close) / 2
-        |    ELSE lag(ha_close) OVER (PARTITION BY user_id ORDER BY bar_start) END AS zv
-        |  FROM o
-        |), g AS (
-        |  SELECT *, CASE WHEN rn = 0 THEN zv ELSE 0.5 * zv * pow(0.5, -rn) END AS gv
-        |  FROM z
-        |), l AS (
-        |  SELECT user_id, list(gv ORDER BY rn) AS gl FROM g GROUP BY user_id
-        |), e AS (
-        |  -- strictly-sequential prefix fold: DuckDB's windowed running
-        |  -- SUM pairwise-reorders doubles (ulp drift vs Spark's
-        |  -- sequential frame fold); list_reduce fixes the op order
-        |  SELECT g.*, pow(0.5, g.rn) * list_reduce(l.gl[1:g.rn+1], (a, b) -> a + b) AS ha_open
-        |  FROM g JOIN l ON l.user_id = g.user_id
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS day,
-        |  ha_open,
-        |  greatest(high, ha_open, ha_close) AS ha_high,
-        |  least(low, ha_open, ha_close) AS ha_low,
-        |  ha_close,
-        |  ha_close > ha_open AS ha_bull
-        |FROM e
-        |ORDER BY user_id, day""".stripMargin,
-    "q_pacf" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), l AS (
-        |  SELECT user_id, ret,
-        |    lag(ret, 1) OVER w AS l1, lag(ret, 2) OVER w AS l2, lag(ret, 3) OVER w AS l3
-        |  FROM r WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |), u AS (
-        |  SELECT user_id, 1 AS lag_k, ret, l1 AS ret_lag FROM l
-        |  UNION ALL SELECT user_id, 2, ret, l2 FROM l
-        |  UNION ALL SELECT user_id, 3, ret, l3 FROM l
-        |), a AS (
-        |  SELECT user_id, lag_k,
-        |    round(CASE WHEN var_samp(ret) != 0 AND var_samp(ret_lag) != 0
-        |      THEN corr(ret, ret_lag) END, 6) AS acf
-        |  FROM u WHERE ret_lag IS NOT NULL
-        |  GROUP BY user_id, lag_k
-        |), p AS (
-        |  SELECT user_id,
-        |    count(CASE WHEN acf IS NOT NULL THEN 1 END) AS k_present,
-        |    max(CASE WHEN lag_k = 1 THEN acf END) AS r1,
-        |    max(CASE WHEN lag_k = 2 THEN acf END) AS r2,
-        |    max(CASE WHEN lag_k = 3 THEN acf END) AS r3
-        |  FROM a GROUP BY 1
-        |), q AS (
-        |  SELECT *, 1.0 - r1 * r1 AS v1,
-        |    (r2 - r1 * r1) / (1.0 - r1 * r1) AS p2
-        |  FROM p
-        |), q2 AS (
-        |  SELECT *, r1 - p2 * r1 AS p21, v1 * (1.0 - p2 * p2) AS v2 FROM q
-        |)
-        |SELECT user_id, r1, r2, r3,
-        |  CASE WHEN k_present = 3 THEN r1 END AS pacf1,
-        |  CASE WHEN k_present = 3 AND v1 != 0 THEN p2 END AS pacf2,
-        |  CASE WHEN k_present = 3 AND v1 != 0 AND v2 != 0
-        |    THEN (r3 - p21 * r2 - p2 * r1) / v2 END AS pacf3
-        |FROM q2
-        |ORDER BY user_id""".stripMargin,
-    "q_market_timing" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), b AS (SELECT day, ret AS bench_ret FROM r WHERE user_id = 0
-        |), j AS (
-        |  SELECT r.user_id,
-        |    CAST(CAST(floor(r.ret * 1000000) AS BIGINT) AS HUGEINT) AS ru,
-        |    CAST(CAST(floor(b.bench_ret * 1000000) AS BIGINT) AS HUGEINT) AS mu
-        |  FROM r JOIN b USING (day) WHERE r.user_id != 0
-        |), m AS (
-        |  SELECT user_id, count(*) AS n,
-        |    sum(mu) AS sm1, sum(mu * mu) AS sm2, sum(mu * mu * mu) AS sm3,
-        |    sum(mu * mu * mu * mu) AS sm4,
-        |    sum(ru) AS t0, sum(ru * mu) AS t1, sum(ru * mu * mu) AS t2
-        |  FROM j GROUP BY 1
-        |), d AS (
-        |  SELECT user_id, n, CAST(n AS DOUBLE) AS s0,
-        |    CASE WHEN sm1 < 0 THEN -(CAST(abs(sm1) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sm1) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(sm1 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sm1 % 9007199254740992 AS DOUBLE) END AS s1,
-        |    CASE WHEN sm2 < 0 THEN -(CAST(abs(sm2) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sm2) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(sm2 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sm2 % 9007199254740992 AS DOUBLE) END AS s2,
-        |    CASE WHEN sm3 < 0 THEN -(CAST(abs(sm3) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sm3) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(sm3 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sm3 % 9007199254740992 AS DOUBLE) END AS s3,
-        |    CASE WHEN sm4 < 0 THEN -(CAST(abs(sm4) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sm4) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(sm4 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sm4 % 9007199254740992 AS DOUBLE) END AS s4,
-        |    CASE WHEN t0 < 0 THEN -(CAST(abs(t0) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(t0) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(t0 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(t0 % 9007199254740992 AS DOUBLE) END AS u0,
-        |    CASE WHEN t1 < 0 THEN -(CAST(abs(t1) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(t1) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(t1 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(t1 % 9007199254740992 AS DOUBLE) END AS u1,
-        |    CASE WHEN t2 < 0 THEN -(CAST(abs(t2) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(t2) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(t2 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(t2 % 9007199254740992 AS DOUBLE) END AS u2
-        |  FROM m
-        |), c AS (
-        |  SELECT user_id, n,
-        |    s0 * (s2 * s4 - s3 * s3) - s1 * (s1 * s4 - s3 * s2) + s2 * (s1 * s3 - s2 * s2) AS det,
-        |    u0 * (s2 * s4 - s3 * s3) - s1 * (u1 * s4 - s3 * u2) + s2 * (u1 * s3 - s2 * u2) AS det_a,
-        |    s0 * (u1 * s4 - s3 * u2) - u0 * (s1 * s4 - s3 * s2) + s2 * (s1 * u2 - u1 * s2) AS det_b,
-        |    s0 * (s2 * u2 - u1 * s3) - s1 * (s1 * u2 - u1 * s2) + u0 * (s1 * s3 - s2 * s2) AS det_c
-        |  FROM d
-        |)
-        |SELECT user_id, CAST(n AS BIGINT) AS n,
-        |  round(CASE WHEN n >= 3 AND det != 0 THEN det_a / det / 1000000.0 END, 6) AS alpha,
-        |  round(CASE WHEN n >= 3 AND det != 0 THEN det_b / det END, 6) AS beta,
-        |  round(CASE WHEN n >= 3 AND det != 0 THEN det_c / det * 1000000.0 END, 6) AS gamma
-        |FROM c
-        |ORDER BY user_id""".stripMargin,
-    "q_bootstrap_ci" -> {
-      val reps  = 0 until 32
-      val conds = reps.map(i =>
-        s"sum(CASE WHEN (h & ${1L << i}) != 0 THEN vu END) AS s$i, count(CASE WHEN (h & ${1L << i}) != 0 THEN 1 END) AS c$i").mkString(",\n    ")
-      def sd(x: String) =
-        s"CASE WHEN $x < 0 THEN -(CAST(abs($x) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs($x) % 9007199254740992 AS DOUBLE)) " +
-        s"ELSE CAST($x // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST($x % 9007199254740992 AS DOUBLE) END"
-      val meanList = reps.map(i => s"${sd(s"s$i")} / CAST(c$i AS DOUBLE)").mkString(", ")
-      val minc     = reps.map(i => s"c$i").mkString(", ")
-      s"""WITH base AS (
-         |  SELECT event_type,
-         |    CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) AS h,
-         |    CAST(CAST(floor(value * 1000000) AS BIGINT) AS HUGEINT) AS vu
-         |  FROM events WHERE value IS NOT NULL
-         |), a AS (
-         |  SELECT event_type, sum(vu) AS st, count(*) AS ct,
-         |    $conds
-         |  FROM base GROUP BY event_type
-         |), m AS (
-         |  SELECT event_type, st, ct,
-         |    list_sort([$meanList]) AS ms,
-         |    least($minc) AS minc
-         |  FROM a
-         |)
-         |SELECT event_type, CAST(ct AS BIGINT) AS n,
-         |  ${sd("st")} / CAST(ct AS DOUBLE) / 1000000.0 AS mean,
-         |  CASE WHEN minc > 0 THEN (ms[1] + (ms[2] - ms[1]) * 0.775) / 1000000.0 END AS ci_lo,
-         |  CASE WHEN minc > 0 THEN (ms[31] + (ms[32] - ms[31]) * 0.225) / 1000000.0 END AS ci_hi
-         |FROM m
-         |ORDER BY event_type""".stripMargin
-    },
-    "q_hits" -> {
-      val edgeHead =
-        s"""WITH e AS (
-          |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-          ${celledCtes("          ")}, pairs AS (
-          |  SELECT a.vec_id AS src, b.vec_id AS dst,
-          |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-          |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-          |  WHERE a.nn * b.nn != 0
-          |), edges AS (
-          |  SELECT src, dst FROM (
-          |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-          |    FROM pairs
-          |  ) WHERE rnk <= 5
-          |), nodes AS (SELECT vec_id AS node FROM embeddings),
-          |p AS (SELECT 1000000000000 // count(*) AS s0 FROM nodes),
-          |h0 AS (SELECT node, (SELECT s0 FROM p) AS h FROM nodes)""".stripMargin
-      val rounds = (1 to 3).map { i =>
-        s"""ar$i AS (
-           |  SELECT e2.dst AS node, sum(h.h) AS a FROM edges e2
-           |  JOIN h${i - 1} h ON h.node = e2.src GROUP BY 1
-           |), at$i AS (SELECT sum(a) AS t FROM ar$i),
-           |a$i AS (
-           |  SELECT nd.node,
-           |    CAST(coalesce(x.a, 0) AS HUGEINT) * 1000000000000 // (SELECT t FROM at$i) AS a
-           |  FROM nodes nd LEFT JOIN ar$i x ON nd.node = x.node
-           |), hr$i AS (
-           |  SELECT e2.src AS node, sum(a.a) AS h FROM edges e2
-           |  JOIN a$i a ON a.node = e2.dst GROUP BY 1
-           |), ht$i AS (SELECT sum(h) AS t FROM hr$i),
-           |h$i AS (
-           |  SELECT nd.node,
-           |    CAST(coalesce(x.h, 0) AS HUGEINT) * 1000000000000 // (SELECT t FROM ht$i) AS h
-           |  FROM nodes nd LEFT JOIN hr$i x ON nd.node = x.node
-           |)""".stripMargin
-      }.mkString(",\n")
-      s"""$edgeHead,
-         |$rounds
-         |SELECT h3.node, CAST(h3.h AS BIGINT) AS hub_units, CAST(a3.a AS BIGINT) AS auth_units,
-         |  CAST(h3.h AS DOUBLE) / 1000000000000 AS hub,
-         |  CAST(a3.a AS DOUBLE) / 1000000000000 AS authority
-         |FROM h3 JOIN a3 USING (node)
-         |ORDER BY node""".stripMargin
-    },
-    "q_degree_hist" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, pairs AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), edges AS (
-        |  SELECT src, dst FROM (
-        |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |    FROM pairs
-        |  ) WHERE rnk <= 5
-        |), mut AS (
-        |  SELECT a.src, a.dst FROM edges a JOIN edges b ON a.src = b.dst AND a.dst = b.src
-        |  WHERE a.src < a.dst
-        |), ends AS (
-        |  SELECT src AS node FROM mut UNION ALL SELECT dst FROM mut
-        |), dg AS (SELECT node, count(*) AS degree FROM ends GROUP BY 1
-        |), f AS (
-        |  SELECT nd.vec_id AS node, coalesce(dg.degree, 0) AS degree
-        |  FROM embeddings nd LEFT JOIN dg ON dg.node = nd.vec_id
-        |), hist AS (SELECT degree, count(*) AS n_nodes FROM f GROUP BY 1
-        |), t AS (SELECT sum(n_nodes) AS tt FROM hist)
-        |SELECT CAST(degree AS BIGINT) AS degree, CAST(n_nodes AS BIGINT) AS n_nodes,
-        |  CAST(n_nodes AS DOUBLE) / CAST(tt AS DOUBLE) AS share
-        |FROM hist, t
-        |ORDER BY degree""".stripMargin,
-    // wedge-center contributions are exact floor divisions 1e12//deg;
-    // the pair sum is an order-free long, one IEEE division surfaced
-    "q_resource_alloc" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, pairs AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), edges AS (
-        |  SELECT src, dst FROM (
-        |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |    FROM pairs
-        |  ) WHERE rnk <= 5
-        |), mut AS (
-        |  SELECT a.src, a.dst FROM edges a JOIN edges b ON a.src = b.dst AND a.dst = b.src
-        |  WHERE a.src < a.dst
-        |), nb AS (
-        |  SELECT src AS node, dst AS nbr FROM mut UNION ALL SELECT dst, src FROM mut
-        |), dg AS (SELECT node, count(*) AS deg FROM nb GROUP BY 1
-        |), w AS (
-        |  SELECT x.nbr AS a, y.nbr AS b, d.deg
-        |  FROM nb x JOIN nb y ON x.node = y.node AND x.nbr < y.nbr
-        |  JOIN dg d ON d.node = x.node
-        |), ra AS (
-        |  SELECT a, b, count(*) AS n_common, sum(1000000000000 // deg) AS ra_micro
-        |  FROM w GROUP BY 1, 2
-        |)
-        |SELECT a, b, CAST(n_common AS BIGINT) AS n_common, CAST(ra_micro AS BIGINT) AS ra_micro,
-        |  CAST(ra_micro AS DOUBLE) / 1000000000000.0 AS ra_score
-        |FROM ra WHERE n_common >= 2 ORDER BY a, b""".stripMargin,
-    // synchronous peel, 8 unrolled rounds (spec asserts convergence
-    // well inside); membership + degrees all-integer
-    "q_kcore" -> {
-      val head =
-        s"""WITH e AS (
-          |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-          ${celledCtes("          ")}, pairs AS (
-          |  SELECT a.vec_id AS src, b.vec_id AS dst,
-          |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-          |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-          |  WHERE a.nn * b.nn != 0
-          |), edges AS (
-          |  SELECT src, dst FROM (
-          |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-          |    FROM pairs
-          |  ) WHERE rnk <= 5
-          |), mut AS MATERIALIZED (
-          |  SELECT a.src, a.dst FROM edges a JOIN edges b ON a.src = b.dst AND a.dst = b.src
-          |  WHERE a.src < a.dst
-          |), e0 AS MATERIALIZED (SELECT src, dst FROM mut)""".stripMargin
-      // every CTE is MATERIALIZED: each round references its
-      // predecessor twice, and inlining would expand the quadratic
-      // edge head 2^rounds times (measured: "too many open files")
-      val rounds = (1 to 8).map { i =>
-        s"""d$i AS MATERIALIZED (
-           |  SELECT node, count(*) AS deg FROM (
-           |    SELECT src AS node FROM e${i - 1} UNION ALL SELECT dst FROM e${i - 1}
-           |  ) GROUP BY 1 HAVING count(*) >= 2
-           |), e$i AS MATERIALIZED (
-           |  SELECT m.src, m.dst FROM mut m
-           |  JOIN d$i a ON a.node = m.src JOIN d$i b ON b.node = m.dst
-           |)""".stripMargin
-      }.mkString(",\n")
-      s"""$head,
-         |$rounds
-         |SELECT emb.vec_id AS node, d8.deg IS NOT NULL AS in_core,
-         |  CAST(d8.deg AS BIGINT) AS core_degree
-         |FROM embeddings emb LEFT JOIN d8 ON d8.node = emb.vec_id
-         |ORDER BY node""".stripMargin
-    },
-    "q_label_prop" -> {
-      val head =
-        s"""WITH e AS (
-          |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-          ${celledCtes("          ")}, pairs AS (
-          |  SELECT a.vec_id AS src, b.vec_id AS dst,
-          |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-          |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-          |  WHERE a.nn * b.nn != 0
-          |), edges AS (
-          |  SELECT src, dst FROM (
-          |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-          |    FROM pairs
-          |  ) WHERE rnk <= 5
-          |), mut AS (
-          |  SELECT a.src, a.dst FROM edges a JOIN edges b ON a.src = b.dst AND a.dst = b.src
-          |  WHERE a.src < a.dst
-          |), ws AS (
-          |  SELECT src AS node, dst AS nbr FROM mut
-          |  UNION ALL SELECT dst, src FROM mut
-          |  UNION ALL SELECT vec_id, vec_id FROM embeddings
-          |), l0 AS (SELECT vec_id AS node, vec_id AS community FROM embeddings)""".stripMargin
-      val rounds = (1 to 3).map { i =>
-        s"""v$i AS (
-           |  SELECT w.node, l.community, count(*) AS cnt
-           |  FROM ws w JOIN l${i - 1} l ON l.node = w.nbr GROUP BY 1, 2
-           |), l$i AS (
-           |  SELECT node, community FROM (
-           |    SELECT node, community,
-           |      row_number() OVER (PARTITION BY node ORDER BY cnt DESC, community ASC) AS rr
-           |    FROM v$i
-           |  ) WHERE rr = 1
-           |)""".stripMargin
-      }.mkString(",\n")
-      s"""$head,
-         |$rounds
-         |SELECT node, community FROM l3
-         |ORDER BY node""".stripMargin
-    },
-    "q_anomaly_days" ->
-      """WITH daily AS (
-        |  SELECT event_type, date_trunc('day', ts) AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), st AS (
-        |  SELECT event_type, count(*) AS days,
-        |    sum(CAST(n AS HUGEINT)) AS s1, sum(CAST(n AS HUGEINT) * n) AS s2
-        |  FROM daily GROUP BY 1
-        |), d AS (
-        |  SELECT event_type, days, CAST(days AS DOUBLE) AS nd,
-        |    CASE WHEN s1 < 0 THEN -(CAST(abs(s1) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s1) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s1 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s1 % 9007199254740992 AS DOUBLE) END AS d1,
-        |    CASE WHEN s2 < 0 THEN -(CAST(abs(s2) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(s2) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s2 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(s2 % 9007199254740992 AS DOUBLE) END AS d2
-        |  FROM st
-        |), c AS (
-        |  SELECT event_type, days, d1 / nd AS mean, (d2 - d1 * d1 / nd) / (nd - 1) AS vr
-        |  FROM d
-        |)
-        |SELECT dl.event_type, strftime(dl.day, '%Y-%m-%d') AS day, CAST(dl.n AS BIGINT) AS n,
-        |  CASE WHEN c.days >= 2 AND c.vr > 0
-        |    THEN (CAST(dl.n AS DOUBLE) - c.mean) / sqrt(c.vr) END AS z,
-        |  CASE WHEN c.days >= 2 AND c.vr > 0
-        |    THEN abs((CAST(dl.n AS DOUBLE) - c.mean) / sqrt(c.vr)) > 3.0 END AS anomaly
-        |FROM daily dl JOIN c ON c.event_type = dl.event_type
-        |ORDER BY 1, 2""".stripMargin,
-    "q_funnel_windowed" ->
-      """WITH ff AS (
-        |  SELECT user_id, min(epoch_us(ts)) AS t_from
-        |  FROM events WHERE event_type = 'view' GROUP BY 1
-        |), cv AS (
-        |  SELECT e.user_id, min(epoch_us(e.ts)) AS t_to
-        |  FROM events e JOIN ff ON ff.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase'
-        |    AND epoch_us(e.ts) >= ff.t_from
-        |    AND epoch_us(e.ts) <= ff.t_from + 259200000000
-        |  GROUP BY 1
-        |), j AS (
-        |  SELECT ff.user_id, ff.t_from, cv.t_to FROM ff LEFT JOIN cv ON cv.user_id = ff.user_id
-        |), s AS (
-        |  SELECT count(*) AS ne, count(t_to) AS nc,
-        |    sum(CAST(t_to - t_from AS HUGEINT)) AS sl
-        |  FROM j
-        |)
-        |SELECT CAST(ne AS BIGINT) AS n_entered, CAST(nc AS BIGINT) AS n_converted,
-        |  CAST(nc AS DOUBLE) / CAST(ne AS DOUBLE) AS conv_rate,
-        |  (CASE WHEN sl < 0 THEN -(CAST(abs(sl) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(abs(sl) % 9007199254740992 AS DOUBLE))
-        |    ELSE CAST(sl // 9007199254740992 AS DOUBLE) * 9.007199254740992e15 + CAST(sl % 9007199254740992 AS DOUBLE) END)
-        |    / CAST(nc AS DOUBLE) / 60000000.0 AS mean_lag_min
-        |FROM s""".stripMargin,
-    // every conversion distributes exactly 1e6 integer micro-credits
-    // (floor share + remainder to the last touch) -> order-free sums
-    "q_attribution" ->
-      """WITH conv AS (
-        |  SELECT user_id, event_id AS conv_id, epoch_us(ts) AS conv_us
-        |  FROM events WHERE event_type = 'purchase'
-        |), touch AS (
-        |  SELECT user_id, event_id AS touch_id, event_type AS channel, epoch_us(ts) AS touch_us
-        |  FROM events WHERE event_type IN ('view', 'click')
-        |), j AS (
-        |  SELECT conv.conv_id, touch.touch_id, touch.channel, touch.touch_us
-        |  FROM conv JOIN touch USING (user_id)
-        |  WHERE touch_us <= conv_us AND touch_us >= conv_us - 604800000000
-        |), j2 AS (
-        |  SELECT *, count(*) OVER (PARTITION BY conv_id) AS k,
-        |    row_number() OVER (PARTITION BY conv_id ORDER BY touch_us DESC, touch_id DESC) AS rn
-        |  FROM j
-        |), credited AS (
-        |  SELECT channel, conv_id,
-        |    1000000 // k + CASE WHEN rn = 1 THEN 1000000 % k ELSE 0 END AS credit_u
-        |  FROM j2
-        |), bc AS (
-        |  SELECT channel, CAST(count(*) AS BIGINT) AS n_touch_events,
-        |    CAST(count(DISTINCT conv_id) AS BIGINT) AS n_conversions,
-        |    CAST(sum(credit_u) AS BIGINT) AS credit_micro
-        |  FROM credited GROUP BY 1
-        |), direct AS (
-        |  SELECT '(direct)' AS channel, CAST(0 AS BIGINT) AS n_touch_events,
-        |    CAST(count(*) AS BIGINT) AS n_conversions,
-        |    CAST(count(*) * 1000000 AS BIGINT) AS credit_micro
-        |  FROM conv WHERE conv_id NOT IN (SELECT conv_id FROM j)
-        |), u AS (SELECT * FROM bc UNION ALL SELECT * FROM direct)
-        |SELECT channel, n_touch_events, n_conversions, credit_micro,
-        |  CAST(credit_micro AS DOUBLE) / 1000000.0 AS credit
-        |FROM u ORDER BY channel""".stripMargin,
-    "q_template_prefixes" ->
-      """WITH toks AS (
-        |  SELECT source, string_split(lower(text), ' ') AS tk FROM documents
-        |), pf AS (
-        |  SELECT source, array_to_string(tk[1:2], ' ') AS prefix FROM toks WHERE len(tk) >= 2
-        |), c AS (
-        |  SELECT source, prefix, count(*) AS n_docs FROM pf GROUP BY 1, 2 HAVING count(*) >= 2
-        |), t AS (SELECT source, count(*) AS src_docs FROM documents GROUP BY 1
-        |), r AS (
-        |  SELECT source, prefix, n_docs,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_docs DESC, prefix ASC) AS rnk
-        |  FROM c
-        |)
-        |SELECT r.source, CAST(r.rnk AS BIGINT) AS rnk, r.prefix, CAST(r.n_docs AS BIGINT) AS n_docs,
-        |  CAST(r.n_docs AS DOUBLE) / CAST(t.src_docs AS DOUBLE) AS share_of_source
-        |FROM r JOIN t ON t.source = r.source
-        |WHERE r.rnk <= 5
-        |ORDER BY r.source, rnk""".stripMargin,
-    "q_cvar" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), o AS (
-        |  SELECT user_id, ret,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ret ASC, day ASC) AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS n
-        |  FROM r
-        |), f AS (
-        |  SELECT *, CAST(ceil(n * 0.05) AS BIGINT) AS k FROM o
-        |), t AS (SELECT * FROM f WHERE rn <= k)
-        |SELECT user_id,
-        |  max(CASE WHEN rn = k THEN ret END) AS var_ret,
-        |  CAST(sum(CAST(floor(ret * 1000000) AS BIGINT)) AS DOUBLE) / CAST(max(k) AS DOUBLE) / 1000000.0 AS cvar,
-        |  max(k) AS k, CAST(max(n) AS BIGINT) AS n
-        |FROM t GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    "q_mmr_rerank" -> {
-      val head =
-        """WITH e AS (
-          |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-          |), n AS (
-          |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nn FROM e
-          |), q AS (SELECT v AS qv, nn AS qnn FROM n WHERE vec_id = 0
-          |), sc AS (
-          |  SELECT n.vec_id, list_dot_product(q.qv, n.v) / (q.qnn * n.nn) AS qsim
-          |  FROM n, q WHERE n.vec_id != 0 AND q.qnn * n.nn != 0
-          |), pool AS (
-          |  SELECT vec_id, qsim FROM (
-          |    SELECT *, row_number() OVER (ORDER BY qsim DESC, vec_id ASC) AS rnk FROM sc
-          |  ) WHERE rnk <= 20
-          |), pv AS (SELECT n.vec_id, n.v, n.nn, p.qsim FROM n JOIN pool p ON p.vec_id = n.vec_id
-          |), sims AS (
-          |  SELECT a.vec_id AS pa, b.vec_id AS pb,
-          |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS sim
-          |  FROM pv a JOIN pv b ON a.vec_id != b.vec_id AND a.nn * b.nn != 0
-          |), sel1 AS (
-          |  SELECT vec_id, qsim, qsim AS mmr_score, 1 AS sel_rank
-          |  FROM pool ORDER BY qsim DESC, vec_id LIMIT 1
-          |)""".stripMargin
-      val rounds = (2 to 5).map { r =>
-        s"""p$r AS (
-           |  SELECT p.vec_id, p.qsim,
-           |    0.7::DOUBLE * p.qsim - (1::DOUBLE - 0.7::DOUBLE) * m.msim AS mmr_score, $r AS sel_rank
-           |  FROM pool p
-           |  JOIN (SELECT pa, max(sim) AS msim FROM sims
-           |        WHERE pb IN (SELECT vec_id FROM sel${r - 1}) GROUP BY pa) m ON m.pa = p.vec_id
-           |  WHERE p.vec_id NOT IN (SELECT vec_id FROM sel${r - 1})
-           |  ORDER BY mmr_score DESC, p.vec_id LIMIT 1
-           |), sel$r AS (SELECT * FROM sel${r - 1} UNION ALL SELECT * FROM p$r)""".stripMargin
-      }.mkString(",\n")
-      s"""$head,
-         |$rounds
-         |SELECT CAST(sel_rank AS BIGINT) AS sel_rank, vec_id, qsim, mmr_score
-         |FROM sel5
-         |ORDER BY sel_rank""".stripMargin
-    },
-    "q_stickiness" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events
-        |), grid AS (SELECT DISTINCT day AS gday FROM ud
-        |), mau AS (
-        |  SELECT gday, count(DISTINCT user_id) AS mau
-        |  FROM ud JOIN grid
-        |    ON datediff('day', day, gday) >= 0 AND datediff('day', day, gday) < 28
-        |  GROUP BY 1
-        |), dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM ud GROUP BY 1)
-        |SELECT strftime(d.day, '%Y-%m-%d') AS day,
-        |  CAST(d.dau AS BIGINT) AS dau, CAST(m.mau AS BIGINT) AS mau,
-        |  CAST(d.dau AS DOUBLE) / CAST(m.mau AS DOUBLE) AS stickiness
-        |FROM dau d JOIN mau m ON m.gday = d.day
-        |ORDER BY day""".stripMargin,
-    "q_fk_integrity" -> {
-      val rels = Seq(
-        ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
-        ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        ("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
-        ("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-        ("supplier.s_nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
-        ("nation.n_regionkey->region", "nation", "n_regionkey", "region", "r_regionkey"))
-      rels.map { case (name, child, ck, parent, pk) =>
-        s"""SELECT '$name' AS relation, CAST(count(*) AS BIGINT) AS child_rows,
-           |  CAST(count(CASE WHEN p.k IS NULL THEN 1 END) AS BIGINT) AS orphan_rows,
-           |  CAST(count(DISTINCT CASE WHEN p.k IS NULL THEN c.$ck END) AS BIGINT) AS orphan_keys,
-           |  CAST(count(CASE WHEN p.k IS NULL THEN 1 END) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS orphan_rate
-           |FROM $child c LEFT JOIN (SELECT DISTINCT $pk AS k FROM $parent) p ON p.k = c.$ck""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY relation")
-    },
-    "q_seasonal_index" ->
-      """WITH m AS (
-        |  SELECT CAST(month(o_orderdate) AS BIGINT) AS month, count(*) AS n_orders,
-        |    sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS rev
-        |  FROM orders GROUP BY 1
-        |), t AS (SELECT sum(rev) AS t, count(*) AS k FROM m)
-        |SELECT month, CAST(n_orders AS BIGINT) AS n_orders,
-        |  CAST(rev AS DOUBLE) / 100.0 AS revenue,
-        |  CAST(rev AS DOUBLE) * CAST(k AS DOUBLE) / CAST(t AS DOUBLE) AS seasonal_index
-        |FROM m, t
-        |ORDER BY month""".stripMargin,
-    "q_lang_mix" ->
-      """WITH h AS (
-        |  SELECT doc_id, source,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('the','a','and','of'))) AS hits_en,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('el','la','y','de'))) AS hits_es,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('le','les','et','des'))) AS hits_fr,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('der','die','und','von'))) AS hits_de,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x IN ('de5','shi4','le5','zai4'))) AS hits_zh
-        |  FROM documents
-        |), p AS (
-        |  SELECT doc_id, source,
-        |    CASE
-        |      WHEN hits_en >= hits_es AND hits_en >= hits_fr AND hits_en >= hits_de AND hits_en >= hits_zh AND hits_en > 0 THEN 'en'
-        |      WHEN hits_es >= hits_fr AND hits_es >= hits_de AND hits_es >= hits_zh AND hits_es > 0 THEN 'es'
-        |      WHEN hits_fr >= hits_de AND hits_fr >= hits_zh AND hits_fr > 0 THEN 'fr'
-        |      WHEN hits_de >= hits_zh AND hits_de > 0 THEN 'de'
-        |      WHEN hits_zh > 0 THEN 'zh'
-        |      ELSE 'und'
-        |    END AS lang_pred
-        |  FROM h
-        |), m AS (
-        |  SELECT source, lang_pred, count(*) AS n_docs FROM p GROUP BY 1, 2
-        |), rt AS (SELECT source, sum(n_docs) AS t FROM m GROUP BY 1)
-        |SELECT m.source, m.lang_pred, CAST(m.n_docs AS BIGINT) AS n_docs,
-        |  CAST(m.n_docs AS DOUBLE) / CAST(rt.t AS DOUBLE) AS share_of_source
-        |FROM m JOIN rt ON rt.source = m.source
-        |ORDER BY 1, 2""".stripMargin,
-    "q_markov_stationary" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |), edges AS (
-        |  SELECT prev, event_type AS next, count(*) AS c
-        |  FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2
-        |), rt AS (SELECT prev, sum(c) AS t FROM edges GROUP BY prev
-        |), ed AS (SELECT e.prev, e.next, e.c, rt.t FROM edges e JOIN rt USING (prev)
-        |), states AS (SELECT DISTINCT event_type AS s FROM events
-        |), p0 AS (
-        |  SELECT s, 1000000000000 // (SELECT count(*) FROM states) AS pi FROM states
-        |), p1 AS (
-        |  SELECT st.s, coalesce(x.pin, 0) AS pi FROM states st LEFT JOIN (
-        |    SELECT ed.next AS s, sum(p.pi * ed.c // ed.t) AS pin
-        |    FROM ed JOIN p0 p ON p.s = ed.prev GROUP BY ed.next) x USING (s)
-        |), p2 AS (
-        |  SELECT st.s, coalesce(x.pin, 0) AS pi FROM states st LEFT JOIN (
-        |    SELECT ed.next AS s, sum(p.pi * ed.c // ed.t) AS pin
-        |    FROM ed JOIN p1 p ON p.s = ed.prev GROUP BY ed.next) x USING (s)
-        |), p3 AS (
-        |  SELECT st.s, coalesce(x.pin, 0) AS pi FROM states st LEFT JOIN (
-        |    SELECT ed.next AS s, sum(p.pi * ed.c // ed.t) AS pin
-        |    FROM ed JOIN p2 p ON p.s = ed.prev GROUP BY ed.next) x USING (s)
-        |), p4 AS (
-        |  SELECT st.s, coalesce(x.pin, 0) AS pi FROM states st LEFT JOIN (
-        |    SELECT ed.next AS s, sum(p.pi * ed.c // ed.t) AS pin
-        |    FROM ed JOIN p3 p ON p.s = ed.prev GROUP BY ed.next) x USING (s)
-        |), p5 AS (
-        |  SELECT st.s, coalesce(x.pin, 0) AS pi FROM states st LEFT JOIN (
-        |    SELECT ed.next AS s, sum(p.pi * ed.c // ed.t) AS pin
-        |    FROM ed JOIN p4 p ON p.s = ed.prev GROUP BY ed.next) x USING (s)
-        |)
-        |SELECT s AS event_type, CAST(pi AS BIGINT) AS pi_units,
-        |  CAST(pi AS DOUBLE) / 1000000000000 AS pi_share
-        |FROM p5
-        |ORDER BY event_type""".stripMargin,
-    "q_hurst" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r1 AS (
-        |  SELECT user_id, day, close / prev - 1 AS ret
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), r AS (
-        |  SELECT user_id, day, ret,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY day) - 1 AS rn
-        |  FROM r1
-        |), x AS (
-        |  SELECT r.*, s.n, CAST(floor(rn / s.n) AS BIGINT) AS block
-        |  FROM r CROSS JOIN (SELECT unnest([4, 8, 16]) AS n) s
-        |), b1 AS (
-        |  SELECT *, count(*) OVER (PARTITION BY user_id, n, block) AS bn FROM x
-        |), b2 AS (SELECT * FROM b1 WHERE bn = n
-        |), b3 AS (
-        |  SELECT user_id, n, block, day, ret, avg(ret) OVER wf AS mean
-        |  FROM b2
-        |  WINDOW wf AS (PARTITION BY user_id, n, block ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |), b4 AS (
-        |  SELECT *, sum(ret - mean) OVER (PARTITION BY user_id, n, block ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM b3
-        |), b5 AS (
-        |  SELECT user_id, n, block,
-        |    max(cum) OVER wf - min(cum) OVER wf AS rng,
-        |    sqrt(avg(pow(ret - mean, 2)) OVER wf) AS sd,
-        |    row_number() OVER (PARTITION BY user_id, n, block ORDER BY day) AS rib
-        |  FROM b4
-        |  WINDOW wf AS (PARTITION BY user_id, n, block ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |), blk AS (
-        |  SELECT user_id, n, CAST(ln(rng / sd) AS DECIMAL(18,6)) AS lrs
-        |  FROM b5 WHERE rib = 1 AND sd > 0
-        |), yv AS (
-        |  SELECT user_id, n, CAST(sum(lrs) AS DOUBLE) / count(*) AS y
-        |  FROM blk GROUP BY user_id, n
-        |), p AS (
-        |  SELECT user_id,
-        |    max(CASE WHEN n = 4 THEN y END) AS y4r,
-        |    max(CASE WHEN n = 8 THEN y END) AS y8r,
-        |    max(CASE WHEN n = 16 THEN y END) AS y16r
-        |  FROM yv GROUP BY user_id
-        |)
-        |SELECT user_id, y4r AS y4, y8r AS y8, y16r AS y16,
-        |  (y16r - y4r) / 1.3862943611198906 AS hurst
-        |FROM p ORDER BY user_id""".stripMargin,
-    "q_cross_sectional_rank" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day, close / prev - 1 AS ret
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, user_id, round(ret, 6) AS ret,
-        |  row_number() OVER w AS rnk,
-        |  count(*) OVER (PARTITION BY day) AS n,
-        |  CAST(floor((row_number() OVER w - 1) * 5 / count(*) OVER (PARTITION BY day)) AS BIGINT) AS quintile
-        |FROM r
-        |WINDOW w AS (PARTITION BY day ORDER BY ret ASC, user_id ASC)
-        |ORDER BY day, rnk""".stripMargin,
-    "q_quintile_spread" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, day, close / prev - 1 AS ret
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), ranked AS (
-        |  SELECT user_id, day, ret,
-        |    row_number() OVER w AS rnk, count(*) OVER (PARTITION BY day) AS n
-        |  FROM r
-        |  WINDOW w AS (PARTITION BY day ORDER BY ret ASC, user_id ASC)
-        |), qq AS (
-        |  SELECT *, CAST(floor((rnk - 1) * 5 / n) AS BIGINT) AS q,
-        |    CAST(floor(ret * 1000000) AS BIGINT) AS micro
-        |  FROM ranked
-        |)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, max(n) AS n_keys,
-        |  CAST(sum(CASE WHEN q = 4 THEN micro END) AS DOUBLE)
-        |    / count(CASE WHEN q = 4 THEN 1 END) / 1000000.0 AS hi_mean,
-        |  CAST(sum(CASE WHEN q = 0 THEN micro END) AS DOUBLE)
-        |    / count(CASE WHEN q = 0 THEN 1 END) / 1000000.0 AS lo_mean,
-        |  CAST(sum(CASE WHEN q = 4 THEN micro END) AS DOUBLE)
-        |    / count(CASE WHEN q = 4 THEN 1 END) / 1000000.0
-        |  - CAST(sum(CASE WHEN q = 0 THEN micro END) AS DOUBLE)
-        |    / count(CASE WHEN q = 0 THEN 1 END) / 1000000.0 AS spread
-        |FROM qq GROUP BY day
-        |ORDER BY day""".stripMargin,
-    "q_volume_profile" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    max_by(value, ts) AS close,
-        |    CAST(sum(coalesce(CAST(json_extract_string(props, '$.k') AS BIGINT), 0)) AS BIGINT) AS volume
-        |  FROM events GROUP BY 1, 2
-        |), rng AS (
-        |  SELECT user_id, min(close) AS lo, max(close) AS hi FROM bars GROUP BY user_id
-        |), binned AS (
-        |  SELECT b.user_id,
-        |    CASE WHEN r.hi = r.lo THEN 0
-        |         ELSE least(9, CAST(floor((b.close - r.lo) * 10 / (r.hi - r.lo)) AS BIGINT)) END AS bin,
-        |    b.close, b.volume
-        |  FROM bars b JOIN rng r USING (user_id)
-        |), prof AS (
-        |  SELECT user_id, bin, count(*) AS n_days, CAST(sum(volume) AS BIGINT) AS volume,
-        |    min(close) AS px_lo, max(close) AS px_hi
-        |  FROM binned GROUP BY 1, 2
-        |)
-        |SELECT user_id, bin, n_days, volume, px_lo, px_hi,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY volume DESC, bin ASC) = 1 AS poc
-        |FROM prof
-        |ORDER BY user_id, bin""".stripMargin,
-    "q_drawdown_episodes" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), p AS (
-        |  SELECT user_id, day, close,
-        |    max(close) OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) AS peak
-        |  FROM c
-        |), f AS (
-        |  SELECT *, CASE WHEN close >= peak THEN 1 ELSE 0 END AS at_peak FROM p
-        |), e AS (
-        |  SELECT *,
-        |    CAST(sum(at_peak) OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS eid,
-        |    max(day) OVER (PARTITION BY user_id) AS last_day
-        |  FROM f
-        |)
-        |SELECT user_id, eid,
-        |  strftime(min(day), '%Y-%m-%d') AS start_day,
-        |  strftime(max(day), '%Y-%m-%d') AS end_day,
-        |  count(*) AS n_days,
-        |  round(min(close / peak - 1), 6) AS max_depth,
-        |  max(day) < max(last_day) AS recovered
-        |FROM e WHERE at_peak = 0
-        |GROUP BY 1, 2
-        |ORDER BY user_id, eid""".stripMargin,
-    "q_lead_lag_corr" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY day) AS prev
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, CAST(day AS DATE) AS d,
-        |    CAST(close / prev - 1 AS DECIMAL(18,6)) AS x
-        |  FROM r0 WHERE prev IS NOT NULL AND prev != 0
-        |), bl AS (
-        |  SELECT b.d - s.shift AS d, s.shift, b.x AS y
-        |  FROM (SELECT d, x FROM r WHERE user_id = 0) b
-        |  CROSS JOIN (SELECT unnest([-2, -1, 0, 1, 2]) AS shift) s
-        |), m AS (
-        |  SELECT r.user_id, bl.shift,
-        |    count(*) AS n_days,
-        |    sum(r.x) AS sx, sum(bl.y) AS sy,
-        |    sum(CAST(r.x AS DECIMAL(19,6)) * CAST(bl.y AS DECIMAL(19,6))) AS sxy,
-        |    sum(CAST(r.x AS DECIMAL(19,6)) * CAST(r.x AS DECIMAL(19,6))) AS sxx,
-        |    sum(CAST(bl.y AS DECIMAL(19,6)) * CAST(bl.y AS DECIMAL(19,6))) AS syy
-        |  FROM r JOIN bl ON r.d = bl.d
-        |  GROUP BY 1, 2
-        |)
-        |SELECT user_id, CAST(shift AS BIGINT) AS shift, n_days,
-        |  round(CASE WHEN (n_days * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-        |              AND (n_days * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-        |    THEN (n_days * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / sqrt((n_days * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |           * (n_days * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-        |    END, 6) AS corr
-        |FROM m
-        |ORDER BY user_id, shift""".stripMargin,
-    "q_equidepth_histogram" ->
-      """WITH cuts AS (
-        |  SELECT quantile_cont(value, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS cs
-        |  FROM events
-        |)
-        |SELECT bucket, count(*) AS n, min(value) AS lo, max(value) AS hi FROM (
-        |  SELECT value, CAST(
-        |    CASE WHEN value < cs[1] THEN 0 WHEN value < cs[2] THEN 1
-        |         WHEN value < cs[3] THEN 2 WHEN value < cs[4] THEN 3
-        |         WHEN value < cs[5] THEN 4 WHEN value < cs[6] THEN 5
-        |         WHEN value < cs[7] THEN 6 WHEN value < cs[8] THEN 7
-        |         WHEN value < cs[9] THEN 8 ELSE 9 END AS BIGINT) AS bucket
-        |  FROM events CROSS JOIN cuts
-        |)
-        |GROUP BY bucket
-        |ORDER BY bucket""".stripMargin,
-    "q_iqr_outliers" ->
-      """WITH q AS (
-        |  SELECT event_type,
-        |    quantile_cont(value, 0.25) AS q1, quantile_cont(value, 0.75) AS q3
-        |  FROM events GROUP BY event_type
-        |), f AS (
-        |  SELECT event_type, q1, q3,
-        |    q1 - 1.5 * (q3 - q1) AS lo, q3 + 1.5 * (q3 - q1) AS hi
-        |  FROM q
-        |)
-        |SELECT e.event_type, count(*) AS n,
-        |  round(max(f.q1), 6) AS q1, round(max(f.q3), 6) AS q3,
-        |  round(max(f.lo), 6) AS fence_lo, round(max(f.hi), 6) AS fence_hi,
-        |  CAST(sum(CASE WHEN e.value < f.lo OR e.value > f.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-        |  sum(CASE WHEN e.value < f.lo OR e.value > f.hi THEN 1 ELSE 0 END)
-        |    / CAST(count(*) AS DOUBLE) AS outlier_rate
-        |FROM events e JOIN f USING (event_type)
-        |GROUP BY e.event_type
-        |ORDER BY e.event_type""".stripMargin,
-    "q_user_features" ->
-      """WITH per AS (
-        |  SELECT user_id, count(*) AS n_events,
-        |    count(DISTINCT date_trunc('day', ts)) AS n_days_active,
-        |    count(DISTINCT event_type) AS n_types,
-        |    min(date_trunc('day', ts)) AS first_day,
-        |    max(date_trunc('day', ts)) AS last_day,
-        |    sum(CAST(value AS DECIMAL(18,6))) AS sx
-        |  FROM events GROUP BY user_id
-        |), e AS (SELECT max(date_trunc('day', ts)) AS corpus_end FROM events)
-        |SELECT user_id, n_events, n_days_active, n_types,
-        |  CAST(date_diff('day', first_day, last_day) AS BIGINT) AS tenure_days,
-        |  CAST(date_diff('day', last_day, corpus_end) AS BIGINT) AS recency_days,
-        |  CAST(sx AS DOUBLE) / n_events AS mean_value,
-        |  CAST(n_events AS DOUBLE) / (date_diff('day', first_day, last_day) + 1) AS events_per_day
-        |FROM per CROSS JOIN e
-        |ORDER BY user_id""".stripMargin,
-    "q_abc_classes" ->
-      """WITH per AS (
-        |  SELECT l_partkey,
-        |    sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev
-        |  FROM lineitem GROUP BY 1
-        |), t AS (SELECT sum(rev) AS total FROM per
-        |), c AS (
-        |  SELECT l_partkey, rev,
-        |    sum(rev) OVER (ORDER BY rev DESC, l_partkey ASC ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM per
-        |), cl AS (
-        |  SELECT l_partkey, rev, t.total,
-        |    CASE WHEN CAST(cum AS DOUBLE) / CAST(t.total AS DOUBLE) <= 0.80 THEN 'A'
-        |         WHEN CAST(cum AS DOUBLE) / CAST(t.total AS DOUBLE) <= 0.95 THEN 'B'
-        |         ELSE 'C' END AS abc_class
-        |  FROM c CROSS JOIN t
-        |)
-        |SELECT abc_class, count(*) AS n_parts,
-        |  CAST(sum(rev) AS DOUBLE) AS class_revenue,
-        |  CAST(sum(rev) AS DOUBLE) / CAST(max(total) AS DOUBLE) AS rev_share
-        |FROM cl GROUP BY abc_class
-        |ORDER BY abc_class""".stripMargin,
-    "q_doc_novelty" ->
-      """WITH toks AS (
-        |  SELECT DISTINCT doc_id, t FROM (
-        |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents)
-        |), dfx AS (SELECT t, count(*) AS df FROM toks GROUP BY t
-        |), nd AS (SELECT count(*) AS n_docs FROM documents
-        |), x AS (
-        |  SELECT doc_id,
-        |    CAST(floor(ln(CAST(n_docs AS DOUBLE) / df) * 1000000) AS BIGINT) AS midf
-        |  FROM toks JOIN dfx USING (t) CROSS JOIN nd
-        |)
-        |SELECT doc_id, count(*) AS n_terms,
-        |  CAST(sum(midf) AS DOUBLE) / count(*) / 1000000.0 AS novelty
-        |FROM x GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-    "q_intrinsic_dim" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, d AS (
-        |  SELECT a.vec_id AS p, b.vec_id AS q,
-        |    a.nn * a.nn + b.nn * b.nn
-        |      - 2.0 * (list_dot_product(a.v, b.v) / (a.nn * b.nn)) * a.nn * b.nn AS d2
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), r AS (
-        |  SELECT p, q, d2,
-        |    row_number() OVER (PARTITION BY p ORDER BY d2 ASC, q ASC) AS rn
-        |  FROM d QUALIFY rn <= 2
-        |), byp AS (
-        |  SELECT p, max(CASE WHEN rn = 1 THEN d2 END) AS d1,
-        |    max(CASE WHEN rn = 2 THEN d2 END) AS d2b
-        |  FROM r GROUP BY p
-        |), used AS (
-        |  SELECT CAST(floor(ln(sqrt(d2b / d1)) * 1000000) AS BIGINT) AS mln
-        |  FROM byp WHERE d1 > 0 AND d2b IS NOT NULL
-        |), agg AS (SELECT count(*) AS n_used, sum(mln) AS s FROM used)
-        |SELECT (SELECT count(*) FROM embeddings) AS n_vectors, n_used,
-        |  round(CASE WHEN s > 0
-        |    THEN CAST(n_used AS DOUBLE) * 1000000.0 / CAST(s AS DOUBLE) END, 6) AS id_twonn
-        |FROM agg""".stripMargin,
-    "q_key_skew" ->
-      """WITH k AS (SELECT l_orderkey, count(*) AS n FROM lineitem GROUP BY 1)
-        |SELECT count(*) AS n_keys, CAST(sum(n) AS BIGINT) AS n_rows, max(n) AS max_per_key,
-        |  quantile_cont(n, 0.5) AS p50, quantile_cont(n, 0.9) AS p90,
-        |  quantile_cont(n, 0.99) AS p99,
-        |  CAST(sum(n) AS DOUBLE) / count(*) AS mean_per_key,
-        |  CAST(max(n) AS DOUBLE) / (CAST(sum(n) AS DOUBLE) / count(*)) AS skew_ratio
-        |FROM k""".stripMargin,
-    "q_reconcile" ->
-      """WITH src AS (
-        |  SELECT event_id, user_id, event_type, CAST(value AS DECIMAL(18,6)) AS v6,
-        |    CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket
-        |  FROM events
-        |), a AS (
-        |  SELECT event_id,
-        |    md5(concat_ws('', CAST(user_id AS VARCHAR), event_type, CAST(v6 AS VARCHAR))) AS fp_a
-        |  FROM src
-        |), bsrc AS (
-        |  SELECT event_id, user_id, event_type,
-        |    CASE WHEN bucket < 4 THEN CAST(CAST(v6 AS DOUBLE) + 1 AS DECIMAL(18,6)) ELSE v6 END AS v6
-        |  FROM src WHERE bucket >= 2
-        |), b AS (
-        |  SELECT event_id,
-        |    md5(concat_ws('', CAST(user_id AS VARCHAR), event_type, CAST(v6 AS VARCHAR))) AS fp_b
-        |  FROM bsrc
-        |)
-        |SELECT
-        |  CAST(sum(CASE WHEN fp_a IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |  CAST(sum(CASE WHEN fp_b IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |  CAST(sum(CASE WHEN fp_a IS NOT NULL AND fp_b IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS only_a,
-        |  CAST(sum(CASE WHEN fp_a IS NULL AND fp_b IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS only_b,
-        |  CAST(sum(CASE WHEN fp_a = fp_b THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-        |  CAST(sum(CASE WHEN fp_a IS NOT NULL AND fp_b IS NOT NULL AND fp_a != fp_b THEN 1 ELSE 0 END) AS BIGINT) AS n_diff
-        |FROM a FULL OUTER JOIN b USING (event_id)""".stripMargin,
-    "q_top_paths" ->
-      """WITH ranked AS (
-        |  SELECT user_id, event_type, ts, event_id,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events
-        |), p AS (
-        |  SELECT user_id, string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-        |  FROM ranked WHERE rn <= 5 GROUP BY user_id
-        |)
-        |SELECT path, count(*) AS n_users FROM p GROUP BY path
-        |ORDER BY n_users DESC, path ASC LIMIT 10""".stripMargin,
-    "q_contribution_delta" ->
-      """WITH cells AS (
-        |  SELECT n_name, o_orderpriority,
-        |    coalesce(sum(CASE WHEN o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'
-        |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) END), 0) AS rev_a,
-        |    coalesce(sum(CASE WHEN o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) END), 0) AS rev_b
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  GROUP BY 1, 2
-        |), w AS (SELECT *, rev_b - rev_a AS delta FROM cells
-        |), t AS (SELECT sum(delta) AS total_delta FROM w)
-        |SELECT n_name, o_orderpriority,
-        |  CAST(rev_a AS DOUBLE) AS rev_a, CAST(rev_b AS DOUBLE) AS rev_b,
-        |  CAST(delta AS DOUBLE) AS delta,
-        |  round(CASE WHEN total_delta != 0
-        |    THEN CAST(delta AS DOUBLE) / CAST(total_delta AS DOUBLE) END, 6) AS share_of_move
-        |FROM w CROSS JOIN t
-        |ORDER BY n_name, o_orderpriority""".stripMargin,
-    "q_zscore_normalize" ->
-      """WITH q AS (
-        |  SELECT event_id, user_id, CAST(value AS DECIMAL(18,6)) AS x FROM events
-        |), m AS (
-        |  SELECT user_id, count(*) AS n, sum(x) AS sx, sum(x * x) AS sxx
-        |  FROM q GROUP BY user_id
-        |), s AS (
-        |  SELECT user_id, n,
-        |    CAST(sx AS DOUBLE) / n AS mean,
-        |    CASE WHEN n > 1 AND (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n) / (n - 1) > 0
-        |      THEN sqrt((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n) / (n - 1))
-        |    END AS std
-        |  FROM m
-        |)
-        |SELECT q.event_id, q.user_id,
-        |  round((CAST(q.x AS DOUBLE) - s.mean) / s.std, 6) AS z
-        |FROM q JOIN s USING (user_id)
-        |ORDER BY event_id""".stripMargin,
-    "q_target_encoding" ->
-      """WITH per AS (
-        |  SELECT event_type, count(*) AS n, sum(CAST(value AS DECIMAL(18,6))) AS sx
-        |  FROM events GROUP BY event_type
-        |), gtot AS (
-        |  SELECT sum(n) AS gn, sum(sx) AS gsx FROM per
-        |)
-        |SELECT event_type, n,
-        |  round(CAST(sx AS DOUBLE) / n, 6) AS raw_mean,
-        |  round((CAST(sx AS DOUBLE) + 20.0 * (CAST(gsx AS DOUBLE) / gn)) / CAST(n + 20 AS DOUBLE), 6) AS encoded
-        |FROM per CROSS JOIN gtot
-        |ORDER BY event_type""".stripMargin,
-    "q_ab_test" ->
-      """WITH m AS (
-        |  SELECT
-        |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS na,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS nb,
-        |    sum(CASE WHEN event_type = 'view' AND value > 100.0 THEN 1 ELSE 0 END) AS sa,
-        |    sum(CASE WHEN event_type = 'click' AND value > 100.0 THEN 1 ELSE 0 END) AS sb
-        |  FROM events WHERE event_type IN ('view', 'click')
-        |)
-        |SELECT CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
-        |  CAST(sa AS BIGINT) AS sa, CAST(sb AS BIGINT) AS sb,
-        |  round(CAST(sa AS DOUBLE) / CAST(na AS DOUBLE), 6) AS p_a,
-        |  round(CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE), 6) AS p_b,
-        |  round(CASE WHEN na > 0 AND nb > 0
-        |      AND CAST(sa + sb AS DOUBLE) / CAST(na + nb AS DOUBLE) > 0
-        |      AND CAST(sa + sb AS DOUBLE) / CAST(na + nb AS DOUBLE) < 1
-        |    THEN (CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) - CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE))
-        |      / sqrt(CAST(sa + sb AS DOUBLE) / CAST(na + nb AS DOUBLE)
-        |           * (1.0 - CAST(sa + sb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-        |           * (1.0 / CAST(na AS DOUBLE) + 1.0 / CAST(nb AS DOUBLE)))
-        |    END, 6) AS z
-        |FROM m""".stripMargin,
-    "q_pareto_frontier" ->
-      """WITH m AS (
-        |  SELECT l_partkey,
-        |    min(CAST(l_extendedprice AS DECIMAL(18,2))) AS best_price,
-        |    CAST(min(date_diff('day', date_trunc('day', o_orderdate),
-        |      date_trunc('day', l_shipdate))) AS BIGINT) AS best_lag
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY l_partkey
-        |), grid AS (
-        |  SELECT best_lag, min(best_price) AS mp FROM m GROUP BY best_lag
-        |), g2 AS (
-        |  SELECT best_lag, mp,
-        |    min(mp) OVER (ORDER BY best_lag ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS runmin
-        |  FROM grid
-        |)
-        |SELECT m.l_partkey, CAST(m.best_price AS DOUBLE) AS best_price, m.best_lag
-        |FROM m JOIN g2 USING (best_lag)
-        |WHERE m.best_price = g2.mp AND (g2.runmin IS NULL OR g2.runmin > m.best_price)
-        |ORDER BY best_lag, l_partkey""".stripMargin,
-    "q_peaks" ->
-      """WITH c AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), l AS (
-        |  SELECT user_id, day, close,
-        |    lag(close) OVER ws AS prev, lead(close) OVER ws AS next
-        |  FROM c
-        |  WINDOW ws AS (PARTITION BY user_id ORDER BY day)
-        |), k AS (
-        |  SELECT user_id, day, close,
-        |    CASE
-        |      WHEN close > prev AND close > next AND close - greatest(prev, next) >= 5.0 THEN 'peak'
-        |      WHEN close < prev AND close < next AND least(prev, next) - close >= 5.0 THEN 'trough'
-        |    END AS kind,
-        |    prev, next
-        |  FROM l WHERE prev IS NOT NULL AND next IS NOT NULL
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day, kind, close,
-        |  round(CASE WHEN kind = 'peak' THEN close - greatest(prev, next)
-        |             ELSE least(prev, next) - close END, 6) AS prominence
-        |FROM k WHERE kind IS NOT NULL
-        |ORDER BY user_id, day""".stripMargin,
-    // simplified silhouette: same seed cells + d2 chain as q_ann_ivf;
-    // per-row s quantizes once to DECIMAL(18,6), cell means are exact
-    // decimal sums + one IEEE division
-    "q_cluster_silhouette" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), cents AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS c
-        |  FROM e QUALIFY cell < 16
-        |), d AS (
-        |  SELECT e.vec_id, cents.cell,
-        |    list_dot_product(
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i]),
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i])) AS d2
-        |  FROM e CROSS JOIN cents
-        |), r AS (
-        |  SELECT vec_id, cell, d2,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS rn
-        |  FROM d
-        |), g AS (
-        |  SELECT vec_id,
-        |    max(CASE WHEN rn = 1 THEN cell END) AS cell,
-        |    max(CASE WHEN rn = 1 THEN d2 END) AS a2,
-        |    min(CASE WHEN rn > 1 THEN d2 END) AS b2
-        |  FROM r GROUP BY vec_id
-        |), s AS (
-        |  SELECT cell,
-        |    CAST(CASE WHEN greatest(sqrt(a2), sqrt(b2)) > 0
-        |      THEN (sqrt(b2) - sqrt(a2)) / greatest(sqrt(a2), sqrt(b2))
-        |      ELSE 0.0 END AS DECIMAL(18,6)) AS s6
-        |  FROM g
-        |)
-        |SELECT cell, count(*) AS n,
-        |  round(CAST(sum(s6) AS DOUBLE) / count(*), 6) AS mean_silhouette
-        |FROM s GROUP BY cell
-        |ORDER BY cell""".stripMargin,
-    // BFS min-depth over the directed top-k edges: reachable-in-i
-    // layers unioned, min(depth) per node — path fan-out is bounded
-    // by |seeds| * k^depth
-    "q_bfs_layers" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, edges AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), top AS (
-        |  SELECT src, dst,
-        |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |  FROM edges
-        |  QUALIFY rnk <= 5
-        |), seeds AS (
-        |  SELECT unnest([0, 1, 2]) AS vec_id
-        |), r1 AS (
-        |  SELECT DISTINCT t.dst AS vec_id FROM seeds s JOIN top t ON t.src = s.vec_id
-        |), r2 AS (
-        |  SELECT DISTINCT t.dst AS vec_id FROM r1 JOIN top t ON t.src = r1.vec_id
-        |), r3 AS (
-        |  SELECT DISTINCT t.dst AS vec_id FROM r2 JOIN top t ON t.src = r2.vec_id
-        |), u AS (
-        |  SELECT vec_id, CAST(0 AS BIGINT) AS depth FROM seeds
-        |  UNION ALL SELECT vec_id, 1 FROM r1
-        |  UNION ALL SELECT vec_id, 2 FROM r2
-        |  UNION ALL SELECT vec_id, 3 FROM r3
-        |)
-        |SELECT vec_id, min(depth) AS depth FROM u
-        |GROUP BY vec_id
-        |ORDER BY vec_id""".stripMargin,
-    "q_cluster_purity" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), cents AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS c
-        |  FROM e QUALIFY cell < 16
-        |), d AS (
-        |  SELECT e.vec_id, e.label, cents.cell,
-        |    list_dot_product(
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i]),
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i])) AS d2
-        |  FROM e CROSS JOIN cents
-        |), assigned AS (
-        |  SELECT vec_id, label, cell,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS rn
-        |  FROM d QUALIFY rn = 1
-        |), counts AS (
-        |  SELECT cell, label, count(*) AS cnt FROM assigned GROUP BY 1, 2
-        |), j AS (
-        |  SELECT cell, label, cnt,
-        |    row_number() OVER (PARTITION BY cell ORDER BY cnt DESC, label ASC) AS rn,
-        |    CAST(sum(cnt) OVER (PARTITION BY cell) AS BIGINT) AS n
-        |  FROM counts
-        |)
-        |SELECT CAST(cell AS BIGINT) AS cell, n, label AS majority_label, cnt AS n_majority,
-        |  CAST(cnt AS DOUBLE) / n AS purity
-        |FROM j WHERE rn = 1
-        |ORDER BY cell""".stripMargin,
-    "q_retrieval_precision" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), n AS (
-        |  SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nn FROM e
-        |), scored AS (
-        |  SELECT q.vec_id AS qid, q.label AS q_label, x.vec_id, x.label,
-        |    CASE WHEN q.nn * x.nn != 0 THEN list_dot_product(q.v, x.v) / (q.nn * x.nn) END AS cos
-        |  FROM n q JOIN n x ON q.vec_id IN (0, 1, 2, 3, 4) AND x.vec_id != q.vec_id
-        |), topk AS (
-        |  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rnk
-        |  FROM scored QUALIFY rnk <= 5
-        |)
-        |SELECT qid, q_label,
-        |  CAST(sum(CASE WHEN label = q_label THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-        |  CAST(5 AS BIGINT) AS k,
-        |  sum(CASE WHEN label = q_label THEN 1 ELSE 0 END) / CAST(5 AS DOUBLE) AS precision
-        |FROM topk GROUP BY qid, q_label
-        |ORDER BY qid""".stripMargin,
-    "q_feature_corr" ->
-      """WITH e AS (
-        |  SELECT label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), idx AS (SELECT unnest(generate_series(1, 64)) AS i
-        |), x AS (
-        |  SELECT CAST(i - 1 AS BIGINT) AS dim,
-        |    CAST(floor(v[i] * 1000000) AS DECIMAL(18,0)) AS mx,
-        |    CAST(label AS DECIMAL(18,0)) AS my
-        |  FROM e CROSS JOIN idx
-        |), m AS (
-        |  SELECT dim, count(*) AS n, sum(mx) AS sx, sum(my) AS sy,
-        |    sum(mx * my) AS sxy, sum(mx * mx) AS sxx, sum(my * my) AS syy
-        |  FROM x GROUP BY dim
-        |)
-        |SELECT dim, n,
-        |  round(CASE WHEN (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-        |              AND (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-        |    THEN (n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / sqrt((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |           * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-        |    END, 6) AS corr
-        |FROM m
-        |ORDER BY dim""".stripMargin,
-    // recall@k audit: the IVF chain and the brute-force chain above,
-    // joined — hits are exact integers, recall one rounded division
-    "q_ivf_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), cents AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS c
-        |  FROM e QUALIFY cell < 16
-        |), d AS (
-        |  SELECT e.vec_id, e.v, cents.cell,
-        |    list_dot_product(
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i]),
-        |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i])) AS d2
-        |  FROM e CROSS JOIN cents
-        |), assigned AS (
-        |  SELECT vec_id, v, cell,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS rn
-        |  FROM d QUALIFY rn = 1
-        |), n AS (
-        |  SELECT vec_id, cell, v, sqrt(list_dot_product(v, v)) AS nn FROM assigned
-        |), qc AS (
-        |  SELECT vec_id AS qid, cell,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS prb
-        |  FROM d WHERE vec_id IN (0, 1, 2, 3, 4) QUALIFY prb <= 4
-        |), iscored AS (
-        |  SELECT qc.qid, n.vec_id,
-        |    CASE WHEN qn.nn * n.nn != 0
-        |         THEN list_dot_product(qn.v, n.v) / (qn.nn * n.nn) END AS cos
-        |  FROM qc
-        |  JOIN n ON n.cell = qc.cell
-        |  JOIN n qn ON qn.vec_id = qc.qid
-        |  WHERE n.vec_id != qc.qid
-        |), ivf AS (
-        |  SELECT qid, vec_id,
-        |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rnk
-        |  FROM iscored QUALIFY rnk <= 5
-        |), bscored AS (
-        |  SELECT q.vec_id AS qid, x.vec_id,
-        |    CASE WHEN q.nn * x.nn != 0 THEN list_dot_product(q.v, x.v) / (q.nn * x.nn) END AS cos
-        |  FROM n q JOIN n x ON q.vec_id IN (0, 1, 2, 3, 4) AND x.vec_id != q.vec_id
-        |), bf AS (
-        |  SELECT qid, vec_id,
-        |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rnk
-        |  FROM bscored QUALIFY rnk <= 5
-        |)
-        |SELECT bf.qid, count(ivf.vec_id) AS hits, CAST(5 AS BIGINT) AS k,
-        |  round(count(ivf.vec_id) / CAST(5 AS DOUBLE), 6) AS recall
-        |FROM bf LEFT JOIN ivf ON ivf.qid = bf.qid AND ivf.vec_id = bf.vec_id
-        |GROUP BY bf.qid
-        |ORDER BY bf.qid""".stripMargin,
-    // the trained-path gate: full-probe trained IVF == brute force
-    // exactly (the quantizer only partitions candidates), so the
-    // oracle is the brute-force ranking + a literal-TRUE recall flag
-    "q_ann_ivf_trained" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), n AS (
-        |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nn FROM e
-        |), scored AS (
-        |  SELECT q.vec_id AS qid, e.vec_id,
-        |    CASE WHEN q.nn * e.nn != 0 THEN list_dot_product(q.v, e.v) / (q.nn * e.nn) END AS cos
-        |  FROM n q JOIN n e ON q.vec_id IN (0, 1, 2, 3, 4) AND e.vec_id != q.vec_id
-        |)
-        |SELECT qid, vec_id, cos,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rnk,
-        |  TRUE AS half_recall_ok
-        |FROM scored
-        |QUALIFY rnk <= 5
-        |ORDER BY qid, rnk""".stripMargin,
-    "q_windowed_agg" ->
-      """SELECT strftime(time_bucket(INTERVAL '6 hours', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type, count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY time_bucket(INTERVAL '6 hours', ts), event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-    "q_cohort_retention" ->
-      """WITH fs AS (
-        |  SELECT user_id, min(date_trunc('day', ts)) AS cohort FROM events GROUP BY user_id
-        |), act AS (
-        |  SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events
-        |), j AS (
-        |  SELECT fs.cohort, date_diff('day', fs.cohort, act.d) AS day_offset, act.user_id
-        |  FROM act JOIN fs USING (user_id)
-        |), cells AS (
-        |  SELECT cohort, day_offset, count(DISTINCT user_id) AS n_users
-        |  FROM j GROUP BY 1, 2
-        |), sizes AS (
-        |  SELECT cohort, count(DISTINCT user_id) AS cohort_size FROM fs GROUP BY cohort
-        |)
-        |SELECT strftime(cohort, '%Y-%m-%d') AS cohort, day_offset, n_users, cohort_size,
-        |  round(CAST(n_users AS DOUBLE) / cohort_size, 6) AS retention
-        |FROM cells JOIN sizes USING (cohort)
-        |ORDER BY cohort, day_offset""".stripMargin,
-    "q_funnel" ->
-      """WITH s0 AS (
-        |  SELECT user_id, min(ts) AS t0 FROM events WHERE event_type = 'view' GROUP BY user_id
-        |), s1 AS (
-        |  SELECT e.user_id, min(e.ts) AS t1
-        |  FROM events e JOIN s0 ON s0.user_id = e.user_id AND e.ts >= s0.t0
-        |  WHERE e.event_type = 'click' GROUP BY e.user_id
-        |), s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS t2
-        |  FROM events e JOIN s1 ON s1.user_id = e.user_id AND e.ts >= s1.t1
-        |  WHERE e.event_type = 'purchase' GROUP BY e.user_id
-        |), c AS (
-        |  SELECT (SELECT count(*) FROM s0) AS n0,
-        |         (SELECT count(*) FROM s1) AS n1,
-        |         (SELECT count(*) FROM s2) AS n2
-        |)
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS BIGINT) AS stage, 'view' AS event_type, n0 AS n_users,
-        |    round(CASE WHEN n0 != 0 THEN CAST(n0 AS DOUBLE) / n0 END, 6) AS step_rate,
-        |    round(CASE WHEN n0 != 0 THEN CAST(n0 AS DOUBLE) / n0 END, 6) AS overall_rate
-        |  FROM c
-        |  UNION ALL
-        |  SELECT CAST(2 AS BIGINT), 'click', n1,
-        |    round(CASE WHEN n0 != 0 THEN CAST(n1 AS DOUBLE) / n0 END, 6),
-        |    round(CASE WHEN n0 != 0 THEN CAST(n1 AS DOUBLE) / n0 END, 6)
-        |  FROM c
-        |  UNION ALL
-        |  SELECT CAST(3 AS BIGINT), 'purchase', n2,
-        |    round(CASE WHEN n1 != 0 THEN CAST(n2 AS DOUBLE) / n1 END, 6),
-        |    round(CASE WHEN n0 != 0 THEN CAST(n2 AS DOUBLE) / n0 END, 6)
-        |  FROM c
-        |)
-        |ORDER BY stage""".stripMargin,
-    "q_sessionize" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, value,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |  FROM events
-        |), y AS (
-        |  SELECT *, CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM x
-        |), z AS (
-        |  SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM y
-        |)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
-        |  epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM z GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "q_session_stats" ->
-      """WITH x AS (
-        |  SELECT user_id, ts,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |  FROM events
-        |), y AS (
-        |  SELECT *, CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM x
-        |), z AS (
-        |  SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM y
-        |), sess AS (
-        |  SELECT user_id, session_id, count(*) AS n_events,
-        |    epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us
-        |  FROM z GROUP BY user_id, session_id
-        |)
-        |SELECT user_id, count(*) AS n_sessions, CAST(sum(n_events) AS BIGINT) AS total_events,
-        |  max(n_events) AS max_session_events,
-        |  CAST(sum(end_us - start_us) AS BIGINT) AS total_session_us
-        |FROM sess GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    "q_top_transitions" ->
-      """WITH t AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-        |  FROM events
-        |)
-        |SELECT prev_type, event_type AS next_type, count(*) AS n_transitions
-        |FROM t WHERE prev_type IS NOT NULL
-        |GROUP BY 1, 2
-        |ORDER BY n_transitions DESC, prev_type ASC, next_type ASC
-        |LIMIT 20""".stripMargin,
-    "q_time_to_conversion" ->
-      """WITH f AS (
-        |  SELECT user_id, min(ts) AS t_from FROM events WHERE event_type = 'view' GROUP BY user_id
-        |), t AS (
-        |  SELECT e.user_id, min(e.ts) AS t_to
-        |  FROM events e JOIN f ON f.user_id = e.user_id AND e.ts >= f.t_from
-        |  WHERE e.event_type = 'purchase' GROUP BY e.user_id
-        |)
-        |SELECT f.user_id, epoch_us(t_from) AS from_us, epoch_us(t_to) AS to_us,
-        |  epoch_us(t_to) - epoch_us(t_from) AS delta_us
-        |FROM f JOIN t ON f.user_id = t.user_id
-        |ORDER BY f.user_id""".stripMargin,
-    // the corpus is pure ASCII (octet_length == strlen for every
-    // doc, asserted in MultimodalSpec), so DuckDB's char functions
-    // see exactly the bytes Spark's binary expression sees
-    // independent derivation: the oracle re-derives the expected
-    // waveform from TEXT (one sample per leading char), never seeing
-    // the WAV bytes — so a wrong header offset or endianness in the
-    // Spark parser hash-mismatches; the header constants assert the
-    // parsed fmt fields
-    "q_wav_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id,
-        |    list_transform(generate_series(1, least(96, length(text))),
-        |      i -> ascii(substr(text, CAST(i AS INT), 1)) % 128 * 257 - 16384) AS smp
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  TRUE AS valid, 8000 AS sample_rate, 1 AS n_channels, 16 AS bits,
-        |  CAST(len(smp) AS BIGINT) AS n_samples,
-        |  CASE WHEN len(smp) > 0
-        |    THEN CAST(list_max(list_transform(smp, x -> abs(x))) AS INT) END AS peak_abs,
-        |  CASE WHEN len(smp) > 0
-        |    THEN CAST(list_sum(smp) AS DOUBLE) / CAST(len(smp) AS DOUBLE) END AS mean_sample,
-        |  CASE WHEN len(smp) > 0
-        |    THEN sqrt(CAST(list_sum(list_transform(smp, x -> x * x)) AS DOUBLE)
-        |              / CAST(len(smp) AS DOUBLE)) END AS rms
-        |FROM s ORDER BY media_id""".stripMargin,
-    // independent derivation: expected pixels come from TEXT (the
-    // top-down generation rule), never from the BMP bytes — the
-    // on-disk image is bottom-up BGR with padded rows, so a parser
-    // that misses the channel swap or the row stride cannot agree
-    "q_bmp_stats" ->
-      """WITH px AS (
-        |  SELECT doc_id AS media_id, least(96, length(text)) AS l, text,
-        |    unnest(generate_series(0, 27)) AS p
-        |  FROM documents
-        |), chv AS (
-        |  SELECT media_id,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p) % l AS INT) + 1, 1)) % 128 END AS r,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p+1) % l AS INT) + 1, 1)) % 128 END AS g,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p+2) % l AS INT) + 1, 1)) % 128 END AS b
-        |  FROM px
-        |)
-        |SELECT media_id, TRUE AS valid, 7 AS width, 4 AS height,
-        |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(max(greatest(r, g, b)) AS INT) AS peak,
-        |  CAST(sum(r) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_r,
-        |  CAST(sum(g) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_g,
-        |  CAST(sum(b) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_b,
-        |  CAST(sum(299 * r + 587 * g + 114 * b) AS DOUBLE)
-        |    / CAST(count(*) * 1000 AS DOUBLE) AS mean_luma
-        |FROM chv GROUP BY media_id ORDER BY media_id""".stripMargin,
-    // independent derivation, PNG twin: expected pixels come from
-    // TEXT (the top-down generation rule over 35 px), never from the
-    // PNG bytes — the on-disk image is zlib-compressed with a
-    // DIFFERENT filter per row (all five types), so a decoder with
-    // any defilter, inflate framing, or CRC handling wrong cannot
-    // agree on a single document
-    "q_png_stats" ->
-      """WITH px AS (
-        |  SELECT doc_id AS media_id, least(105, length(text)) AS l, text,
-        |    unnest(generate_series(0, 34)) AS p
-        |  FROM documents
-        |), chv AS (
-        |  SELECT media_id,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p) % l AS INT) + 1, 1)) % 128 END AS r,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p+1) % l AS INT) + 1, 1)) % 128 END AS g,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p+2) % l AS INT) + 1, 1)) % 128 END AS b
-        |  FROM px
-        |)
-        |SELECT media_id, TRUE AS valid, 7 AS width, 5 AS height,
-        |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(max(greatest(r, g, b)) AS INT) AS peak,
-        |  CAST(sum(r) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_r,
-        |  CAST(sum(g) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_g,
-        |  CAST(sum(b) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_b,
-        |  CAST(sum(299 * r + 587 * g + 114 * b) AS DOUBLE)
-        |    / CAST(count(*) * 1000 AS DOUBLE) AS mean_luma
-        |FROM chv GROUP BY media_id ORDER BY media_id""".stripMargin,
-    // independent derivation, JPEG: expected pixels come from TEXT
-    // (one uniform 8x8 block per leading char, v=((c&0x7f)*7+j)%256,
-    // rows padded to 8 blocks with v=128) — the bytes on disk are
-    // real entropy-coded baseline JPEG (Huffman DC categories, DC
-    // prediction, byte stuffing), and the all-ones quantizer makes
-    // flat blocks decode EXACTLY, so a decoder with the Huffman
-    // build, extend rule, dequant, or IDCT wrong cannot agree
-    "q_jpeg_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id, least(64, length(text)) AS l, text FROM documents
-        |), b AS (
-        |  SELECT media_id, l, text,
-        |    CASE WHEN l = 0 THEN 8 ELSE ((l + 7) // 8) * 8 END AS nb
-        |  FROM s
-        |), blk AS (
-        |  SELECT media_id, nb,
-        |    CASE WHEN j < l
-        |      THEN ((ascii(substr(text, CAST(j + 1 AS INT), 1)) % 128) * 7 + j) % 256
-        |      ELSE 128 END AS v
-        |  FROM b, unnest(generate_series(0, nb - 1)) AS u(j)
-        |)
-        |SELECT media_id, TRUE AS valid, 64 AS width,
-        |  CAST(max(nb) AS INT) AS height,
-        |  CAST(count(*) * 64 AS BIGINT) AS n_px,
-        |  CAST(max(v) AS INT) AS peak,
-        |  CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_r,
-        |  CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_g,
-        |  CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_b,
-        |  CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_luma
-        |FROM blk GROUP BY media_id ORDER BY media_id""".stripMargin,
-    // independent derivation, UTF-8: the oracle re-derives every
-    // byte-class count and the max codepoint from TEXT through the
-    // fixed mapping rule (vowels 2-byte, digits 3-byte, uppercase
-    // 4-byte astral) — the bytes on disk are JDK-encoder UTF-8, so a
-    // validator with the continuation, overlong, or length rules
-    // wrong cannot agree
-    "q_utf8_stats" ->
-      """WITH ch AS (
-        |  SELECT doc_id AS media_id, i,
-        |    ascii(substr(text, CAST(i AS INT), 1)) AS a,
-        |    substr(text, CAST(i AS INT), 1) AS c
-        |  FROM documents, unnest(generate_series(1, least(200, length(text)))) AS u(i)
-        |), cls AS (
-        |  SELECT media_id,
-        |    CASE WHEN c IN ('a','e','i','o','u') THEN 2
-        |         WHEN a BETWEEN 48 AND 57 THEN 3
-        |         WHEN a BETWEEN 65 AND 90 THEN 4
-        |         WHEN a < 128 THEN 1
-        |         WHEN a < 2048 THEN 2
-        |         WHEN a < 65536 THEN 3
-        |         ELSE 4 END AS nb,
-        |    CASE WHEN c IN ('a','e','i','o','u') THEN 256 + a
-        |         WHEN a BETWEEN 48 AND 57 THEN 8192 + a
-        |         WHEN a BETWEEN 65 AND 90 THEN 65536 + a
-        |         ELSE a END AS cp
-        |  FROM ch
-        |), agg AS (
-        |  SELECT media_id,
-        |    CAST(sum(nb) AS BIGINT) AS n_bytes,
-        |    CAST(count(*) AS BIGINT) AS n_codepoints,
-        |    CAST(sum(CASE WHEN nb = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_ascii,
-        |    CAST(sum(CASE WHEN nb = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_2byte,
-        |    CAST(sum(CASE WHEN nb = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_3byte,
-        |    CAST(sum(CASE WHEN nb = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_4byte,
-        |    CAST(max(cp) AS INT) AS max_cp
-        |  FROM cls GROUP BY media_id
-        |)
-        |SELECT d.doc_id AS media_id, TRUE AS valid,
-        |  coalesce(a.n_bytes, 0) AS n_bytes,
-        |  coalesce(a.n_codepoints, 0) AS n_codepoints,
-        |  coalesce(a.n_ascii, 0) AS n_ascii,
-        |  coalesce(a.n_2byte, 0) AS n_2byte,
-        |  coalesce(a.n_3byte, 0) AS n_3byte,
-        |  coalesce(a.n_4byte, 0) AS n_4byte,
-        |  coalesce(a.max_cp, 0) AS max_cp
-        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.media_id
-        |ORDER BY media_id""".stripMargin,
-    // independent derivation, UTF-16: same mapping rule as the UTF-8
-    // twin but sized in UTF-16 units — vowels/digits are BMP (2
-    // bytes), uppercase is ASTRAL (a surrogate PAIR, 4 bytes) — and
-    // the bytes on disk alternate big-/little-endian by doc parity,
-    // so a validator with the BOM, byte order, or pairing rules
-    // wrong cannot agree
-    "q_utf16_stats" ->
-      """WITH ch AS (
-        |  SELECT doc_id AS media_id, i,
-        |    ascii(substr(text, CAST(i AS INT), 1)) AS a,
-        |    substr(text, CAST(i AS INT), 1) AS c
-        |  FROM documents, unnest(generate_series(1, least(200, length(text)))) AS u(i)
-        |), cls AS (
-        |  SELECT media_id,
-        |    CASE WHEN a BETWEEN 65 AND 90 THEN 1 ELSE 0 END AS supp,
-        |    CASE WHEN c IN ('a','e','i','o','u') THEN 256 + a
-        |         WHEN a BETWEEN 48 AND 57 THEN 8192 + a
-        |         WHEN a BETWEEN 65 AND 90 THEN 65536 + a
-        |         ELSE a END AS cp
-        |  FROM ch
-        |), agg AS (
-        |  SELECT media_id,
-        |    CAST(2 + sum(2 + 2 * supp) AS BIGINT) AS n_bytes,
-        |    CAST(count(*) AS BIGINT) AS n_codepoints,
-        |    CAST(sum(1 - supp) AS BIGINT) AS n_bmp,
-        |    CAST(sum(supp) AS BIGINT) AS n_supplementary,
-        |    CAST(max(cp) AS INT) AS max_cp,
-        |    CAST(sum(cp) AS BIGINT) AS sum_cp
-        |  FROM cls GROUP BY media_id
-        |)
-        |SELECT d.doc_id AS media_id, TRUE AS valid,
-        |  coalesce(a.n_bytes, 2) AS n_bytes,
-        |  coalesce(a.n_codepoints, 0) AS n_codepoints,
-        |  coalesce(a.n_bmp, 0) AS n_bmp,
-        |  coalesce(a.n_supplementary, 0) AS n_supplementary,
-        |  coalesce(a.max_cp, 0) AS max_cp,
-        |  coalesce(a.sum_cp, 0) AS sum_cp
-        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.media_id
-        |ORDER BY media_id""".stripMargin,
-    // independent derivation, Punycode: the oracle re-derives the
-    // codepoint census from TEXT through the shared mapping rule —
-    // the bytes on disk are the RFC 3492 DELTA STREAM (bias state
-    // machine, variable-length integers), so a decoder with the
-    // digit alphabet, bias adaptation, or insertion order wrong
-    // cannot agree on a single document
-    "q_punycode_stats" ->
-      """WITH ch AS (
-        |  SELECT doc_id AS media_id, i,
-        |    ascii(substr(text, CAST(i AS INT), 1)) AS a,
-        |    substr(text, CAST(i AS INT), 1) AS c
-        |  FROM documents, unnest(generate_series(1, least(128, length(text)))) AS u(i)
-        |), cls AS (
-        |  SELECT media_id,
-        |    CASE WHEN c IN ('a','e','i','o','u') OR a BETWEEN 48 AND 57
-        |              OR a BETWEEN 65 AND 90 THEN 1 ELSE 0 END AS ext,
-        |    CASE WHEN c IN ('a','e','i','o','u') THEN 256 + a
-        |         WHEN a BETWEEN 48 AND 57 THEN 8192 + a
-        |         WHEN a BETWEEN 65 AND 90 THEN 65536 + a
-        |         ELSE a END AS cp
-        |  FROM ch
-        |), agg AS (
-        |  SELECT media_id,
-        |    CAST(count(*) AS BIGINT) AS n_codepoints,
-        |    CAST(sum(1 - ext) AS BIGINT) AS n_basic,
-        |    CAST(sum(ext) AS BIGINT) AS n_extended,
-        |    CAST(max(cp) AS INT) AS max_cp,
-        |    CAST(sum(cp) AS BIGINT) AS sum_cp
-        |  FROM cls GROUP BY media_id
-        |)
-        |SELECT d.doc_id AS media_id, TRUE AS valid,
-        |  coalesce(a.n_codepoints, 0) AS n_codepoints,
-        |  coalesce(a.n_basic, 0) AS n_basic,
-        |  coalesce(a.n_extended, 0) AS n_extended,
-        |  coalesce(a.max_cp, 0) AS max_cp,
-        |  coalesce(a.sum_cp, 0) AS sum_cp
-        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.media_id
-        |ORDER BY media_id""".stripMargin,
-    // independent derivation, Base64: the oracle re-derives the
-    // decoded length/byte-sum/max from TEXT — the bytes on disk are
-    // JDK-encoder Base64, so an alphabet, padding, or bit-packing
-    // bug in the strict decoder cannot agree
-    "q_base64_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id, least(256, length(text)) AS n, text
-        |  FROM documents
-        |)
-        |SELECT media_id, TRUE AS valid,
-        |  CAST(n AS BIGINT) AS n_bytes,
-        |  CAST(coalesce(list_sum(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS BIGINT) AS sum_bytes,
-        |  CAST(coalesce(list_max(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS INT) AS max_byte
-        |FROM s ORDER BY media_id""".stripMargin,
-    // independent derivation, raw deflate: the oracle re-derives the
-    // decompressed length/byte-sum/max from TEXT — the bytes on disk
-    // are JDK-Deflater streams at per-doc levels (stored, fastest,
-    // best), and the Spark side decompresses them with the IN-REPO
-    // RFC 1951 inflate, so a Huffman-construction, extra-bits, or
-    // back-reference bug cannot agree on a single document
-    "q_deflate_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id, least(512, length(text)) AS n, text
-        |  FROM documents
-        |)
-        |SELECT media_id, TRUE AS valid,
-        |  CAST(n AS BIGINT) AS n_bytes,
-        |  CAST(coalesce(list_sum(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS BIGINT) AS sum_bytes,
-        |  CAST(coalesce(list_max(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS INT) AS max_byte
-        |FROM s ORDER BY media_id""".stripMargin,
-    // independent derivation, LZ4: the oracle re-derives the block
-    // count (256-byte frame chunking), decoded length, byte-sum and
-    // max from TEXT, never seeing the frame — the bytes on disk are
-    // the in-repo greedy compressor's sequences behind XXH32-signed
-    // framing, so a decoder with the token/extension/offset rules,
-    // the HC/block/content checksums, or strict end-of-payload wrong
-    // cannot agree
-    // independent derivation, Snappy: the oracle re-derives data-chunk
-    // count (256-byte segments of the leading 512 chars), decoded
-    // length, byte-sum and max from TEXT — the bytes on disk are the
-    // in-repo framing writer signed with the JDK's INDEPENDENT
-    // CRC32C, so a decoder with the tag parsing, uvarint preamble,
-    // overlap copies, chunk framing, or the Castagnoli table wrong
-    // cannot agree
-    // independent derivation, protobuf: the oracle re-derives the
-    // field census (4 required fields + one repeated varint per
-    // 64-byte segment + the id-cycled marker/unknown fields), byte
-    // count, byte-sum and max from TEXT and doc_id alone — a walker
-    // with the tag/varint/bounds/skip rules or the internal
-    // fixed32/fixed64/segment-sum cross-checks wrong cannot agree
-    "q_proto_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id, least(512, length(text)) AS n, text
-        |  FROM documents
-        |)
-        |SELECT media_id, TRUE AS valid,
-        |  CAST(4 + CASE WHEN n = 0 THEN 0 ELSE ceil(n / 64.0) END
-        |     + CASE WHEN media_id % 5 = 0 THEN 1 ELSE 0 END
-        |     + CASE WHEN media_id % 7 = 0 THEN 1 ELSE 0 END
-        |     + CASE WHEN media_id % 11 = 0 THEN 1 ELSE 0 END
-        |     + CASE WHEN media_id % 13 = 0 THEN 1 ELSE 0 END AS INT) AS n_fields,
-        |  CAST(n AS BIGINT) AS n_bytes,
-        |  CAST(coalesce(list_sum(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS BIGINT) AS sum_bytes,
-        |  CAST(coalesce(list_max(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS INT) AS max_byte
-        |FROM s ORDER BY media_id""".stripMargin,
-    "q_snappy_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id, least(512, length(text)) AS n, text
-        |  FROM documents
-        |)
-        |SELECT media_id, TRUE AS valid,
-        |  CAST(CASE WHEN n = 0 THEN 0 ELSE ceil(n / 256.0) END AS INT) AS n_chunks,
-        |  CAST(n AS BIGINT) AS n_bytes,
-        |  CAST(coalesce(list_sum(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS BIGINT) AS sum_bytes,
-        |  CAST(coalesce(list_max(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS INT) AS max_byte
-        |FROM s ORDER BY media_id""".stripMargin,
-    "q_lz4_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id, least(512, length(text)) AS n, text
-        |  FROM documents
-        |)
-        |SELECT media_id, TRUE AS valid,
-        |  CAST(CASE WHEN n = 0 THEN 0 ELSE ceil(n / 256.0) END AS INT) AS n_blocks,
-        |  CAST(n AS BIGINT) AS n_bytes,
-        |  CAST(coalesce(list_sum(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS BIGINT) AS sum_bytes,
-        |  CAST(coalesce(list_max(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS INT) AS max_byte
-        |FROM s ORDER BY media_id""".stripMargin,
-    // independent derivation, tar.gz: the oracle re-derives chunk
-    // count (100-char parts over the leading 256 chars, one empty
-    // part for empty text), sizes, and the content byte-sum from
-    // TEXT — the bytes on disk are an in-repo USTAR archive behind
-    // the JDK's gzip, so a decoder with the octal fields, header
-    // checksum, block padding, or RFC 1952 trailer handling wrong
-    // cannot agree
-    "q_targz_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id, least(256, length(text)) AS n, text
-        |  FROM documents
-        |)
-        |SELECT media_id, TRUE AS valid,
-        |  CASE WHEN n = 0 THEN 1 ELSE CAST(ceil(n / 100.0) AS INT) END AS n_entries,
-        |  CAST(n AS BIGINT) AS total_bytes,
-        |  CAST(coalesce(list_sum(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS BIGINT) AS sum_bytes,
-        |  CAST(least(n, 100) AS BIGINT) AS max_entry_bytes
-        |FROM s ORDER BY media_id""".stripMargin,
-    // independent derivation, ZIP: the oracle re-derives entry
-    // count, uncompressed sizes, and the content byte-sum from TEXT
-    // (two entries split at n/2 over the leading 256 chars; the
-    // corpus is pure ASCII so byte values are code points), never
-    // seeing the archive — the bytes on disk are JDK-written
-    // streaming ZIP (bit 3: zeroed local sizes + data descriptors),
-    // so a decoder that trusts local headers or skips the CRC/size
-    // cross-checks cannot agree
-    "q_zip_stats" ->
-      """WITH s AS (
-        |  SELECT doc_id AS media_id, least(256, length(text)) AS n, text
-        |  FROM documents
-        |)
-        |SELECT media_id, TRUE AS valid, 2 AS n_entries,
-        |  CAST(n AS BIGINT) AS total_bytes,
-        |  CAST(coalesce(list_sum(list_transform(generate_series(1, n),
-        |    i -> ascii(substr(text, CAST(i AS INT), 1)))), 0) AS BIGINT) AS sum_bytes,
-        |  CAST(n - n // 2 AS BIGINT) AS max_entry_bytes
-        |FROM s ORDER BY media_id""".stripMargin,
-    // independent derivation, QOI twin: expected pixels come from
-    // TEXT (the BMP/PNG generation rule over 8x5 = 40 px), never
-    // from the QOI bytes — the on-disk image is a run/index/delta
-    // chunk stream against a running 64-entry hash cache, so a
-    // decoder with any op, cache-update, or framing rule wrong
-    // cannot agree on a single document
-    "q_qoi_stats" ->
-      """WITH px AS (
-        |  SELECT doc_id AS media_id, least(120, length(text)) AS l, text,
-        |    unnest(generate_series(0, 39)) AS p
-        |  FROM documents
-        |), chv AS (
-        |  SELECT media_id,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p) % l AS INT) + 1, 1)) % 128 END AS r,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p+1) % l AS INT) + 1, 1)) % 128 END AS g,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST((3*p+2) % l AS INT) + 1, 1)) % 128 END AS b
-        |  FROM px
-        |)
-        |SELECT media_id, TRUE AS valid, 8 AS width, 5 AS height,
-        |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(max(greatest(r, g, b)) AS INT) AS peak,
-        |  CAST(sum(r) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_r,
-        |  CAST(sum(g) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_g,
-        |  CAST(sum(b) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_b,
-        |  CAST(sum(299 * r + 587 * g + 114 * b) AS DOUBLE)
-        |    / CAST(count(*) * 1000 AS DOUBLE) AS mean_luma
-        |FROM chv GROUP BY media_id ORDER BY media_id""".stripMargin,
-    // independent derivation, G.711 µ-law: the oracle re-derives the
-    // code byte from TEXT (m_i = (c_i·7 + i) mod 256) and expands it
-    // through the PUBLISHED G.711 integer recipe in pure SQL bitwise
-    // arithmetic — so the decode MATH itself is oracle-checked: a
-    // wrong bias, segment shift, or sign convention in the Spark
-    // expander cannot agree on a single sample
-    "q_mulaw_stats" ->
-      """WITH c AS (
-        |  SELECT doc_id AS media_id,
-        |    list_transform(generate_series(1, least(96, length(text))),
-        |      i -> (ascii(substr(text, CAST(i AS INT), 1)) % 128 * 7 + CAST(i - 1 AS INT)) % 256) AS cod
-        |  FROM documents
-        |), s AS (
-        |  SELECT media_id,
-        |    list_transform(cod, m -> CASE WHEN (255 - m) >= 128
-        |      THEN 132 - ((((255 - m) & 15) * 8 + 132) << (((255 - m) & 112) // 16))
-        |      ELSE ((((255 - m) & 15) * 8 + 132) << (((255 - m) & 112) // 16)) - 132 END) AS smp
-        |  FROM c
-        |)
-        |SELECT media_id,
-        |  TRUE AS valid, 7 AS fmt_tag, 8000 AS sample_rate,
-        |  CAST(len(smp) AS BIGINT) AS n_samples,
-        |  CASE WHEN len(smp) > 0
-        |    THEN CAST(list_max(list_transform(smp, x -> abs(x))) AS INT) END AS peak_abs,
-        |  CASE WHEN len(smp) > 0
-        |    THEN CAST(list_sum(smp) AS DOUBLE) / CAST(len(smp) AS DOUBLE) END AS mean_sample,
-        |  CASE WHEN len(smp) > 0
-        |    THEN sqrt(CAST(list_sum(list_transform(smp, x -> x * x)) AS DOUBLE)
-        |              / CAST(len(smp) AS DOUBLE)) END AS rms
-        |FROM s ORDER BY media_id""".stripMargin,
-    // independent derivation, G.711 A-law twin: same code-byte rule,
-    // expanded through the A-law recipe (XOR 0x55 toggle, segment-0/1
-    // special cases, inverted sign convention vs µ-law)
-    "q_alaw_stats" ->
-      """WITH c AS (
-        |  SELECT doc_id AS media_id,
-        |    list_transform(generate_series(1, least(96, length(text))),
-        |      i -> (ascii(substr(text, CAST(i AS INT), 1)) % 128 * 7 + CAST(i - 1 AS INT)) % 256) AS cod
-        |  FROM documents
-        |), s AS (
-        |  SELECT media_id,
-        |    list_transform(cod, m -> CASE
-        |      WHEN (xor(m, 85) & 112) // 16 = 0
-        |        THEN (CASE WHEN xor(m, 85) >= 128 THEN 1 ELSE -1 END) * ((xor(m, 85) & 15) * 16 + 8)
-        |      WHEN (xor(m, 85) & 112) // 16 = 1
-        |        THEN (CASE WHEN xor(m, 85) >= 128 THEN 1 ELSE -1 END) * ((xor(m, 85) & 15) * 16 + 264)
-        |      ELSE (CASE WHEN xor(m, 85) >= 128 THEN 1 ELSE -1 END)
-        |        * (((xor(m, 85) & 15) * 16 + 264) << ((xor(m, 85) & 112) // 16 - 1)) END) AS smp
-        |  FROM c
-        |)
-        |SELECT media_id,
-        |  TRUE AS valid, 6 AS fmt_tag, 8000 AS sample_rate,
-        |  CAST(len(smp) AS BIGINT) AS n_samples,
-        |  CASE WHEN len(smp) > 0
-        |    THEN CAST(list_max(list_transform(smp, x -> abs(x))) AS INT) END AS peak_abs,
-        |  CASE WHEN len(smp) > 0
-        |    THEN CAST(list_sum(smp) AS DOUBLE) / CAST(len(smp) AS DOUBLE) END AS mean_sample,
-        |  CASE WHEN len(smp) > 0
-        |    THEN sqrt(CAST(list_sum(list_transform(smp, x -> x * x)) AS DOUBLE)
-        |              / CAST(len(smp) AS DOUBLE)) END AS rms
-        |FROM s ORDER BY media_id""".stripMargin,
-    // independent derivation, GIF twin: expected pixels come from
-    // TEXT through the palette rule (index i -> rgb (i, 2i%256,
-    // 3i%256)), never from the GIF bytes — the on-disk image is
-    // LZW-coded sub-blocks behind a color table, so a decoder with
-    // the bit order, dictionary growth, or palette resolution wrong
-    // cannot agree on a single document
-    "q_gif_stats" ->
-      """WITH px AS (
-        |  SELECT doc_id AS media_id, least(35, length(text)) AS l, text,
-        |    unnest(generate_series(0, 34)) AS p
-        |  FROM documents
-        |), chv AS (
-        |  SELECT media_id,
-        |    CASE WHEN l = 0 THEN 0 ELSE ascii(substr(text, CAST(p % l AS INT) + 1, 1)) % 128 END AS i
-        |  FROM px
-        |)
-        |SELECT media_id, TRUE AS valid, 7 AS width, 5 AS height,
-        |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(max(greatest(i, (2*i) % 256, (3*i) % 256)) AS INT) AS peak,
-        |  CAST(sum(i) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_r,
-        |  CAST(sum((2*i) % 256) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_g,
-        |  CAST(sum((3*i) % 256) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_b,
-        |  CAST(sum(299 * i + 587 * ((2*i) % 256) + 114 * ((3*i) % 256)) AS DOUBLE)
-        |    / CAST(count(*) * 1000 AS DOUBLE) AS mean_luma
-        |FROM chv GROUP BY media_id ORDER BY media_id""".stripMargin,
-    "q_binary_entropy" ->
-      """WITH b AS (
-        |  SELECT doc_id, ascii(substr(text, CAST(i AS INT), 1)) AS byte
-        |  FROM documents, unnest(generate_series(1, strlen(text))) AS u(i)
-        |), h AS (
-        |  SELECT doc_id, byte, count(*) AS c FROM b GROUP BY 1, 2
-        |), h2 AS (
-        |  SELECT doc_id, byte, c, max(c) OVER (PARTITION BY doc_id) AS cmax FROM h
-        |)
-        |SELECT doc_id AS media_id,
-        |  CAST(sum(c) AS BIGINT) AS n_bytes,
-        |  CAST(count(*) AS INT) AS distinct_bytes,
-        |  CAST(min(CASE WHEN c = cmax THEN byte END) AS INT) AS top_byte,
-        |  CAST(max(c) AS BIGINT) AS top_count,
-        |  round(log2(sum(c)) - sum(c * log2(c)) / sum(c), 6) AS entropy
-        |FROM h2 GROUP BY doc_id ORDER BY media_id""".stripMargin,
-    "q_binary_chunks" ->
-      """WITH ch AS (
-        |  SELECT doc_id, md5(substr(text, CAST(i AS INT) * 64 + 1, 64)) AS ch
-        |  FROM documents, unnest(generate_series(0, (strlen(text) - 1) // 64)) AS u(i)
-        |), reg AS (
-        |  SELECT ch, count(DISTINCT doc_id) AS docs_with FROM ch GROUP BY ch
-        |)
-        |SELECT ch.doc_id AS media_id,
-        |  count(*) AS n_chunks,
-        |  CAST(count(DISTINCT ch.ch) AS BIGINT) AS distinct_chunks,
-        |  CAST(sum(CASE WHEN reg.docs_with > 1 THEN 1 ELSE 0 END) AS BIGINT) AS shared_chunks
-        |FROM ch JOIN reg ON ch.ch = reg.ch
-        |GROUP BY ch.doc_id ORDER BY media_id""".stripMargin,
-    "q_multimodal_features" ->
-      """SELECT doc_id AS media_id, strlen(text) AS n_bytes,
-        |  16 + strlen(text) % 64 AS feat_width,
-        |  16 + (strlen(text) * 7) % 64 AS feat_height,
-        |  md5(text) AS feat_hash
-        |FROM documents ORDER BY media_id""".stripMargin,
-    // q_binary_magic's oracle derives the expected label from the
-    // header-ASSIGNMENT rule (doc_id mod 5 picks the magic), where
-    // the Spark side detects it from the payload BYTES — an
-    // independent derivation, so a broken sniffer cannot agree with
-    // the oracle by construction
-    "q_binary_magic" ->
-      """WITH m AS (
-        |  SELECT doc_id AS media_id, doc_id % 5 AS h,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS body
-        |  FROM documents
-        |)
-        |SELECT media_id,
-        |  CASE h WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' WHEN 2 THEN 'gif'
-        |         WHEN 3 THEN 'pdf' ELSE 'zip' END AS fmt,
-        |  body + CASE h WHEN 0 THEN 8 WHEN 1 THEN 3 WHEN 2 THEN 6
-        |              WHEN 3 THEN 5 ELSE 4 END AS n_bytes,
-        |  body AS body_bytes
-        |FROM m ORDER BY media_id""".stripMargin,
-    // payload == text bytes (pure-ASCII corpus, asserted in
-    // MultimodalSpec), so substr sees exactly the binary slices
-    "q_binary_neardup" ->
-      """WITH chunks AS (
-        |  SELECT doc_id, md5(substr(text, CAST(ci * 8 + 1 AS INT), 8)) AS t
-        |  FROM documents, unnest(generate_series(0, CAST(floor((strlen(text) - 1) / 8) AS BIGINT))) AS u(ci)
-        |), h AS (
-        |  SELECT doc_id, CAST('0x' || substr(t, 1, 15) AS BIGINT) AS h FROM chunks
-        |), bits AS (
-        |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS b) bs
-        |  GROUP BY 1, 2
-        |), sims AS (
-        |  SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sh
-        |  FROM bits GROUP BY doc_id
-        |), banded AS (
-        |  SELECT doc_id, sh, b AS band, (sh >> (12 * b)) & 4095 AS bv
-        |  FROM sims CROSS JOIN (SELECT unnest(generate_series(0, 4)) AS b) bb
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db, a.sh AS ha, b.sh AS hb
-        |  FROM banded a JOIN banded b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-        |)
-        |SELECT da AS media_a, db AS media_b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS dist
-        |FROM cand WHERE bit_count(xor(ha, hb)) <= 4
-        |ORDER BY media_a, media_b""".stripMargin,
-    "q_williams_r" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start,
-        |  round(CASE WHEN max(high) OVER w != min(low) OVER w
-        |    THEN (max(high) OVER w - close) / (max(high) OVER w - min(low) OVER w) * -100 END, 6) + 0.0 AS pct_r
-        |FROM bars
-        |WINDOW w AS (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, bar_start""".stripMargin,
-    "q_mfi" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close,
-        |    CAST(sum(coalesce(CAST(json_extract_string(props, '$.k') AS BIGINT), 0)) AS BIGINT) AS volume
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, day, volume, (high + low + close) / 3 AS tp FROM bars
-        |), f AS (
-        |  SELECT user_id, day, volume, tp,
-        |    lag(tp) OVER (PARTITION BY user_id ORDER BY day) AS prev_tp
-        |  FROM t
-        |), g AS (
-        |  SELECT user_id, day, volume, tp,
-        |    CASE WHEN prev_tp IS NOT NULL AND tp > prev_tp THEN tp * CAST(volume AS DOUBLE) ELSE 0.0 END AS pos_mf,
-        |    CASE WHEN prev_tp IS NOT NULL AND tp < prev_tp THEN tp * CAST(volume AS DOUBLE) ELSE 0.0 END AS neg_mf
-        |  FROM f
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day, volume,
-        |  round(tp, 6) AS tp,
-        |  round(CASE WHEN sum(pos_mf) OVER w + sum(neg_mf) OVER w != 0.0
-        |    THEN 100.0 * sum(pos_mf) OVER w / (sum(pos_mf) OVER w + sum(neg_mf) OVER w) END, 6) AS mfi
-        |FROM g
-        |WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, day""".stripMargin,
-    // midline is the q_ema closed form on the bars' typical price;
-    // bands compose unrounded and round once, the Spark arithmetic
-    "q_keltner" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS bar_start,
-        |    max(value) AS high, min(value) AS low, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), o AS (
-        |  SELECT user_id, bar_start, high, low, close,
-        |    (high + low + close) / 3 AS tp,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY bar_start) - 1 AS rn,
-        |    lag(close) OVER (PARTITION BY user_id ORDER BY bar_start) AS prev_c
-        |  FROM bars
-        |), g AS (
-        |  SELECT *,
-        |    CASE WHEN rn = 0 THEN tp ELSE (2.0/21) * tp * pow(1 - 2.0/21, -rn) END AS gg,
-        |    CASE WHEN prev_c IS NULL THEN high - low
-        |         ELSE greatest(high - low, abs(high - prev_c), abs(low - prev_c)) END AS tr
-        |  FROM o
-        |), e AS (
-        |  SELECT user_id, bar_start,
-        |    pow(1 - 2.0/21, rn) * sum(gg) OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mid,
-        |    avg(tr) OVER (PARTITION BY user_id ORDER BY bar_start ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS atr
-        |  FROM g
-        |)
-        |SELECT user_id, strftime(bar_start, '%Y-%m-%d') AS bar_start,
-        |  round(mid, 6) AS mid,
-        |  round(mid + 2.0 * atr, 6) AS upper,
-        |  round(mid - 2.0 * atr, 6) AS lower
-        |FROM e ORDER BY user_id, bar_start""".stripMargin,
-    "q_acf" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), l AS (
-        |  SELECT user_id, ret,
-        |    lag(ret, 1) OVER w AS l1, lag(ret, 2) OVER w AS l2, lag(ret, 3) OVER w AS l3,
-        |    lag(ret, 4) OVER w AS l4, lag(ret, 5) OVER w AS l5
-        |  FROM r WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |), u AS (
-        |  SELECT user_id, 1 AS lag_k, ret, l1 AS ret_lag FROM l
-        |  UNION ALL SELECT user_id, 2, ret, l2 FROM l
-        |  UNION ALL SELECT user_id, 3, ret, l3 FROM l
-        |  UNION ALL SELECT user_id, 4, ret, l4 FROM l
-        |  UNION ALL SELECT user_id, 5, ret, l5 FROM l
-        |)
-        |SELECT user_id, CAST(lag_k AS BIGINT) AS lag_k, count(*) AS n_pairs,
-        |  round(CASE WHEN var_samp(ret) != 0 AND var_samp(ret_lag) != 0
-        |    THEN corr(ret, ret_lag) END, 6) AS acf
-        |FROM u WHERE ret_lag IS NOT NULL
-        |GROUP BY user_id, lag_k
-        |ORDER BY user_id, lag_k""".stripMargin,
-    // moments accumulate as exact DECIMAL sums of the 6-dp-quantized
-    // values (order-independent); t/df are one shared IEEE chain
-    "q_welch_ttest" ->
-      """WITH m AS (
-        |  SELECT
-        |    count(*) FILTER (WHERE event_type = 'click') AS na,
-        |    count(*) FILTER (WHERE event_type = 'purchase') AS nb,
-        |    sum(CAST(value AS DECIMAL(18,6))) FILTER (WHERE event_type = 'click') AS sa,
-        |    sum(CAST(value AS DECIMAL(18,6))) FILTER (WHERE event_type = 'purchase') AS sb,
-        |    sum(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))) FILTER (WHERE event_type = 'click') AS qa,
-        |    sum(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))) FILTER (WHERE event_type = 'purchase') AS qb
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |)
-        |SELECT na AS n_a, nb AS n_b,
-        |  round(CAST(sa AS DOUBLE) / na, 6) AS mean_a,
-        |  round(CAST(sb AS DOUBLE) / nb, 6) AS mean_b,
-        |  round((CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb) /
-        |    sqrt((CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / na) / (na - 1) / na +
-        |         (CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / nb) / (nb - 1) / nb), 6) AS t_stat,
-        |  round(pow((CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / na) / (na - 1) / na +
-        |            (CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / nb) / (nb - 1) / nb, 2) /
-        |    (pow((CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / na) / (na - 1) / na, 2) / (na - 1) +
-        |     pow((CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / nb) / (nb - 1) / nb, 2) / (nb - 1)), 6) AS df
-        |FROM m""".stripMargin,
-    // ranks are exact: per-distinct-value counts, tied blocks at the
-    // average rank in doubled (half-rank) units — every sum a long
-    "q_mann_whitney" ->
-      """WITH d AS (
-        |  SELECT value AS x,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-        |  FROM events WHERE event_type IN ('click', 'purchase') GROUP BY value
-        |), r AS (
-        |  SELECT ca, cb, ca + cb AS t,
-        |    coalesce(sum(ca + cb) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS smaller
-        |  FROM d
-        |), a AS (
-        |  SELECT sum(ca) AS na, sum(cb) AS nb,
-        |    sum(ca * (2 * smaller + t + 1)) AS r2a,
-        |    sum(t * t * t - t) AS ties
-        |  FROM r
-        |)
-        |SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-        |  CAST(r2a - na * (na + 1) AS DOUBLE) / 2 AS u_stat,
-        |  round((CAST(r2a - na * (na + 1) AS DOUBLE) / 2 - CAST(na AS DOUBLE) * nb / 2) /
-        |    sqrt(CAST(na AS DOUBLE) * nb / 12 *
-        |      (CAST(na + nb + 1 AS DOUBLE) - CAST(ties AS DOUBLE) / (CAST(na + nb AS DOUBLE) * (na + nb - 1)))), 6) AS z_score
-        |FROM a""".stripMargin,
-    "q_dau_wau" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events
-        |), days AS (
-        |  SELECT DISTINCT d AS grid_day FROM ud
-        |), dau AS (
-        |  SELECT d AS grid_day, count(DISTINCT user_id) AS dau FROM ud GROUP BY 1
-        |), wau AS (
-        |  SELECT g.grid_day, count(DISTINCT u.user_id) AS wau
-        |  FROM ud u JOIN days g ON date_diff('day', u.d, g.grid_day) BETWEEN 0 AND 6
-        |  GROUP BY 1
-        |)
-        |SELECT strftime(grid_day, '%Y-%m-%d') AS grid_day, dau, wau,
-        |  CAST(dau AS DOUBLE) / CAST(wau AS DOUBLE) AS stickiness
-        |FROM dau JOIN wau USING (grid_day)
-        |ORDER BY grid_day""".stripMargin,
-    "q_new_vs_returning" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events
-        |), fs AS (
-        |  SELECT user_id, min(d) AS first_d FROM ud GROUP BY 1
-        |)
-        |SELECT strftime(d, '%Y-%m-%d') AS d,
-        |  CAST(sum(CASE WHEN d = first_d THEN 1 ELSE 0 END) AS BIGINT) AS new_users,
-        |  CAST(sum(CASE WHEN d > first_d THEN 1 ELSE 0 END) AS BIGINT) AS returning_users,
-        |  CAST(sum(CASE WHEN d > first_d THEN 1 ELSE 0 END) AS DOUBLE) /
-        |    CAST(sum(CASE WHEN d = first_d THEN 1 ELSE 0 END) + sum(CASE WHEN d > first_d THEN 1 ELSE 0 END) AS DOUBLE) AS returning_share
-        |FROM ud JOIN fs USING (user_id)
-        |GROUP BY d ORDER BY d""".stripMargin,
-    "q_zipf_slope" ->
-      """WITH c AS (
-        |  SELECT tok, count(*) AS cnt FROM (
-        |    SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents
-        |  ) GROUP BY tok
-        |), top AS (
-        |  SELECT tok, cnt, row_number() OVER (ORDER BY cnt DESC, tok ASC) AS rnk
-        |  FROM c ORDER BY cnt DESC, tok ASC LIMIT 100
-        |)
-        |SELECT count(*) AS k_types,
-        |  round(regr_slope(ln(CAST(cnt AS DOUBLE)), ln(CAST(rnk AS DOUBLE))), 6) AS slope,
-        |  round(regr_intercept(ln(CAST(cnt AS DOUBLE)), ln(CAST(rnk AS DOUBLE))), 6) AS intercept,
-        |  round(regr_r2(ln(CAST(cnt AS DOUBLE)), ln(CAST(rnk AS DOUBLE))), 6) AS r2
-        |FROM top""".stripMargin,
-    // the q_dedup_clusters closure extended to the full corpus
-    // (unpaired docs are singletons), then a size histogram
-    "q_cluster_sizes" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(s), 9, 8) AS BIGINT) AS h2
-        |  FROM sh
-        |), mh AS (
-        |  SELECT doc_id, j, min((h1 + j * h2) % 4294967296) AS m
-        |  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS j) js
-        |  GROUP BY doc_id, j
-        |), sig AS (
-        |  SELECT doc_id, j // 2 AS band,
-        |    concat(min(CASE WHEN j % 2 = 0 THEN m END), ':', min(CASE WHEN j % 2 = 1 THEN m END)) AS sig
-        |  FROM mh GROUP BY doc_id, j // 2
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT da AS a, db AS b FROM cand UNION SELECT db, da FROM cand
-        |), reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a AND e.b != r.a
-        |), comp AS (
-        |  SELECT a AS doc_id, least(a, min(b)) AS cluster_id FROM reach GROUP BY a
-        |), full_l AS (
-        |  SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cid
-        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-        |), sz AS (
-        |  SELECT cid, count(*) AS sz FROM full_l GROUP BY cid
-        |), tot AS (SELECT sum(sz) AS n_docs_total FROM sz)
-        |SELECT sz AS cluster_size, count(*) AS n_clusters,
-        |  sz * count(*) AS n_docs,
-        |  CAST(sz * count(*) AS DOUBLE) / CAST((SELECT n_docs_total FROM tot) AS DOUBLE) AS corpus_share
-        |FROM sz GROUP BY sz ORDER BY cluster_size""".stripMargin,
-    // codes from the q_pq_codes chain; the per-query LUT uses the
-    // same left-associated squared-diff chain, ADC sums the m=8
-    // looked-up cells per (query, vector) and ranks ascending
-    "q_pq_search" -> {
-      val dterms = (1 to 8)
-        .map(i => s"(s.v[js.j*8+$i]-cb.cv[js.j*8+$i])*(s.v[js.j*8+$i]-cb.cv[js.j*8+$i])")
-        .mkString(" + ")
-      val qterms = (1 to 8)
-        .map(i => s"(q.v[js.j*8+$i]-cb.cv[js.j*8+$i])*(q.v[js.j*8+$i]-cb.cv[js.j*8+$i])")
-        .mkString(" + ")
-      s"""WITH e AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-         |), js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         |cb AS (
-         |  SELECT js.j, c.vec_id AS code, c.v AS cv FROM e c CROSS JOIN js WHERE c.vec_id < 16
-         |), d AS (
-         |  SELECT s.vec_id, js.j, cb.code, $dterms AS dist
-         |  FROM e s CROSS JOIN js JOIN cb ON cb.j = js.j
-         |), codes AS (
-         |  SELECT vec_id, j, code FROM (
-         |    SELECT vec_id, j, code,
-         |      row_number() OVER (PARTITION BY vec_id, j ORDER BY dist ASC, code ASC) AS rn
-         |    FROM d
-         |  ) WHERE rn = 1
-         |), lut AS (
-         |  SELECT q.vec_id AS qid, js.j, cb.code, $qterms AS d
-         |  FROM e q CROSS JOIN js JOIN cb ON cb.j = js.j
-         |  WHERE q.vec_id IN (0, 1, 2)
-         |), adc AS (
-         |  SELECT lut.qid, codes.vec_id, round(sum(lut.d), 6) AS adc_dist
-         |  FROM codes JOIN lut ON lut.j = codes.j AND lut.code = codes.code
-         |  GROUP BY 1, 2
-         |)
-         |SELECT qid, vec_id, adc_dist,
-         |  row_number() OVER (PARTITION BY qid ORDER BY adc_dist ASC, vec_id ASC) AS rnk
-         |FROM adc QUALIFY rnk <= 5
-         |ORDER BY qid, rnk""".stripMargin
-    },
-    // all-integer power iteration unrolled 5x: contributions are
-    // exact integral divisions, damping is (85*s) // 100, teleport
-    // ((scale // n) * 15) // 100 — bit-identical to the Spark loop
-    "q_pagerank" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, pairs AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), edges AS (
-        |  SELECT src, dst FROM (
-        |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |    FROM pairs
-        |  ) WHERE rnk <= 5
-        |), deg AS (
-        |  SELECT src, count(*) AS od FROM edges GROUP BY src
-        |), nodes AS (SELECT vec_id AS node FROM embeddings),
-        |params AS (
-        |  SELECT 1000000000000 // count(*) AS r0,
-        |    (1000000000000 // count(*)) * 15 // 100 AS tele
-        |  FROM nodes
-        |), it0 AS (
-        |  SELECT node, (SELECT r0 FROM params) AS r FROM nodes
-        |), it1 AS (
-        |  SELECT nd.node, (SELECT tele FROM params) + coalesce(x.s, 0) * 85 // 100 AS r
-        |  FROM nodes nd LEFT JOIN (
-        |    SELECT e2.dst AS node, sum(r.r // d.od) AS s
-        |    FROM edges e2 JOIN deg d ON e2.src = d.src JOIN it0 r ON r.node = e2.src
-        |    GROUP BY e2.dst) x ON nd.node = x.node
-        |), it2 AS (
-        |  SELECT nd.node, (SELECT tele FROM params) + coalesce(x.s, 0) * 85 // 100 AS r
-        |  FROM nodes nd LEFT JOIN (
-        |    SELECT e2.dst AS node, sum(r.r // d.od) AS s
-        |    FROM edges e2 JOIN deg d ON e2.src = d.src JOIN it1 r ON r.node = e2.src
-        |    GROUP BY e2.dst) x ON nd.node = x.node
-        |), it3 AS (
-        |  SELECT nd.node, (SELECT tele FROM params) + coalesce(x.s, 0) * 85 // 100 AS r
-        |  FROM nodes nd LEFT JOIN (
-        |    SELECT e2.dst AS node, sum(r.r // d.od) AS s
-        |    FROM edges e2 JOIN deg d ON e2.src = d.src JOIN it2 r ON r.node = e2.src
-        |    GROUP BY e2.dst) x ON nd.node = x.node
-        |), it4 AS (
-        |  SELECT nd.node, (SELECT tele FROM params) + coalesce(x.s, 0) * 85 // 100 AS r
-        |  FROM nodes nd LEFT JOIN (
-        |    SELECT e2.dst AS node, sum(r.r // d.od) AS s
-        |    FROM edges e2 JOIN deg d ON e2.src = d.src JOIN it3 r ON r.node = e2.src
-        |    GROUP BY e2.dst) x ON nd.node = x.node
-        |), it5 AS (
-        |  SELECT nd.node, (SELECT tele FROM params) + coalesce(x.s, 0) * 85 // 100 AS r
-        |  FROM nodes nd LEFT JOIN (
-        |    SELECT e2.dst AS node, sum(r.r // d.od) AS s
-        |    FROM edges e2 JOIN deg d ON e2.src = d.src JOIN it4 r ON r.node = e2.src
-        |    GROUP BY e2.dst) x ON nd.node = x.node
-        |)
-        |SELECT node, CAST(r AS BIGINT) AS rank_units, CAST(r AS DOUBLE) / 1000000000000 AS pr
-        |FROM it5 ORDER BY node""".stripMargin,
-    // the q_ann_ivf coarse probe composed with the q_pq_search ADC
-    "q_ivfpq_search" -> {
-      val dterms = (1 to 8)
-        .map(i => s"(s.v[js.j*8+$i]-cb.cv[js.j*8+$i])*(s.v[js.j*8+$i]-cb.cv[js.j*8+$i])")
-        .mkString(" + ")
-      val qterms = (1 to 8)
-        .map(i => s"(q.v[js.j*8+$i]-cb.cv[js.j*8+$i])*(q.v[js.j*8+$i]-cb.cv[js.j*8+$i])")
-        .mkString(" + ")
-      s"""WITH e AS (
-         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-         |), cents AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS c
-         |  FROM e QUALIFY cell < 16
-         |), cd AS (
-         |  SELECT e.vec_id, cents.cell,
-         |    list_dot_product(
-         |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i]),
-         |      list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cents.c[i])) AS d2
-         |  FROM e CROSS JOIN cents
-         |), assigned AS (
-         |  SELECT vec_id, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS rn
-         |  FROM cd QUALIFY rn = 1
-         |), qc AS (
-         |  SELECT vec_id AS qid, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cell ASC) AS prb
-         |  FROM cd WHERE vec_id IN (0, 1, 2) QUALIFY prb <= 4
-         |), js AS (SELECT unnest(generate_series(0, 7)) AS j),
-         |cb AS (
-         |  SELECT js.j, c.vec_id AS code, c.v AS cv FROM e c CROSS JOIN js WHERE c.vec_id < 16
-         |), d AS (
-         |  SELECT s.vec_id, js.j, cb.code, $dterms AS dist
-         |  FROM e s CROSS JOIN js JOIN cb ON cb.j = js.j
-         |), codes AS (
-         |  SELECT vec_id, j, code FROM (
-         |    SELECT vec_id, j, code,
-         |      row_number() OVER (PARTITION BY vec_id, j ORDER BY dist ASC, code ASC) AS rn
-         |    FROM d
-         |  ) WHERE rn = 1
-         |), lut AS (
-         |  SELECT q.vec_id AS qid, js.j, cb.code, $qterms AS d
-         |  FROM e q CROSS JOIN js JOIN cb ON cb.j = js.j
-         |  WHERE q.vec_id IN (0, 1, 2)
-         |), adc AS (
-         |  SELECT qc.qid, a.vec_id, round(sum(lut.d), 6) AS adc_dist
-         |  FROM qc
-         |  JOIN assigned a ON a.cell = qc.cell AND a.vec_id != qc.qid
-         |  JOIN codes ON codes.vec_id = a.vec_id
-         |  JOIN lut ON lut.qid = qc.qid AND lut.j = codes.j AND lut.code = codes.code
-         |  GROUP BY 1, 2
-         |)
-         |SELECT qid, vec_id, adc_dist,
-         |  row_number() OVER (PARTITION BY qid ORDER BY adc_dist ASC, vec_id ASC) AS rnk
-         |FROM adc QUALIFY rnk <= 5
-         |ORDER BY qid, rnk""".stripMargin
-    },
-    "q_merge_upsert" ->
-      """WITH t AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-20' THEN 1 ELSE 0 END AS is_base
-        |  FROM events
-        |), r AS (
-        |  SELECT user_id, ts, value, is_base,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
-        |    max(is_base) OVER (PARTITION BY user_id) AS has_base,
-        |    max(1 - is_base) OVER (PARTITION BY user_id) AS has_change
-        |  FROM t
-        |)
-        |SELECT user_id, epoch_us(ts) AS ts_us, value,
-        |  CASE WHEN has_base = 1 AND has_change = 1 THEN 'update'
-        |       WHEN has_change = 1 THEN 'insert' ELSE 'carry' END AS action
-        |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_calmar" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), x AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret,
-        |    close / max(close) OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) - 1 AS dd
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |)
-        |SELECT user_id,
-        |  round(avg(ret) * 252, 6) AS ann_return,
-        |  round(min(dd), 6) AS max_drawdown,
-        |  round(CASE WHEN min(dd) != 0.0 THEN avg(ret) * 252 / -min(dd) END, 6) AS calmar
-        |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_ulcer_index" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), x AS (
-        |  SELECT user_id,
-        |    (close / max(close) OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) - 1) * 100 AS dd_pct
-        |  FROM dc
-        |)
-        |SELECT user_id, count(*) AS n_days,
-        |  round(min(dd_pct), 6) AS worst_dd_pct,
-        |  round(sqrt(avg(dd_pct * dd_pct)), 6) AS ulcer_index
-        |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_omega_ratio" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |)
-        |SELECT user_id,
-        |  round(sum(greatest(ret - 0.0, 0.0)), 6) AS gain_sum,
-        |  round(sum(greatest(0.0 - ret, 0.0)), 6) AS loss_sum,
-        |  round(CASE WHEN sum(greatest(0.0 - ret, 0.0)) != 0.0
-        |    THEN sum(greatest(ret - 0.0, 0.0)) / sum(greatest(0.0 - ret, 0.0)) END, 6) AS omega
-        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // the minhash-signature CTE chain of q_dedup_clusters, joined
-    // back to the exact shingle sets: estimate, exact jaccard, and
-    // the absolute error are all unrounded single IEEE chains over
-    // exact integers — bit-identical, no rounding needed
-    "q_jaccard_estimate" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(s), 9, 8) AS BIGINT) AS h2
-        |  FROM sh
-        |), mh AS (
-        |  SELECT doc_id, j, min((h1 + j * h2) % 4294967296) AS m
-        |  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS j) js
-        |  GROUP BY doc_id, j
-        |), wide AS (
-        |  SELECT doc_id, list(m ORDER BY j) AS mhl FROM mh GROUP BY doc_id
-        |), sig AS (
-        |  SELECT doc_id, j // 2 AS band,
-        |    concat(min(CASE WHEN j % 2 = 0 THEN m END), ':', min(CASE WHEN j % 2 = 1 THEN m END)) AS sig
-        |  FROM mh GROUP BY doc_id, j // 2
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |), sets AS (
-        |  SELECT doc_id, list(s ORDER BY s) AS arr, count(*) AS n_sh FROM sh GROUP BY doc_id
-        |), f AS (
-        |  SELECT cand.da, cand.db,
-        |    (CASE WHEN wa.mhl[1] = wb.mhl[1] THEN 1 ELSE 0 END +
-        |     CASE WHEN wa.mhl[2] = wb.mhl[2] THEN 1 ELSE 0 END +
-        |     CASE WHEN wa.mhl[3] = wb.mhl[3] THEN 1 ELSE 0 END +
-        |     CASE WHEN wa.mhl[4] = wb.mhl[4] THEN 1 ELSE 0 END +
-        |     CASE WHEN wa.mhl[5] = wb.mhl[5] THEN 1 ELSE 0 END +
-        |     CASE WHEN wa.mhl[6] = wb.mhl[6] THEN 1 ELSE 0 END +
-        |     CASE WHEN wa.mhl[7] = wb.mhl[7] THEN 1 ELSE 0 END +
-        |     CASE WHEN wa.mhl[8] = wb.mhl[8] THEN 1 ELSE 0 END) AS match_lanes,
-        |    len(list_intersect(sa.arr, sb.arr)) AS inter, sa.n_sh AS na, sb.n_sh AS nb
-        |  FROM cand
-        |  JOIN wide wa ON wa.doc_id = cand.da
-        |  JOIN wide wb ON wb.doc_id = cand.db
-        |  JOIN sets sa ON sa.doc_id = cand.da
-        |  JOIN sets sb ON sb.doc_id = cand.db
-        |)
-        |SELECT da, db, CAST(match_lanes AS BIGINT) AS match_lanes,
-        |  CAST(match_lanes AS DOUBLE) / 8 AS est,
-        |  CAST(inter AS DOUBLE) / (na + nb - inter) AS jaccard,
-        |  abs(CAST(match_lanes AS DOUBLE) / 8 - CAST(inter AS DOUBLE) / (na + nb - inter)) AS abs_err
-        |FROM f ORDER BY da, db""".stripMargin,
-    "q_robust_zscore" ->
-      """WITH med AS (
-        |  SELECT user_id, quantile_cont(value, 0.5) AS med FROM events GROUP BY 1
-        |), wm AS (
-        |  SELECT e.user_id, e.value, med.med FROM events e JOIN med USING (user_id)
-        |), mad AS (
-        |  SELECT user_id, quantile_cont(abs(value - med), 0.5) AS mad FROM wm GROUP BY 1
-        |)
-        |SELECT wm.user_id, count(*) AS n,
-        |  round(min(wm.med), 6) AS median,
-        |  round(min(mad.mad), 6) AS mad,
-        |  CAST(coalesce(sum(CASE WHEN abs(CASE WHEN mad.mad != 0.0
-        |      THEN 0.6745 * (wm.value - wm.med) / mad.mad END) > 3.5 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_outliers,
-        |  round(max(abs(CASE WHEN mad.mad != 0.0
-        |      THEN 0.6745 * (wm.value - wm.med) / mad.mad END)), 6) AS max_abs_z
-        |FROM wm JOIN mad ON wm.user_id = mad.user_id
-        |GROUP BY wm.user_id ORDER BY wm.user_id""".stripMargin,
-    "q_moments" ->
-      """WITH mu AS (
-        |  SELECT user_id, round(avg(value), 6) AS mu FROM events GROUP BY 1
-        |), m AS (
-        |  SELECT e.user_id, count(*) AS n, min(mu.mu) AS mu,
-        |    sum((value - mu.mu) * (value - mu.mu)) AS c2,
-        |    sum((value - mu.mu) * (value - mu.mu) * (value - mu.mu)) AS c3,
-        |    sum((value - mu.mu) * (value - mu.mu) * (value - mu.mu) * (value - mu.mu)) AS c4
-        |  FROM events e JOIN mu USING (user_id) GROUP BY e.user_id
-        |)
-        |SELECT user_id, n, mu AS mean,
-        |  round(sqrt(c2 / n), 6) AS std_pop,
-        |  round(CASE WHEN c2 / n > 0.0 THEN (c3 / n) / pow(c2 / n, 1.5) END, 6) AS skewness,
-        |  round(CASE WHEN c2 / n > 0.0 THEN (c4 / n) / ((c2 / n) * (c2 / n)) - 3.0 END, 6) AS excess_kurtosis
-        |FROM m ORDER BY user_id""".stripMargin,
-    "q_cusum" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), mu AS (
-        |  SELECT user_id, round(avg(ret), 6) AS mu, count(*) AS n_days FROM r GROUP BY 1
-        |), c AS (
-        |  SELECT r.user_id, r.day, mu.n_days,
-        |    sum(r.ret - mu.mu) OVER (PARTITION BY r.user_id ORDER BY r.day ROWS UNBOUNDED PRECEDING) AS s
-        |  FROM r JOIN mu USING (user_id)
-        |), k AS (
-        |  SELECT user_id, day, n_days, s,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY abs(s) DESC, day ASC) AS rnk
-        |  FROM c
-        |)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS cp_day,
-        |  round(abs(s), 6) AS cusum_stat, n_days
-        |FROM k WHERE rnk = 1 ORDER BY user_id""".stripMargin,
-    "q_linreg_trend" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), i AS (
-        |  SELECT user_id, close,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY day) - 1 AS DOUBLE) AS idx
-        |  FROM dc
-        |)
-        |SELECT user_id, count(*) AS n_days,
-        |  round(regr_slope(close, idx), 6) AS slope,
-        |  round(regr_intercept(close, idx), 6) AS intercept,
-        |  round(regr_r2(close, idx), 6) AS r2
-        |FROM i GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_entropy_profile" ->
-      """WITH c AS (
-        |  SELECT user_id, event_type, count(*) AS c FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, c, sum(c) OVER (PARTITION BY user_id) AS tot FROM c
-        |)
-        |SELECT user_id, CAST(sum(c) AS BIGINT) AS n_events, count(*) AS n_types,
-        |  round(-sum((CAST(c AS DOUBLE) / CAST(tot AS DOUBLE)) *
-        |    log2(CAST(c AS DOUBLE) / CAST(tot AS DOUBLE))), 6) AS entropy_bits
-        |FROM t GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_incremental_dedup" ->
-      """WITH reg AS (
-        |  SELECT DISTINCT md5(lower(text)) AS fp FROM documents WHERE doc_id < 250
-        |), b AS (
-        |  SELECT doc_id, md5(lower(text)) AS fp FROM documents WHERE doc_id >= 250
-        |)
-        |SELECT b.doc_id, b.fp, CASE WHEN reg.fp IS NULL THEN 1 ELSE 0 END AS is_new
-        |FROM b LEFT JOIN reg ON b.fp = reg.fp
-        |ORDER BY doc_id""".stripMargin,
-    "q_theilsen" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), i AS (
-        |  SELECT user_id, close,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY day) - 1 AS DOUBLE) AS idx
-        |  FROM dc
-        |)
-        |SELECT a.user_id, count(*) AS n_pairs,
-        |  round(quantile_cont((b.close - a.close) / (b.idx - a.idx), 0.5), 6) + 0.0 AS ts_slope
-        |FROM i a JOIN i b ON a.user_id = b.user_id AND b.idx > a.idx
-        |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin,
-    "q_benford" ->
-      """WITH d AS (
-        |  SELECT regexp_extract(CAST(CAST(abs(value) AS DECIMAL(18,6)) AS VARCHAR), '[1-9]') AS d
-        |  FROM events
-        |), g AS (
-        |  SELECT CAST(d AS INT) AS digit, count(*) AS n_obs FROM d WHERE d != '' GROUP BY 1
-        |), t AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n_sample FROM g)
-        |SELECT digit, n_obs, n_sample,
-        |  round(CAST(n_obs AS DOUBLE) / CAST(n_sample AS DOUBLE), 6) AS obs_share,
-        |  round(log10(1 + 1.0 / digit), 6) AS exp_share,
-        |  round(abs(CAST(n_obs AS DOUBLE) / CAST(n_sample AS DOUBLE) - log10(1 + 1.0 / digit)), 6) AS abs_dev
-        |FROM g, t ORDER BY digit""".stripMargin,
-    "q_profile_table" ->
-      """SELECT count(*) AS n_rows,
-        |  count(DISTINCT user_id) AS n_users,
-        |  count(DISTINCT event_type) AS n_event_types,
-        |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS ts_min,
-        |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS ts_max,
-        |  CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS value_nulls,
-        |  round(min(value), 6) AS value_min,
-        |  round(max(value), 6) AS value_max,
-        |  CAST(sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS props_nulls,
-        |  CAST(sum(CASE WHEN json_extract_string(props, '$.k') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS vol_key_missing
-        |FROM events""".stripMargin,
-    "q_power_users" ->
-      """WITH c AS (
-        |  SELECT user_id, count(*) AS n_events FROM events GROUP BY 1
-        |), t AS (SELECT sum(n_events) AS total_events FROM c),
-        |r AS (
-        |  SELECT user_id, n_events,
-        |    row_number() OVER (ORDER BY n_events DESC, user_id ASC) AS rank,
-        |    CAST(sum(n_events) OVER (ORDER BY n_events DESC, user_id ASC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_events
-        |  FROM c
-        |)
-        |SELECT user_id, n_events, rank, cum_events,
-        |  round(CAST(cum_events AS DOUBLE) / CAST(total_events AS DOUBLE), 6) AS cum_share,
-        |  CAST((cum_events - n_events) * 2 < total_events AS INT) AS is_power
-        |FROM r, t ORDER BY rank""".stripMargin,
-    "q_churn" ->
-      """WITH pu AS (
-        |  SELECT user_id, date_trunc('day', min(ts)) AS cohort_week,
-        |    date_trunc('day', max(ts)) AS last_day
-        |  FROM events GROUP BY 1
-        |), e AS (SELECT date_trunc('day', max(ts)) AS corpus_end FROM events)
-        |SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
-        |  count(*) AS n_users,
-        |  CAST(sum(CASE WHEN date_diff('day', last_day, corpus_end) >= 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_churned,
-        |  round(CAST(sum(CASE WHEN date_diff('day', last_day, corpus_end) >= 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE), 6) AS churn_rate
-        |FROM pu, e GROUP BY cohort_week ORDER BY cohort_week""".stripMargin,
-    "q_variance_ratio" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(close, 1) OVER w > 0 THEN ln(close / lag(close, 1) OVER w) END AS r1,
-        |    CASE WHEN lag(close, 5) OVER w > 0 THEN ln(close / lag(close, 5) OVER w) END AS rk
-        |  FROM dc WHERE close > 0
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |)
-        |SELECT user_id, count(r1) AS n_1d, count(rk) AS n_kd,
-        |  round(var_samp(r1), 6) AS var_1d,
-        |  round(var_samp(rk), 6) AS var_kd,
-        |  round(CASE WHEN var_samp(r1) > 0 THEN var_samp(rk) / (5 * var_samp(r1)) END, 6) AS vr
-        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_readability" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    len(regexp_extract_all(trim(text), '\S+')) AS n_words,
-        |    greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
-        |    len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syllables
-        |  FROM documents
-        |), f AS (
-        |  SELECT doc_id, n_words, n_sentences, n_syllables,
-        |    round(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE))
-        |      - 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)), 6) AS flesch
-        |  FROM c WHERE n_words > 0
-        |)
-        |SELECT doc_id, n_words, n_sentences, n_syllables, flesch,
-        |  CASE WHEN flesch >= 70.0 THEN 'easy'
-        |       WHEN flesch >= 50.0 THEN 'standard'
-        |       WHEN flesch >= 30.0 THEN 'difficult'
-        |       ELSE 'very_difficult' END AS band
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "q_triangle_count" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, edges AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), top AS (
-        |  SELECT src, dst,
-        |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |  FROM edges QUALIFY rnk <= 5
-        |), mu AS (
-        |  SELECT t.src AS a, t.dst AS b FROM top t
-        |  JOIN top m ON t.src = m.dst AND t.dst = m.src
-        |  WHERE t.src < t.dst
-        |), tri AS (
-        |  SELECT e1.a, e1.b, e2.b AS c FROM mu e1
-        |  JOIN mu e2 ON e2.a = e1.b
-        |  JOIN mu e3 ON e3.a = e1.a AND e3.b = e2.b
-        |), tn AS (
-        |  SELECT node, count(*) AS n_triangles
-        |  FROM (SELECT unnest([a, b, c]) AS node FROM tri) GROUP BY 1
-        |), deg AS (
-        |  SELECT node, count(*) AS degree
-        |  FROM (SELECT a AS node FROM mu UNION ALL SELECT b AS node FROM mu) GROUP BY 1
-        |)
-        |SELECT deg.node AS vec_id, deg.degree,
-        |  CAST(coalesce(tn.n_triangles, 0) AS BIGINT) AS n_triangles,
-        |  round(CASE WHEN deg.degree >= 2
-        |    THEN 2.0 * coalesce(tn.n_triangles, 0) / (deg.degree * (deg.degree - 1)) END, 6)
-        |    AS clustering_coef
-        |FROM deg LEFT JOIN tn ON deg.node = tn.node ORDER BY vec_id""".stripMargin,
-    "q_embed_norms" ->
-      """WITH n AS (
-        |  SELECT label,
-        |    sqrt(list_dot_product(list_transform(embedding, x -> x::DOUBLE),
-        |                          list_transform(embedding, x -> x::DOUBLE))) AS nrm
-        |  FROM embeddings
-        |), q AS (
-        |  SELECT label, nrm, CAST(nrm AS DECIMAL(18,6)) AS qn FROM n
-        |), m AS (
-        |  SELECT label, count(*) AS n,
-        |    CAST(sum(CASE WHEN nrm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-        |    sum(qn) AS s1, sum(qn * qn) AS s2,
-        |    round(min(nrm), 6) AS min_norm, round(max(nrm), 6) AS max_norm
-        |  FROM q GROUP BY label
-        |)
-        |SELECT label, n AS n_vecs, n_zero,
-        |  round(CAST(s1 AS DOUBLE) / n, 6) AS mean_norm,
-        |  round(CASE WHEN n > 1 THEN sqrt(
-        |    (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n) / (n - 1)) END, 6)
-        |    AS std_norm,
-        |  min_norm, max_norm
-        |FROM m ORDER BY label""".stripMargin,
-    "q_source_overlap" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 0)),
-        |      i -> array_to_string(string_split(lower(text), ' ')[i:i+2], ' '))) AS s
-        |  FROM documents
-        |), ss AS (
-        |  SELECT DISTINCT d.source, sh.s FROM sh JOIN documents d USING (doc_id)
-        |), sz AS (SELECT source, count(*) AS n_sh FROM ss GROUP BY 1)
-        |SELECT a.source AS sa, b.source AS sb,
-        |  za.n_sh AS n_a, zb.n_sh AS n_b, count(*) AS inter,
-        |  CAST(count(*) AS DOUBLE) / CAST(za.n_sh + zb.n_sh - count(*) AS DOUBLE) AS jaccard,
-        |  CAST(count(*) AS DOUBLE) / CAST(least(za.n_sh, zb.n_sh) AS DOUBLE) AS containment
-        |FROM ss a JOIN ss b ON a.s = b.s AND a.source < b.source
-        |JOIN sz za ON za.source = a.source
-        |JOIN sz zb ON zb.source = b.source
-        |GROUP BY a.source, b.source, za.n_sh, zb.n_sh
-        |ORDER BY sa, sb""".stripMargin,
-    "q_seasonal_decompose" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    CAST(max_by(value, ts) AS DECIMAL(18,6)) AS cl,
-        |    max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id, day, close, cl,
-        |    count(*) OVER w7 AS c7, sum(cl) OVER w7 AS sum7,
-        |    dayofweek(day) AS dow
-        |  FROM dc WINDOW w7 AS (
-        |    PARTITION BY user_id ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |), d AS (
-        |  SELECT user_id, day, close, c7, sum7, dow,
-        |    CASE WHEN c7 = 7 THEN 7 * cl - sum7 END AS det7
-        |  FROM t
-        |), s AS (
-        |  SELECT user_id, dow, sum(det7) AS s7, count(*) AS n_dow
-        |  FROM d WHERE det7 IS NOT NULL GROUP BY 1, 2
-        |)
-        |SELECT d.user_id, strftime(d.day, '%Y-%m-%d') AS day, d.close,
-        |  CASE WHEN d.c7 = 7 THEN CAST(d.sum7 AS DOUBLE) / 7.0 END AS trend,
-        |  CAST(s.s7 AS DOUBLE) / (7.0 * CAST(s.n_dow AS DOUBLE)) AS seasonal,
-        |  CAST(d.det7 AS DOUBLE) / 7.0 -
-        |    CAST(s.s7 AS DOUBLE) / (7.0 * CAST(s.n_dow AS DOUBLE)) AS residual
-        |FROM d LEFT JOIN s ON d.user_id = s.user_id AND d.dow = s.dow
-        |ORDER BY d.user_id, day""".stripMargin,
-    "q_survival_curve" ->
-      """WITH life AS (
-        |  SELECT user_id,
-        |    date_diff('day', date_trunc('day', min(ts)), date_trunc('day', max(ts))) AS lifespan
-        |  FROM events GROUP BY 1
-        |), h AS (SELECT lifespan, count(*) AS n FROM life GROUP BY 1),
-        |t AS (SELECT count(*) AS n_total FROM life)
-        |SELECT lifespan AS day_offset, n AS n_exact,
-        |  CAST(sum(n) OVER (ORDER BY lifespan DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_alive,
-        |  round(CAST(sum(n) OVER (ORDER BY lifespan DESC ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-        |    / CAST(n_total AS DOUBLE), 6) AS survival_rate
-        |FROM h, t ORDER BY day_offset""".stripMargin,
-    "q_vocab_shift" ->
-      """WITH cut AS (SELECT quantile_cont(doc_id, 0.5) AS cut FROM documents),
-        |toks AS (
-        |  SELECT (doc_id <= cut) AS first_half,
-        |    unnest(string_split(lower(text), ' ')) AS tok
-        |  FROM documents, cut
-        |), a AS (SELECT tok, count(*) AS cnt_a FROM toks WHERE first_half GROUP BY 1),
-        |b AS (SELECT tok, count(*) AS cnt_b FROM toks WHERE NOT first_half GROUP BY 1),
-        |t AS (
-        |  SELECT sum(CASE WHEN first_half THEN 1 ELSE 0 END) AS tot_a,
-        |    sum(CASE WHEN first_half THEN 0 ELSE 1 END) AS tot_b
-        |  FROM toks
-        |), j AS (
-        |  SELECT coalesce(a.tok, b.tok) AS tok,
-        |    CAST(coalesce(cnt_a, 0) AS BIGINT) AS cnt_a,
-        |    CAST(coalesce(cnt_b, 0) AS BIGINT) AS cnt_b
-        |  FROM a FULL OUTER JOIN b ON a.tok = b.tok
-        |)
-        |SELECT tok, cnt_a, cnt_b,
-        |  round(ln(CAST(cnt_b + 1 AS DOUBLE) / CAST(tot_b + 1 AS DOUBLE))
-        |    - ln(CAST(cnt_a + 1 AS DOUBLE) / CAST(tot_a + 1 AS DOUBLE)), 6) AS shift,
-        |  abs(round(ln(CAST(cnt_b + 1 AS DOUBLE) / CAST(tot_b + 1 AS DOUBLE))
-        |    - ln(CAST(cnt_a + 1 AS DOUBLE) / CAST(tot_a + 1 AS DOUBLE)), 6)) AS abs_shift
-        |FROM j, t WHERE cnt_a + cnt_b >= 5
-        |ORDER BY abs_shift DESC, tok LIMIT 25""".stripMargin,
-    "q_basket_pairs" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |t AS (SELECT count(DISTINCT ok) AS n_orders FROM op),
-        |f AS (SELECT pk, count(*) AS n_p FROM op GROUP BY 1),
-        |p AS (
-        |  SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_ab
-        |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-        |  GROUP BY 1, 2 HAVING count(*) >= 3
-        |)
-        |SELECT pa, pb, n_ab, fa.n_p AS n_a, fb.n_p AS n_b,
-        |  round(CAST(n_ab AS DOUBLE) / CAST(n_orders AS DOUBLE), 6) AS support,
-        |  round(CAST(n_ab AS DOUBLE) * CAST(n_orders AS DOUBLE)
-        |    / (CAST(fa.n_p AS DOUBLE) * CAST(fb.n_p AS DOUBLE)), 6) AS lift
-        |FROM p JOIN f fa ON fa.pk = pa JOIN f fb ON fb.pk = pb, t
-        |ORDER BY n_ab DESC, pa, pb LIMIT 25""".stripMargin,
-    "q_revenue_cohorts" ->
-      """WITH first AS (
-        |  SELECT o_custkey, min(date_trunc('month', o_orderdate)) AS cohort
-        |  FROM orders GROUP BY 1
-        |)
-        |SELECT strftime(cohort, '%Y-%m') AS cohort,
-        |  (year(o_orderdate) * 12 + month(o_orderdate))
-        |    - (year(cohort) * 12 + month(cohort)) AS offset_m,
-        |  count(DISTINCT o.o_custkey) AS n_customers,
-        |  count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders o JOIN first USING (o_custkey)
-        |GROUP BY cohort, offset_m ORDER BY cohort, offset_m""".stripMargin,
-    "q_rfm" ->
-      """WITH cust AS (
-        |  SELECT o_custkey, date_trunc('day', max(o_orderdate)) AS last_day,
-        |    count(*) AS frequency,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS monetary
-        |  FROM orders GROUP BY 1
-        |), e AS (SELECT date_trunc('day', max(o_orderdate)) AS corpus_end FROM orders),
-        |base AS (
-        |  SELECT o_custkey, date_diff('day', last_day, corpus_end) AS recency_days,
-        |    frequency, monetary
-        |  FROM cust, e
-        |), cuts AS (
-        |  SELECT quantile_cont(recency_days, 0.25) AS r1, quantile_cont(recency_days, 0.5) AS r2,
-        |    quantile_cont(recency_days, 0.75) AS r3,
-        |    quantile_cont(frequency, 0.25) AS f1, quantile_cont(frequency, 0.5) AS f2,
-        |    quantile_cont(frequency, 0.75) AS f3,
-        |    quantile_cont(monetary, 0.25) AS m1, quantile_cont(monetary, 0.5) AS m2,
-        |    quantile_cont(monetary, 0.75) AS m3
-        |  FROM base
-        |)
-        |SELECT o_custkey, recency_days, frequency, monetary,
-        |  5 - (CASE WHEN CAST(recency_days AS DOUBLE) <= r1 THEN 1
-        |            WHEN CAST(recency_days AS DOUBLE) <= r2 THEN 2
-        |            WHEN CAST(recency_days AS DOUBLE) <= r3 THEN 3 ELSE 4 END) AS r_score,
-        |  CASE WHEN CAST(frequency AS DOUBLE) <= f1 THEN 1
-        |       WHEN CAST(frequency AS DOUBLE) <= f2 THEN 2
-        |       WHEN CAST(frequency AS DOUBLE) <= f3 THEN 3 ELSE 4 END AS f_score,
-        |  CASE WHEN monetary <= m1 THEN 1
-        |       WHEN monetary <= m2 THEN 2
-        |       WHEN monetary <= m3 THEN 3 ELSE 4 END AS m_score
-        |FROM base, cuts ORDER BY o_custkey""".stripMargin,
-    "q_ship_lag" ->
-      """SELECT o_orderpriority, count(*) AS n_lines,
-        |  round(avg(date_diff('day', date_trunc('day', o_orderdate),
-        |    date_trunc('day', l_shipdate))), 6) AS mean_lag,
-        |  quantile_cont(date_diff('day', date_trunc('day', o_orderdate),
-        |    date_trunc('day', l_shipdate)), 0.5) AS median_lag,
-        |  quantile_cont(date_diff('day', date_trunc('day', o_orderdate),
-        |    date_trunc('day', l_shipdate)), 0.9) AS p90_lag,
-        |  max(date_diff('day', date_trunc('day', o_orderdate),
-        |    date_trunc('day', l_shipdate))) AS max_lag
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_runs_test" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), r AS (
-        |  SELECT user_id, day, CASE WHEN ret > 0 THEN 1 ELSE 0 END AS sgn
-        |  FROM r0 WHERE ret != 0
-        |), f AS (
-        |  SELECT user_id, sgn,
-        |    CASE WHEN lag(sgn) OVER w IS NULL THEN 1
-        |         WHEN lag(sgn) OVER w != sgn THEN 1 ELSE 0 END AS chg
-        |  FROM r WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |), g AS (
-        |  SELECT user_id, CAST(sum(sgn) AS BIGINT) AS n_pos,
-        |    CAST(sum(1 - sgn) AS BIGINT) AS n_neg, CAST(sum(chg) AS BIGINT) AS runs
-        |  FROM f GROUP BY 1
-        |), h AS (
-        |  SELECT user_id, n_pos, n_neg, runs,
-        |    CAST(n_pos AS DOUBLE) AS np, CAST(n_neg AS DOUBLE) AS nn,
-        |    CAST(n_pos + n_neg AS DOUBLE) AS nd
-        |  FROM g
-        |)
-        |SELECT user_id, n_pos, n_neg, runs,
-        |  round(CASE WHEN n_pos > 0 AND n_neg > 0 AND 2.0 * np * nn - nd > 0
-        |    THEN (CAST(runs AS DOUBLE) - (1.0 + 2.0 * np * nn / nd))
-        |      / sqrt((2.0 * np * nn * (2.0 * np * nn - nd)) / (nd * nd * (nd - 1))) END, 6)
-        |    AS z_runs
-        |FROM h ORDER BY user_id""".stripMargin,
-    // per-window variance numerators are exact longs; cone cuts are
-    // exact interpolating percentiles; vol one fixed sqrt chain with
-    // ::DOUBLE-cast constants — UNROUNDED
-    "q_vol_cones" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), r AS (
-        |  SELECT user_id, day, CAST(floor(ret * 1000000) AS BIGINT) AS mk FROM r0
-        |), w5h AS (
-        |  SELECT 5::HUGEINT * sum(mk::HUGEINT * mk::HUGEINT) OVER w
-        |      - sum(mk::HUGEINT) OVER w * sum(mk::HUGEINT) OVER w AS vnh,
-        |    count(*) OVER w AS cnt
-        |  FROM r WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |), w5 AS (
-        |  SELECT sqrt((CAST(vnh // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |    + CAST(vnh % 9007199254740992 AS DOUBLE)) * (252.0::DOUBLE / (5 * 4)::DOUBLE)) / 1e6 AS volr, cnt
-        |  FROM w5h
-        |), w21h AS (
-        |  SELECT 21::HUGEINT * sum(mk::HUGEINT * mk::HUGEINT) OVER w
-        |      - sum(mk::HUGEINT) OVER w * sum(mk::HUGEINT) OVER w AS vnh,
-        |    count(*) OVER w AS cnt
-        |  FROM r WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 20 PRECEDING AND CURRENT ROW)
-        |), w21 AS (
-        |  SELECT sqrt((CAST(vnh // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |    + CAST(vnh % 9007199254740992 AS DOUBLE)) * (252.0::DOUBLE / (21 * 20)::DOUBLE)) / 1e6 AS volr, cnt
-        |  FROM w21h
-        |)
-        |SELECT 5 AS horizon, CAST(count(*) AS BIGINT) AS n_windows,
-        |  quantile_cont(volr, 0.1) AS vol_p10,
-        |  quantile_cont(volr, 0.5) AS vol_p50,
-        |  quantile_cont(volr, 0.9) AS vol_p90
-        |FROM w5 WHERE cnt = 5
-        |UNION ALL
-        |SELECT 21 AS horizon, CAST(count(*) AS BIGINT) AS n_windows,
-        |  quantile_cont(volr, 0.1) AS vol_p10,
-        |  quantile_cont(volr, 0.5) AS vol_p50,
-        |  quantile_cont(volr, 0.9) AS vol_p90
-        |FROM w21 WHERE cnt = 21
-        |ORDER BY horizon""".stripMargin,
-    // ESS = (Σn·qw)²/Σn·qw² over floor-quantized micro weights —
-    // exact integers through splitDouble, one IEEE division
-    "q_effective_sample_size" ->
-      """WITH cell AS (
-        |  SELECT source, lang, CAST(count(*) AS BIGINT) AS n_cell
-        |  FROM documents GROUP BY 1, 2
-        |), s AS (SELECT source, CAST(count(*) AS BIGINT) AS n_source FROM documents GROUP BY 1),
-        |l AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_lang FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM documents),
-        |w AS (
-        |  SELECT cell.source, n_cell,
-        |    CAST(floor(CAST(n_lang * n_source AS DOUBLE) / CAST(n_total * n_cell AS DOUBLE)
-        |      * 1000000) AS BIGINT) AS qw
-        |  FROM cell JOIN s USING (source) JOIN l USING (lang), t
-        |), a AS (
-        |  SELECT source, CAST(sum(n_cell) AS BIGINT) AS n_docs,
-        |    sum(CAST(n_cell AS HUGEINT) * qw) AS s1,
-        |    sum(CAST(n_cell AS HUGEINT) * qw * qw) AS s2
-        |  FROM w GROUP BY 1
-        |), d AS (
-        |  SELECT source, n_docs,
-        |    CAST((s1 * s1) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST((s1 * s1) % 9007199254740992 AS DOUBLE) AS s1sq,
-        |    CAST(s2 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST(s2 % 9007199254740992 AS DOUBLE) AS s2d
-        |  FROM a
-        |)
-        |SELECT source, n_docs, s1sq / s2d AS ess,
-        |  s1sq / s2d / CAST(n_docs AS DOUBLE) AS ess_ratio
-        |FROM d ORDER BY source""".stripMargin,
-    // the recurrence is a prepended-seed list_reduce mirroring the
-    // Spark strict left fold — bit-identical, UNROUNDED; constants
-    // carry ::DOUBLE casts (DuckDB decimal-folds bare literals)
-    "q_garch_filter" ->
-      """WITH bars AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), l0 AS (
-        |  SELECT user_id, list(close ORDER BY day) AS xs, list(day ORDER BY day) AS ds
-        |  FROM bars GROUP BY user_id
-        |), m AS (
-        |  SELECT user_id, ds,
-        |    list_transform(generate_series(2, len(xs)),
-        |      i -> CASE WHEN xs[i-1] != 0 THEN xs[i] / xs[i-1] - 1 END) AS rs
-        |  FROM l0 WHERE len(xs) >= 2
-        |), r AS (
-        |  SELECT user_id, ds, rs, unnest(generate_series(1, len(rs))) AS rn FROM m
-        |), v AS (
-        |  SELECT user_id, ds, rs, rn,
-        |    list_reduce(list_prepend(rs[1] * rs[1], rs[1:rn-1]),
-        |      (y, x) -> 0.000001::DOUBLE + 0.08::DOUBLE * x * x + 0.9::DOUBLE * y) AS sigma2
-        |  FROM r
-        |)
-        |SELECT user_id, strftime(ds[rn + 1], '%Y-%m-%d') AS day,
-        |  rs[rn] AS ret, sigma2, sqrt(sigma2) AS sigma
-        |FROM v ORDER BY user_id, day""".stripMargin,
-    // train-half VaR threshold as a discrete order statistic; exact
-    // violation counts; LR one fixed ln chain at 6dp (libm last-ulp
-    // is not a cross-engine contract)
-    "q_kupiec_pof" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), rets AS (
-        |  SELECT user_id, day,
-        |    CAST(floor(ret * 1000000) AS BIGINT) AS mk,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY day) AS drn,
-        |    count(*) OVER (PARTITION BY user_id) AS n_all
-        |  FROM r0
-        |), thr AS (
-        |  SELECT user_id, mk AS thr_mk, n_tr FROM (
-        |    SELECT user_id, mk, day,
-        |      row_number() OVER (PARTITION BY user_id ORDER BY mk, day) AS rn,
-        |      count(*) OVER (PARTITION BY user_id) AS n_tr
-        |    FROM rets WHERE drn <= n_all // 2)
-        |  WHERE rn = CAST(ceil(n_tr * 0.05) AS BIGINT)
-        |), a AS (
-        |  SELECT r.user_id, CAST(max(t.n_tr) AS BIGINT) AS n_train,
-        |    CAST(count(*) AS BIGINT) AS n_test,
-        |    CAST(sum(CASE WHEN r.mk < t.thr_mk THEN 1 ELSE 0 END) AS BIGINT) AS n_viol,
-        |    CAST(max(t.thr_mk) AS BIGINT) AS thr_mk
-        |  FROM rets r JOIN thr t USING (user_id)
-        |  WHERE r.drn > r.n_all // 2
-        |  GROUP BY 1
-        |)
-        |SELECT user_id, n_train, n_test, n_viol,
-        |  CAST(thr_mk AS DOUBLE) / 1000000.0 AS var_threshold,
-        |  round(-2.0 * (CAST(n_test - n_viol AS DOUBLE) * ln(0.95) + CAST(n_viol AS DOUBLE) * ln(0.05)
-        |    - CASE WHEN n_viol > 0 AND n_viol < n_test
-        |        THEN CAST(n_test - n_viol AS DOUBLE)
-        |          * ln(1.0 - CAST(n_viol AS DOUBLE) / CAST(n_test AS DOUBLE))
-        |          + CAST(n_viol AS DOUBLE) * ln(CAST(n_viol AS DOUBLE) / CAST(n_test AS DOUBLE))
-        |        ELSE 0.0 END), 6) AS kupiec_lr
-        |FROM a ORDER BY user_id""".stripMargin,
-    // Walsh numerators are exact micro longs; the pseudo-median is a
-    // doubled order statistic over the bounded-series pair frame;
-    // HL = m2s/4e6 one IEEE division, UNROUNDED
-    "q_hodges_lehmann" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), r AS (
-        |  SELECT user_id, day, CAST(floor(ret * 1000000) AS BIGINT) AS mk FROM r0
-        |), b AS (
-        |  SELECT day, mk AS mb FROM r WHERE user_id = 0
-        |), d AS (
-        |  SELECT r.user_id, r.day, r.mk - b.mb AS d
-        |  FROM r JOIN b USING (day) WHERE r.user_id != 0
-        |), w AS (
-        |  SELECT a.user_id, a.d + b.d AS s, a.day AS da, b.day AS db
-        |  FROM d a JOIN d b ON a.user_id = b.user_id AND a.day <= b.day
-        |), o AS (
-        |  SELECT user_id, s,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY s, da, db) AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS np
-        |  FROM w
-        |)
-        |SELECT user_id, CAST(max(np) AS BIGINT) AS n_pairs,
-        |  CAST(sum(CASE WHEN rn = (np + 1) // 2 THEN s END)
-        |    + sum(CASE WHEN rn = (np + 2) // 2 THEN s END) AS DOUBLE) / 4000000.0 AS hl_shift
-        |FROM o WHERE rn = (np + 1) // 2 OR rn = (np + 2) // 2
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // binary outcomes from the exact 2c > m2 compare on the complete
-    // day grid; Q a ratio of exact longs — one IEEE division
-    "q_cochran_q" ->
-      """WITH b AS (
-        |  SELECT date_trunc('day', min(ts)) AS d0, date_trunc('day', max(ts)) AS d1
-        |  FROM events
-        |), grid AS (
-        |  SELECT unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS day FROM b
-        |), ty AS (SELECT DISTINCT event_type FROM events),
-        |cnt AS (
-        |  SELECT event_type, date_trunc('day', ts) AS day, CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2
-        |), cells AS (
-        |  SELECT ty.event_type, grid.day, coalesce(cnt.c, 0) AS c
-        |  FROM ty CROSS JOIN grid
-        |  LEFT JOIN cnt ON cnt.event_type = ty.event_type AND cnt.day = grid.day
-        |), o AS (
-        |  SELECT event_type, day, c,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY c) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM cells
-        |), med AS (
-        |  SELECT event_type,
-        |    CAST(sum(CASE WHEN rn = (n + 1) // 2 THEN c END)
-        |      + sum(CASE WHEN rn = (n + 2) // 2 THEN c END) AS BIGINT) AS m2
-        |  FROM o WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2
-        |  GROUP BY 1
-        |), x AS (
-        |  SELECT cells.event_type, cells.day,
-        |    CASE WHEN 2 * cells.c > med.m2 THEN 1 ELSE 0 END AS x
-        |  FROM cells JOIN med USING (event_type)
-        |), bt AS (
-        |  SELECT event_type, CAST(sum(x) AS BIGINT) AS cj FROM x GROUP BY 1
-        |), bd AS (
-        |  SELECT day, CAST(sum(x) AS BIGINT) AS ri FROM x GROUP BY 1
-        |), ta AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(cj) AS BIGINT) AS nn,
-        |    CAST(sum(cj * cj) AS BIGINT) AS sc2
-        |  FROM bt
-        |), da AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_days, CAST(sum(ri * ri) AS BIGINT) AS sr2
-        |  FROM bd
-        |)
-        |SELECT k AS k_types, n_days, nn AS n_success,
-        |  CASE WHEN k * nn - sr2 > 0
-        |    THEN CAST((k - 1) * (k * sc2 - nn * nn) AS DOUBLE) / CAST(k * nn - sr2 AS DOUBLE)
-        |  END AS cochran_q
-        |FROM ta, da""".stripMargin,
-    // strict integer compares on micro closes; z one fixed IEEE
-    // chain over exact longs — UNROUNDED
-    "q_turning_points" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT user_id,
-        |    CAST(floor(close * 1000000) AS BIGINT) AS cur,
-        |    lag(CAST(floor(close * 1000000) AS BIGINT), 1) OVER w AS prev,
-        |    lead(CAST(floor(close * 1000000) AS BIGINT), 1) OVER w AS nxt
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |), a AS (
-        |  SELECT user_id, CAST(count(*) AS BIGINT) AS n_days,
-        |    CAST(sum(CASE WHEN prev IS NOT NULL AND nxt IS NOT NULL
-        |      AND ((cur > prev AND cur > nxt) OR (cur < prev AND cur < nxt))
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_turning
-        |  FROM t GROUP BY 1
-        |)
-        |SELECT user_id, n_days, n_turning,
-        |  CASE WHEN n_days >= 3
-        |    THEN CAST(3 * n_turning - 2 * (n_days - 2) AS DOUBLE) / 3.0
-        |      * sqrt(90.0 / CAST(16 * n_days - 29 AS DOUBLE))
-        |  END AS tp_z
-        |FROM a ORDER BY user_id""".stripMargin,
-    // segment sums over the same axis as wasserstein: Σ|x−y| and the
-    // within-sample sums are exact 128-bit decimals; E is one fixed
-    // chain over three splitDouble images, UNROUNDED
-    "q_energy_distance" ->
-      """WITH f AS (
-        |  SELECT CAST(floor(value * 1000000) AS BIGINT) AS xq,
-        |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM events WHERE event_type IN ('view', 'click') GROUP BY 1
-        |), t AS (SELECT CAST(sum(ca) AS BIGINT) AS na, CAST(sum(cb) AS BIGINT) AS nb FROM f),
-        |c AS (
-        |  SELECT xq,
-        |    CAST(sum(ca) OVER w AS BIGINT) AS cuma,
-        |    CAST(sum(cb) OVER w AS BIGINT) AS cumb,
-        |    lead(xq) OVER (ORDER BY xq) AS nxt
-        |  FROM f WINDOW w AS (ORDER BY xq ROWS UNBOUNDED PRECEDING)
-        |), s AS (
-        |  SELECT max(t.na) AS n_a, max(t.nb) AS n_b,
-        |    sum(CAST(c.nxt - c.xq AS HUGEINT)
-        |      * (CAST(c.cuma AS HUGEINT) * (t.nb - c.cumb)
-        |        + CAST(c.cumb AS HUGEINT) * (t.na - c.cuma))) AS sxy,
-        |    sum(CAST(c.nxt - c.xq AS HUGEINT) * CAST(c.cuma AS HUGEINT) * (t.na - c.cuma)) AS sxx,
-        |    sum(CAST(c.nxt - c.xq AS HUGEINT) * CAST(c.cumb AS HUGEINT) * (t.nb - c.cumb)) AS syy
-        |  FROM c, t WHERE c.nxt IS NOT NULL
-        |)
-        |SELECT n_a, n_b,
-        |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-        |    (2.0 * (CAST(sxy // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |        + CAST(sxy % 9007199254740992 AS DOUBLE))
-        |      / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))
-        |     - 2.0 * (CAST(sxx // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |        + CAST(sxx % 9007199254740992 AS DOUBLE))
-        |      / (CAST(n_a AS DOUBLE) * CAST(n_a AS DOUBLE))
-        |     - 2.0 * (CAST(syy // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |        + CAST(syy % 9007199254740992 AS DOUBLE))
-        |      / (CAST(n_b AS DOUBLE) * CAST(n_b AS DOUBLE))) / 1e6
-        |  END AS energy_dist
-        |FROM s""".stripMargin,
-    // outcomes split on an exactly-representable doubled median from
-    // the distributed interpolating percentile; chi2 one IEEE
-    // division of exact integers, UNROUNDED
-    "q_median_test" ->
-      """WITH q AS (
-        |  SELECT event_type AS k, CAST(floor(value * 1000000) AS BIGINT) AS qu
-        |  FROM events WHERE event_type IN ('view', 'click') AND value IS NOT NULL
-        |), rk AS (
-        |  SELECT qu, row_number() OVER (ORDER BY qu) AS rn, count(*) OVER () AS n FROM q
-        |), med AS (
-        |  SELECT sum(CASE WHEN rn = (n + 1) // 2 THEN qu::HUGEINT ELSE 0 END)
-        |       + sum(CASE WHEN rn = (n + 2) // 2 THEN qu::HUGEINT ELSE 0 END) AS m2
-        |  FROM rk
-        |), cts AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN k = 'view'  AND qu::HUGEINT * 2 > m2 THEN 1 ELSE 0 END) AS BIGINT) AS a,
-        |    CAST(sum(CASE WHEN k = 'view'  AND qu::HUGEINT * 2 < m2 THEN 1 ELSE 0 END) AS BIGINT) AS b,
-        |    CAST(sum(CASE WHEN k = 'click' AND qu::HUGEINT * 2 > m2 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-        |    CAST(sum(CASE WHEN k = 'click' AND qu::HUGEINT * 2 < m2 THEN 1 ELSE 0 END) AS BIGINT) AS d
-        |  FROM q, med WHERE qu::HUGEINT * 2 != m2
-        |)
-        |SELECT a AS n_a_above, b AS n_a_below, c AS n_b_above, d AS n_b_below,
-        |  CASE WHEN (a + b)::HUGEINT * (c + d) * (a + c) * (b + d) > 0 THEN
-        |    CAST(a + b + c + d AS DOUBLE)
-        |    * (CAST(((a::HUGEINT * d - b::HUGEINT * c) * (a::HUGEINT * d - b::HUGEINT * c))
-        |          // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST(((a::HUGEINT * d - b::HUGEINT * c) * (a::HUGEINT * d - b::HUGEINT * c))
-        |          % 9007199254740992 AS DOUBLE))
-        |    / (CAST(((a + b)::HUGEINT * (c + d) * (a + c) * (b + d))
-        |          // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST(((a + b)::HUGEINT * (c + d) * (a + c) * (b + d))
-        |          % 9007199254740992 AS DOUBLE))
-        |  END AS median_chi2
-        |FROM cts""".stripMargin,
-    // each segment is |cumA·nB − cumB·nA|·Δv in exact 128-bit
-    // decimals; W1 = S/(nA·nB·1e6) via splitDouble — one IEEE
-    // division, UNROUNDED
-    "q_wasserstein" ->
-      """WITH f AS (
-        |  SELECT CAST(floor(value * 1000000) AS BIGINT) AS xq,
-        |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM events WHERE event_type IN ('view', 'click') GROUP BY 1
-        |), t AS (SELECT CAST(sum(ca) AS BIGINT) AS na, CAST(sum(cb) AS BIGINT) AS nb FROM f),
-        |c AS (
-        |  SELECT xq,
-        |    CAST(sum(ca) OVER w AS BIGINT) AS cuma,
-        |    CAST(sum(cb) OVER w AS BIGINT) AS cumb,
-        |    lead(xq) OVER (ORDER BY xq) AS nxt
-        |  FROM f WINDOW w AS (ORDER BY xq ROWS UNBOUNDED PRECEDING)
-        |), s AS (
-        |  SELECT max(t.na) AS n_a, max(t.nb) AS n_b,
-        |    sum(abs(CAST(c.cuma AS HUGEINT) * t.nb - CAST(c.cumb AS HUGEINT) * t.na)
-        |      * CAST(c.nxt - c.xq AS HUGEINT)) AS sg
-        |  FROM c, t WHERE c.nxt IS NOT NULL
-        |)
-        |SELECT n_a, n_b,
-        |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-        |    (CAST(sg // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST(sg % 9007199254740992 AS DOUBLE))
-        |    / CAST(n_a * n_b * 1000000 AS DOUBLE)
-        |  END AS w1
-        |FROM s""".stripMargin,
-    // mean pairwise cos = (||S||^2 - n)/(n(n-1)) — one aggregate, no
-    // pair sweep; exact integers through splitDouble, one division
-    "q_isotropy" ->
-      """WITH e AS (
-        |  SELECT list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), n0 AS (
-        |  SELECT v, sqrt(list_dot_product(v, v)) AS nn FROM e
-        |), c AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-        |    CAST(sum(CASE WHEN nn = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero
-        |  FROM n0
-        |), q0 AS (
-        |  SELECT v, nn, unnest(generate_series(1, len(v))) AS dim FROM n0 WHERE nn != 0
-        |), q AS (
-        |  SELECT dim, CAST(floor(v[dim] / nn * 1000000) AS BIGINT) AS qx FROM q0
-        |), d AS (
-        |  SELECT dim, CAST(sum(qx) AS BIGINT) AS sd FROM q GROUP BY dim
-        |), s AS (
-        |  SELECT sum(CAST(sd AS HUGEINT) * CAST(sd AS HUGEINT)) AS ss FROM d
-        |)
-        |SELECT n_vecs, n_zero,
-        |  CASE WHEN n_vecs - n_zero > 1 THEN
-        |    (CAST((ss - (n_vecs - n_zero)::HUGEINT * 1000000000000) // 9007199254740992 AS DOUBLE)
-        |       * 9.007199254740992e15
-        |     + CAST((ss - (n_vecs - n_zero)::HUGEINT * 1000000000000) % 9007199254740992 AS DOUBLE))
-        |    / (CAST(n_vecs - n_zero AS DOUBLE) * CAST(n_vecs - n_zero - 1 AS DOUBLE) * 1e12)
-        |  END AS mean_pairwise_cos
-        |FROM c, s""".stripMargin,
-    // per-dim exact 128-bit moments (welch recipe on the dim axis);
-    // the dead flag compares the exact integer variance numerator
-    "q_dim_variance" ->
-      """WITH e AS (
-        |  SELECT list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        |), q0 AS (
-        |  SELECT v, unnest(generate_series(1, len(v))) AS i FROM e
-        |), q AS (
-        |  SELECT i - 1 AS dim, CAST(floor(v[i] * 1000000) AS BIGINT) AS qx FROM q0
-        |), g AS (
-        |  SELECT dim, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(qx AS HUGEINT)) AS s1,
-        |    sum(CAST(qx AS HUGEINT) * CAST(qx AS HUGEINT)) AS s2
-        |  FROM q GROUP BY dim
-        |), d AS (
-        |  SELECT dim, n, s1, n * s2 - s1 * s1 AS vn FROM g
-        |), f AS (
-        |  SELECT dim, n,
-        |    CASE WHEN s1 < 0
-        |      THEN -(CAST(abs(s1) // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |        + CAST(abs(s1) % 9007199254740992 AS DOUBLE))
-        |      ELSE CAST(s1 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |        + CAST(s1 % 9007199254740992 AS DOUBLE) END AS s1d,
-        |    CAST(vn // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST(vn % 9007199254740992 AS DOUBLE) AS vnd,
-        |    vn
-        |  FROM d
-        |)
-        |SELECT dim, n,
-        |  s1d / CAST(n AS DOUBLE) / 1e6 AS mean,
-        |  vnd / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 1e12 AS variance,
-        |  CAST(vnd < 0.000001::DOUBLE * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * 1e12 AS INT) AS is_dead
-        |FROM f ORDER BY dim""".stripMargin,
-    // score = cos at rnk=k over the brute-force graph; threshold is
-    // the exact interpolating percentile; the flag compares
-    // bit-identical unrounded doubles
-    "q_knn_outliers" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-        ${celledCtes("        ")}, edges AS (
-        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-        |    list_dot_product(a.v, b.v) / (a.nn * b.nn) AS cos
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id != b.vec_id
-        |  WHERE a.nn * b.nn != 0
-        |), top AS (
-        |  SELECT src, cos,
-        |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rnk
-        |  FROM edges
-        |  QUALIFY rnk = 5
-        |), sc AS (
-        |  SELECT src AS vec_id, cos AS kth_cos FROM top
-        |), th AS (SELECT quantile_cont(kth_cos, 0.05) AS thr FROM sc)
-        |SELECT vec_id, kth_cos, round(thr, 6) AS thr,
-        |  CAST(kth_cos < thr AS INT) AS is_outlier
-        |FROM sc, th ORDER BY vec_id""".stripMargin,
-    // per-cell doubled medians (levene recipe), within-day ranks on
-    // bounded <=k-row windows, tie-robust Q a ratio of exact longs —
-    // one IEEE division, UNROUNDED
-    "q_friedman" ->
-      """WITH q AS (
-        |  SELECT event_type, date_trunc('day', ts) AS day,
-        |    CAST(floor(value * 1000000) AS BIGINT) AS qu
-        |  FROM events
-        |), o AS (
-        |  SELECT event_type, day, qu,
-        |    row_number() OVER (PARTITION BY day, event_type ORDER BY qu) AS rn,
-        |    count(*) OVER (PARTITION BY day, event_type) AS n
-        |  FROM q
-        |), cells AS (
-        |  SELECT day, event_type,
-        |    CAST(sum(CASE WHEN rn = (n + 1) // 2 THEN qu END)
-        |      + sum(CASE WHEN rn = (n + 2) // 2 THEN qu END) AS BIGINT) AS m2
-        |  FROM o WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2
-        |  GROUP BY 1, 2
-        |), kk AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k FROM events),
-        |fb AS (
-        |  SELECT cells.day, cells.event_type, cells.m2, kk.k FROM cells, kk
-        |  QUALIFY count(*) OVER (PARTITION BY day) = k
-        |), ranked AS (
-        |  SELECT day, event_type, k,
-        |    2 * rank() OVER (PARTITION BY day ORDER BY m2)
-        |      + count(*) OVER (PARTITION BY day, m2) - 1 AS dr
-        |  FROM fb
-        |), pt AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_blocks,
-        |    CAST(sum(dr) AS BIGINT) AS r2, CAST(sum(dr * dr) AS BIGINT) AS dr2,
-        |    CAST(max(k) AS BIGINT) AS k
-        |  FROM ranked GROUP BY 1
-        |), a AS (
-        |  SELECT CAST(max(k) AS BIGINT) AS k_types, CAST(max(n_blocks) AS BIGINT) AS n_blocks,
-        |    CAST(sum((r2 - n_blocks * (k + 1)) * (r2 - n_blocks * (k + 1))) AS BIGINT) AS st4,
-        |    CAST(sum(dr2) AS BIGINT) AS sum_dr2
-        |  FROM pt
-        |)
-        |SELECT k_types, n_blocks,
-        |  CASE WHEN sum_dr2 - n_blocks * k_types * (k_types + 1) * (k_types + 1) > 0
-        |    THEN CAST((k_types - 1) * st4 AS DOUBLE)
-        |      / CAST(sum_dr2 - n_blocks * k_types * (k_types + 1) * (k_types + 1) AS DOUBLE)
-        |  END AS friedman_q
-        |FROM a""".stripMargin,
-    // w = (c_lang·n_source)/(n·c_cell): cross-multiplied exact longs,
-    // one IEEE division — never a ratio of rounded shares
-    "q_importance_weights" ->
-      """WITH cell AS (
-        |  SELECT source, lang, CAST(count(*) AS BIGINT) AS n_cell
-        |  FROM documents GROUP BY 1, 2
-        |), s AS (SELECT source, CAST(count(*) AS BIGINT) AS n_source FROM documents GROUP BY 1),
-        |l AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_lang FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM documents)
-        |SELECT cell.source, cell.lang, n_cell,
-        |  CAST(n_lang * n_source AS DOUBLE) / CAST(n_total * n_cell AS DOUBLE) AS weight,
-        |  CAST(n_lang * n_source AS DOUBLE) / CAST(n_total * n_cell AS DOUBLE) > 10.0 AS clipped
-        |FROM cell JOIN s USING (source) JOIN l USING (lang), t
-        |ORDER BY source, lang""".stripMargin,
-    // HHI = Σc²/(Σc)²: exact 128-bit sums via the splitDouble
-    // conversion, one IEEE division each — UNROUNDED
-    "q_supplier_hhi" ->
-      """WITH ps AS (
-        |  SELECT n_name, s_suppkey, CAST(count(*) AS BIGINT) AS c
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  GROUP BY 1, 2
-        |), a AS (
-        |  SELECT n_name, CAST(count(*) AS BIGINT) AS n_suppliers,
-        |    sum(CAST(c AS HUGEINT)) AS s1, sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS s2
-        |  FROM ps GROUP BY 1
-        |), d AS (
-        |  SELECT n_name, n_suppliers, CAST(s1 AS BIGINT) AS n_lines,
-        |    CAST(s1 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST(s1 % 9007199254740992 AS DOUBLE) AS s1d,
-        |    CAST(s2 // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST(s2 % 9007199254740992 AS DOUBLE) AS s2d
-        |  FROM a
-        |)
-        |SELECT n_name, n_suppliers, n_lines,
-        |  s2d / (s1d * s1d) AS hhi,
-        |  (s1d * s1d) / s2d AS effective_suppliers
-        |FROM d ORDER BY n_name""".stripMargin,
-    // everything up to z is exact integer counts (micro-return
-    // comparison, ties drop); z one IEEE chain, UNROUNDED
-    "q_sign_test" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), r AS (
-        |  SELECT user_id, day, CAST(floor(ret * 1000000) AS BIGINT) AS mk FROM r0
-        |), b AS (
-        |  SELECT day, mk AS mb FROM r WHERE user_id = 0
-        |), j AS (
-        |  SELECT r.user_id, r.mk, b.mb FROM r JOIN b USING (day) WHERE r.user_id != 0
-        |), g AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN mk > mb THEN 1 ELSE 0 END) AS BIGINT) AS n_plus,
-        |    CAST(sum(CASE WHEN mk < mb THEN 1 ELSE 0 END) AS BIGINT) AS n_minus
-        |  FROM j GROUP BY 1
-        |)
-        |SELECT user_id, n_plus, n_minus,
-        |  CASE WHEN n_plus + n_minus > 0
-        |    THEN CAST(n_plus - n_minus AS DOUBLE) / sqrt(CAST(n_plus + n_minus AS DOUBLE))
-        |  END AS sign_z
-        |FROM g ORDER BY user_id""".stripMargin,
-    // tie blocks reduce per (key, |d|); doubled average rank
-    // 2·cum(t)−t+1, doubled mean n(n+1)/2 and 48σ² are exact longs;
-    // z = (W2−m2)·√(12/S) one IEEE chain, UNROUNDED
-    "q_wilcoxon_signed" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), r0 AS (
-        |  SELECT user_id, day,
-        |    CASE WHEN lag(close) OVER w != 0 THEN close / lag(close) OVER w - 1 END AS ret
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY ret IS NOT NULL
-        |), r AS (
-        |  SELECT user_id, day, CAST(floor(ret * 1000000) AS BIGINT) AS mk FROM r0
-        |), b AS (
-        |  SELECT day, mk AS mb FROM r WHERE user_id = 0
-        |), j AS (
-        |  SELECT r.user_id, r.mk - b.mb AS d FROM r JOIN b USING (day) WHERE r.user_id != 0
-        |), jd AS (
-        |  SELECT user_id, d, abs(d) AS ad FROM j WHERE d != 0
-        |), blocks AS (
-        |  SELECT user_id, ad, CAST(count(*) AS BIGINT) AS t,
-        |    CAST(sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT) AS tp
-        |  FROM jd GROUP BY 1, 2
-        |), rb AS (
-        |  SELECT user_id, t, tp,
-        |    CAST(2 * sum(t) OVER (PARTITION BY user_id ORDER BY ad ROWS UNBOUNDED PRECEDING)
-        |      - t + 1 AS BIGINT) AS dr
-        |  FROM blocks
-        |), a AS (
-        |  SELECT user_id, CAST(sum(t) AS BIGINT) AS n_days,
-        |    CAST(sum(tp * dr) AS BIGINT) AS w2,
-        |    CAST(sum(t * t * t - t) AS BIGINT) AS tie3
-        |  FROM rb GROUP BY 1
-        |)
-        |SELECT user_id, n_days, w2 / 2.0 AS w_plus,
-        |  CASE WHEN 2 * n_days * (n_days + 1) * (2 * n_days + 1) - tie3 > 0
-        |    THEN CAST(w2 - (n_days * (n_days + 1)) // 2 AS DOUBLE)
-        |      * sqrt(12.0 / CAST(2 * n_days * (n_days + 1) * (2 * n_days + 1) - tie3 AS DOUBLE))
-        |  END AS wilcoxon_z
-        |FROM a ORDER BY user_id""".stripMargin,
-    // ordinal pattern ids are exact integer arithmetic over two lags
-    // of the micro close (lexicographic (value, idx) ranks); counts
-    // exact longs on a <=6-row grid; entropy a bounded 6-term sum, 6dp
-    "q_perm_entropy" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), x AS (
-        |  SELECT user_id, day,
-        |    CAST(floor(close * 1000000) AS BIGINT) AS x2,
-        |    lag(CAST(floor(close * 1000000) AS BIGINT), 2) OVER w AS x0,
-        |    lag(CAST(floor(close * 1000000) AS BIGINT), 1) OVER w AS x1
-        |  FROM dc WINDOW w AS (PARTITION BY user_id ORDER BY day)
-        |  QUALIFY x0 IS NOT NULL
-        |), p AS (
-        |  SELECT user_id,
-        |    (CASE WHEN x1 < x0 THEN 1 ELSE 0 END + CASE WHEN x2 < x0 THEN 1 ELSE 0 END) * 9
-        |    + (CASE WHEN x0 <= x1 THEN 1 ELSE 0 END + CASE WHEN x2 < x1 THEN 1 ELSE 0 END) * 3
-        |    + (CASE WHEN x0 <= x2 THEN 1 ELSE 0 END + CASE WHEN x1 <= x2 THEN 1 ELSE 0 END) AS pid
-        |  FROM x
-        |), c AS (
-        |  SELECT user_id, pid, CAST(count(*) AS BIGINT) AS c FROM p GROUP BY 1, 2
-        |), n AS (
-        |  SELECT user_id, pid, c, sum(c) OVER (PARTITION BY user_id) AS n_tr FROM c
-        |)
-        |SELECT user_id, CAST(max(n_tr) AS BIGINT) AS n_triples,
-        |  CAST(count(*) AS BIGINT) AS n_patterns,
-        |  round(-sum((CAST(c AS DOUBLE) / CAST(n_tr AS DOUBLE))
-        |    * ln(CAST(c AS DOUBLE) / CAST(n_tr AS DOUBLE))) / ln(6), 6) AS perm_entropy
-        |FROM n GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_discount_elasticity" ->
-      """WITH m AS (
-        |  SELECT p_brand, count(*) AS n,
-        |    sum(CAST(l_discount AS DECIMAL(18,6))) AS sx,
-        |    sum(CAST(round(ln(l_quantity), 6) AS DECIMAL(18,6))) AS sy,
-        |    sum(CAST(l_discount AS DECIMAL(18,6)) * CAST(round(ln(l_quantity), 6) AS DECIMAL(18,6))) AS sxy,
-        |    sum(CAST(l_discount AS DECIMAL(18,6)) * CAST(l_discount AS DECIMAL(18,6))) AS sxx,
-        |    sum(CAST(round(ln(l_quantity), 6) AS DECIMAL(18,6)) * CAST(round(ln(l_quantity), 6) AS DECIMAL(18,6))) AS syy
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_quantity > 0 GROUP BY 1
-        |), d AS (
-        |  SELECT p_brand, n,
-        |    CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |    CAST(sxy AS DOUBLE) AS sxyd, CAST(sxx AS DOUBLE) AS sxxd, CAST(syy AS DOUBLE) AS syyd
-        |  FROM m
-        |)
-        |SELECT p_brand, n AS n_lines,
-        |  round(CASE WHEN nd * sxxd - sxd * sxd > 0
-        |    THEN (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd) END, 6) AS elasticity,
-        |  round(CASE WHEN nd * sxxd - sxd * sxd > 0 AND nd * syyd - syd * syd > 0
-        |    THEN (nd * sxyd - sxd * syd) * (nd * sxyd - sxd * syd)
-        |      / ((nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd)) END, 6) AS r2
-        |FROM d ORDER BY p_brand""".stripMargin,
-    "q_gini" ->
-      """WITH c AS (
-        |  SELECT user_id, count(*) AS n_events FROM events GROUP BY 1
-        |), r AS (
-        |  SELECT user_id, n_events,
-        |    row_number() OVER (ORDER BY n_events ASC, user_id ASC) AS rank
-        |  FROM c
-        |)
-        |SELECT count(*) AS n_users, CAST(sum(n_events) AS BIGINT) AS total_events,
-        |  round(2.0 * CAST(sum(rank * n_events) AS DOUBLE)
-        |      / (CAST(count(*) AS DOUBLE) * CAST(sum(n_events) AS DOUBLE))
-        |    - CAST(count(*) + 1 AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS gini
-        |FROM r""".stripMargin,
-    "q_inter_event" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |  QUALIFY gap_us IS NOT NULL
-        |)
-        |SELECT user_id, count(*) AS n_gaps,
-        |  quantile_cont(gap_us, 0.5) AS median_gap_us,
-        |  quantile_cont(gap_us, 0.9) AS p90_gap_us,
-        |  max(gap_us) AS max_gap_us
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_hourly_profile" ->
-      """WITH cells AS (
-        |  SELECT CAST(isodow(ts) AS INT) AS isodow, CAST(hour(ts) AS INT) AS hour,
-        |    count(*) AS n_events
-        |  FROM events GROUP BY 1, 2
-        |), t AS (SELECT sum(n_events) AS n_total FROM cells)
-        |SELECT isodow, hour, n_events,
-        |  round(CAST(n_events AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS share
-        |FROM cells, t ORDER BY isodow, hour""".stripMargin,
-    "q_top_pc" ->
-      """WITH x AS (SELECT list_transform(embedding, t -> t::DOUBLE) AS v FROM embeddings),
-        |dd AS (SELECT len(v) AS d FROM x LIMIT 1),
-        |v0 AS (SELECT list_transform(generate_series(1, d), i -> 1.0 / sqrt(CAST(d AS DOUBLE))) AS vv FROM dd),
-        |w1 AS (
-        |  SELECT pos, sum(CAST(dt * xi AS DECIMAL(18,6))) AS w FROM (
-        |    SELECT list_dot_product(x.v, v0.vv) AS dt,
-        |      unnest(generate_series(1, len(x.v))) AS pos, unnest(x.v) AS xi
-        |    FROM x, v0) GROUP BY pos
-        |),
-        |v1 AS (
-        |  SELECT list_transform(l, t -> t / sqrt(list_dot_product(l, l))) AS vv FROM (
-        |    SELECT list(CAST(w AS DOUBLE) ORDER BY pos) AS l FROM w1)
-        |),
-        |w2 AS (
-        |  SELECT pos, sum(CAST(dt * xi AS DECIMAL(18,6))) AS w FROM (
-        |    SELECT list_dot_product(x.v, v1.vv) AS dt,
-        |      unnest(generate_series(1, len(x.v))) AS pos, unnest(x.v) AS xi
-        |    FROM x, v1) GROUP BY pos
-        |),
-        |v2 AS (
-        |  SELECT list_transform(l, t -> t / sqrt(list_dot_product(l, l))) AS vv FROM (
-        |    SELECT list(CAST(w AS DOUBLE) ORDER BY pos) AS l FROM w2)
-        |),
-        |w3 AS (
-        |  SELECT pos, sum(CAST(dt * xi AS DECIMAL(18,6))) AS w FROM (
-        |    SELECT list_dot_product(x.v, v2.vv) AS dt,
-        |      unnest(generate_series(1, len(x.v))) AS pos, unnest(x.v) AS xi
-        |    FROM x, v2) GROUP BY pos
-        |),
-        |v3 AS (
-        |  SELECT list_transform(l, t -> t / sqrt(list_dot_product(l, l))) AS vv FROM (
-        |    SELECT list(CAST(w AS DOUBLE) ORDER BY pos) AS l FROM w3)
-        |),
-        |sc AS (
-        |  SELECT
-        |    sum(CAST(list_dot_product(x.v, v3.vv) * list_dot_product(x.v, v3.vv) AS DECIMAL(18,6))) AS sp,
-        |    sum(CAST(list_dot_product(x.v, x.v) AS DECIMAL(18,6))) AS sn
-        |  FROM x, v3
-        |),
-        |o AS (
-        |  SELECT CAST(unnest(generate_series(1, len(vv))) AS INT) AS dim,
-        |    unnest(vv) AS loading
-        |  FROM v3
-        |)
-        |SELECT dim, round(loading, 6) AS loading,
-        |  round(CAST(sp AS DOUBLE) / CAST(sn AS DOUBLE), 6) AS explained_share
-        |FROM o, sc ORDER BY dim""".stripMargin,
-    "q_centroid_outliers" ->
-      """WITH e AS (
-        |  SELECT vec_id, label,
-        |    CAST(unnest(generate_series(1, len(embedding))) AS INT) - 1 AS pos,
-        |    unnest(list_transform(embedding, t -> t::DOUBLE)) AS xi
-        |  FROM embeddings
-        |), c AS (
-        |  SELECT label, pos,
-        |    CAST(sum(CAST(xi AS DECIMAL(18,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS ci
-        |  FROM e GROUP BY 1, 2
-        |), d AS (
-        |  SELECT e.label, e.vec_id,
-        |    sqrt(CAST(sum(CAST((xi - ci) * (xi - ci) AS DECIMAL(18,6))) AS DOUBLE)) AS dist
-        |  FROM e JOIN c ON e.label = c.label AND e.pos = c.pos
-        |  GROUP BY 1, 2
-        |), r AS (
-        |  SELECT label, vec_id, round(dist, 6) AS dist,
-        |    row_number() OVER (PARTITION BY label ORDER BY dist DESC, vec_id ASC) AS rnk
-        |  FROM d
-        |)
-        |SELECT label, vec_id, dist, rnk FROM r WHERE rnk <= 5
-        |ORDER BY label, rnk""".stripMargin,
-    "q_embed_drift" ->
-      """WITH cut AS (SELECT quantile_cont(vec_id, 0.5) AS cut FROM embeddings),
-        |e AS (
-        |  SELECT label, (vec_id <= cut) AS first_half,
-        |    CAST(unnest(generate_series(1, len(embedding))) AS INT) - 1 AS pos,
-        |    unnest(list_transform(embedding, t -> t::DOUBLE)) AS xi
-        |  FROM embeddings, cut
-        |), c AS (
-        |  SELECT label, first_half, pos,
-        |    CAST(sum(CAST(xi AS DECIMAL(18,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS ci
-        |  FROM e GROUP BY 1, 2, 3
-        |), j AS (
-        |  SELECT a.label, a.ci AS ca, b.ci AS cb
-        |  FROM c a JOIN c b ON a.label = b.label AND a.pos = b.pos
-        |  WHERE a.first_half AND NOT b.first_half
-        |), g AS (
-        |  SELECT label,
-        |    sum(CAST((ca - cb) * (ca - cb) AS DECIMAL(18,6))) AS d2,
-        |    sum(CAST(ca * cb AS DECIMAL(18,6))) AS dot,
-        |    sum(CAST(ca * ca AS DECIMAL(18,6))) AS na,
-        |    sum(CAST(cb * cb AS DECIMAL(18,6))) AS nb
-        |  FROM j GROUP BY 1
-        |)
-        |SELECT label, round(sqrt(CAST(d2 AS DOUBLE)), 6) AS l2_shift,
-        |  round(CASE WHEN na > 0 AND nb > 0
-        |    THEN CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) END, 6)
-        |    AS centroid_cos
-        |FROM g ORDER BY label""".stripMargin,
-    "q_dup_rate_by_source" ->
-      """WITH fps AS (
-        |  SELECT doc_id, source, md5(lower(text)) AS fp FROM documents
-        |), spread AS (
-        |  SELECT fp, count(*) AS n_sources FROM (SELECT DISTINCT fp, source FROM fps)
-        |  GROUP BY 1
-        |)
-        |SELECT source, count(*) AS n_docs,
-        |  count(DISTINCT f.fp) AS n_unique,
-        |  count(*) - count(DISTINCT f.fp) AS n_dup_within,
-        |  CAST(sum(CASE WHEN s.n_sources >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared_cross,
-        |  round(CAST(count(*) - count(DISTINCT f.fp) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-        |    AS dup_rate
-        |FROM fps f JOIN spread s ON f.fp = s.fp
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q_pc_project" ->
-      """WITH x AS (SELECT vec_id, list_transform(embedding, t -> t::DOUBLE) AS v FROM embeddings),
-        |dd AS (SELECT len(v) AS d FROM x LIMIT 1),
-        |v0 AS (SELECT list_transform(generate_series(1, d), i -> 1.0 / sqrt(CAST(d AS DOUBLE))) AS vv FROM dd),
-        |w1 AS (
-        |  SELECT pos, sum(CAST(dt * xi AS DECIMAL(18,6))) AS w FROM (
-        |    SELECT list_dot_product(x.v, v0.vv) AS dt,
-        |      unnest(generate_series(1, len(x.v))) AS pos, unnest(x.v) AS xi
-        |    FROM x, v0) GROUP BY pos
-        |),
-        |v1 AS (
-        |  SELECT list_transform(l, t -> t / sqrt(list_dot_product(l, l))) AS vv FROM (
-        |    SELECT list(CAST(w AS DOUBLE) ORDER BY pos) AS l FROM w1)
-        |),
-        |w2 AS (
-        |  SELECT pos, sum(CAST(dt * xi AS DECIMAL(18,6))) AS w FROM (
-        |    SELECT list_dot_product(x.v, v1.vv) AS dt,
-        |      unnest(generate_series(1, len(x.v))) AS pos, unnest(x.v) AS xi
-        |    FROM x, v1) GROUP BY pos
-        |),
-        |v2 AS (
-        |  SELECT list_transform(l, t -> t / sqrt(list_dot_product(l, l))) AS vv FROM (
-        |    SELECT list(CAST(w AS DOUBLE) ORDER BY pos) AS l FROM w2)
-        |),
-        |w3 AS (
-        |  SELECT pos, sum(CAST(dt * xi AS DECIMAL(18,6))) AS w FROM (
-        |    SELECT list_dot_product(x.v, v2.vv) AS dt,
-        |      unnest(generate_series(1, len(x.v))) AS pos, unnest(x.v) AS xi
-        |    FROM x, v2) GROUP BY pos
-        |),
-        |v3 AS (
-        |  SELECT list_transform(l, t -> t / sqrt(list_dot_product(l, l))) AS vv FROM (
-        |    SELECT list(CAST(w AS DOUBLE) ORDER BY pos) AS l FROM w3)
-        |),
-        |vr AS (SELECT list_transform(vv, t -> round(t, 6)) AS vv FROM v3)
-        |SELECT x.vec_id,
-        |  round(list_dot_product(x.v, vr.vv), 6) AS projection,
-        |  round(CASE WHEN list_dot_product(x.v, x.v) > 0
-        |    THEN list_dot_product(x.v, vr.vv) * list_dot_product(x.v, vr.vv)
-        |      / list_dot_product(x.v, x.v) END, 6) AS energy_share
-        |FROM x, vr ORDER BY x.vec_id""".stripMargin,
-    "q_class_balance" ->
-      """WITH c AS (SELECT label, count(*) AS n_vecs FROM embeddings GROUP BY 1),
-        |t AS (SELECT sum(n_vecs) AS t FROM c),
-        |g AS (
-        |  SELECT min(t.t) AS n_total,
-        |    round(CAST(max(n_vecs) AS DOUBLE) / CAST(min(n_vecs) AS DOUBLE), 6) AS imbalance_ratio,
-        |    round(exp(-sum((CAST(n_vecs AS DOUBLE) / CAST(t.t AS DOUBLE))
-        |      * ln(CAST(n_vecs AS DOUBLE) / CAST(t.t AS DOUBLE)))), 6) AS effective_classes
-        |  FROM c, t
-        |)
-        |SELECT label, n_vecs,
-        |  round(CAST(n_vecs AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS share,
-        |  imbalance_ratio, effective_classes
-        |FROM c, g ORDER BY label""".stripMargin,
-    "q_ttr" ->
-      """WITH c AS (
-        |  SELECT doc_id, tok, count(*) AS c FROM (
-        |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents)
-        |  GROUP BY 1, 2
-        |)
-        |SELECT doc_id,
-        |  CAST(sum(c) AS BIGINT) AS n_tokens,
-        |  count(*) AS n_types,
-        |  CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-        |  round(CAST(count(*) AS DOUBLE) / CAST(sum(c) AS DOUBLE), 6) AS ttr,
-        |  round(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE), 6) AS hapax_share
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_char_composition" ->
-      """WITH d AS (
-        |  SELECT source,
-        |    CAST(1.0 - CAST(len(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE)
-        |      / CAST(len(text) AS DOUBLE) AS DECIMAL(18,6)) AS upper_s,
-        |    CAST(1.0 - CAST(len(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE)
-        |      / CAST(len(text) AS DOUBLE) AS DECIMAL(18,6)) AS digit_s,
-        |    CAST(1.0 - CAST(len(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE)
-        |      / CAST(len(text) AS DOUBLE) AS DECIMAL(18,6)) AS punct_s,
-        |    CAST(1.0 - CAST(len(regexp_replace(text, '[ \t\n\r\f]', '', 'g')) AS DOUBLE)
-        |      / CAST(len(text) AS DOUBLE) AS DECIMAL(18,6)) AS space_s
-        |  FROM documents WHERE len(text) > 0
-        |)
-        |SELECT source, count(*) AS n_docs,
-        |  round(CAST(sum(upper_s) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS upper_share,
-        |  round(CAST(sum(digit_s) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS digit_share,
-        |  round(CAST(sum(punct_s) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS punct_share,
-        |  round(CAST(sum(space_s) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS space_share
-        |FROM d GROUP BY source ORDER BY source""".stripMargin,
-    "q_encoding_anomalies" ->
-      """SELECT doc_id,
-        |  CAST(regexp_matches(text, '[\x00-\x08\x0B\x0C\x0E-\x1F]') AS INT) AS has_control,
-        |  CAST(contains(text, '�') AS INT) AS has_replacement,
-        |  CAST(regexp_matches(text, '\S{200,}') AS INT) AS has_long_run
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // ranks/cumsums via the distributed prefix sum; deciles by exact
-    // integer ceil-division; one share division per decile row
-    "q_lorenz_curve" ->
-      """WITH c AS (
-        |  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events FROM events GROUP BY 1
-        |), t AS (
-        |  SELECT CAST(sum(n_events) AS BIGINT) AS total_events,
-        |    CAST(count(*) AS BIGINT) AS n_users
-        |  FROM c
-        |), r AS (
-        |  SELECT user_id, n_events,
-        |    row_number() OVER (ORDER BY n_events, user_id) AS rank,
-        |    CAST(sum(n_events) OVER (ORDER BY n_events, user_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        |  FROM c
-        |)
-        |SELECT CAST((rank * 10 + n_users - 1) // n_users AS BIGINT) AS decile,
-        |  CAST(count(*) AS BIGINT) AS n_users_in,
-        |  CAST(max(cum) AS BIGINT) AS cum_events,
-        |  CAST(max(cum) AS DOUBLE) / CAST(max(total_events) AS DOUBLE) AS cum_share
-        |FROM r, t GROUP BY 1 ORDER BY decile""".stripMargin,
-    // per-user endpoints as conditional mins on one rank window;
-    // exact interpolating percentiles over exact micro lags
-    "q_activation_lag" ->
-      """WITH o AS (
-        |  SELECT user_id, epoch_us(ts) AS tu,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events
-        |), p AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN rn = 1 THEN tu END) AS t1,
-        |    min(CASE WHEN rn = 10 THEN tu END) AS tn
-        |  FROM o WHERE rn = 1 OR rn = 10 GROUP BY 1
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_users,
-        |  CAST(count(tn) AS BIGINT) AS n_activated,
-        |  CAST(count(tn) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS activation_rate,
-        |  quantile_cont(tn - t1, 0.5) / 1e6 AS p50_lag_s,
-        |  quantile_cont(tn - t1, 0.9) / 1e6 AS p90_lag_s,
-        |  CAST(max(tn - t1) AS DOUBLE) / 1e6 AS max_lag_s
-        |FROM p""".stripMargin,
-    // +1/-1 change points collapse per timestamp (order-free), the
-    // running concurrency is the distributed prefix sum over time;
-    // integer end to end
-    "q_peak_concurrency" ->
-      """WITH x AS (
-        |  SELECT user_id, ts,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |  FROM events
-        |), y AS (
-        |  SELECT *, CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM x
-        |), z AS (
-        |  SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM y
-        |), s AS (
-        |  SELECT user_id, session_id, epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us
-        |  FROM z GROUP BY user_id, session_id
-        |), bnd AS (
-        |  SELECT min(start_us) AS t0, max(end_us + 1) AS t1 FROM s
-        |), mid AS (
-        |  SELECT epoch_us(unnest(generate_series(
-        |    date_trunc('day', make_timestamp(t0)),
-        |    date_trunc('day', make_timestamp(t1)),
-        |    INTERVAL 1 DAY))) AS t, 0 AS d
-        |  FROM bnd
-        |), pts AS (
-        |  SELECT t, CAST(sum(d) AS BIGINT) AS d FROM (
-        |    SELECT start_us AS t, 1 AS d FROM s
-        |    UNION ALL
-        |    SELECT end_us + 1 AS t, -1 AS d FROM s
-        |    UNION ALL
-        |    SELECT t, d FROM mid
-        |  ) GROUP BY t
-        |), r AS (
-        |  SELECT t, CAST(sum(d) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT) AS conc
-        |  FROM pts
-        |)
-        |SELECT strftime(date_trunc('day', make_timestamp(t)), '%Y-%m-%d') AS day,
-        |  CAST(max(conc) AS BIGINT) AS peak_concurrency,
-        |  CAST(count(*) AS BIGINT) AS n_points
-        |FROM r GROUP BY 1 ORDER BY day""".stripMargin,
-    // empty hours count as zero via the bounded type x hour grid;
-    // D = (n·Σc² − (Σc)²)/((n−1)·Σc) — one IEEE division of exact
-    // longs, UNROUNDED
-    "q_dispersion" ->
-      """WITH b AS (
-        |  SELECT date_trunc('hour', min(ts)) AS h0, date_trunc('hour', max(ts)) AS h1
-        |  FROM events
-        |), grid AS (
-        |  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour FROM b
-        |), ty AS (SELECT DISTINCT event_type FROM events),
-        |cnt AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS hour, CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2
-        |), g AS (
-        |  SELECT ty.event_type, coalesce(cnt.c, 0) AS c
-        |  FROM ty CROSS JOIN grid
-        |  LEFT JOIN cnt ON cnt.event_type = ty.event_type AND cnt.hour = grid.hour
-        |), a AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
-        |    CAST(sum(c) AS BIGINT) AS n_events, CAST(sum(c * c) AS BIGINT) AS s2
-        |  FROM g GROUP BY 1
-        |)
-        |SELECT event_type, n_hours, n_events,
-        |  CASE WHEN n_hours > 1 AND n_events > 0
-        |    THEN CAST(n_hours * s2 - n_events * n_events AS DOUBLE)
-        |      / CAST((n_hours - 1) * n_events AS DOUBLE) END AS fano,
-        |  CASE WHEN n_hours > 1 AND n_events > 0
-        |    THEN CAST(n_hours * s2 - n_events * n_events AS DOUBLE)
-        |      / CAST(n_events AS DOUBLE) END AS chi2_stat
-        |FROM a ORDER BY event_type""".stripMargin,
-    // D_t = n·P_t − t·T is an exact long so argmax + earliest-day
-    // tie-break are deterministic; the magnitude is one IEEE
-    // division of exact integers, UNROUNDED
-    "q_changepoint" ->
-      """WITH dc AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day, max_by(value, ts) AS close
-        |  FROM events GROUP BY 1, 2
-        |), w AS (
-        |  SELECT user_id, day, CAST(floor(close * 1000000) AS BIGINT) AS qc FROM dc
-        |), s AS (
-        |  SELECT user_id, day,
-        |    CAST(count(*) OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS rn,
-        |    CAST(sum(qc)   OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS pre,
-        |    CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n,
-        |    CAST(sum(qc)   OVER (PARTITION BY user_id) AS BIGINT) AS tot
-        |  FROM w
-        |), d AS (
-        |  SELECT user_id, day, n,
-        |    abs(CAST(n AS HUGEINT) * CAST(pre AS HUGEINT)
-        |      - CAST(rn AS HUGEINT) * CAST(tot AS HUGEINT)) AS abs_d
-        |  FROM s WHERE rn < n
-        |), r AS (
-        |  SELECT user_id, day, n, abs_d,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY abs_d DESC, day) AS rk
-        |  FROM d
-        |)
-        |SELECT user_id, n AS n_days, strftime(day, '%Y-%m-%d') AS cp_day,
-        |  CAST(abs_d AS DOUBLE) / CAST(n * 1000000 AS DOUBLE) AS cusum_stat
-        |FROM r WHERE rk = 1 ORDER BY user_id""".stripMargin,
-    // prefix/full dots are index-order folds; shares quantize once
-    // to DECIMAL(18,6) so per-label sums are exact; means 6dp
-    "q_matryoshka" ->
-      """WITH b AS (
-        |  SELECT label,
-        |    list_dot_product(list_transform(embedding, x -> x::DOUBLE),
-        |                     list_transform(embedding, x -> x::DOUBLE)) AS f,
-        |    list_dot_product(list_transform(embedding[1:8], x -> x::DOUBLE),
-        |                     list_transform(embedding[1:8], x -> x::DOUBLE)) AS p8,
-        |    list_dot_product(list_transform(embedding[1:16], x -> x::DOUBLE),
-        |                     list_transform(embedding[1:16], x -> x::DOUBLE)) AS p16,
-        |    list_dot_product(list_transform(embedding[1:32], x -> x::DOUBLE),
-        |                     list_transform(embedding[1:32], x -> x::DOUBLE)) AS p32
-        |  FROM embeddings
-        |), q AS (
-        |  SELECT label, CASE WHEN f = 0 THEN 1 ELSE 0 END AS is_zero,
-        |    CASE WHEN f != 0 THEN CAST(p8  / f AS DECIMAL(18,6)) END AS q8,
-        |    CASE WHEN f != 0 THEN CAST(p16 / f AS DECIMAL(18,6)) END AS q16,
-        |    CASE WHEN f != 0 THEN CAST(p32 / f AS DECIMAL(18,6)) END AS q32
-        |  FROM b
-        |)
-        |SELECT label, count(*) AS n_vecs, CAST(sum(is_zero) AS BIGINT) AS n_zero,
-        |  round(CAST(sum(q8)  AS DOUBLE) / CAST(count(q8)  AS DOUBLE), 6) AS mean_nf_8,
-        |  round(CAST(sum(q16) AS DOUBLE) / CAST(count(q16) AS DOUBLE), 6) AS mean_nf_16,
-        |  round(CAST(sum(q32) AS DOUBLE) / CAST(count(q32) AS DOUBLE), 6) AS mean_nf_32
-        |FROM q GROUP BY label ORDER BY label""".stripMargin,
-    // bands by exact integer ceil-division; cumulative sums over the
-    // 10-row checkpoint grid only — everything exact longs
-    "q_heaps_law" ->
-      """WITH mx AS (SELECT max(doc_id) AS max_id FROM documents),
-        |tf AS (
-        |  SELECT doc_id, tok FROM (
-        |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents)
-        |  WHERE len(tok) > 0
-        |), tb AS (
-        |  SELECT greatest(1, (doc_id * 10 + max_id - 1) // max_id) AS cp, count(*) AS tok_band
-        |  FROM tf, mx GROUP BY 1
-        |), vb AS (
-        |  SELECT greatest(1, (first_id * 10 + max_id - 1) // max_id) AS cp, count(*) AS vocab_band
-        |  FROM (SELECT tok, min(doc_id) AS first_id FROM tf GROUP BY tok), mx GROUP BY 1
-        |), db AS (
-        |  SELECT greatest(1, (doc_id * 10 + max_id - 1) // max_id) AS cp, count(*) AS doc_band
-        |  FROM documents, mx GROUP BY 1
-        |), allb AS (
-        |  SELECT cp, coalesce(doc_band, 0) AS d, coalesce(tok_band, 0) AS t,
-        |    coalesce(vocab_band, 0) AS v
-        |  FROM db FULL OUTER JOIN tb USING (cp) FULL OUTER JOIN vb USING (cp)
-        |)
-        |SELECT CAST(cp AS BIGINT) AS cp,
-        |  CAST(sum(d) OVER wc AS BIGINT) AS n_docs,
-        |  CAST(sum(t) OVER wc AS BIGINT) AS n_tokens,
-        |  CAST(sum(v) OVER wc AS BIGINT) AS vocab
-        |FROM allb WINDOW wc AS (ORDER BY cp ROWS UNBOUNDED PRECEDING)
-        |ORDER BY cp""".stripMargin,
-    // per-token terms fold through floor(term*1e12) exact longs (the
-    // anova cross-group recipe); the absent tail closes as
-    // ln2*(1 - cov) with cov an exact integer quotient; 6dp
-    "q_js_divergence" ->
-      """WITH tf AS (
-        |  SELECT source, tok FROM (
-        |    SELECT source, unnest(string_split(lower(text), ' ')) AS tok FROM documents)
-        |  WHERE len(tok) > 0
-        |), corpus AS (
-        |  SELECT tok, CAST(count(*) AS BIGINT) AS ct FROM tf GROUP BY tok
-        |), tot AS (SELECT CAST(sum(ct) AS BIGINT) AS n_all FROM corpus),
-        |src AS (
-        |  SELECT source, tok, CAST(count(*) AS BIGINT) AS cs FROM tf GROUP BY 1, 2
-        |), stot AS (
-        |  SELECT source, CAST(sum(cs) AS BIGINT) AS n_s, count(*) AS vocab_s
-        |  FROM src GROUP BY source
-        |), terms AS (
-        |  SELECT src.source, stot.n_s, stot.vocab_s, corpus.ct, tot.n_all,
-        |    CAST(cs AS DOUBLE) / CAST(n_s AS DOUBLE) AS p,
-        |    CAST(ct AS DOUBLE) / CAST(n_all AS DOUBLE) AS q
-        |  FROM src JOIN corpus USING (tok) JOIN stot USING (source), tot
-        |)
-        |SELECT source, max(n_s) AS n_tokens, CAST(max(vocab_s) AS BIGINT) AS vocab,
-        |  round((CAST(sum(CAST(floor((p * ln(p) + q * ln(q) - (p + q) * ln((p + q) / 2)) * 1e12)
-        |      AS BIGINT)) AS DOUBLE) / 1e12
-        |    + ln(2) * (1.0 - CAST(sum(ct) AS DOUBLE) / CAST(max(n_all) AS DOUBLE))) / 2,
-        |  6) AS js_nats
-        |FROM terms GROUP BY source ORDER BY source""".stripMargin,
-    // rank-sum identity over per-source vocab rows; rank_sum rides
-    // 128-bit decimal and converts via the splitDouble recipe; 6dp
-    "q_token_gini" ->
-      """WITH tf AS (
-        |  SELECT source, tok FROM (
-        |    SELECT source, unnest(string_split(lower(text), ' ')) AS tok FROM documents)
-        |  WHERE len(tok) > 0
-        |), c AS (
-        |  SELECT source, tok, CAST(count(*) AS BIGINT) AS cnt FROM tf GROUP BY 1, 2
-        |), r AS (
-        |  SELECT source, cnt,
-        |    CAST(row_number() OVER (PARTITION BY source ORDER BY cnt, tok) AS BIGINT) AS rnk
-        |  FROM c
-        |), a AS (
-        |  SELECT source, count(*) AS vocab, CAST(sum(cnt) AS BIGINT) AS n_tokens,
-        |    sum(CAST(rnk AS HUGEINT) * CAST(cnt AS HUGEINT)) AS rank_sum
-        |  FROM r GROUP BY source
-        |)
-        |SELECT source, CAST(vocab AS BIGINT) AS vocab, n_tokens,
-        |  round(2.0 * (CAST(rank_sum // 9007199254740992 AS DOUBLE) * 9.007199254740992e15
-        |      + CAST(rank_sum % 9007199254740992 AS DOUBLE))
-        |    / (CAST(vocab AS DOUBLE) * CAST(n_tokens AS DOUBLE))
-        |    - CAST(vocab + 1 AS DOUBLE) / CAST(vocab AS DOUBLE), 6) AS token_gini
-        |FROM a ORDER BY source""".stripMargin
-  )
+  val oracleSql: Map[String, String] = Query.all.map(q => q.name -> q.oracle).toMap
 }

@@ -451,7 +451,7 @@ object Similarity {
     * celling a corpus that small would only shrink each vector's
     * candidate pool for no volume win. The oracle mirrors the nlist/
     * ncoarse/fpc formulas and both argmin tie-breaks exactly
-    * (SparkEntry.celledCtes).
+    * (queries.SimilarityQueries.celledCtes).
     */
   def knnCandidatePairs(embeddings: DataFrame, cellTarget: Int = 256): DataFrame =
     inCellPairs(knnAssignCells(embeddings, Nil, cellTarget), -2.0, 512, "knnCandidatePairs")

@@ -72,6 +72,17 @@ class RelationalSpec extends AnyFunSuite {
   test("every query key with an oracle exists in queries") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")
+    // and the converse: a query without an oracle is never compared
+    val unchecked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(unchecked.isEmpty, s"query without oracle: $unchecked")
+    // the maps are keyed by name, so a second record under one name
+    // would silently replace the first
+    val twice = graft.queries.Query.all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(twice.isEmpty, s"registered twice: $twice")
+    val empty = SparkEntry.oracleSql.collect { case (n, sql) if sql.trim.isEmpty => n }
+    assert(empty.isEmpty, s"empty oracle: $empty")
+    val undeclared = (Bench.ScaleQueries ++ Bench.ScaleQuadratic).filterNot(SparkEntry.queries.contains)
+    assert(undeclared.isEmpty, s"Bench scale lists name undeclared queries: $undeclared")
   }
 
   test("latest_per_key yields exactly one row per key") {
